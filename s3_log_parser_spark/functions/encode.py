@@ -24,8 +24,8 @@ def encode_slim(df: DataFrame, use_udf_hash: bool = True) -> DataFrame:
     Expects to run after parse; enrichment (system/platform) and flags
     attach separately (operators/enrich.py, operators/flags.py).
 
-    If the parse stage was the fused one (parse_text_fused), the four
-    hash columns already exist and no further Python stage runs.
+    If the parse stage already emitted the four hash columns, they are
+    kept and no DJB2 stage runs.
     """
     p = F.col("parsed")
     h = djb2_udf if use_udf_hash else djb2_expr

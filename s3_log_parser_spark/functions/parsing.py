@@ -96,79 +96,6 @@ def parse_text_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
     return _typed_from_raw(parsed, text_col)
 
 
-# fused return type: raw fields + the four DJB2 dictionary hashes.
-# ONE Python/Arrow stage for the whole parse+hash step instead of five
-# (grok + 4 djb2_udf calls) — each scalar pandas UDF is its own
-# ArrowEvalPython exchange, and the Arrow (de)serialization dominated
-# the slim materialization (42s → see BENCH notes).
-_FUSED_STRUCT = T.StructType(
-    list(PARSED_RAW_STRUCT.fields)
-    + [
-        T.StructField("ip_hash", T.LongType(), True),
-        T.StructField("key_hash", T.LongType(), True),
-        T.StructField("tool_hash", T.LongType(), True),
-        T.StructField("conv_hash", T.LongType(), True),
-    ]
-)
-
-
-def parse_text_fused(
-    df: DataFrame, text_col: str = "text", conv_col: str = "conv_id"
-) -> DataFrame:
-    """grok parse + DJB2 encode in a single Arrow-batched pandas UDF.
-
-    DJB2 uses a worker-lifetime unique-value cache — the hashed columns
-    are dictionary-like (ips, tools, keys, conv ids), so amortized cost
-    is O(distinct values) per worker, not O(rows). Semantics are
-    parity-tested against djb2_py/djb2_expr (tests/test_hashes.py) and
-    extract_path (src/s3parser.c:420-477).
-    """
-
-    @pandas_udf(_FUSED_STRUCT)
-    def grok_hash(
-        it: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
-        import re
-
-        from .hashes import djb2_py
-
-        pat = re.compile(S3_LINE_PATTERN)
-        seg_re = re.compile(r"^/?([^/]*)")
-        cols = [n for n, _ in PARSED_FIELDS]
-        cache: dict = {}
-        CACHE_CAP = 2_000_000  # bound worker memory on adversarial keys
-
-        def h(v):
-            if v is None or (isinstance(v, float) and pd.isna(v)):
-                return 5381
-            r = cache.get(v)
-            if r is None:
-                r = djb2_py(v)
-                if len(cache) < CACHE_CAP:
-                    cache[v] = r
-            return r
-
-        def seg_h(v):
-            # extract_path semantics: NULL/'' → seed, else hash of the
-            # first path segment
-            if v is None or (isinstance(v, float) and pd.isna(v)) or v == "":
-                return 5381
-            m = seg_re.match(v)
-            return h(m.group(1))
-
-        for text, conv in it:
-            out = text.str.extract(pat)
-            out = out[cols]
-            out["ip_hash"] = out["remote_ip"].map(h).astype("int64")
-            out["key_hash"] = out["key"].map(h).astype("int64")
-            out["tool_hash"] = out["key"].map(seg_h).astype("int64")
-            out["conv_hash"] = conv.map(h).astype("int64")
-            yield out
-
-    parsed = df.withColumn("_raw", grok_hash(F.col(text_col), F.col(conv_col)))
-    return _typed_from_raw(parsed, text_col, extra_fields=True)
-
-
 # minimal fused output: only what the slim table needs crosses Arrow.
 # The full 27-field struct costs ~600 B/row of Arrow transfer + struct
 # assembly; the pipeline only consumes these typed columns (the full
@@ -327,16 +254,9 @@ def parse_text_sql(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 def _typed_from_raw(
-    df: DataFrame,
-    text_col: str,
-    empty_range_is_null: bool = False,
-    extra_fields: bool = False,
+    df: DataFrame, text_col: str, empty_range_is_null: bool = False
 ) -> DataFrame:
-    """Shared cast + parse_status derivation from the raw string struct.
-
-    ``extra_fields``: the fused UDF also carries the four DJB2 hash
-    columns — surface them as top-level columns.
-    """
+    """Shared cast + parse_status derivation from the raw string struct."""
     r = F.col("_raw")
     fields: list[Column] = []
     for name, typ in PARSED_FIELDS:
@@ -352,7 +272,7 @@ def _typed_from_raw(
     # try_to_timestamp: NULL on malformed input in BOTH ANSI modes (the
     # bad_time rows would throw CANNOT_PARSE_TIMESTAMP under ANSI)
     ts = F.try_to_timestamp(r["ts_str"], F.lit(TS_FORMAT))
-    out = (
+    return (
         df.withColumn("parsed", F.struct(*fields))
         .withColumn("event_ts", ts)
         .withColumn(
@@ -361,11 +281,8 @@ def _typed_from_raw(
             .when(r["ts_str"].isNotNull() & ts.isNull(), F.lit("bad_time"))
             .otherwise(F.lit("ok")),
         )
+        .drop("_raw")
     )
-    if extra_fields:
-        for h in ("ip_hash", "key_hash", "tool_hash", "conv_hash"):
-            out = out.withColumn(h, r[h])
-    return out.drop("_raw")
 
 
 def clamp_http_code(col: Column | str) -> Column:

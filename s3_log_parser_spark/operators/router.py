@@ -15,6 +15,8 @@ with column pruning, not the raw text.
 
 from __future__ import annotations
 
+import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -48,6 +50,96 @@ def default_routes() -> list[Route]:
     ]
 
 
+def sink_layout(
+    routed: DataFrame,
+    partition_by: tuple[str, ...],
+    counts_cube: DataFrame | None = None,
+) -> DataFrame:
+    """The frame to write for one sink, laid out for its partitioned
+    write. Every task emits one file per partition VALUE it sees
+    (tasks × values files — 234 for an 8-task by_day write), and the
+    driver-side commit of those files is pure constant overhead that
+    eats the speedup on NARROW sessions. Two strategies, auto-picked by
+    session width (ROUTER_WRITE_STRATEGY overrides: salt|coalesce|plain):
+
+    - "salt": repartition on (partition cols, deterministic salt) —
+      files ≈ salt_buckets × values regardless of input width (one file
+      per value below 32 shuffle partitions). The canonical 100 TB shape
+      (also what a cluster writing to an object store with per-file
+      commit cost wants), and the right call on narrow local legs and
+      streaming micro-batches, where a 300-file commit dwarfs the small
+      shuffle.
+    - "coalesce": narrow-dependency fan-in, NO shuffle — on wide local
+      sessions the in-process commit of tasks × values files is
+      measurably cheaper than shuffling the whole sink through the
+      exchange (10.1 s salt vs 4.6 s coalesce(16) for a 10 M-row by-tool
+      write at 32 cores; 320 local files commit in ~no time, while the
+      salt path moves ~1.5 GB twice).
+
+    ``counts_cube`` (optional, cached, holding the partition columns)
+    lets the auto rule see the sink's distinct value count.
+    """
+    if not partition_by:
+        return routed
+    spark = routed.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    strategy = os.environ.get("ROUTER_WRITE_STRATEGY", "auto")
+    if strategy == "auto":
+        # r7: the width rule alone mis-picks for HIGH-CARDINALITY
+        # partition columns — a 116-value by-day sink under coalesce(16)
+        # commits tasks × values ≈ 2k files (measured 13.7 s vs 7.0 s /
+        # 908 files salted). When the counts cube can tell us the
+        # distinct value count, pick salt once values exceed the core
+        # count: each shuffle task then holds ~1 value, so files ≈
+        # salt_buckets × values and parallelism is full; few-value sinks
+        # keep the shuffle-free coalesce. Cube lookup is driver-side on
+        # ≤ a few hundred cached rows.
+        n_vals = None
+        if counts_cube is not None and set(partition_by) <= set(counts_cube.columns):
+            try:
+                n_vals = counts_cube.select(*partition_by).distinct().count()
+            except Exception:
+                n_vals = None
+        if n_vals is not None and n_vals > cores:
+            strategy = "salt"
+        else:
+            strategy = "coalesce" if cores >= 16 else "salt"
+    if strategy == "coalesce":
+        return routed.coalesce(max(8, cores // 2))
+    if strategy != "salt":
+        return routed
+    nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
+    s = max(1, nshuf // 16)
+    # deterministic salt (spark_partition_id is retry-dependent: under
+    # task/stage retries rows could land in different shuffle outputs)
+    # — hash stable row columns
+    salt_cols = [c for c in ("conv_id", "turn_idx") if c in routed.columns] or [
+        c for c in routed.columns if c not in partition_by
+    ][:2]
+    salt = F.pmod(F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(s))
+    # EXPLICIT partition count: an unnumbered repartition(cols) is fair
+    # game for AQE partition coalescing, which shrinks the exchange to
+    # ~advisory-size partitions (24 here) and starves the CPU-bound
+    # parquet/zstd encode of write tasks (measured on the 10 M-row by_day
+    # sink at 32 cores: 11.7 s unnumbered vs 4.8-5.8 s with the slot
+    # count pinned; file count unchanged)
+    return routed.repartition(nshuf, *[F.col(c) for c in partition_by], salt)
+
+
+def fan_out(routes: list[Route], write_one: Callable[[Route], None]) -> None:
+    """Run ``write_one`` for every route from a thread pool. Sinks are
+    independent jobs, so submitting them concurrently lets the Spark
+    scheduler fill cores across their scan/write barriers (threads share
+    the SparkSession; each write blocks its own thread only). With all
+    four in flight the scheduler interleaves their stages, so the
+    scan/commit barriers of one sink hide behind the compute of the
+    others (oversubscription just queues tasks)."""
+    workers = int(os.environ.get("ROUTER_CONCURRENCY", "4"))
+    with ThreadPoolExecutor(max_workers=max(1, workers)) as ex:
+        for f in [ex.submit(write_one, r) for r in routes]:
+            f.result()
+
+
 def route_and_write(
     slim: DataFrame,
     catalog: Catalog,
@@ -65,8 +157,6 @@ def route_and_write(
     first and routes from the columnar re-read — cheaper than caching
     raw text at 100 TB, and it IS the checkpoint).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     routes = routes if routes is not None else default_routes()
 
     # consolidated counts: ONE aggregate pass over slim computes the
@@ -121,103 +211,12 @@ def route_and_write(
         counts[r.name] = counts_for(r, routed)
         stage = f"sink:{r.name}"
         if skip is None or not skip(stage):
-            w = routed
-            if r.partition_by:
-                # partitioned-write layout control: every task emits one
-                # file per partition VALUE it sees (tasks × values files
-                # — 234 for an 8-task by_day write), and the driver-side
-                # commit of those files is pure constant overhead that
-                # eats the speedup on NARROW sessions. Two strategies,
-                # auto-picked by session width (ROUTER_WRITE_STRATEGY
-                # overrides: salt|coalesce|plain):
-                #
-                # - "salt": repartition on (partition cols, deterministic
-                #   salt) — files ≈ salt_buckets × values regardless of
-                #   input width. The canonical 100 TB shape (also what a
-                #   cluster writing to an object store with per-file
-                #   commit cost wants), and the right call on narrow
-                #   local legs where a 300-file commit dwarfs the small
-                #   shuffle.
-                # - "coalesce": narrow-dependency fan-in, NO shuffle —
-                #   on wide local sessions the in-process commit of
-                #   tasks × values files is measurably cheaper than
-                #   shuffling the whole sink through the exchange
-                #   (10.1 s salt vs 4.6 s coalesce(16) for a 10 M-row
-                #   by-tool write at 32 cores; 320 local files commit in
-                #   ~no time, while the salt path moves ~1.5 GB twice).
-                spark = slim.sparkSession
-                cores = spark.sparkContext.defaultParallelism
-                strategy = _os.environ.get("ROUTER_WRITE_STRATEGY", "auto")
-                if strategy == "auto":
-                    # r7: the width rule alone mis-picks for HIGH-
-                    # CARDINALITY partition columns — a 116-value
-                    # by-day sink under coalesce(16) commits tasks ×
-                    # values ≈ 2k files (measured 13.7 s vs 7.0 s /
-                    # 908 files salted). When the (already cached)
-                    # counts cube can tell us the distinct value
-                    # count, pick salt once values exceed the core
-                    # count: each shuffle task then holds ~1 value, so
-                    # files ≈ salt_buckets × values and parallelism is
-                    # full; few-value sinks keep the shuffle-free
-                    # coalesce. Cube lookup is driver-side on ≤ a few
-                    # hundred cached rows.
-                    n_vals = None
-                    if base is not None and set(r.partition_by) <= set(
-                        base.columns
-                    ):
-                        try:
-                            n_vals = (
-                                base.select(*r.partition_by)
-                                .distinct()
-                                .count()
-                            )
-                        except Exception:
-                            n_vals = None
-                    if n_vals is not None and n_vals > cores:
-                        strategy = "salt"
-                    else:
-                        strategy = "coalesce" if cores >= 16 else "salt"
-                if strategy == "coalesce":
-                    w = routed.coalesce(max(8, cores // 2))
-                elif strategy == "salt":
-                    nshuf = int(
-                        spark.conf.get("spark.sql.shuffle.partitions", "64")
-                    )
-                    s = max(1, nshuf // 16)
-                    # deterministic salt (spark_partition_id is retry-
-                    # dependent: under task/stage retries rows could
-                    # land in different shuffle outputs) — hash stable
-                    # row columns
-                    salt_cols = [
-                        c for c in ("conv_id", "turn_idx") if c in routed.columns
-                    ] or [c for c in routed.columns if c not in r.partition_by][:2]
-                    salt = F.pmod(
-                        F.xxhash64(*[F.col(c) for c in salt_cols]), F.lit(s)
-                    )
-                    # EXPLICIT partition count: an unnumbered
-                    # repartition(cols) is fair game for AQE partition
-                    # coalescing, which shrinks the exchange to
-                    # ~advisory-size partitions (24 here) and starves
-                    # the CPU-bound parquet/zstd encode of write tasks
-                    # (measured on the 10 M-row by_day sink at 32
-                    # cores: 11.7 s unnumbered vs 4.8-5.8 s with the
-                    # slot-count pinned; file count unchanged)
-                    w = routed.repartition(
-                        nshuf, *[F.col(c) for c in r.partition_by], salt
-                    )
+            w = sink_layout(routed, r.partition_by, base)
             catalog.write(w, r.name, mode=mode, partition_by=r.partition_by)
             # counts frames are tiny (≤ thousands of rows) — one file
             catalog.write(counts[r.name].coalesce(1), f"{r.name}_counts", mode=mode)
             if on_done is not None:
                 on_done(stage)
-
-    # sinks are independent jobs — submit concurrently so the Spark
-    # scheduler fills cores across their scan/write barriers (threads
-    # share the SparkSession; each .write blocks its own thread only).
-    # All four in flight: the scheduler interleaves their stages, so
-    # scan/commit barriers of one sink are hidden behind compute of the
-    # others (oversubscription just queues tasks).
-    import os as _os
 
     # Scale-adaptive scan splits for the fan-out (r7, guide §6/§2.2):
     # each sink re-reads the slim checkpoint, and the session default
@@ -234,7 +233,7 @@ def route_and_write(
         cur_mpb = int(conf.get("spark.sql.files.maxPartitionBytes"))
     except Exception:
         pass
-    override = _os.environ.get("ROUTER_SCAN_SPLIT_MB")
+    override = os.environ.get("ROUTER_SCAN_SPLIT_MB")
     new_mpb = None
     if override:
         new_mpb = int(override) << 20
@@ -245,7 +244,7 @@ def route_and_write(
                 if uri.startswith("file:"):
                     from urllib.parse import unquote, urlparse
 
-                    total += _os.path.getsize(unquote(urlparse(uri).path))
+                    total += os.path.getsize(unquote(urlparse(uri).path))
                 else:
                     total = 0
                     break
@@ -257,14 +256,10 @@ def route_and_write(
                 )
         except Exception:
             new_mpb = None
-    workers = int(_os.environ.get("ROUTER_CONCURRENCY", "4"))
     try:
         if new_mpb is not None:
             conf.set("spark.sql.files.maxPartitionBytes", str(new_mpb))
-        with ThreadPoolExecutor(max_workers=max(1, workers)) as ex:
-            futures = {r.name: ex.submit(write_one, r) for r in routes}
-            for f in futures.values():
-                f.result()
+        fan_out(routes, write_one)
     finally:
         if new_mpb is not None and cur_mpb is not None:
             conf.set("spark.sql.files.maxPartitionBytes", str(cur_mpb))

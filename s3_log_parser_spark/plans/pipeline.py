@@ -40,6 +40,21 @@ class PipelineResult:
     lineage: DataFrame | None = None
 
 
+def _parse_encode_classify(transcripts: DataFrame, arrow: bool = True) -> DataFrame:
+    """Parse, flat encode and user-agent classify: the slim columns
+    before flags and dims. The Arrow kernel is one ``mapInArrow``
+    stage; ``arrow=False`` swaps in the pandas fused UDF. Both
+    ``build_slim`` and the streaming ``build_slim_stream`` start here."""
+    from ..functions.encode import encode_slim_flat
+
+    if arrow:
+        from ..functions.parsing_arrow import parse_text_arrow as parse
+    else:
+        from ..functions.parsing import parse_text_slim as parse
+    df = encode_slim_flat(parse(transcripts, "text", "conv_id"))
+    return classify_when(df).drop("user_agent")
+
+
 def build_slim(
     transcripts: DataFrame,
     use_sql_parser: bool = False,
@@ -56,18 +71,7 @@ def build_slim(
     variant (cross-check paths, all equality-pinned in tests).
     """
     if fused and not use_sql_parser:
-        from ..functions.encode import encode_slim_flat
-
-        if arrow:
-            from ..functions.parsing_arrow import parse_text_arrow
-
-            df = parse_text_arrow(transcripts, "text", "conv_id")
-        else:
-            from ..functions.parsing import parse_text_slim
-
-            df = parse_text_slim(transcripts, "text", "conv_id")
-        df = encode_slim_flat(df)
-        df = classify_when(df).drop("user_agent")
+        df = _parse_encode_classify(transcripts, arrow)
     else:
         if use_sql_parser:
             df = parse_text_sql(transcripts, "text")

@@ -5,12 +5,15 @@ users tail transcript tables continuously. Shape:
 
 - ``readStream`` on the transcripts source (file/Iceberg/Kafka behind
   the same seam),
-- the identical ``build_slim`` column logic MINUS the ST1 window
-  (windows over unbounded data need watermark state): first-occurrence
-  dedup becomes ``dropDuplicatesWithinWatermark`` on (ip_hash,
-  key_hash) after ``withWatermark(ts, delay)``,
+- the batch slim path (``plans.pipeline``): the one ``mapInArrow``
+  parse kernel, flat encode, CASE WHEN classify and the CASE WHEN
+  role/tool dims — MINUS the ST1 window (windows over unbounded data
+  need watermark state): first-occurrence dedup becomes
+  ``dropDuplicatesWithinWatermark`` on (ip_hash, key_hash) after
+  ``withWatermark(ts, delay)``,
 - ``foreachBatch`` multi-sink router — the streaming-native form of
   the batch cache-then-filter fan-out (single pass per micro-batch),
+  with the batch router's sink write layout and concurrent writes,
 - tumbling-day windowed counts reproduce the A2 by-day aggregate.
 """
 
@@ -19,26 +22,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.encode import SLIM_COLUMNS, encode_slim
-from ..functions.parsing import parse_text_pandas
-from ..operators.enrich import classify_when, enrich_role_tool
-from ..operators.router import Route, default_routes
+from ..functions.encode import SLIM_COLUMNS
+from ..operators.enrich import enrich_role_tool
+from ..operators.flags import chunk_flags
+from ..operators.router import Route, default_routes, fan_out, sink_layout
+from ..plans.pipeline import _parse_encode_classify
 from ..sources.catalog import Catalog
 
 
 def build_slim_stream(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """streaming version of plans.pipeline.build_slim: same parse,
-    encode, enrich; flags without the ST1 window (stateless bitmask
-    with is_first=false; the dedup flag is applied by the router via
-    dropDuplicatesWithinWatermark on the start-row stream)."""
-    from ..operators.flags import chunk_flags
-
-    df = parse_text_pandas(transcripts, "text")
-    df = encode_slim(df)
-    df = classify_when(
-        df.withColumn("user_agent", F.col("parsed")["user_agent"])
-    ).drop("user_agent")
-    df = enrich_role_tool(df)
+    """Streaming version of plans.pipeline.build_slim: the same Arrow
+    parse, encode, classify and role/tool dims (no Python UDF stage,
+    no broadcast), with flags but without the ST1 window — the stateless
+    bitmask with is_first=false; the dedup flag is applied by the
+    router via dropDuplicatesWithinWatermark on the start-row stream."""
+    df = enrich_role_tool(_parse_encode_classify(transcripts), method="expr")
     df = df.withColumn(
         "flags",
         chunk_flags(
@@ -59,22 +57,28 @@ def start_router(
     routes: list[Route] | None = None,
     trigger_once: bool = True,
 ):
-    """foreachBatch multi-sink router: ONE pass over each micro-batch
-    feeds every sink (batch Spark can't do this without persist)."""
+    """foreachBatch multi-sink router: each micro-batch is persisted
+    once and feeds every sink (batch Spark can't do this without
+    persist). The sink appends run concurrently, each with the batch
+    router's write layout (``sink_layout``): on narrow sessions a
+    micro-batch writes one file per partition value."""
     routes = routes if routes is not None else default_routes()
 
     def route_batch(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        cat = Catalog(spark, out_dir)
+        cat = Catalog(batch.sparkSession, out_dir)
+
+        def write_one(r: Route) -> None:
+            routed = batch.filter(r.predicate(batch))
+            cat.write(
+                sink_layout(routed, r.partition_by),
+                r.name,
+                mode="append",
+                partition_by=r.partition_by,
+            )
+
         batch.persist()
         try:
-            for r in routes:
-                cat.write(
-                    batch.filter(r.predicate(batch)),
-                    r.name,
-                    mode="append",
-                    partition_by=r.partition_by,
-                )
+            fan_out(routes, write_one)
         finally:
             batch.unpersist()
 

@@ -135,3 +135,35 @@ def test_gopher_flags_pure_catalyst_one_scan(spark):
     ids = set(re.findall(r"Scan parquet\s+\((\d+)\)", plan))
     assert len(ids) == 1
     assert "Exchange" not in plan  # row-local flags: map-side only
+
+
+def test_stream_slim_plan_is_one_arrow_map_no_udf_no_broadcast(spark, transcripts):
+    """The streaming slim builder runs the batch slim path: exactly one
+    Arrow map stage (the parse kernel) and no Python UDF stage or
+    broadcast. Built over a batch frame; ``withWatermark`` is a no-op
+    there and the rest of the plan is the micro-batch's."""
+    import re
+
+    from s3_log_parser_spark.streaming.stream import build_slim_stream
+
+    plan = _plan(build_slim_stream(transcripts))
+    assert len(set(re.findall(r"MapInArrow\s+\((\d+)\)", plan))) == 1
+    for node in ("ArrowEvalPython", "BatchEvalPython", "BroadcastExchange", "BroadcastHashJoin"):
+        assert node not in plan
+
+
+def test_build_slim_and_route_write_plans_match_golden(spark, transcripts, tmp_path):
+    """The ``build_slim`` plan and the frame each route sink writes are
+    pinned to ``golden/slim_route_plans.json`` (tools/make_plan_golden.py),
+    so moving the slim builder or the sink write layout into shared
+    helpers cannot change the batch pipeline's plans."""
+    import json
+
+    from tools.make_plan_golden import GOLDEN, ansi_key, slim_route_plans
+
+    with open(GOLDEN) as f:
+        want = json.load(f)[ansi_key(spark)]
+    got = slim_route_plans(spark, transcripts, str(tmp_path))
+    assert sorted(got) == sorted(want)
+    for name in want:
+        assert got[name] == want[name], name

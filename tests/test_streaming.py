@@ -84,6 +84,73 @@ def test_stream_batch_rowset_equivalence(spark, transcripts, stream_dirs):
     assert batch.exceptAll(streamed).isEmpty()
 
 
+def _parquet_files(d):
+    import os
+
+    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+
+
+def test_stream_router_one_file_per_partition_value(spark, transcripts, tmp_path):
+    """On a session under 16 cores a micro-batch's partitioned sinks
+    go through the salted repartition: one file per partition value,
+    however many input tasks the micro-batch has."""
+    import os
+
+    assert spark.sparkContext.defaultParallelism < 16
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    transcripts.repartition(4).write.parquet(src)
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(src)
+    q = start_router(build_slim_stream(stream), out, ckpt, trigger_once=True)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert [n for n in os.listdir(os.path.join(ckpt, "commits")) if n.isdigit()] == ["0"]
+    for sink, key in (("by_tool", "tool"), ("by_role", "role"), ("by_day", "day_bucket")):
+        parts = [p for p in os.listdir(os.path.join(out, sink)) if p.startswith(key + "=")]
+        assert parts, sink
+        for p in parts:
+            assert len(_parquet_files(os.path.join(out, sink, p))) == 1, (sink, p)
+
+
+def test_stream_router_all_rejected_then_empty_batch(spark, tmp_path):
+    """A micro-batch whose every row fails to parse, then an empty
+    micro-batch: both commit without error, rejects holds every row
+    and the ok sinks hold none."""
+    import glob
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    from s3_log_parser_spark.sources.gen import gen_transcripts
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    bad = gen_transcripts(spark, rows=200).withColumn("text", F.lit("not an access log line"))
+    bad.coalesce(1).write.parquet(f"{src}/f1")
+    bad.limit(0).coalesce(1).write.parquet(f"{src}/f2")
+    now = time.time()
+    for i, d in enumerate(("f1", "f2")):
+        for f in os.listdir(f"{src}/{d}"):
+            os.utime(f"{src}/{d}/{f}", (now + i * 10, now + i * 10))
+    assert _parquet_files(f"{src}/f2")  # the empty micro-batch's input file
+
+    stream = (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*")
+    )
+    q = start_router(build_slim_stream(stream), out, ckpt, trigger_once=True)
+    q.awaitTermination(300)
+    assert q.exception() is None
+    assert [p["numInputRows"] for p in q.recentProgress] == [200, 0]
+
+    rejects = spark.read.parquet(os.path.join(out, "rejects"))
+    assert rejects.count() == 200
+    assert {r["parse_status"] for r in rejects.select("parse_status").collect()} == {"bad_format"}
+    for sink in ("by_tool", "by_role", "by_day"):
+        files = glob.glob(os.path.join(out, sink, "**", "*.parquet"), recursive=True)
+        assert sum(pq.read_metadata(f).num_rows for f in files) == 0, sink
+
+
 def test_stream_exact_dedup_unbounded_state(spark, transcripts, tmp_path_factory):
     """unique_starts_stream_exact: exactly ONE emitted row per distinct
     (ip_hash, key_hash) start key across MULTIPLE micro-batches (the
