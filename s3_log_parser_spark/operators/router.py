@@ -8,9 +8,10 @@ zeroing), plus the identity route ``all``.
 
 Batch Spark has no single-pass multi-sink write, so the idiomatic
 shape is: persist (or checkpoint to the slim table — which doubles as
-the resume point) → N filtered writes, each followed by its per-sink
-groupBy counts. Each sink write re-reads the cached/columnar slim data
-with column pruning, not the raw text.
+the resume point) → N filtered writes, each preceded by its per-sink
+counts, which come from one small collected cube. Each sink write
+re-reads the cached/columnar slim data with column pruning, not the
+raw text.
 """
 
 from __future__ import annotations
@@ -53,7 +54,7 @@ def default_routes() -> list[Route]:
 def sink_layout(
     routed: DataFrame,
     partition_by: tuple[str, ...],
-    counts_cube: DataFrame | None = None,
+    n_vals: int | None = None,
 ) -> DataFrame:
     """The frame to write for one sink, laid out for its partitioned
     write. Every task emits one file per partition VALUE it sees
@@ -76,8 +77,9 @@ def sink_layout(
       write at 32 cores; 320 local files commit in ~no time, while the
       salt path moves ~1.5 GB twice).
 
-    ``counts_cube`` (optional, cached, holding the partition columns)
-    lets the auto rule see the sink's distinct value count.
+    ``n_vals`` (optional) is the sink's distinct partition-value
+    count, counted on the driver by the caller; it lets the auto rule
+    see the sink's cardinality. Choosing the layout submits no job.
     """
     if not partition_by:
         return routed
@@ -88,18 +90,11 @@ def sink_layout(
         # r7: the width rule alone mis-picks for HIGH-CARDINALITY
         # partition columns — a 116-value by-day sink under coalesce(16)
         # commits tasks × values ≈ 2k files (measured 13.7 s vs 7.0 s /
-        # 908 files salted). When the counts cube can tell us the
-        # distinct value count, pick salt once values exceed the core
-        # count: each shuffle task then holds ~1 value, so files ≈
-        # salt_buckets × values and parallelism is full; few-value sinks
-        # keep the shuffle-free coalesce. Cube lookup is driver-side on
-        # ≤ a few hundred cached rows.
-        n_vals = None
-        if counts_cube is not None and set(partition_by) <= set(counts_cube.columns):
-            try:
-                n_vals = counts_cube.select(*partition_by).distinct().count()
-            except Exception:
-                n_vals = None
+        # 908 files salted). When the caller knows the distinct value
+        # count, pick salt once values exceed the core count: each
+        # shuffle task then holds ~1 value, so files ≈ salt_buckets ×
+        # values and parallelism is full; few-value sinks keep the
+        # shuffle-free coalesce. Below 16 cores both branches salt.
         if n_vals is not None and n_vals > cores:
             strategy = "salt"
         else:
@@ -160,19 +155,31 @@ def route_and_write(
     routes = routes if routes is not None else default_routes()
 
     # consolidated counts: ONE aggregate pass over slim computes the
-    # (status × tool × role × day) base cube, and every sink's counts
-    # are derived from that tiny frame — replaces one full column scan
-    # per sink with driver-local arithmetic. Falls back per-route when
-    # a custom route's predicate/key needs columns outside the base.
+    # (status × tool × role × day) base cube — a few thousand rows even
+    # at 10 M turns — cached as a single partition and collected once.
+    # The collected rows give each sink's partition-value count on the
+    # driver (no layout job), and since a single-partition child
+    # satisfies any groupBy, each sink's counts frame is one narrow task
+    # over the cache (no exchange). Falls back per-route when a custom
+    # route's predicate/key needs columns outside the base.
     base_cols = ["parse_status", "tool", "role", "day_bucket"]
     base = None
+    base_rows: list = []
     if all(set(r.group_key) <= set(base_cols) for r in routes):
         base = (
             slim.groupBy(*base_cols)
             .agg(F.count("*").alias("_n"))
+            .coalesce(1)
             .cache()
         )
-        base.count()  # materialize once
+        base_rows = base.collect()  # materializes the cache too
+
+    def n_vals_for(r: Route) -> int | None:
+        # same value set the write layout sees: all statuses, so the
+        # count is a property of the slim table, not of the route
+        if base is None or not set(r.partition_by) <= set(base_cols):
+            return None
+        return len({tuple(row[c] for c in r.partition_by) for row in base_rows})
 
     def counts_for(r: Route, routed) -> DataFrame:
         if base is not None:
@@ -211,10 +218,12 @@ def route_and_write(
         counts[r.name] = counts_for(r, routed)
         stage = f"sink:{r.name}"
         if skip is None or not skip(stage):
-            w = sink_layout(routed, r.partition_by, base)
-            catalog.write(w, r.name, mode=mode, partition_by=r.partition_by)
-            # counts frames are tiny (≤ thousands of rows) — one file
+            # counts first: the tiny one-task job runs while the cores
+            # are idle after the cube, and no job trails the data write.
+            # Counts frames are ≤ thousands of rows — one file.
             catalog.write(counts[r.name].coalesce(1), f"{r.name}_counts", mode=mode)
+            w = sink_layout(routed, r.partition_by, n_vals_for(r))
+            catalog.write(w, r.name, mode=mode, partition_by=r.partition_by)
             if on_done is not None:
                 on_done(stage)
 
@@ -223,10 +232,13 @@ def route_and_write(
     # split size (64 MB) can leave routes × splits far below the task
     # slots — a 278 MB slim at 10 M rows yielded ~7 scan tasks per sink
     # on 32 cores (measured route leg 16.0 → 13.1 s with right-sized
-    # splits). Derive the split size from the checkpoint's actual bytes
-    # so that the four sinks together fill ~2× the slots; clamp to
+    # splits). Derive the split size from the checkpoint's bytes so
+    # that the four sinks together fill ~2× the slots; clamp to
     # [4 MB, session default] so a big slim (real cluster) keeps the
-    # large sequential splits. ROUTER_SCAN_SPLIT_MB overrides.
+    # large sequential splits. ROUTER_SCAN_SPLIT_MB overrides. The
+    # bytes come from the plan's statistics — for a file scan, the
+    # file index's data bytes, on any Hadoop filesystem (file://,
+    # s3a://, hdfs://) — with no storage-specific listing here.
     conf = slim.sparkSession.conf
     cur_mpb = None
     try:
@@ -239,15 +251,8 @@ def route_and_write(
         new_mpb = int(override) << 20
     elif cur_mpb is not None:
         try:
-            total = 0
-            for uri in slim.inputFiles():
-                if uri.startswith("file:"):
-                    from urllib.parse import unquote, urlparse
-
-                    total += os.path.getsize(unquote(urlparse(uri).path))
-                else:
-                    total = 0
-                    break
+            stats = slim._jdf.queryExecution().optimizedPlan().stats()
+            total = int(str(stats.sizeInBytes()))
             if total:
                 slots = slim.sparkSession.sparkContext.defaultParallelism
                 target_splits = max(1, (2 * slots) // max(1, len(routes)))
@@ -267,8 +272,12 @@ def route_and_write(
         base.unpersist()
     # return lazy read-backs of the persisted counts tables — consuming
     # them costs a tiny scan, whereas returning the computed frames
-    # would re-run the (now unpersisted) base aggregate on first use
-    return {r.name: catalog.read(f"{r.name}_counts") for r in routes}
+    # would re-run the (now unpersisted) base aggregate on first use.
+    # The known schema spares one schema-inference job per table.
+    return {
+        r.name: catalog.read(f"{r.name}_counts", schema=counts[r.name].schema)
+        for r in routes
+    }
 
 
 def routed_union_equals_source(

@@ -4,9 +4,13 @@ Distributed trace (SURVEY.md §3.1): scan transcripts (column-pruned to
 conv_id, turn_idx, role, tool, text, ts) → one Arrow pass (DFA parse
 bank + DJB2, text dropped at the worker) → Catalyst-codegen'd
 casts/encodings + UA classify → ONE shuffle (the (ip_hash, key_hash)
-window for ST1, narrowest possible rows) → broadcast-join role/tool
-dims post-shuffle → slim table write (the checkpoint) → N filtered
-sink writes + per-sink counts from the columnar re-read.
+window for ST1, narrowest possible rows) → role/tool dims as CASE WHEN
+lookups post-shuffle → slim table write (the checkpoint) → route stage
+over the columnar re-read (read with the known ``SLIM_SCHEMA``, so no
+inference job): one collected (status × tool × role × day) cube sets
+every sink's write layout on the driver and feeds its counts table,
+so the route stage submits only the jobs that write data — the cube,
+then per sink one counts write and one data write.
 
 Scale posture: the only wide exchange before the sinks is the ST1
 window on high-cardinality hash keys (no skew by construction); the
@@ -28,6 +32,7 @@ from ..functions.parsing import parse_text_pandas, parse_text_sql
 from ..operators.enrich import classify_when, enrich_role_tool
 from ..operators.flags import with_flags
 from ..operators.router import Route, default_routes, route_and_write
+from ..schemas import SLIM_SCHEMA
 from ..sources.catalog import Catalog
 from .lineage import Manifest
 
@@ -132,8 +137,9 @@ def run_pipeline(
     # re-scanning the freshly written parquet here — OS page cache +
     # columnar decode beat MEMORY_AND_DISK's serialize/deserialize. On
     # a real cluster with remote object storage the trade flips; the
-    # catalog seam is where a cache policy would slot in.)
-    slim = catalog.read("slim")
+    # catalog seam is where a cache policy would slot in.) The slim
+    # schema is known, so the read runs no schema-inference job.
+    slim = catalog.read("slim", schema=SLIM_SCHEMA)
 
     t0 = time.perf_counter()
     sink_timings: dict[str, float] = {}

@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -105,10 +106,16 @@ class Catalog:
 
         return compact_table(self.spark, self.path(table), target_bytes)
 
-    def read(self, table: str) -> DataFrame:
+    def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
+        """``schema`` (parquet branch only) skips the schema-inference
+        job; a file-source read makes every field nullable. The Iceberg
+        branch takes the table's own schema."""
         if self.iceberg:  # pragma: no cover
             return self.spark.table(table)
-        return self.spark.read.parquet(self.path(table))
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self.path(table))
 
     def exists(self, table: str) -> bool:
         if self.iceberg:  # pragma: no cover

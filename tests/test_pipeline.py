@@ -45,6 +45,99 @@ def test_sink_counts_consistency(spark, transcripts, piperun):
     by_day = cat.read("by_day_counts")
     assert by_day.agg(F.sum("count")).collect()[0][0] == n_ok
 
+    # the returned frames are read with the counts' known schema; they
+    # must equal a plain read-back that infers it
+    assert sorted(res.sink_counts) == ["by_day", "by_role", "by_tool", "rejects"]
+    for name, df in res.sink_counts.items():
+        inferred = cat.read(f"{name}_counts")
+        assert df.schema == inferred.schema, name
+        assert sorted(df.collect(), key=str) == sorted(inferred.collect(), key=str), name
+
+
+def test_slim_schema_matches_build_slim_and_readback(spark, transcripts, piperun):
+    """``run_pipeline`` reads the slim checkpoint with ``SLIM_SCHEMA``
+    instead of inferring it, so its names and types must be exactly
+    what ``build_slim`` writes and what a parquet read-back infers."""
+    from s3_log_parser_spark.schemas import SLIM_SCHEMA
+
+    out, res = piperun
+
+    def shape(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    want = shape(SLIM_SCHEMA)
+    assert shape(build_slim(transcripts).schema) == want
+    assert shape(Catalog(spark, out).read("slim").schema) == want
+    assert res.slim.schema == Catalog(spark, out).read("slim").schema
+
+
+def _job_ids(spark) -> set[int]:
+    """Ids of the jobs outside any job group, once the listener bus has
+    delivered every event so far to the status store."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def test_route_stage_submits_only_write_jobs(spark, transcripts, tmp_path):
+    """The route stage's control decisions (write layouts, counts) come
+    from one collected cube, so ``route_and_write`` submits only the
+    cube and the writes: on the fixture at ``local[8]`` under AQE that
+    is 3 cube jobs, one counts write per sink (4), the rejects write
+    (1), and per partitioned sink a salt shuffle plus its write (6) —
+    14 jobs, against 32 when each layout and counts table ran its own
+    jobs. Choosing a layout submits none."""
+    from s3_log_parser_spark.operators.router import (
+        default_routes,
+        route_and_write,
+        sink_layout,
+    )
+
+    cat = Catalog(spark, str(tmp_path))
+    cat.write(build_slim(transcripts), "slim")
+    slim = cat.read("slim")
+
+    before = _job_ids(spark)
+    route_and_write(slim, cat)
+    assert len(_job_ids(spark) - before) == 14
+
+    before = _job_ids(spark)
+    for r in default_routes():
+        routed = slim.filter(r.predicate(slim))
+        sink_layout(routed, r.partition_by)
+        sink_layout(routed, r.partition_by, n_vals=100)
+    assert _job_ids(spark) == before
+
+
+def test_route_scan_split_sized_on_file_uri_catalog(
+    spark, transcripts, tmp_path, monkeypatch
+):
+    """The fan-out's scan split size is derived from the slim plan's
+    size statistics, which work on any Hadoop filesystem URI: routed
+    from a ``file://``-rooted catalog, every sink write runs with the
+    derived split size (the 4 MB floor for the small fixture), and the
+    session value is restored afterwards."""
+    from s3_log_parser_spark.operators.router import route_and_write
+
+    monkeypatch.delenv("ROUTER_SCAN_SPLIT_MB", raising=False)
+    key = "spark.sql.files.maxPartitionBytes"
+    session_mpb = spark.conf.get(key)
+    assert int(session_mpb) > 4 << 20
+    seen = {}
+
+    class Recording(Catalog):
+        def write(self, df, table, *args, **kwargs):
+            seen[table] = self.spark.conf.get(key)
+            super().write(df, table, *args, **kwargs)
+
+    cat = Recording(spark, "file://" + str(tmp_path))
+    cat.write(build_slim(transcripts), "slim")
+    seen.clear()
+    counts = route_and_write(cat.read("slim"), cat)
+    assert set(seen) == {t for r in counts for t in (r, f"{r}_counts")}
+    assert set(seen.values()) == {str(4 << 20)}
+    assert spark.conf.get(key) == session_mpb
+
 
 def test_routed_row_set_equality(spark, piperun):
     from s3_log_parser_spark.operators.router import align_schema

@@ -1,9 +1,10 @@
 """Isolated route-stage bench (guide §1.4): re-runs route_and_write
 against an already-written slim checkpoint, fresh sink dir each rep.
 
-Usage: python tools/bench_route.py [--reps N] [--slim DIR]
-Env: ROUTER_WRITE_STRATEGY / ROUTER_SCAN_SPLIT_MB / ROUTER_CONCURRENCY
-pass through to the router.
+Usage: python tools/bench_route.py --slim DIR [--reps N]
+The session is sized to the CPUs this process may use
+(``os.sched_getaffinity``). Env: ROUTER_WRITE_STRATEGY /
+ROUTER_SCAN_SPLIT_MB / ROUTER_CONCURRENCY pass through to the router.
 """
 
 from __future__ import annotations
@@ -25,11 +26,12 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--reps", type=int, default=2)
     ap.add_argument(
-        "--slim", default="/tmp/spark_graft_bench/pipe_c32/slim"
+        "--slim", required=True, help="slim checkpoint dir (parquet) to route"
     )
     args = ap.parse_args()
 
-    spark = get_spark(app_name="bench-route", cores=32)
+    cores = len(os.sched_getaffinity(0))
+    spark = get_spark(app_name="bench-route", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
     out = "/tmp/bench_route_out"
 
@@ -42,7 +44,7 @@ def main() -> None:
         route_and_write(slim, cat, timings_out=sink_t)
         dt = time.perf_counter() - t0
         print(
-            f"rep {i}: route {dt:.2f}s  "
+            f"rep {i} (local[{cores}]): route {dt:.2f}s  "
             + "  ".join(f"{k}={v:.1f}" for k, v in sink_t.items()),
             flush=True,
         )
