@@ -312,8 +312,8 @@ def _e1(spark, sf):
     """,
 )
 def _e2(spark, sf):
-    # E2: the DJB2 kernel (Catalyst expr form; the pandas-UDF form is
-    # parity-tested against it in tests/test_hashes.py)
+    # E2: the DJB2 kernel (Catalyst expr form, parity-tested against
+    # the byte-exact pure-Python djb2_py in tests/test_hashes.py)
     from s3_log_parser_spark.functions.hashes import djb2_expr
 
     return (

@@ -2,9 +2,16 @@
 
 The columnar analog of ``extract_log_entry``
 (``/root/reference/src/s3parser.c:373-408``): every scalar derivation
-is a Catalyst expression except the DJB2 kernel (one pandas UDF, see
-``functions/hashes.py``). The packed 28-byte struct's compression role
-is played by Parquet/Iceberg columnar encoding (SURVEY.md §4).
+is a Catalyst expression, in two shapes:
+
+- :func:`encode_slim_flat` — production: over the flat typed columns
+  of the Arrow parse kernel, which has already computed the DJB2
+  hashes (``functions/parsing_arrow.py``).
+- :func:`encode_slim` — the reference: over the ``parsed`` struct of
+  ``parse_text_sql``, hashing with ``djb2_expr``.
+
+The packed 28-byte struct's compression role is played by
+Parquet/Iceberg columnar encoding (SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -13,24 +20,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import SECONDS_PER_DAY
-from .hashes import djb2_expr, djb2_udf, first_path_segment
+from .hashes import djb2_expr, first_path_segment
 from .parsing import clamp_http_code, parse_range
 
 
-def encode_slim(df: DataFrame, use_udf_hash: bool = True) -> DataFrame:
+def encode_slim(df: DataFrame) -> DataFrame:
     """Derive all slim columns from a DataFrame holding ``parsed``
     (struct), ``event_ts``, ``parse_status`` and the transcript columns.
 
     Expects to run after parse; enrichment (system/platform) and flags
     attach separately (operators/enrich.py, operators/flags.py).
-
-    If the parse stage already emitted the four hash columns, they are
-    kept and no DJB2 stage runs.
     """
     p = F.col("parsed")
-    h = djb2_udf if use_udf_hash else djb2_expr
-
-    df = (
+    byte_start, byte_end = parse_range(p["range_header"])
+    return (
         df
         # E1 epoch (UTC-pinned; reference mktime uses local tz — fixed)
         .withColumn("ts_unix", F.unix_timestamp(F.col("event_ts")))
@@ -40,19 +43,11 @@ def encode_slim(df: DataFrame, use_udf_hash: bool = True) -> DataFrame:
             "day_bucket",
             (F.col("ts_unix") / SECONDS_PER_DAY).cast("long"),
         )
-    )
-    if "ip_hash" not in df.columns:
         # E2 DJB2 dictionary hashes (src/s3parser.c:377-379)
-        df = (
-            df.withColumn("ip_hash", h(p["remote_ip"]))
-            .withColumn("key_hash", h(p["key"]))
-            .withColumn("tool_hash", h(first_path_segment(p["key"])))
-            .withColumn("conv_hash", h(F.col("conv_id")))
-        )
-
-    byte_start, byte_end = parse_range(p["range_header"])
-    df = (
-        df
+        .withColumn("ip_hash", djb2_expr(p["remote_ip"]))
+        .withColumn("key_hash", djb2_expr(p["key"]))
+        .withColumn("tool_hash", djb2_expr(first_path_segment(p["key"])))
+        .withColumn("conv_hash", djb2_expr(F.col("conv_id")))
         # E3 KB quantization (floor division by 1024)
         .withColumn(
             "bytes_sent_kb", F.floor(p["bytes_sent"] / 1024).cast("int")
@@ -79,12 +74,11 @@ def encode_slim(df: DataFrame, use_udf_hash: bool = True) -> DataFrame:
         .withColumn("byte_end", byte_end)
         .withColumn("object_size", p["object_size"])
     )
-    return df
 
 
 def encode_slim_flat(df: DataFrame) -> DataFrame:
-    """encode stage over the flat typed columns parse_text_slim emits
-    (fast path — same derivations as encode_slim, zero struct access)."""
+    """encode stage over the flat typed columns ``parse_text_arrow``
+    emits (same derivations as encode_slim, zero struct access)."""
     return (
         df.withColumn("ts_unix", F.unix_timestamp(F.col("event_ts")))
         .withColumn(

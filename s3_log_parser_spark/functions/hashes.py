@@ -4,18 +4,17 @@ The reference dictionary-encodes strings (ip / key / show name) to
 ``uint32`` with DJB2 (``/root/reference/src/s3parser.c:461-477``:
 ``h = 5381; h = h*33 + byte`` with uint32 wrap; NULL → 5381). No Spark
 builtin matches (``hash`` is Murmur3, ``xxhash64``/``crc32`` differ), so
-we provide three parity-checked forms:
+the kernel comes in three forms, each with its own job:
 
-- :func:`djb2_py`       — pure-Python oracle (byte-exact, test fixture).
-- :func:`djb2_udf`      — vectorized Arrow-batched pandas UDF, byte-exact
-  for any UTF-8 input. One Python call per 10k-row Arrow batch (no
-  per-row Python, per the north_rule); inside the batch, unique-value
-  caching makes it O(distinct) for the dictionary-ish columns it is
-  applied to (ips, tools, keys).
-- :func:`djb2_expr`     — pure-Catalyst expression via higher-order
+- :func:`djb2_py`    — pure-Python oracle (byte-exact, test fixture).
+- :func:`djb2_numpy` — vectorized byte-exact form over Arrow buffers;
+  the production hash inside the Arrow parse and shingle kernels
+  (``functions/parsing_arrow.py``, ``functions/shingles_arrow.py``),
+  pinned against :func:`djb2_py`.
+- :func:`djb2_expr`  — pure-Catalyst expression via higher-order
   ``aggregate`` over ``split(col, '')``. Codepoint-based, so identical
-  to the byte form on ASCII (all reference inputs are ASCII); used as a
-  JVM-side cross-check and as the DuckDB-oracle-matching form.
+  to the byte form on ASCII (all reference inputs are ASCII); the
+  hash of the SQL reference parse and the DuckDB-oracle-matching form.
 
 Hash domain: returned as LongType holding the uint32 value (Spark has
 no unsigned types; two's-complement IntegerType would flip sign on half
@@ -24,11 +23,8 @@ the domain — SURVEY.md §1.2).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..schemas import DJB2_SEED
 
@@ -88,28 +84,6 @@ def djb2_numpy(arr) -> "object":
     return out.astype(np.int64)
 
 
-def _djb2_series(s: pd.Series) -> pd.Series:
-    # unique-value cache: hash each distinct string once per Arrow batch
-    cache: dict = {}
-
-    def one(v):
-        if v is None or (isinstance(v, float) and pd.isna(v)):
-            return DJB2_SEED
-        r = cache.get(v)
-        if r is None:
-            r = djb2_py(v)
-            cache[v] = r
-        return r
-
-    return s.map(one).astype("int64")
-
-
-# DataType instance (not DDL string) so import needs no live session
-@pandas_udf(T.LongType())
-def djb2_udf(s: pd.Series) -> pd.Series:  # pragma: no cover — runs on executors
-    return _djb2_series(s)
-
-
 def djb2_expr(col: Column | str) -> Column:
     """Catalyst-only DJB2 over codepoints (== bytes for ASCII).
 
@@ -138,13 +112,3 @@ def first_path_segment(col: Column | str) -> Column:
     """P7: '/show/ep.mp3' → 'show' (src/s3parser.c:420-451)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_extract(c, r"^/?([^/]*)", 1)
-
-
-def path_segment_hash(col: Column | str, use_udf: bool = True) -> Column:
-    """extract_path: DJB2 of the first path segment; NULL/'' → 5381."""
-    c = F.col(col) if isinstance(col, str) else col
-    seg = first_path_segment(c)
-    hashed = djb2_udf(seg) if use_udf else djb2_expr(seg)
-    return F.when(
-        c.isNull() | (c == F.lit("")), F.lit(DJB2_SEED).cast("long")
-    ).otherwise(hashed)

@@ -6,13 +6,14 @@ quote-toggling and bracket-depth tracking). The format is regular, so
 here it is ONE precompiled anchored regex (the "pattern bank"), applied
 two ways:
 
-- :func:`parse_text_pandas` — the hot path named by the north_star: a
-  vectorized pandas UDF (`pandas .str.extract` → C regex engine over an
-  Arrow batch; zero per-row Python) returning a struct of raw string
-  fields.
+- ``functions/parsing_arrow.parse_text_arrow`` — the production path:
+  one ``mapInArrow`` kernel (RE2 + Arrow splits + dictionary DJB2)
+  emitting only the flat slim columns.
 - :func:`parse_text_sql` — pure-Catalyst ``regexp_extract`` per field
-  from the same pattern; used as the JVM-side cross-check and the shape
-  the DuckDB oracle mirrors.
+  from the same pattern, returning the full typed ``parsed`` struct:
+  the zero-Python reference the Arrow kernel is checked against, the
+  source of the byte-exact round-trip (:func:`reassemble_text`) and
+  the shape the DuckDB oracle mirrors.
 
 Typed casts (P4), http-code domain clamp (P3), timestamp parse (P2) and
 range split (P5) happen *after* extraction in Catalyst so failures feed
@@ -22,15 +23,12 @@ zeroing (src/s3parser.c:165-171, 216-218 — SURVEY.md §1.3).
 
 from __future__ import annotations
 
-from typing import Iterator
+import re
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-from ..schemas import PARSED_FIELDS, PARSED_RAW_STRUCT
+from ..schemas import PARSED_FIELDS
 
 # field-name order must match PARSED_FIELDS / reassembly
 _FIELD_PATTERNS: list[tuple[str, str]] = [
@@ -75,194 +73,32 @@ TS_FORMAT = "dd/MMM/yyyy:HH:mm:ss Z"  # P2 — src/s3parser.c:161 strptime fmt
 _INT_FIELDS = {n for n, t in PARSED_FIELDS if t.typeName() in ("integer", "long")}
 
 
-def parse_text_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Hot-path grok parse: one pandas UDF → ``parsed`` struct column.
-
-    Uses mapInPandas-free scalar pandas_udf with a struct return type;
-    pandas ``.str.extract`` compiles the bank once per worker.
-    """
-
-    @pandas_udf(PARSED_RAW_STRUCT)
-    def grok(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        import re
-
-        pat = re.compile(S3_LINE_PATTERN)
-        cols = [n for n, _ in PARSED_FIELDS]
-        for s in it:
-            out = s.str.extract(pat)
-            yield out[cols]
-
-    parsed = df.withColumn("_raw", grok(F.col(text_col)))
-    return _typed_from_raw(parsed, text_col)
-
-
-# minimal fused output: only what the slim table needs crosses Arrow.
-# The full 27-field struct costs ~600 B/row of Arrow transfer + struct
-# assembly; the pipeline only consumes these typed columns (the full
-# struct path stays for the byte-exact round-trip invariant).
-_SLIM_PARSE_STRUCT = T.StructType(
-    [
-        T.StructField("event_ts", T.TimestampType(), True),
-        T.StructField("parse_status", T.StringType(), False),
-        T.StructField("ip_hash", T.LongType(), False),
-        T.StructField("key_hash", T.LongType(), False),
-        T.StructField("tool_hash", T.LongType(), False),
-        T.StructField("conv_hash", T.LongType(), False),
-        T.StructField("http_code_raw", T.IntegerType(), True),
-        T.StructField("bytes_sent", T.LongType(), True),
-        T.StructField("object_size", T.LongType(), True),
-        T.StructField("total_time_ms", T.IntegerType(), True),
-        T.StructField("byte_start", T.LongType(), True),
-        T.StructField("byte_end", T.LongType(), True),
-        T.StructField("user_agent", T.StringType(), True),
-    ]
-)
-
-
-def parse_text_slim(
-    df: DataFrame, text_col: str = "text", conv_col: str = "conv_id"
-) -> DataFrame:
-    """Hot-path fused parse: grok + DJB2 + timestamp + range decode in
-    one Arrow-batched pandas UDF, returning ONLY the narrow typed
-    columns the slim table consumes.
-
-    Semantics identical to parse_text_pandas → encode_slim (pinned by
-    tests/test_pipeline.py::test_fused_equals_modular); the timestamp
-    parse honors %z and lands UTC (the reference's local-time mktime
-    bug is deliberately not reproduced — SURVEY.md §2.2 P2).
-    """
-
-    @pandas_udf(_SLIM_PARSE_STRUCT)
-    def grok_slim(
-        it: Iterator[tuple[pd.Series, pd.Series]],
-    ) -> Iterator[pd.DataFrame]:
-        import re
-
-        import numpy as np
-
-        from .hashes import djb2_py
-
-        pat = re.compile(S3_LINE_PATTERN)
-        seg_re = re.compile(r"^/?([^/]*)")
-        rng_re = re.compile(r"bytes=?(\d+)-(\d+)")
-        cache: dict = {}
-        CACHE_CAP = 2_000_000
-
-        def h(v):
-            if v is None or (isinstance(v, float) and pd.isna(v)):
-                return 5381
-            r = cache.get(v)
-            if r is None:
-                r = djb2_py(v)
-                if len(cache) < CACHE_CAP:
-                    cache[v] = r
-            return r
-
-        def seg_h(v):
-            if v is None or (isinstance(v, float) and pd.isna(v)) or v == "":
-                return 5381
-            return h(seg_re.match(v).group(1))
-
-        def rng(v, g):
-            if v is None or (isinstance(v, float) and pd.isna(v)):
-                return None
-            m = rng_re.search(v)
-            return int(m.group(g)) if m else None
-
-        for text, conv in it:
-            raw = text.str.extract(pat)
-            ts = pd.to_datetime(
-                raw["ts_str"], format="%d/%b/%Y:%H:%M:%S %z", errors="coerce", utc=True
-            )
-            # unify the offset domain with the java/Arrow paths: strict
-            # ±HHMM with |offset| ≤ 18:00 (python %z alone accepts up
-            # to ±23:59 and exotic spellings like 'Z'/'+HH:MM', which
-            # java's ZoneOffset / the Arrow kernel reject — cross-parser
-            # fuzz found '-2359' diverging)
-            off = raw["ts_str"].str.extract(r" [+-](\d{2})(\d{2})$")
-            off_ok = (
-                off[0].notna()
-                & (pd.to_numeric(off[1], errors="coerce") <= 59)
-                & (
-                    pd.to_numeric(off[0], errors="coerce") * 60
-                    + pd.to_numeric(off[1], errors="coerce")
-                    <= 18 * 60
-                )
-            )
-            ts = ts.where(off_ok, pd.NaT)
-            status = np.where(
-                raw["owner"].isna(),
-                "bad_format",
-                np.where(ts.isna() & raw["ts_str"].notna(), "bad_time", "ok"),
-            )
-            out = pd.DataFrame(
-                {
-                    "event_ts": ts,
-                    "parse_status": status,
-                    "ip_hash": raw["remote_ip"].map(h).astype("int64"),
-                    "key_hash": raw["key"].map(h).astype("int64"),
-                    "tool_hash": raw["key"].map(seg_h).astype("int64"),
-                    "conv_hash": conv.map(h).astype("int64"),
-                    "http_code_raw": pd.to_numeric(
-                        raw["http_code"], errors="coerce"
-                    ).astype("Int32"),
-                    "bytes_sent": pd.to_numeric(
-                        raw["bytes_sent"], errors="coerce"
-                    ).astype("Int64"),
-                    "object_size": pd.to_numeric(
-                        raw["object_size"], errors="coerce"
-                    ).astype("Int64"),
-                    "total_time_ms": pd.to_numeric(
-                        raw["total_time_ms"], errors="coerce"
-                    ).astype("Int32"),
-                    "byte_start": raw["range_header"]
-                    .map(lambda v: rng(v, 1))
-                    .astype("Int64"),
-                    "byte_end": raw["range_header"]
-                    .map(lambda v: rng(v, 2))
-                    .astype("Int64"),
-                    "user_agent": raw["user_agent"],
-                }
-            )
-            yield out
-
-    p = df.withColumn("_p", grok_slim(F.col(text_col), F.col(conv_col)))
-    for f in _SLIM_PARSE_STRUCT.fields:
-        p = p.withColumn(f.name, F.col("_p")[f.name])
-    return p.drop("_p")
-
-
 def parse_text_sql(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Catalyst-only variant: regexp_extract per field, same pattern.
+    """Grok parse in pure Catalyst: ``regexp_extract`` per field from the
+    pattern bank → ``parsed`` struct (typed fields), ``event_ts`` and
+    ``parse_status``.
 
     regexp_extract needs numbered groups; group i+1 corresponds to
     field i because the bank has exactly one group per field.
     """
-    # convert named groups to plain groups for JVM regex group indexing
-    import re as _re
-
-    plain = _re.sub(r"\(\?P<[^>]+>", "(", S3_LINE_PATTERN)
-    exprs = []
-    for i, (name, _) in enumerate(PARSED_FIELDS):
-        g = F.regexp_extract(F.col(text_col), plain, i + 1)
-        exprs.append(g.alias(name))
-    # regexp_extract returns '' on miss — use a match probe to distinguish
-    matched = F.col(text_col).rlike(plain)
-    raw = F.when(matched, F.struct(*exprs)).otherwise(F.lit(None))
-    parsed = df.withColumn("_raw", raw.cast(PARSED_RAW_STRUCT))
-    return _typed_from_raw(parsed, text_col, empty_range_is_null=True)
-
-
-def _typed_from_raw(
-    df: DataFrame, text_col: str, empty_range_is_null: bool = False
-) -> DataFrame:
-    """Shared cast + parse_status derivation from the raw string struct."""
-    r = F.col("_raw")
+    text = F.col(text_col)
+    plain = re.sub(r"\(\?P<[^>]+>", "(", S3_LINE_PATTERN)
+    # regexp_extract returns '' on a miss and for a group that did not
+    # take part, so match probes tell them apart: the line, and the
+    # line with the optional range group made mandatory (a trailing
+    # '""' is an empty range, not a missing one)
+    matched = text.rlike(plain)
+    has_range = text.rlike(plain.removesuffix(")?$") + ")$")
+    raw = {
+        name: F.when(
+            has_range if name == "range_header" else matched,
+            F.regexp_extract(text, plain, i + 1),
+        )
+        for i, (name, _) in enumerate(PARSED_FIELDS)
+    }
     fields: list[Column] = []
     for name, typ in PARSED_FIELDS:
-        c = r[name]
-        if name == "range_header" and empty_range_is_null:
-            c = F.when(c == "", F.lit(None)).otherwise(c)
+        c = raw[name]
         if name in _INT_FIELDS:
             # try_cast: NULL on non-numeric ('-') in BOTH ANSI modes —
             # a plain cast throws CAST_INVALID_INPUT under ANSI
@@ -271,17 +107,14 @@ def _typed_from_raw(
 
     # try_to_timestamp: NULL on malformed input in BOTH ANSI modes (the
     # bad_time rows would throw CANNOT_PARSE_TIMESTAMP under ANSI)
-    ts = F.try_to_timestamp(r["ts_str"], F.lit(TS_FORMAT))
+    ts = F.try_to_timestamp(raw["ts_str"], F.lit(TS_FORMAT))
+    status = F.when(
+        matched, F.when(ts.isNull(), F.lit("bad_time")).otherwise(F.lit("ok"))
+    ).otherwise(F.lit("bad_format"))
     return (
         df.withColumn("parsed", F.struct(*fields))
         .withColumn("event_ts", ts)
-        .withColumn(
-            "parse_status",
-            F.when(r["owner"].isNull(), F.lit("bad_format"))
-            .when(r["ts_str"].isNotNull() & ts.isNull(), F.lit("bad_time"))
-            .otherwise(F.lit("ok")),
-        )
-        .drop("_raw")
+        .withColumn("parse_status", status)
     )
 
 

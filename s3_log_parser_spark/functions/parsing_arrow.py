@@ -1,6 +1,7 @@
-"""Arrow-native fused parse — the 100 TB hot path.
+"""Arrow-native fused parse — the one production parse, batch and
+streaming.
 
-Why this exists: the pandas grok UDF allocates ~27 Python string
+Why Arrow and not pandas: a pandas grok UDF allocates ~27 Python string
 objects per row; at 32 concurrent workers that saturates the memory
 bus/allocator and the parse stage stops scaling (measured: extract-only
 29 s on 32 cores vs 19 s on 8 — negative scaling). This variant keeps
@@ -11,14 +12,17 @@ every per-row operation inside Arrow C++ kernels via ``mapInArrow``:
   measured 86% of the old kernel) + positional field extraction with
   plain-char ``split_pattern`` / ``list_element`` C++ kernels, invalid
   rows shape-normalized through a dummy line and masked back to NULL;
-- DJB2 via dictionary-encode → hash the (small) dictionary in Python →
-  ``take`` back, so Python cost is O(distinct), not O(rows);
+- DJB2 via dictionary-encode → hash the dictionary with the vectorized
+  ``hashes.djb2_numpy`` → ``take`` back, so hashing is O(distinct
+  bytes), not O(rows);
 - ``strptime`` + explicit UTC-offset arithmetic for the timestamp
   (honoring %z, unlike the reference's local-time mktime — SURVEY P2);
 - guarded casts (digit-mask → cast) for the numeric fields.
 
-Output columns and semantics are identical to
-``parsing.parse_text_slim`` (pinned by tests/test_pipeline.py).
+After ``encode_slim_flat`` the slim columns equal those of the
+zero-Python reference ``parsing.parse_text_sql`` → ``encode_slim``
+(pinned by tests/test_pipeline.py, tests/test_parsing.py and
+tests/test_property_roundtrip.py).
 """
 
 from __future__ import annotations
@@ -206,8 +210,8 @@ def parse_text_arrow(
 
             # timestamp: the bracket must hold exactly "date offset"
             # (the %d/%b/%Y:%H:%M:%S %z shape); any other token count
-            # → bad_time, matching the pandas/SQL parsers' strict
-            # format parse instead of extracting from shifted tokens
+            # → bad_time, matching the SQL parser's strict format
+            # parse instead of extracting from shifted tokens
             ts_parts = pc.split_pattern(ts_tok, " ")
             base = pc.if_else(
                 pc.equal(pc.fill_null(pc.list_value_length(ts_parts), 0), 2),
@@ -224,10 +228,9 @@ def parse_text_arrow(
             )
             # offset handling via the (tiny) distinct-offset dictionary;
             # strict "±HHMM]" shape — a malformed offset is bad_time
-            # (NULL), not a silent +0000. Domain = the INTERSECTION of
-            # all three parser engines: java's ZoneOffset caps at
-            # ±18:00 and both java/python require MM ≤ 59, so anything
-            # looser here would diverge from the pandas/SQL paths
+            # (NULL), not a silent +0000. Domain = what java's
+            # ZoneOffset accepts in the SQL parser: at most ±18:00 and
+            # MM ≤ 59, so anything looser here would diverge from it
             # (found by the cross-parser fuzz: '-2359' parses under
             # python %z but not java)
             od = pc.dictionary_encode(le_s(ts_parts, 1))
@@ -262,7 +265,7 @@ def parse_text_arrow(
 
             # shape-degenerate rows still matched the grammar (okdfa),
             # so they classify as bad_time (unparseable timestamp — the
-            # pandas/SQL parsers' verdict), never bad_format
+            # SQL parser's verdict), never bad_format
             status = pc.if_else(
                 pc.invert(okdfa),
                 pa.scalar("bad_format"),

@@ -1239,9 +1239,10 @@ def cluster_canonical(
 
     Scale shape: one equi-join of the corpus against the id-keyed
     cluster frame, one hash aggregate per cluster computing BOTH the
-    group size and the winner — ``MIN(struct(-score, id))`` picks
-    (max score, then min id) in a single orderable-struct aggregate,
-    no window and no per-cluster sort — then one equi-join of the
+    group size and the winner — ``MIN(struct(isnull(score), -score,
+    id))`` picks (max score with NULL scores last, then min id) in a
+    single orderable-struct aggregate, no window and no per-cluster
+    sort — then one equi-join of the
     ≤#clusters winner table back on the label. All keys are uniformly
     distributed ids/labels."""
     from pyspark.sql.types import NumericType

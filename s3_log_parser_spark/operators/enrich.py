@@ -210,63 +210,44 @@ def enrich_broadcast(
     return _platform_cols(df)
 
 
-def enrich_role_tool(df: DataFrame, method: str = "broadcast") -> DataFrame:
-    """North-star broadcast-hash-join enrichment of the role/tool
-    dimensions — equi-join keys → BroadcastHashJoinExec, zero shuffle
-    on the fact side. The ``tool_hash`` from the dim doubles as a
-    precomputed DJB2 (golden values, FIXTURES.md §2), avoiding the UDF
-    for the dictionary-encoded tool column entirely.
+def enrich_role_tool(df: DataFrame) -> DataFrame:
+    """Attach the role/tool dimensions: ``role_id``, ``tool_id`` and
+    ``tool_dim_hash`` (the tool name's DJB2, FIXTURES.md §2).
 
-    ``method="expr"`` (r7, the pipeline's default): the dims are
-    compile-time-constant tables (3 roles, 20 tools), so the left join
-    collapses to CASE-WHEN lookups — identical columns and values
-    (NULL for unmatched keys, like the left join), but zero
-    BroadcastExchange stages. Each broadcast build cost ~0.5 s of
-    fixed per-run driver/collect work; data-driven dims that are not
-    plan-time constants still take the broadcast path.
+    The dims are compile-time-constant tables (3 roles, 20 tools), so
+    the lookup is CASE WHEN, not a join: the left-join contract (NULL
+    for a NULL or unknown key) with zero BroadcastExchange stages and
+    no exchange on the fact side.
     """
-    from ..schemas import ROLES, TOOL_NAMES, role_dim, tool_dim
+    from ..functions.hashes import djb2_py
+    from ..schemas import ROLES, TOOL_NAMES
 
-    if method == "expr":
-        from ..functions.hashes import djb2_py
-
-        # SQL text, not a 46-When Column loop (r7): same CASE trees,
-        # ~0.15 s of py4j per construction saved; distinct match values
-        # make the WHEN order irrelevant
-        role_sql = (
-            "CAST(CASE "
-            + " ".join(
-                f"WHEN role = {_sqlq(r)} THEN {i + 1}"
-                for i, r in enumerate(ROLES)
-            )
-            + " ELSE CAST(NULL AS INT) END AS INT)"
+    # SQL text, not a 46-When Column loop (r7): same CASE trees,
+    # ~0.15 s of py4j per construction saved; distinct match values
+    # make the WHEN order irrelevant
+    role_sql = (
+        "CAST(CASE "
+        + " ".join(
+            f"WHEN role = {_sqlq(r)} THEN {i + 1}" for i, r in enumerate(ROLES)
         )
-        tool_id_sql = (
-            "CAST(CASE "
-            + " ".join(
-                f"WHEN tool = {_sqlq(t)} THEN {i}"
-                for i, t in enumerate(TOOL_NAMES)
-            )
-            + " ELSE CAST(NULL AS INT) END AS INT)"
-        )
-        tool_hash_sql = (
-            "CAST(CASE "
-            + " ".join(
-                f"WHEN tool = {_sqlq(t)} THEN {djb2_py(t)}"
-                for t in TOOL_NAMES
-            )
-            + " ELSE CAST(NULL AS BIGINT) END AS BIGINT)"
-        )
-        return (
-            df.withColumn("role_id", F.expr(role_sql))
-            .withColumn("tool_id", F.expr(tool_id_sql))
-            .withColumn("tool_dim_hash", F.expr(tool_hash_sql))
-        )
-    spark = df.sparkSession
-    df = df.join(F.broadcast(role_dim(spark)), "role", "left")
-    df = df.join(
-        F.broadcast(tool_dim(spark).withColumnRenamed("tool_hash", "tool_dim_hash")),
-        "tool",
-        "left",
+        + " ELSE CAST(NULL AS INT) END AS INT)"
     )
-    return df
+    tool_id_sql = (
+        "CAST(CASE "
+        + " ".join(
+            f"WHEN tool = {_sqlq(t)} THEN {i}" for i, t in enumerate(TOOL_NAMES)
+        )
+        + " ELSE CAST(NULL AS INT) END AS INT)"
+    )
+    tool_hash_sql = (
+        "CAST(CASE "
+        + " ".join(
+            f"WHEN tool = {_sqlq(t)} THEN {djb2_py(t)}" for t in TOOL_NAMES
+        )
+        + " ELSE CAST(NULL AS BIGINT) END AS BIGINT)"
+    )
+    return (
+        df.withColumn("role_id", F.expr(role_sql))
+        .withColumn("tool_id", F.expr(tool_id_sql))
+        .withColumn("tool_dim_hash", F.expr(tool_hash_sql))
+    )

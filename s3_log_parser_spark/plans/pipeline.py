@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.encode import SLIM_COLUMNS, encode_slim
-from ..functions.parsing import parse_text_pandas, parse_text_sql
+from ..functions.parsing import parse_text_sql
 from ..operators.enrich import classify_when, enrich_role_tool
 from ..operators.flags import with_flags
 from ..operators.router import Route, default_routes, route_and_write
@@ -45,62 +45,45 @@ class PipelineResult:
     lineage: DataFrame | None = None
 
 
-def _parse_encode_classify(transcripts: DataFrame, arrow: bool = True) -> DataFrame:
+def _parse_encode_classify(transcripts: DataFrame) -> DataFrame:
     """Parse, flat encode and user-agent classify: the slim columns
     before flags and dims. The Arrow kernel is one ``mapInArrow``
-    stage; ``arrow=False`` swaps in the pandas fused UDF. Both
-    ``build_slim`` and the streaming ``build_slim_stream`` start here."""
+    stage. Both ``build_slim`` and the streaming ``build_slim_stream``
+    start here. The parse and encode functions are looked up on their
+    modules at call time, so a wrapper set on the module attribute
+    (the benchmark's layer tracer) sees every call."""
     from ..functions.encode import encode_slim_flat
+    from ..functions.parsing_arrow import parse_text_arrow
 
-    if arrow:
-        from ..functions.parsing_arrow import parse_text_arrow as parse
-    else:
-        from ..functions.parsing import parse_text_slim as parse
-    df = encode_slim_flat(parse(transcripts, "text", "conv_id"))
+    df = encode_slim_flat(parse_text_arrow(transcripts, "text", "conv_id"))
     return classify_when(df).drop("user_agent")
 
 
-def build_slim(
-    transcripts: DataFrame,
-    use_sql_parser: bool = False,
-    use_udf_hash: bool = True,
-    fused: bool = True,
-    arrow: bool = True,
-) -> DataFrame:
+def build_slim(transcripts: DataFrame, use_sql_parser: bool = False) -> DataFrame:
     """The logical plan for transcripts → slim (no writes, no actions).
 
-    Default path is the Arrow-native fused parse (mapInArrow + RE2 +
-    dictionary-encoded DJB2) — exactly ONE vectorized stage, zero
-    per-row Python objects (north_rule). ``arrow=False`` selects the
-    pandas fused UDF; ``use_sql_parser`` the zero-Python Catalyst
-    variant (cross-check paths, all equality-pinned in tests).
+    The production path is the Arrow-native fused parse (mapInArrow +
+    RE2 + dictionary-encoded DJB2) — exactly ONE vectorized stage, zero
+    per-row Python objects (north_rule). ``use_sql_parser`` selects the
+    zero-Python Catalyst reference (``parse_text_sql`` → ``encode_slim``)
+    the production path is checked against in tests and the benchmark.
     """
-    if fused and not use_sql_parser:
-        df = _parse_encode_classify(transcripts, arrow)
-    else:
-        if use_sql_parser:
-            df = parse_text_sql(transcripts, "text")
-            df = encode_slim(df, use_udf_hash=False)
-        else:
-            df = parse_text_pandas(transcripts, "text")
-            df = encode_slim(df, use_udf_hash=use_udf_hash)
+    if use_sql_parser:
+        df = encode_slim(parse_text_sql(transcripts, "text"))
         # E7/E8: pattern banks are compile-time constants → CASE WHEN
-        # chains (whole-stage codegen); the data-driven dims (role/tool)
-        # go through real broadcast hash joins.
+        # chains (whole-stage codegen)
         df = classify_when(
             df.withColumn("user_agent", F.col("parsed")["user_agent"])
         ).drop("user_agent")
-    # window BEFORE the broadcast enrich: with_flags' ST1 exchange is
-    # the DAG's one wide shuffle, so it should carry the narrowest rows
-    # possible — the role/tool dim columns (3 ints/row) are attached by
-    # broadcast joins on the post-shuffle side instead (broadcast hash
-    # joins are position-independent; column values are unchanged)
+    else:
+        df = _parse_encode_classify(transcripts)
+    # window BEFORE the role/tool dims: with_flags' ST1 exchange is the
+    # DAG's one wide shuffle, so it should carry the narrowest rows
+    # possible — the dim columns (3 ints/row) are attached on the
+    # post-shuffle side instead, as CASE WHEN lookups (no join, no
+    # BroadcastExchange; column values do not depend on position)
     df = with_flags(df)
-    # r7: the role/tool dims are plan-time constants, so the pipeline
-    # uses the CASE-WHEN lookup form — same columns/values as the left
-    # broadcast join (parity-pinned in tests), zero BroadcastExchange
-    # stages per run
-    df = enrich_role_tool(df, method="expr")
+    df = enrich_role_tool(df)
     return df.select(*SLIM_COLUMNS)
 
 
@@ -110,7 +93,6 @@ def run_pipeline(
     out_dir: str,
     run_id: str = "run-0",
     routes: list[Route] | None = None,
-    use_sql_parser: bool = False,
     verbose: bool = False,
 ) -> PipelineResult:
     """Execute the full DAG with manifest-gated idempotent resume.
@@ -127,7 +109,7 @@ def run_pipeline(
 
     t0 = time.perf_counter()
     if not manifest.complete("slim"):
-        slim = build_slim(transcripts, use_sql_parser=use_sql_parser)
+        slim = build_slim(transcripts)
         catalog.write(slim, "slim", mode="overwrite")
         manifest.mark("slim")
     timings["slim"] = time.perf_counter() - t0

@@ -4,8 +4,8 @@ The reference bakes its "dimension tables" into code as enums and
 ordered pattern banks (``/root/reference/include/s3lp.h:87-126``,
 ``src/s3parser.c:494-586``). Here they are data: StructTypes declared
 once, enum dicts exported as constants, and builder helpers that turn
-the pattern banks into small DataFrames for broadcast-join enrichment
-(SURVEY.md §2.3 E7/E8, §2.4).
+the user-agent pattern banks into small DataFrames for broadcast-join
+enrichment (SURVEY.md §2.3 E7/E8, §2.4).
 """
 
 from __future__ import annotations
@@ -62,17 +62,6 @@ PARSED_FIELDS: list[tuple[str, T.DataType]] = [
     ("acl_required", T.StringType()),
     ("range_header", T.StringType()),  # optional 27th field (206 rows)
 ]
-
-PARSED_STRUCT = T.StructType(
-    [T.StructField(n, t, True) for n, t in PARSED_FIELDS]
-)
-
-# String fields as they appear inside the raw line, before typed casts —
-# what the vectorized grok bank extracts (all strings; casts happen in
-# Catalyst afterwards so `try_cast` failures can feed parse_status).
-PARSED_RAW_STRUCT = T.StructType(
-    [T.StructField(n, T.StringType(), True) for n, _ in PARSED_FIELDS]
-)
 
 # ---------------------------------------------------------------------------
 # Encoded ("slim") record — the columnar analog of the reference's packed
@@ -216,7 +205,7 @@ USER_AGENTS = [
 def system_dim(spark: SparkSession):
     """system pattern bank as a broadcast-join dimension (E7).
 
-    All four dims below are plan-constant tables built as pure-JVM
+    Both pattern-bank dims are plan-constant tables built as pure-JVM
     literal plans (``session.literal_frame``) rather than
     ``createDataFrame`` — a LogicalRDD dim costs a Python-worker task
     on every broadcast build (~0.3-1 s/job, guide §4); the literal form
@@ -238,23 +227,3 @@ def os_dim(spark: SparkSession):
         for p in pats
     ]
     return literal_frame(spark, rows, "pattern string, os_id int, priority int")
-
-
-def role_dim(spark: SparkSession):
-    from .session import literal_frame
-
-    return literal_frame(
-        spark, [(r, i + 1) for i, r in enumerate(ROLES)],
-        "role string, role_id int",
-    )
-
-
-def tool_dim(spark: SparkSession):
-    from .functions.hashes import djb2_py
-    from .session import literal_frame
-
-    return literal_frame(
-        spark,
-        [(t, i, djb2_py(t)) for i, t in enumerate(TOOL_NAMES)],
-        "tool string, tool_id int, tool_hash long",
-    )

@@ -36,7 +36,7 @@ def build_slim_stream(transcripts: DataFrame, watermark: str = "10 minutes") -> 
     no broadcast), with flags but without the ST1 window — the stateless
     bitmask with is_first=false; the dedup flag is applied by the
     router via dropDuplicatesWithinWatermark on the start-row stream."""
-    df = enrich_role_tool(_parse_encode_classify(transcripts), method="expr")
+    df = enrich_role_tool(_parse_encode_classify(transcripts))
     df = df.withColumn(
         "flags",
         chunk_flags(

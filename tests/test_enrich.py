@@ -77,45 +77,38 @@ def test_enrich_broadcast_plan_has_no_shuffle(spark):
     assert "monotonically_increasing_id" not in plan
 
 
-def test_broadcast_plan_is_broadcast(spark):
+def test_role_tool_dims_match_python_reference(spark):
+    """The CASE-WHEN role/tool dim lookup equals a pure-Python
+    expectation built from ROLES, TOOL_NAMES and djb2_py, including
+    NULL and unknown keys (→ NULL ids, the left-join contract), with
+    no broadcast and no join in the plan."""
+    from s3_log_parser_spark.functions.hashes import djb2_py
     from s3_log_parser_spark.operators.enrich import enrich_role_tool
+    from s3_log_parser_spark.schemas import ROLES, TOOL_NAMES
 
-    df = spark.createDataFrame(
-        [("user", "tech-talk")], "role string, tool string"
-    )
-    plan = enrich_role_tool(df)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-
-
-def test_role_tool_expr_matches_broadcast_join(spark):
-    """r7: the CASE-WHEN dim lookup (pipeline default) must equal the
-    left broadcast join row-for-row, including NULL and unknown keys
-    (→ NULL ids, the left-join contract), with zero broadcasts."""
-    from s3_log_parser_spark.operators.enrich import enrich_role_tool
-
-    df = spark.createDataFrame(
-        [
-            ("user", "tech-talk"),
-            ("assistant", "finance-focus"),
-            ("tool", "gaming-news"),
-            (None, None),
-            ("narrator", "unknown-tool"),
-        ],
-        "role string, tool string",
-    )
+    keys = [
+        ("user", "tech-talk"),
+        ("assistant", "finance-focus"),
+        ("tool", "gaming-news"),
+        (None, None),
+        ("narrator", "unknown-tool"),
+    ]
+    df = spark.createDataFrame(keys, "role string, tool string")
+    role_id = {r: i + 1 for i, r in enumerate(ROLES)}
+    assert role_id == {"user": 1, "assistant": 2, "tool": 3}
+    tool_id = {t: i for i, t in enumerate(TOOL_NAMES)}
+    want = {
+        (
+            role,
+            tool,
+            role_id.get(role),
+            tool_id.get(tool),
+            djb2_py(tool) if tool in tool_id else None,
+        )
+        for role, tool in keys
+    }
     cols = ["role", "tool", "role_id", "tool_id", "tool_dim_hash"]
-    bc = {
-        tuple(r) for r in enrich_role_tool(df).select(*cols).collect()
-    }
-    ex = {
-        tuple(r)
-        for r in enrich_role_tool(df, method="expr").select(*cols).collect()
-    }
-    assert bc == ex
-    plan = (
-        enrich_role_tool(df, method="expr")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    got = {tuple(r) for r in enrich_role_tool(df).select(*cols).collect()}
+    assert got == want
+    plan = enrich_role_tool(df)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" not in plan and "Join" not in plan

@@ -1,14 +1,13 @@
-"""E2 DJB2 kernel parity — all three forms agree with the byte-exact
-pure-Python oracle (reference semantics src/s3parser.c:461-477)."""
+"""E2 DJB2 kernel parity — the Catalyst and numpy forms agree with the
+byte-exact pure-Python oracle (reference semantics
+src/s3parser.c:461-477)."""
 
 from pyspark.sql import functions as F
 
 from s3_log_parser_spark.functions.hashes import (
     djb2_expr,
     djb2_py,
-    djb2_udf,
     first_path_segment,
-    path_segment_hash,
 )
 from s3_log_parser_spark.schemas import DJB2_SEED, TOOL_NAMES
 
@@ -31,29 +30,21 @@ def test_djb2_py_golden():
 def test_djb2_spark_forms_match_python(spark):
     vals = TOOL_NAMES + ["", "203.0.113.7", "/show/ep.mp3", "x" * 50]
     df = spark.createDataFrame([(v,) for v in vals], "s string")
-    rows = df.select(
-        "s",
-        djb2_udf(F.col("s")).alias("udf"),
-        djb2_expr(F.col("s")).alias("expr"),
-    ).collect()
+    rows = df.select("s", djb2_expr(F.col("s")).alias("expr")).collect()
     for r in rows:
-        want = djb2_py(r["s"])
-        assert r["udf"] == want, f"udf mismatch for {r['s']!r}"
-        assert r["expr"] == want, f"expr mismatch for {r['s']!r}"
+        assert r["expr"] == djb2_py(r["s"]), f"expr mismatch for {r['s']!r}"
 
 
 def test_djb2_null_is_seed(spark):
     df = spark.createDataFrame([(None,)], "s string")
-    r = df.select(
-        djb2_udf(F.col("s")).alias("udf"), djb2_expr(F.col("s")).alias("expr")
-    ).collect()[0]
-    assert r["udf"] == DJB2_SEED
+    r = df.select(djb2_expr(F.col("s")).alias("expr")).collect()[0]
     assert r["expr"] == DJB2_SEED
 
 
 def test_extract_path_semantics(spark):
     # mirrors extract_path (src/s3parser.c:420-451): strip leading /,
-    # take until next /, hash; NULL/'' → 5381
+    # take until next /, hash; NULL/'' → 5381 — the tool_hash form
+    # encode_slim computes
     cases = [
         ("/tech-talk/episode-1.mp3", djb2_py("tech-talk")),
         ("tech-talk/episode-1.mp3", djb2_py("tech-talk")),
@@ -64,7 +55,7 @@ def test_extract_path_semantics(spark):
     df = spark.createDataFrame([(c[0],) for c in cases], "key string")
     got = [
         r[0]
-        for r in df.select(path_segment_hash(F.col("key"))).collect()
+        for r in df.select(djb2_expr(first_path_segment("key"))).collect()
     ]
     assert got == [c[1] for c in cases]
 
