@@ -27,14 +27,13 @@ Semantics reproduced exactly:
   their tokens (empty text → the bare seed).
 - distinct with FIRST-OCCURRENCE order, matching ``array_distinct``.
 
-``SPARK_GRAFT_SHINGLE_IMPL=catalyst`` switches consumers back to the
-pure-Catalyst kernel (the cross-check path; parity is also pinned by
-tests/test_dedup.py).
+Every shingle consumer (dedup, importance buckets, decontamination)
+runs this kernel. ``operators.dedup.shingle_hashes`` is the Catalyst
+form it is pinned against (and ``minhash_signature``'s input).
 """
 
 from __future__ import annotations
 
-import os
 import re
 
 from pyspark.sql import Column, DataFrame
@@ -45,13 +44,6 @@ from ..schemas import DJB2_SEED
 
 _WS = re.compile(r"\s+", re.ASCII)
 _M32 = 0xFFFFFFFF
-
-
-def arrow_kernel_enabled() -> bool:
-    return (
-        os.environ.get("SPARK_GRAFT_SHINGLE_IMPL", "arrow").lower()
-        != "catalyst"
-    )
 
 
 # --- XXH64 (the production shingle family, r7) -------------------------
@@ -302,7 +294,8 @@ _MINHASH_P = 4294967311  # smallest prime > 2^32 (dedup.MINHASH_P)
 
 def _simhash_rows(texts: "list[str | None]", bits: int):
     """per-row B-bit SimHash over whitespace-token DJB2 digests —
-    integer-exact mirror of ``operators.dedup.simhash_df``: bit j set
+    integer-exact mirror of the ``operators.dedup.simhash`` expression
+    on rows with at least one token: bit j set
     when Σ_tokens (2·(((2j+1)·h + j²+7) mod P mod 2) − 1) > 0; bit 63
     is the two's-complement sign bit (uint64 build, int64 view)."""
     import numpy as np
@@ -319,9 +312,8 @@ def _simhash_rows(texts: "list[str | None]", bits: int):
         c = np.concatenate(([0], np.cumsum(contrib)))
         w = c[starts[1:]] - c[starts[:-1]]
         out |= np.where(w > 0, np.uint64(1) << np.uint64(j), np.uint64(0))
-    # the aggregate form explodes the token array, so zero-token rows
-    # never reach the groupBy and are ABSENT from its output — mirror
-    # that by flagging them for the caller to drop
+    # zero-token rows have no tokens to vote on any bit, so they get
+    # no signature: flag them for the caller to drop
     return out.astype(np.int64), lens > 0
 
 
@@ -332,11 +324,9 @@ def with_simhash(
     keep: tuple[str, ...] = (),
     out_col: str = "simhash",
 ) -> DataFrame:
-    """``df`` → ``(keep..., simhash long)`` via one mapInArrow stage
-    (vectorized kernel; values identical to the explode + B-conditional-
-    sums aggregate — and row-local, so the aggregate's shuffle of the
-    exploded token stream disappears entirely). Zero-token rows are
-    dropped, exactly as the aggregate form's explode drops them."""
+    """``df`` → ``(keep..., simhash long)`` via one row-local
+    mapInArrow stage (no shuffle; values identical to the ``simhash``
+    expression). Zero-token rows are dropped."""
     import pyarrow as pa
 
     src = df.select(*keep, text_col)

@@ -257,15 +257,18 @@ def cmd_ingest(args) -> None:
     persisted DedupIndex → accepted parquet partitioned by batch +
     crash-safe index append. Re-running as new files land continues
     from the stream checkpoint — already-ingested files are never
-    re-processed, which is the whole loop."""
-    import os
+    re-processed, which is the whole loop. ``--index`` and ``-o`` may
+    be any Hadoop filesystem URI (file://, hdfs://, s3a://): both
+    probes below go through the Hadoop FS API."""
+    from .sources.maintenance import _fs_for, _is_data_file
 
     spark = _spark(args)
     # file streams need an explicit schema: take it from the files
     # already present (the CLI is invoked once data exists)
     static = spark.read.parquet(args.input)
 
-    if not os.path.exists(os.path.join(args.index, "meta")):
+    fs, meta = _fs_for(spark, f"{args.index}/meta")
+    if not fs.exists(meta):
         # first run: bootstrap an EMPTY persisted index so the meta
         # table pins the hash family for every later batch
         from .operators.dedup import build_dedup_index, write_dedup_index
@@ -309,12 +312,14 @@ def cmd_ingest(args) -> None:
     # instead of crashing on an unrelated path-not-found read
     # (ADVICE r6)
     def _has_accepted() -> bool:
-        d = f"{args.output}/accepted"
-        return os.path.isdir(d) and any(
-            f.endswith(".parquet")
-            for _, _, fs in os.walk(d)
-            for f in fs
-        )
+        fs, d = _fs_for(spark, f"{args.output}/accepted")
+        if not fs.exists(d):
+            return False
+        files = fs.listFiles(d, True)
+        while files.hasNext():
+            if _is_data_file(files.next().getPath().getName()):
+                return True
+        return False
 
     if not _has_accepted():
         print("total accepted: 0 docs across 0 batches")

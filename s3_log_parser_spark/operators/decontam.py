@@ -3,8 +3,9 @@ overlap an evaluation set.
 
 The standard policy (n-gram collision, n ≈ 8–13 tokens): a training
 doc is contaminated if it shares any word n-gram with any benchmark
-document. Shingle hashing reuses the dedup kernel
-(:func:`..operators.dedup.shingle_hashes` — DJB2 fold over token
+document. Shingle hashing reuses the dedup suite's Arrow shingle
+kernel (``functions.shingles_arrow.with_shingles``, bit-exact vs
+:func:`..operators.dedup.shingle_hashes` — DJB2 fold over token
 digests, cross-engine exact).
 
 Scale shape: the BENCHMARK side is small by nature (eval sets are
@@ -20,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import shingle_hashes
-
 
 def contamination_hits(
     docs: DataFrame,
@@ -36,30 +35,20 @@ def contamination_hits(
     shingle hash family (same policy as the dedup suite: ``djb2`` is
     the oracle-parity family, ``xxhash64`` the 64-bit codegen
     production family — both sides must use the same one)."""
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_shingles
+    from ..functions.shingles_arrow import with_shingles
 
-    if mode in ("djb2", "xxhash64") and arrow_kernel_enabled():
-        # vectorized Arrow shingle kernel (bit-exact; the Catalyst
-        # n=8 expression chain alone cost 4.3 s/evaluation at sf0.1)
-        bench = (
-            with_shingles(benchmark.select(text_col), text_col, n, mode=mode)
-            .select(F.explode("sh").alias("h"))
-            .distinct()
-        )
-        post = with_shingles(
-            docs.select(F.col(id_col), F.col(text_col)),
-            text_col, n, keep=(id_col,), mode=mode,
-        ).select(F.col(id_col), F.explode("sh").alias("h"))
-    else:
-        bench = (
-            benchmark.select(
-                F.explode(shingle_hashes(text_col, n, mode)).alias("h")
-            ).distinct()
-        )
-        post = docs.select(
-            F.col(id_col),
-            F.explode(shingle_hashes(text_col, n, mode)).alias("h"),
-        )
+    # vectorized Arrow shingle kernel (bit-exact vs ``shingle_hashes``;
+    # that Catalyst n=8 expression chain alone cost 4.3 s/evaluation at
+    # sf0.1)
+    bench = (
+        with_shingles(benchmark.select(text_col), text_col, n, mode=mode)
+        .select(F.explode("sh").alias("h"))
+        .distinct()
+    )
+    post = with_shingles(
+        docs.select(F.col(id_col), F.col(text_col)),
+        text_col, n, keep=(id_col,), mode=mode,
+    ).select(F.col(id_col), F.explode("sh").alias("h"))
     return (
         post.join(F.broadcast(bench), "h")
         .groupBy(id_col)

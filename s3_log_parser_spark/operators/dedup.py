@@ -163,21 +163,14 @@ def shingle_frame(
     to :func:`jaccard_pairs_from_index` / :func:`incremental_dedup` via
     :func:`build_dedup_index` instead of recomputing per branch.
 
-    Both hash families run the vectorized Arrow kernel by default
-    (bit-exact values, ~3-12× the Catalyst expression chain — see
-    functions/shingles_arrow.py; xxhash64 added r7);
-    ``SPARK_GRAFT_SHINGLE_IMPL=catalyst`` restores the pure-Catalyst
-    form."""
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_shingles
+    Both hash families run the vectorized Arrow kernel (bit-exact
+    values vs :func:`shingle_hashes`, ~3-12× faster than that
+    expression chain — see functions/shingles_arrow.py)."""
+    from ..functions.shingles_arrow import with_shingles
 
-    if mode in ("djb2", "xxhash64") and arrow_kernel_enabled():
-        return with_shingles(
-            df.select(F.col(id_col).alias("id"), F.col(text_col)),
-            text_col, n, keep=("id",), mode=mode,
-        ).withColumn("sz", F.size("sh"))
-    return df.select(
-        F.col(id_col).alias("id"),
-        shingle_hashes(text_col, n, mode).alias("sh"),
+    return with_shingles(
+        df.select(F.col(id_col).alias("id"), F.col(text_col)),
+        text_col, n, keep=("id",), mode=mode,
     ).withColumn("sz", F.size("sh"))
 
 
@@ -381,25 +374,18 @@ def ngram_jaccard_pairs(
     Pass ``max_df=None`` explicitly for exact-at-any-size, or an int to
     choose the cap.
     """
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_shingles
+    from ..functions.shingles_arrow import with_shingles
 
-    if mode in ("djb2", "xxhash64") and arrow_kernel_enabled():
-        hdf = with_shingles(
-            df.select(
-                F.col(id_col).alias("id"),
-                *( [F.col(group_col).alias("grp")] if group_col else [] ),
-                F.col(text_col),
-            ),
-            text_col, n,
-            keep=("id", "grp") if group_col else ("id",),
-            mode=mode,
-        ).withColumn("sz", F.size(F.col("sh")))
-    else:
-        hdf = df.select(
+    hdf = with_shingles(
+        df.select(
             F.col(id_col).alias("id"),
             *( [F.col(group_col).alias("grp")] if group_col else [] ),
-            shingle_hashes(text_col, n, mode).alias("sh"),
-        ).withColumn("sz", F.size(F.col("sh")))
+            F.col(text_col),
+        ),
+        text_col, n,
+        keep=("id", "grp") if group_col else ("id",),
+        mode=mode,
+    ).withColumn("sz", F.size(F.col("sh")))
     # Materialize the shingle frame ONCE (eager local checkpoint): the
     # banding/index/verify branches below each consume it, and Catalyst
     # re-inlines the shingle kernel per branch (project collapse;
@@ -627,37 +613,16 @@ def simhash_df(
     text_col: str = "text",
     bits: int = 16,
 ) -> DataFrame:
-    """Scale-path SimHash: one row-local vectorized Arrow stage by
-    default (r7 — functions/shingles_arrow.with_simhash computes the
-    identical integer signature with numpy segment sums and ZERO
-    shuffle; the explode + B-conditional-sums aggregate below shuffled
-    the whole exploded token stream). Returns (id, simhash).
-    ``SPARK_GRAFT_SHINGLE_IMPL=catalyst`` restores the aggregate form."""
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_simhash
+    """Scale-path SimHash: ``(id, simhash)`` from one row-local
+    vectorized Arrow stage (functions/shingles_arrow.with_simhash — the
+    :func:`simhash` signature computed with numpy segment sums, no
+    shuffle). Zero-token rows are dropped."""
+    from ..functions.shingles_arrow import with_simhash
 
-    if arrow_kernel_enabled():
-        return with_simhash(
-            df.select(F.col(id_col).alias("id"), F.col(text_col)),
-            text_col, bits, keep=("id",),
-        )
-    hs = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.transform(tokens(text_col), lambda t: djb2_expr(t))
-        ).alias("h"),
+    return with_simhash(
+        df.select(F.col(id_col).alias("id"), F.col(text_col)),
+        text_col, bits, keep=("id",),
     )
-    aggs = [
-        F.sum(_simhash_bit(F.col("h"), j) * 2 - 1).alias(f"w_{j}")
-        for j in range(bits)
-    ]
-    g = hs.groupBy("id").agg(*aggs)
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        bit_val = (1 << j) if j < 63 else -(1 << 63)
-        out = out + F.when(
-            F.col(f"w_{j}") > 0, F.lit(bit_val).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return g.select("id", out.alias("simhash"))
 
 
 def hamming64(a: Column, b: Column) -> Column:

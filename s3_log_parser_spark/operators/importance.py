@@ -62,25 +62,18 @@ def bucket_frame(
     mode: str,
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """``(keep..., bucket)`` exploded distinct-bucket rows — routed
-    through the vectorized Arrow shingle kernel in djb2 mode (bit-exact
-    values; the bucket fold on the small ``sh`` arrays stays Catalyst),
-    the pure-Catalyst column form otherwise."""
-    from ..functions.shingles_arrow import arrow_kernel_enabled, with_shingles
+    """``(keep..., bucket)`` exploded distinct-bucket rows — the
+    vectorized Arrow shingle kernel (bit-exact vs :func:`ngram_buckets`;
+    the bucket fold on the small ``sh`` arrays stays Catalyst)."""
+    from ..functions.shingles_arrow import with_shingles
 
-    if mode in ("djb2", "xxhash64") and arrow_kernel_enabled():
-        sh = with_shingles(
-            df.select(*keep, F.col(text_col)), text_col, n, keep=keep,
-            mode=mode,
-        )
-        bkts = F.array_distinct(
-            F.transform(F.col("sh"), lambda h: F.pmod(h, F.lit(buckets)))
-        )
-        return sh.select(*keep, F.explode(bkts).alias("bucket"))
-    return df.select(
-        *keep,
-        F.explode(ngram_buckets(text_col, n, buckets, mode)).alias("bucket"),
+    sh = with_shingles(
+        df.select(*keep, F.col(text_col)), text_col, n, keep=keep, mode=mode
     )
+    bkts = F.array_distinct(
+        F.transform(F.col("sh"), lambda h: F.pmod(h, F.lit(buckets)))
+    )
+    return sh.select(*keep, F.explode(bkts).alias("bucket"))
 
 
 def bucket_weights(

@@ -5,8 +5,8 @@ Scale posture (100 TB / 1000-executor design, tested on local[N]):
 - AQE on (coalesce small shuffle partitions, split skewed ones) — the
   north_rule names AQE skew-join handling explicitly.
 - Arrow on, 10k rows/batch — mirrors the reference's 10k-row batch loop
-  (``/root/reference/include/s3lp.h:19``) and keeps the single pandas
-  UDF of the DAG cheap.
+  (reference ``include/s3lp.h:19``); it sizes the record batches the
+  ``mapInArrow`` parse kernel receives.
 - Session timezone pinned UTC — the reference's ``mktime`` uses local
   time (a tz bug, ``/root/reference/src/s3parser.c:376``); we fix it and
   document the deviation (SURVEY.md §2.2 P2).
@@ -90,10 +90,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_ANSI", "false"),
         )
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config(
-            "spark.sql.adaptive.enabled",
-            os.environ.get("SPARK_GRAFT_AQE", "true"),
-        )
+        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -54,7 +54,6 @@ def start_router(
     slim_stream: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    routes: list[Route] | None = None,
     trigger_once: bool = True,
 ):
     """foreachBatch multi-sink router: each micro-batch is persisted
@@ -62,13 +61,13 @@ def start_router(
     persist). The sink appends run concurrently, each with the batch
     router's write layout (``sink_layout``): on narrow sessions a
     micro-batch writes one file per partition value."""
-    routes = routes if routes is not None else default_routes()
+    routes = default_routes()
 
     def route_batch(batch: DataFrame, batch_id: int) -> None:
         cat = Catalog(batch.sparkSession, out_dir)
 
         def write_one(r: Route) -> None:
-            routed = batch.filter(r.predicate(batch))
+            routed = batch.filter(r.predicate)
             cat.write(
                 sink_layout(routed, r.partition_by),
                 r.name,

@@ -553,8 +553,8 @@ def test_corpus_prep_stage_semantics(spark):
 
 
 def test_simhash_perrow_equals_exploded(spark):
-    """the per-row HOF simhash and the exploded simhash_df must agree
-    bit-for-bit at both geometries (both now use the universal-hash
+    """the per-row HOF simhash and simhash_df (the Arrow kernel) must
+    agree bit-for-bit at both geometries (both use the universal-hash
     bit family)."""
     from s3_log_parser_spark.operators.dedup import simhash, simhash_df
 
@@ -572,7 +572,7 @@ def test_simhash_perrow_equals_exploded(spark):
             r["id"]: r["simhash"]
             for r in simhash_df(docs, bits=bits).collect()
         }
-        # exploded drops zero-token docs; per-row gives them simhash 0
+        # simhash_df drops zero-token docs; per-row gives them simhash 0
         for k, v in exploded.items():
             assert per_row[k] == v, (bits, k)
 

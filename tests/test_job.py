@@ -191,6 +191,41 @@ def test_ingest_cli_all_rejected_reports_zero(spark, tmp_path, capsys):
     assert "total accepted: 0 docs across 0 batches" in capsys.readouterr().out
 
 
+def test_ingest_cli_file_uri_output_and_index(spark, tmp_path, capsys):
+    """`-o` and `--index` given as ``file://`` URIs: the second run
+    finds the persisted index instead of bootstrapping an empty one, so
+    batch 2's exact duplicates of batch 1 are dropped, and the totals
+    line counts the accepted docs of both batches."""
+    in_dir = str(tmp_path / "incoming")
+    out = "file://" + str(tmp_path / "ingested")
+    idx = "file://" + str(tmp_path / "index")
+    argv = ["--cores", "4", "ingest", "-f", in_dir, "-o", out, "--index", idx]
+
+    def land(rows):
+        spark.createDataFrame(
+            rows, "doc_id long, source string, text string"
+        ).coalesce(1).write.mode("append").parquet(in_dir)
+
+    b1 = [(i, "s0", f"unique document number {i} body " + "x " * i)
+          for i in range(10)]
+    land(b1)
+    main(argv)
+    assert "bootstrapped" in capsys.readouterr().out
+
+    land([(100 + i, "s1", f"unique document number {i} body " + "x " * i)
+          for i in range(3)]
+         + [(200 + i, "s1", f"fresh second batch doc {i} content " + "y " * i)
+            for i in range(5)])
+    main(argv)
+    printed = capsys.readouterr().out
+    assert "bootstrapped" not in printed
+    ids = sorted(
+        r["doc_id"] for r in spark.read.parquet(f"{out}/accepted").collect()
+    )
+    assert ids == [i for i in range(10)] + [200, 201, 202, 203, 204]
+    assert "total accepted: 15 docs across 2 batches" in printed
+
+
 def test_diff_cli_statuses_and_partitioned_sink(spark, tmp_path, capsys):
     old_p = str(tmp_path / "old")
     new_p = str(tmp_path / "new")

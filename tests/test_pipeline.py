@@ -103,40 +103,37 @@ def test_route_stage_submits_only_write_jobs(spark, transcripts, tmp_path):
 
     before = _job_ids(spark)
     for r in default_routes():
-        routed = slim.filter(r.predicate(slim))
+        routed = slim.filter(r.predicate)
         sink_layout(routed, r.partition_by)
         sink_layout(routed, r.partition_by, n_vals=100)
     assert _job_ids(spark) == before
 
 
-def test_route_scan_split_sized_on_file_uri_catalog(
-    spark, transcripts, tmp_path, monkeypatch
-):
-    """The fan-out's scan split size is derived from the slim plan's
-    size statistics, which work on any Hadoop filesystem URI: routed
-    from a ``file://``-rooted catalog, every sink write runs with the
-    derived split size (the 4 MB floor for the small fixture), and the
-    session value is restored afterwards."""
+def test_route_stage_leaves_session_conf_untouched(spark, transcripts, tmp_path):
+    """The route stage writes no session conf: its sinks are written
+    from threads that share the session, so a conf set around them
+    would leak into any concurrent job. Routed from a ``file://``-rooted
+    catalog, every sink and counts write sees the session's SQL conf
+    exactly as it was before the stage, and so does the session
+    afterwards."""
     from s3_log_parser_spark.operators.router import route_and_write
 
-    monkeypatch.delenv("ROUTER_SCAN_SPLIT_MB", raising=False)
-    key = "spark.sql.files.maxPartitionBytes"
-    session_mpb = spark.conf.get(key)
-    assert int(session_mpb) > 4 << 20
     seen = {}
 
     class Recording(Catalog):
         def write(self, df, table, *args, **kwargs):
-            seen[table] = self.spark.conf.get(key)
+            seen[table] = self.spark.conf.getAll
             super().write(df, table, *args, **kwargs)
 
     cat = Recording(spark, "file://" + str(tmp_path))
     cat.write(build_slim(transcripts), "slim")
+    before = spark.conf.getAll
     seen.clear()
     counts = route_and_write(cat.read("slim"), cat)
     assert set(seen) == {t for r in counts for t in (r, f"{r}_counts")}
-    assert set(seen.values()) == {str(4 << 20)}
-    assert spark.conf.get(key) == session_mpb
+    for table, conf in seen.items():
+        assert conf == before, table
+    assert spark.conf.getAll == before
 
 
 def test_routed_row_set_equality(spark, piperun):
@@ -244,27 +241,49 @@ def test_no_python_udf_outside_parse(spark, transcripts):
     assert "ArrowEvalPython" not in plan  # fully JVM in this variant
 
 
-def test_router_write_strategies_equivalent(spark, transcripts, tmp_path):
+def test_router_write_strategies_equivalent(
+    spark, transcripts, tmp_path, monkeypatch
+):
     """The width-adaptive write layouts (salt repartition vs shuffle-free
     coalesce) must produce identical sink CONTENT — only file layout may
-    differ."""
-    import os
+    differ. The fixture session salts; the coalesce branch runs on a
+    session that reports itself wide enough for every sink's partition
+    values (``sink_layout`` reads only ``defaultParallelism``)."""
+    from pyspark import SparkContext
 
+    from s3_log_parser_spark.operators import router
     from s3_log_parser_spark.operators.router import align_schema, route_and_write
     from s3_log_parser_spark.plans.pipeline import build_slim
     from s3_log_parser_spark.sources.catalog import Catalog
 
     slim = build_slim(transcripts.limit(2000))
+    n_vals = max(
+        slim.select(c).distinct().count() for c in ("tool", "role", "day_bucket")
+    )
+    layouts: list[str] = []
+
+    def recorded_layout(routed, partition_by, n_vals=None, _real=router.sink_layout):
+        w = _real(routed, partition_by, n_vals)
+        if partition_by:
+            layouts.append(w._jdf.queryExecution().logical().nodeName())
+        return w
+
+    monkeypatch.setattr(router, "sink_layout", recorded_layout)
     results = {}
-    for strat in ("salt", "coalesce"):
-        os.environ["ROUTER_WRITE_STRATEGY"] = strat
-        try:
-            out = str(tmp_path / strat)
-            cat = Catalog(spark, out)
+    for strat, node, width in (
+        ("salt", "RepartitionByExpression", None),
+        ("coalesce", "Repartition", max(16, n_vals)),
+    ):
+        layouts.clear()
+        with monkeypatch.context() as m:
+            if width is not None:
+                m.setattr(
+                    SparkContext, "defaultParallelism", property(lambda sc: width)
+                )
+            cat = Catalog(spark, str(tmp_path / strat))
             route_and_write(slim, cat)
-            results[strat] = cat
-        finally:
-            del os.environ["ROUTER_WRITE_STRATEGY"]
+        assert layouts == [node] * 3, (strat, layouts)
+        results[strat] = cat
     for sink in ("by_tool", "by_day", "rejects", "by_tool_counts"):
         a = results["salt"].read(sink)
         b = align_schema(results["coalesce"].read(sink), a)

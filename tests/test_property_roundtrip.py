@@ -115,7 +115,7 @@ def test_junk_lines_never_crash(spark):
     assert all(r["parse_status"] == "bad_format" for r in got)
 
 
-def test_three_parser_slim_equality_on_fuzzed_lines(spark):
+def test_arrow_and_sql_slim_equality_on_fuzzed_lines(spark):
     """hypothesis-driven parser equality (ADVICE r3 #1 hardening): the
     Arrow positional kernel and the SQL reference parse (Catalyst
     regexp_extract + djb2_expr) must produce identical slim rows for

@@ -52,8 +52,12 @@ def test_arrow_kernel_matches_catalyst_kernel(spark):
             assert cat == arr, f"n={n}: kernel mismatch"
 
 
-def test_simhash_arrow_matches_catalyst(spark, monkeypatch):
-    from s3_log_parser_spark.operators.dedup import simhash_df
+def test_simhash_arrow_matches_catalyst(spark):
+    """``simhash_df`` (the Arrow kernel) reproduces the Catalyst
+    ``simhash`` expression bit-for-bit on every row with at least one
+    token, and has no row for the zero-token ones."""
+    from s3_log_parser_spark.functions.text import tokens
+    from s3_log_parser_spark.operators.dedup import simhash, simhash_df
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     for bits in (16, 64):
@@ -62,12 +66,12 @@ def test_simhash_arrow_matches_catalyst(spark, monkeypatch):
                 r["id"]: r["simhash"]
                 for r in simhash_df(src, bits=bits).collect()
             }
-            monkeypatch.setenv("SPARK_GRAFT_SHINGLE_IMPL", "catalyst")
             cat = {
-                r["id"]: r["simhash"]
-                for r in simhash_df(src, bits=bits).collect()
+                r["doc_id"]: r["sh"]
+                for r in src.filter(F.size(tokens("text")) > 0)
+                .select("doc_id", simhash("text", bits).alias("sh"))
+                .collect()
             }
-            monkeypatch.delenv("SPARK_GRAFT_SHINGLE_IMPL")
             assert arrow == cat, f"bits={bits}"
 
 
@@ -79,20 +83,6 @@ def test_shingle_frame_routes_through_arrow_by_default(spark):
     assert "MapInArrow" in plan
     # map-side only: the kernel adds no exchange
     assert "Exchange" not in plan
-
-
-def test_catalyst_fallback_env(spark, monkeypatch):
-    from s3_log_parser_spark.operators import dedup
-
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_IMPL", "catalyst")
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = (
-        dedup.shingle_frame(docs)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "MapInArrow" not in plan
 
 
 def test_xxhash64_kernel_matches_catalyst(spark):

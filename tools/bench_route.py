@@ -3,8 +3,8 @@ against an already-written slim checkpoint, fresh sink dir each rep.
 
 Usage: python tools/bench_route.py --slim DIR [--reps N]
 The session is sized to the CPUs this process may use
-(``os.sched_getaffinity``). Env: ROUTER_WRITE_STRATEGY /
-ROUTER_SCAN_SPLIT_MB / ROUTER_CONCURRENCY pass through to the router.
+(``os.sched_getaffinity``). Prints the route-stage wall per rep; for
+per-sink wall and CPU, run ``perfbench/run.py --trace 1``.
 """
 
 from __future__ import annotations
@@ -39,15 +39,10 @@ def main() -> None:
         shutil.rmtree(out, ignore_errors=True)
         cat = Catalog(spark, out)
         slim = spark.read.parquet(args.slim)
-        sink_t: dict[str, float] = {}
         t0 = time.perf_counter()
-        route_and_write(slim, cat, timings_out=sink_t)
+        route_and_write(slim, cat)
         dt = time.perf_counter() - t0
-        print(
-            f"rep {i} (local[{cores}]): route {dt:.2f}s  "
-            + "  ".join(f"{k}={v:.1f}" for k, v in sink_t.items()),
-            flush=True,
-        )
+        print(f"rep {i} (local[{cores}]): route {dt:.2f}s", flush=True)
 
 
 if __name__ == "__main__":

@@ -12,12 +12,19 @@ sweep log (ORACLE_SWEEP_r{N}.txt, VERDICT r5 next #7).
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# check the checkout this script lives in, both in this process and in
+# the Python workers (which import the package from PYTHONPATH)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [ROOT] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from s3_log_parser_spark.session import get_spark  # noqa: E402
@@ -79,7 +86,7 @@ def main():
         import subprocess
         rev = subprocess.run(
             ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=ROOT,
         ).stdout.strip()
         emit(f"# oracle sweep @ {time.strftime('%Y-%m-%d %H:%M:%S')} "
              f"rev={rev} sf_dir={SF_DIR}")
