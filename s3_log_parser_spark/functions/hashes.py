@@ -99,15 +99,6 @@ def djb2_expr(col: Column | str) -> Column:
     return F.when(c.isNull(), F.lit(DJB2_SEED)).otherwise(h)
 
 
-def djb2_oracle_sql(expr: str) -> str:
-    """DuckDB SQL fragment computing the same DJB2 over ``expr``."""
-    return (
-        "list_reduce(list_prepend(5381::BIGINT, "
-        f"list_transform(string_split({expr}, ''), c -> ord(c)::BIGINT)), "
-        "(a, b) -> (a * 33 + b) % 4294967296)"
-    )
-
-
 def first_path_segment(col: Column | str) -> Column:
     """P7: '/show/ep.mp3' → 'show' (src/s3parser.c:420-451)."""
     c = F.col(col) if isinstance(col, str) else col

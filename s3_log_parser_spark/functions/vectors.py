@@ -5,14 +5,13 @@ fixed (index order) — the DuckDB oracle uses ``list_reduce`` with the
 same order, making double-precision results reproducible across
 engines. Inputs are cast element-wise to double before any multiply.
 
-The hot path stays JVM-side (higher-order functions, codegen); a
-Pandas-UDF/numpy variant is provided for wide vectors where Arrow +
-BLAS beats codegen'd loops.
+The hot path stays JVM-side (higher-order functions, codegen); one
+Pandas-UDF/numpy form, :func:`cos_x1m_pairs`, serves the O(N²) pair
+joins: it cuts the interpreted lambda's per-pair overhead and keeps the
+fold-left summation order.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -60,14 +59,6 @@ def cosine(a: Column, b: Column) -> Column:
 def cosine_x1m(a: Column, b: Column) -> Column:
     """cosine scaled ×1e6 and floored → integer; cross-engine stable."""
     return F.floor(cosine(a, b) * 1_000_000).cast("long")
-
-
-# numpy fast path: one Arrow batch → one BLAS call (wide embeddings)
-@pandas_udf(T.DoubleType())
-def dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover
-    av = np.array(a.tolist(), dtype=np.float64)
-    bv = np.array(b.tolist(), dtype=np.float64)
-    return pd.Series(np.einsum("ij,ij->i", av, bv))
 
 
 @pandas_udf(T.LongType())

@@ -31,25 +31,6 @@ def day_key(ts_unix: Column | str) -> Column:
     return (c / SECONDS_PER_DAY).cast("long")
 
 
-def global_counts(df: DataFrame, *distinct_keys: str) -> DataFrame:
-    """A3/A4: total rows + exact distinct key count in one aggregate."""
-    aggs = [F.count("*").alias("total_rows")]
-    if distinct_keys:
-        aggs.append(
-            F.count_distinct(*[F.col(k) for k in distinct_keys]).alias(
-                "distinct_keys"
-            )
-        )
-        # approximate variant — the scale path for dashboards where ±2%
-        # beats an exact shuffle of every key (not in the reference)
-        aggs.append(
-            F.approx_count_distinct(
-                F.xxhash64(*[F.col(k) for k in distinct_keys])
-            ).alias("approx_distinct_keys")
-        )
-    return df.agg(*aggs)
-
-
 def grouped_topk(
     df: DataFrame,
     group_cols: tuple[str, ...],

@@ -106,33 +106,18 @@ def chunk_flags(
     )
 
 
-def with_flags(
-    df: DataFrame,
-    http_code: str = "http_code",
-    byte_start: str = "byte_start",
-    byte_end: str = "byte_end",
-    object_size: str = "object_size",
-    ip_hash: str = "ip_hash",
-    key_hash: str = "key_hash",
-    order: tuple[str, ...] = ("conv_id", "turn_idx"),
-) -> DataFrame:
+def with_flags(df: DataFrame) -> DataFrame:
     """Attach the full flags column: ST1 restricted to 206-START rows,
     then ST2 precedence (END overwrites START|UNIQUE)."""
-    eligible = (F.col(http_code) == 206) & (F.col(byte_start) == 0)
-    df = first_occurrence(
-        df,
-        keys=(ip_hash, key_hash),
-        order=order,
-        only_when=eligible,
-        out="_is_first",
-    )
+    eligible = (F.col("http_code") == 206) & (F.col("byte_start") == 0)
+    df = first_occurrence(df, only_when=eligible, out="_is_first")
     df = df.withColumn(
         "flags",
         chunk_flags(
-            F.col(http_code),
-            F.col(byte_start),
-            F.col(byte_end),
-            F.col(object_size),
+            F.col("http_code"),
+            F.col("byte_start"),
+            F.col("byte_end"),
+            F.col("object_size"),
             F.col("_is_first"),
         ),
     )

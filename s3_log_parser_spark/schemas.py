@@ -3,14 +3,12 @@
 The reference bakes its "dimension tables" into code as enums and
 ordered pattern banks (``/root/reference/include/s3lp.h:87-126``,
 ``src/s3parser.c:494-586``). Here they are data: StructTypes declared
-once, enum dicts exported as constants, and builder helpers that turn
-the user-agent pattern banks into small DataFrames for broadcast-join
-enrichment (SURVEY.md §2.3 E7/E8, §2.4).
+once, enum dicts and the ordered user-agent pattern banks exported as
+constants (SURVEY.md §2.3 E7/E8, §2.4).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -148,26 +146,27 @@ MEGABYTE = 1 << 20
 FSIZE_KB = 1000  # include/s3lp.h:21 — reduced end-check for small objects
 SECONDS_PER_DAY = 86400  # include/s3extract.h:24
 
-# ordered system pattern bank (src/s3parser.c:499-510): priority = match order
-SYSTEM_PATTERNS: list[tuple[str, int, int]] = [
-    ("RawVoice Generator/", SYSTEM_IDS["BLUBRRY"], 0),
-    ("Spotify/", SYSTEM_IDS["SPOTIFY"], 1),
-    ("AppleCoreMedia/", SYSTEM_IDS["APPLE_PODCASTS"], 2),
-    ("Googlebot/", SYSTEM_IDS["GOOGLE_PODCASTS"], 3),
-    ("Youtube/", SYSTEM_IDS["YOUTUBE"], 4),
+# ordered system pattern bank (src/s3parser.c:499-510): list order = match order
+SYSTEM_PATTERNS: list[tuple[str, int]] = [
+    ("RawVoice Generator/", SYSTEM_IDS["BLUBRRY"]),
+    ("Spotify/", SYSTEM_IDS["SPOTIFY"]),
+    ("AppleCoreMedia/", SYSTEM_IDS["APPLE_PODCASTS"]),
+    ("Googlebot/", SYSTEM_IDS["GOOGLE_PODCASTS"]),
+    ("Youtube/", SYSTEM_IDS["YOUTUBE"]),
 ]
 
 # ordered OS pattern bank (src/s3parser.c:523-553). We implement *intended*
 # semantics: Windows → OS_WINDOWS (the reference maps it to OS_IOS at
 # src/s3parser.c:534-536 — a quirk we document, not reproduce; the compat
-# projection below reproduces the observable u8 truncation instead).
-OS_PATTERNS: list[tuple[tuple[str, ...], int, int]] = [
-    (("Android",), OS_IDS["OS_ANDROID"], 0),
-    (("iPhone", "iPad", "iOS"), OS_IDS["OS_IOS"], 1),
-    (("Windows",), OS_IDS["OS_WINDOWS"], 2),
-    (("Macintosh", "Mac"), OS_IDS["OS_MACOS"], 3),
-    (("tvOS",), OS_IDS["OS_TV"], 4),
-    (("watchOS",), OS_IDS["OS_WATCH"], 5),
+# projection platform_id_u8 in operators/enrich.py reproduces the observable
+# u8 truncation instead).
+OS_PATTERNS: list[tuple[tuple[str, ...], int]] = [
+    (("Android",), OS_IDS["OS_ANDROID"]),
+    (("iPhone", "iPad", "iOS"), OS_IDS["OS_IOS"]),
+    (("Windows",), OS_IDS["OS_WINDOWS"]),
+    (("Macintosh", "Mac"), OS_IDS["OS_MACOS"]),
+    (("tvOS",), OS_IDS["OS_TV"]),
+    (("watchOS",), OS_IDS["OS_WATCH"]),
 ]
 
 TOOL_NAMES = [
@@ -201,29 +200,3 @@ USER_AGENTS = [
     "FakeAgent/1.0",
 ]
 
-
-def system_dim(spark: SparkSession):
-    """system pattern bank as a broadcast-join dimension (E7).
-
-    Both pattern-bank dims are plan-constant tables built as pure-JVM
-    literal plans (``session.literal_frame``) rather than
-    ``createDataFrame`` — a LogicalRDD dim costs a Python-worker task
-    on every broadcast build (~0.3-1 s/job, guide §4); the literal form
-    costs none. Rows and schema are identical."""
-    from .session import literal_frame
-
-    return literal_frame(
-        spark, SYSTEM_PATTERNS, "pattern string, system_id int, priority int"
-    )
-
-
-def os_dim(spark: SparkSession):
-    """flattened OS pattern bank (E8, intended semantics)."""
-    from .session import literal_frame
-
-    rows = [
-        (p, os_id, prio)
-        for pats, os_id, prio in OS_PATTERNS
-        for p in pats
-    ]
-    return literal_frame(spark, rows, "pattern string, os_id int, priority int")

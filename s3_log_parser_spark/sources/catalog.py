@@ -91,21 +91,6 @@ class Catalog:
         else:
             w.append()
 
-    def compact(self, table: str, target_bytes: int = 128 << 20):
-        """Small-file compaction through the format seam: Iceberg's
-        snapshot-isolated ``rewrite_data_files`` procedure when a
-        catalog is configured, the single-writer parquet rewrite
-        (``sources.maintenance.compact_table``) otherwise."""
-        if self.iceberg:  # pragma: no cover - no runtime jar in sandbox
-            return self.spark.sql(
-                "CALL spark_catalog.system.rewrite_data_files("
-                f"table => '{table}', "
-                f"options => map('target-file-size-bytes','{target_bytes}'))"
-            )
-        from .maintenance import compact_table
-
-        return compact_table(self.spark, self.path(table), target_bytes)
-
     def read(self, table: str, schema: T.StructType | None = None) -> DataFrame:
         """``schema`` (parquet branch only) skips the schema-inference
         job; a file-source read makes every field nullable. The Iceberg
@@ -117,10 +102,3 @@ class Catalog:
             reader = reader.schema(schema)
         return reader.parquet(self.path(table))
 
-    def exists(self, table: str) -> bool:
-        if self.iceberg:  # pragma: no cover
-            return self.spark.catalog.tableExists(table)
-        p = self.path(table)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
-        )

@@ -289,10 +289,3 @@ def transcripts_from_events(events: DataFrame) -> DataFrame:
     df = df.withColumn("turn_idx", (F.row_number().over(w) - 1).cast("int"))
     return df.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
-
-def write_transcripts(df: DataFrame, path: str, buckets: int = 0) -> None:
-    """Materialize the fact table. At scale the real table is Iceberg
-    bucketed by conv_id (SURVEY.md §4.2); on the Parquet seam we emit
-    plain parquet (bucketing requires saveAsTable + a metastore).
-    """
-    df.write.mode("overwrite").parquet(path)

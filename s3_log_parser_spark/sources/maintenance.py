@@ -23,12 +23,11 @@ operator fixes:
 
 At 100 TB the real deployment does both through the table format
 (Iceberg ``rewrite_data_files`` / write-ordered tables — snapshot-
-isolated, concurrent-reader-safe); ``Catalog.compact`` routes there
-when an Iceberg catalog is configured. This module is the plain-
-parquet branch of that seam: single-writer (the pipeline's own
-maintenance window), swap via two directory renames, so a concurrent
-reader's worst case is a transient read failure, never a double- or
-half-read of rows.
+isolated, concurrent-reader-safe). This module is the plain-parquet
+form for a deployment without a table format: single-writer (the
+pipeline's own maintenance window), swap via two directory renames, so
+a concurrent reader's worst case is a transient read failure, never a
+double- or half-read of rows.
 """
 
 from __future__ import annotations

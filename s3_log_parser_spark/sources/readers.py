@@ -49,11 +49,3 @@ def read_raw_logs(
         "ts",
     )
 
-
-def read_stream_transcripts(
-    spark: SparkSession, path: str, schema=None
-) -> DataFrame:
-    """streaming source over a transcripts directory (§2.10)."""
-    from ..schemas import TRANSCRIPT_SCHEMA
-
-    return spark.readStream.schema(schema or TRANSCRIPT_SCHEMA).parquet(path)

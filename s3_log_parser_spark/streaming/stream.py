@@ -8,13 +8,12 @@ users tail transcript tables continuously. Shape:
 - the batch slim path (``plans.pipeline``): the one ``mapInArrow``
   parse kernel, flat encode, CASE WHEN classify and the CASE WHEN
   role/tool dims — MINUS the ST1 window (windows over unbounded data
-  need watermark state): first-occurrence dedup becomes
-  ``dropDuplicatesWithinWatermark`` on (ip_hash, key_hash) after
-  ``withWatermark(ts, delay)``,
+  need state): first-occurrence dedup of 206-START rows is
+  :func:`unique_starts_stream_exact`, one state entry per
+  (ip_hash, key_hash) for the stream's lifetime,
 - ``foreachBatch`` multi-sink router — the streaming-native form of
   the batch cache-then-filter fan-out (single pass per micro-batch),
-  with the batch router's sink write layout and concurrent writes,
-- tumbling-day windowed counts reproduce the A2 by-day aggregate.
+  with the batch router's sink write layout and concurrent writes.
 """
 
 from __future__ import annotations
@@ -34,8 +33,8 @@ def build_slim_stream(transcripts: DataFrame, watermark: str = "10 minutes") -> 
     """Streaming version of plans.pipeline.build_slim: the same Arrow
     parse, encode, classify and role/tool dims (no Python UDF stage,
     no broadcast), with flags but without the ST1 window — the stateless
-    bitmask with is_first=false; the dedup flag is applied by the
-    router via dropDuplicatesWithinWatermark on the start-row stream."""
+    bitmask with is_first=false; first-occurrence dedup of the start
+    rows is :func:`unique_starts_stream_exact`."""
     df = enrich_role_tool(_parse_encode_classify(transcripts))
     df = df.withColumn(
         "flags",
@@ -59,8 +58,8 @@ def start_router(
     """foreachBatch multi-sink router: each micro-batch is persisted
     once and feeds every sink (batch Spark can't do this without
     persist). The sink appends run concurrently, each with the batch
-    router's write layout (``sink_layout``): on narrow sessions a
-    micro-batch writes one file per partition value."""
+    router's write layout (``sink_layout``): below 32 shuffle
+    partitions a micro-batch writes one file per partition value."""
     routes = default_routes()
 
     def route_batch(batch: DataFrame, batch_id: int) -> None:
@@ -89,15 +88,6 @@ def start_router(
     if trigger_once:
         w = w.trigger(availableNow=True)
     return w.start()
-
-
-def unique_starts_stream(slim_stream: DataFrame) -> DataFrame:
-    """streaming ST1: first (ip_hash, key_hash) within the watermark —
-    the unbounded-exact batch window's streaming approximation."""
-    starts = slim_stream.filter(
-        (F.col("http_code") == 206) & ((F.col("flags") % 4) >= 2)
-    )
-    return starts.dropDuplicatesWithinWatermark(["ip_hash", "key_hash"])
 
 
 def unique_starts_stream_exact(slim_stream: DataFrame) -> DataFrame:
@@ -155,13 +145,6 @@ def unique_starts_stream_exact(slim_stream: DataFrame) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def daily_counts_stream(slim_stream: DataFrame) -> DataFrame:
-    """A2 as a tumbling-day windowed aggregate with late-data handling."""
-    return slim_stream.groupBy(
-        F.window(F.col("ts"), "1 day").alias("day"), F.col("tool")
-    ).agg(F.count("*").alias("count"))
 
 
 def session_counts_stream(

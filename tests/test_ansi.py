@@ -28,23 +28,39 @@ def ansi(spark):
 def test_bank_winner_empty_match_under_ansi(ansi):
     """Round-2 regression: a UA matching no bank pattern must yield the
     default id, not INVALID_ARRAY_INDEX_IN_ELEMENT_AT."""
-    from s3_log_parser_spark.operators.enrich import classify_when, enrich_broadcast
+    from s3_log_parser_spark.operators.enrich import bank_winner
 
+    entries = [(0, "Spotify/", 2), (1, "iPhone", 7), (2, "Mobile", 9)]
+    bank = F.array(
+        *[
+            F.struct(
+                F.lit(prio).alias("priority"),
+                F.lit(pat).alias("pattern"),
+                F.lit(sid).alias("sid"),
+            )
+            for prio, pat, sid in entries
+        ]
+    )
     df = ansi.createDataFrame(
         [
             ("aws-cli/2.0",),
             ("Mozilla/5.0 (iPhone; Mobile)",),
+            ("Spotify/8.8 Mobile",),
             ("zzz-no-match-zzz",),  # empty match array — the r2 killer
             (None,),
         ],
         "user_agent string",
     )
-    cols = ["user_agent", "system_id", "os_id", "device_id", "platform_id"]
-    got = {tuple(r) for r in enrich_broadcast(df).select(*cols).collect()}
-    want = {tuple(r) for r in classify_when(df).select(*cols).collect()}
-    assert got == want
-    # the no-match row resolved to the defaults, not an error
-    assert ("zzz-no-match-zzz", 0, 0, 0, 0) in got
+    got = set(
+        df.select("user_agent", bank_winner(F.col("user_agent"), bank, 0)).collect()
+    )
+    assert {tuple(r) for r in got} == {
+        ("aws-cli/2.0", 0),
+        ("Mozilla/5.0 (iPhone; Mobile)", 7),  # first match in bank order
+        ("Spotify/8.8 Mobile", 2),
+        ("zzz-no-match-zzz", 0),  # no match → the default, not an error
+        (None, 0),
+    }
 
 
 def test_pipeline_build_slim_under_ansi(ansi):

@@ -1,9 +1,19 @@
-"""E7/E8 — broadcast-join enrichment ≡ ordered CASE WHEN chains."""
+"""E7/E8 — the CASE WHEN classifier ≡ a pure-Python reference."""
 
-from pyspark.sql import functions as F
+from itertools import combinations
 
-from s3_log_parser_spark.operators.enrich import classify_when, enrich_broadcast
-from s3_log_parser_spark.schemas import USER_AGENTS, SYSTEM_IDS, OS_IDS, DEVICE_IDS
+from s3_log_parser_spark.operators.enrich import classify_when
+from s3_log_parser_spark.schemas import (
+    DEVICE_IDS,
+    OS_IDS,
+    OS_PATTERNS,
+    SYSTEM_IDS,
+    SYSTEM_PATTERNS,
+    USER_AGENTS,
+)
+
+# the device rules' tokens (iPhone and iPad are OS tokens too)
+_DEVICE_TOKENS = ("Mobile", "Tablet", "Echo", "HomePod", "GoogleHome")
 
 
 def _ua_df(spark):
@@ -13,12 +23,58 @@ def _ua_df(spark):
     )
 
 
-def test_broadcast_equals_when_chain(spark):
-    df = _ua_df(spark)
-    cols = ["i", "system_id", "os_id", "device_id", "platform_id", "platform_id_u8"]
-    a = classify_when(df).select(cols).orderBy("i")
-    b = enrich_broadcast(df, row_key=("i",)).select(cols).orderBy("i")
-    assert [r.asDict() for r in a.collect()] == [r.asDict() for r in b.collect()]
+def _classify_py(ua):
+    """Reference E7/E8: first matching pattern in list order, then the
+    ordered device rules (src/s3parser.c:494-586, intended semantics)."""
+    has = lambda p: ua is not None and p in ua  # noqa: E731
+    sid = next((r[1] for r in SYSTEM_PATTERNS if has(r[0])), SYSTEM_IDS["UNKNOWN"])
+    os_id = next(
+        (r[1] for r in OS_PATTERNS if any(map(has, r[0]))), OS_IDS["OS_UNKNOWN"]
+    )
+    if os_id == OS_IDS["OS_WATCH"]:
+        dev = "DEV_WATCH"
+    elif os_id == OS_IDS["OS_TV"]:
+        dev = "DEV_TV"
+    elif has("Mobile") or (os_id == OS_IDS["OS_IOS"] and has("iPhone")):
+        dev = "DEV_MOBILE"
+    elif has("Tablet") or has("iPad"):
+        dev = "DEV_TABLET"
+    elif has("Echo") or has("HomePod") or has("GoogleHome"):
+        dev = "DEV_SMART_SPEAKER"
+    elif os_id in (OS_IDS["OS_WINDOWS"], OS_IDS["OS_LINUX"], OS_IDS["OS_MACOS"]):
+        dev = "DEV_DESKTOP"
+    else:
+        dev = "DEV_UNKNOWN"
+    dev_id = DEVICE_IDS[dev]
+    return sid, os_id, dev_id, os_id * 256 + dev_id, dev_id
+
+
+def test_classify_when_matches_python_reference(spark):
+    """Every generator user agent, NULL, empty, an unmatched agent and
+    every pair of bank tokens (system, OS and device patterns) classify
+    exactly as the Python reference, in both ANSI modes."""
+    tokens = sorted(
+        {r[0] for r in SYSTEM_PATTERNS}
+        | {p for r in OS_PATTERNS for p in r[0]}
+        | set(_DEVICE_TOKENS)
+    )
+    uas = USER_AGENTS + [None, "", "Unknown/1.0"]
+    uas += [f"{a} {b}" for a, b in combinations(tokens, 2)]
+    assert len(uas) == 187
+    want = {i: _classify_py(ua) for i, ua in enumerate(uas)}
+    df = spark.createDataFrame(list(enumerate(uas)), "i int, user_agent string")
+    cols = ["system_id", "os_id", "device_id", "platform_id", "platform_id_u8"]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("false", "true"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = {
+                r["i"]: tuple(r[c] for c in cols)
+                for r in classify_when(df).collect()
+            }
+            assert got == want, ansi
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_known_classifications(spark):
@@ -61,20 +117,14 @@ def test_platform_encoding(spark):
         assert r["platform_id_u8"] == r["device_id"]
 
 
-def test_enrich_broadcast_plan_has_no_shuffle(spark):
-    """The bank join must not introduce any exchange keyed on a per-row
-    id (VERDICT r1: the old theta-join + row_number form shuffled the
-    fact table twice on monotonically_increasing_id)."""
-    df = _ua_df(spark)
-    plan = (
-        enrich_broadcast(df)._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+def test_classify_when_plan_has_no_exchange(spark):
+    """The classifier is a projection: no exchange, no join and no
+    window in the executed plan."""
+    plan = classify_when(_ua_df(spark))._jdf.queryExecution().executedPlan().toString()
     # match the operator NODES ("Window ["), not bare substrings: the
-    # literal-plan dims (r7) inline pattern strings like "Windows"
-    # into the plan text
-    assert "ShuffleExchange" not in plan and "Window [" not in plan
-    assert "monotonically_increasing_id" not in plan
+    # CASE WHEN text inlines pattern strings like "Windows"
+    assert "Exchange" not in plan and "Join" not in plan
+    assert "Window [" not in plan
 
 
 def test_role_tool_dims_match_python_reference(spark):

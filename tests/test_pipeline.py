@@ -81,7 +81,7 @@ def _job_ids(spark) -> set[int]:
 
 def test_route_stage_submits_only_write_jobs(spark, transcripts, tmp_path):
     """The route stage's control decisions (write layouts, counts) come
-    from one collected cube, so ``route_and_write`` submits only the
+    from one cached cube, so ``route_and_write`` submits only the
     cube and the writes: on the fixture at ``local[8]`` under AQE that
     is 3 cube jobs, one counts write per sink (4), the rejects write
     (1), and per partitioned sink a salt shuffle plus its write (6) —
@@ -105,7 +105,6 @@ def test_route_stage_submits_only_write_jobs(spark, transcripts, tmp_path):
     for r in default_routes():
         routed = slim.filter(r.predicate)
         sink_layout(routed, r.partition_by)
-        sink_layout(routed, r.partition_by, n_vals=100)
     assert _job_ids(spark) == before
 
 
@@ -241,53 +240,55 @@ def test_no_python_udf_outside_parse(spark, transcripts):
     assert "ArrowEvalPython" not in plan  # fully JVM in this variant
 
 
-def test_router_write_strategies_equivalent(
-    spark, transcripts, tmp_path, monkeypatch
-):
-    """The width-adaptive write layouts (salt repartition vs shuffle-free
-    coalesce) must produce identical sink CONTENT — only file layout may
-    differ. The fixture session salts; the coalesce branch runs on a
-    session that reports itself wide enough for every sink's partition
-    values (``sink_layout`` reads only ``defaultParallelism``)."""
+def test_sink_layout_salts_at_any_width(spark, transcripts, tmp_path, monkeypatch):
+    """Every partitioned sink gets the salted repartition whatever the
+    session width: on a session that reports 32 cores, by_tool, by_role
+    and by_day are still written from a ``RepartitionByExpression``."""
     from pyspark import SparkContext
 
-    from s3_log_parser_spark.operators import router
-    from s3_log_parser_spark.operators.router import align_schema, route_and_write
-    from s3_log_parser_spark.plans.pipeline import build_slim
-    from s3_log_parser_spark.sources.catalog import Catalog
+    from s3_log_parser_spark.operators.router import route_and_write
 
-    slim = build_slim(transcripts.limit(2000))
-    n_vals = max(
-        slim.select(c).distinct().count() for c in ("tool", "role", "day_bucket")
-    )
     layouts: list[str] = []
 
-    def recorded_layout(routed, partition_by, n_vals=None, _real=router.sink_layout):
-        w = _real(routed, partition_by, n_vals)
-        if partition_by:
-            layouts.append(w._jdf.queryExecution().logical().nodeName())
-        return w
+    class Recording(Catalog):
+        def write(self, df, table, *args, partition_by=(), **kwargs):
+            if partition_by:
+                layouts.append(df._jdf.queryExecution().logical().nodeName())
+            super().write(df, table, *args, partition_by=partition_by, **kwargs)
 
-    monkeypatch.setattr(router, "sink_layout", recorded_layout)
-    results = {}
-    for strat, node, width in (
-        ("salt", "RepartitionByExpression", None),
-        ("coalesce", "Repartition", max(16, n_vals)),
-    ):
-        layouts.clear()
-        with monkeypatch.context() as m:
-            if width is not None:
-                m.setattr(
-                    SparkContext, "defaultParallelism", property(lambda sc: width)
-                )
-            cat = Catalog(spark, str(tmp_path / strat))
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda sc: 32)
+    )
+    slim = build_slim(transcripts.limit(2000))
+    route_and_write(slim, Recording(spark, str(tmp_path)))
+    assert layouts == ["RepartitionByExpression"] * 3
+
+
+def test_route_stage_releases_cube_cache_when_a_sink_write_fails(
+    spark, transcripts, tmp_path
+):
+    """A failing sink write propagates out of ``route_and_write`` and
+    leaves no cached cube behind: the session's cache manager is empty
+    afterwards."""
+    from s3_log_parser_spark.operators.router import route_and_write
+
+    class FailingByDay(Catalog):
+        def write(self, df, table, *args, **kwargs):
+            if table == "by_day":
+                raise RuntimeError("by_day write failed")
+            super().write(df, table, *args, **kwargs)
+
+    cat = FailingByDay(spark, str(tmp_path))
+    cat.write(build_slim(transcripts), "slim")
+    slim = cat.read("slim")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # the session fixture caches `transcripts`
+    try:
+        with pytest.raises(RuntimeError, match="by_day write failed"):
             route_and_write(slim, cat)
-        assert layouts == [node] * 3, (strat, layouts)
-        results[strat] = cat
-    for sink in ("by_tool", "by_day", "rejects", "by_tool_counts"):
-        a = results["salt"].read(sink)
-        b = align_schema(results["coalesce"].read(sink), a)
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), sink
+        assert cache.isEmpty()
+    finally:
+        transcripts.cache()
 
 
 def test_percentiles_disc_exact_and_approx(spark):
