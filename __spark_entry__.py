@@ -2184,8 +2184,7 @@ def _skew_profile(spark, sf):
 def _latency_pcts(spark, sf):
     # A5: per-tool discrete latency percentiles (value at ascending
     # rank ceil(p·n) — explicit order-statistics definition so both
-    # engines agree exactly; approx_percentile is the scale path,
-    # sanity-pinned in tests)
+    # engines agree exactly)
     from s3_log_parser_spark.operators.aggregate import percentiles_disc
     from s3_log_parser_spark.plans.pipeline import build_slim
     from s3_log_parser_spark.sources.gen import gen_transcripts

@@ -3,11 +3,12 @@ with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
 The Spark-side plumbing — schema, partition behavior, UDF signature,
 batch shape — is real and tested. The actual codec work is stubbed:
-this container has no image/audio libraries, so ``decode_real`` raises
-``NotImplementedError`` and :func:`decode_fake` computes deterministic
-pseudo-metadata from the payload bytes (same formulas the DuckDB
-oracle reproduces from ``octet_length``). Swapping in PIL/ffmpeg later
-only touches the marked block inside the mapInPandas closure.
+this container has no image/audio libraries, so :func:`decode_real`
+raises ``NotImplementedError``. Without a decoder,
+:func:`extract_media_metadata` computes deterministic pseudo-metadata
+from the payload length (:func:`fake_meta_formulas`, the formulas the
+DuckDB oracle reproduces from ``octet_length``). A PIL/ffmpeg codec
+plugs in as ``extract_media_metadata(decoder=...)``.
 
 Scale posture: binary payloads never shuffle — decode/extract runs
 map-side in the scan stage; metadata-only downstream ops select away
@@ -76,20 +77,17 @@ def extract_media_metadata(
     id_col: str = "media_id",
     payload_col: str = "payload",
     type_col: str = "media_type",
-    use_real_decoder: bool = False,
     decoder=None,
 ) -> DataFrame:
     """mapInPandas media feature-extraction: one Arrow batch in, one
     metadata frame out. Blob stays executor-local.
 
     ``decoder``: an injectable codec callable satisfying the
-    :func:`decode_real` contract — the seam where PIL/ffmpeg plugs in.
-    ``use_real_decoder=True`` selects :func:`decode_real` itself
-    (raises in this container). With neither, deterministic fake
-    metadata is derived from payload length (oracle-reproducible).
+    :func:`decode_real` contract — the seam where PIL/ffmpeg plugs in
+    (``decoder=decode_real`` is the real hook, which raises here).
+    Without one, deterministic fake metadata is derived from payload
+    length (oracle-reproducible).
     """
-    if use_real_decoder and decoder is None:
-        decoder = decode_real
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from s3_log_parser_spark.functions.hashes import djb2_py

@@ -1,10 +1,14 @@
-"""A1-A4: the reference extract tool's aggregation surface.
+"""A1-A6: the reference extract tool's aggregation surface, plus the
+summaries beyond it.
 
 The reference's linear-scan in-memory group table
 (``/root/reference/src/s3extract.c:136-216``, O(G·N) lookups, whole
 dataset in RAM) becomes ``HashAggregateExec`` partial+final with spill
 — map-side combine means the shuffle moves one row per (partition,
 group), not per input row.
+
+A5 (:func:`percentiles_disc`) and the key-skew profile are exact
+rank-based summaries, checked against the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -181,37 +185,19 @@ def percentiles_disc(
     key: str,
     value: str,
     ps_x1000: tuple[int, ...] = (500, 950, 990),
-    mode: str = "exact",
 ) -> DataFrame:
     """A5 (beyond the reference): per-key discrete percentiles of an
     integer metric — the latency-summary aggregate every log pipeline
     grows next after counts.
 
-    ``mode="exact"``: classic ``percentile_disc`` semantics — the value
-    at ascending rank ``ceil(p·n)`` — implemented explicitly with ONE
-    window (rank + group count share the same partitioning) so the
-    definition is engine-independent and the DuckDB oracle reproduces
-    it bit-for-bit. Exact percentiles of a group fundamentally need
-    that per-key sort; this is the verification path.
-
-    ``mode="approx"``: the 100 TB path — ``approx_percentile``
-    (t-digest-style sketch, map-side mergeable, NO per-key sort); rank
-    error is bounded by the accuracy knob, so it has no cross-engine
-    exact oracle (sanity-pinned in tests instead).
+    Classic ``percentile_disc`` semantics — the value at ascending rank
+    ``ceil(p·n)`` — implemented explicitly with ONE window (rank + group
+    count share the same partitioning) so the definition is
+    engine-independent and the DuckDB oracle reproduces it bit-for-bit.
+    Exact percentiles of a group fundamentally need that per-key sort.
     """
     from pyspark.sql import Window
 
-    pcols = []
-    if mode == "approx":
-        for p in ps_x1000:
-            pcols.append(
-                F.expr(
-                    f"approx_percentile({value}, {p / 1000}, 10000)"
-                ).cast("long").alias(f"p{p}")
-            )
-        return df.filter(F.col(value).isNotNull()).groupBy(key).agg(
-            F.count("*").cast("long").alias("n"), *pcols
-        )
     # no tie-break needed: row identity at a rank is order-dependent
     # among equal values, but the VALUE at rank ceil(p·n) is not.
     # rank arithmetic is the integer-product form CEIL((n*p)/1000.0) in
@@ -237,37 +223,21 @@ def percentiles_disc(
     return ranked.groupBy(key).agg(*aggs)
 
 
-def profile_key_skew(
-    df: DataFrame,
-    key: str | Column,
-    mode: str = "exact",
-) -> DataFrame:
+def profile_key_skew(df: DataFrame, key: str | Column) -> DataFrame:
     """Skew diagnostics for a prospective join/aggregation key — the
     question every 100 TB plan review asks first ("does this key need
     salting?") as one tiny summary row: distinct keys, total rows,
     the max group, discrete p50/p99 group sizes, and the hot key's
     row share (×1000).
 
-    ``mode="exact"``: per-key counts (map-side combined) then discrete
-    percentiles over the counts via a GLOBAL rank — one ordered pass
-    over one row per key. That single-partition sort is the honest
-    exact path and is fine up to ~10^8 keys; ``mode="approx"`` swaps
-    the rank for mergeable ``approx_percentile`` (no global sort) for
-    corpora where the KEY space itself is huge.
+    Per-key counts (map-side combined), then discrete percentiles over
+    the counts via a GLOBAL rank — one ordered pass over one row per
+    key. That single-partition sort is fine up to ~10^8 keys.
     """
     from pyspark.sql import Window
 
     keyc = F.col(key) if isinstance(key, str) else key
     counts = df.groupBy(keyc.alias("_k")).agg(F.count("*").alias("_c"))
-    if mode == "approx":
-        return counts.agg(
-            F.count("*").cast("long").alias("n_keys"),
-            F.sum("_c").cast("long").alias("total_rows"),
-            F.max("_c").cast("long").alias("max_count"),
-            F.expr("approx_percentile(_c, 0.5, 10000)").cast("long").alias("p50_count"),
-            F.expr("approx_percentile(_c, 0.99, 10000)").cast("long").alias("p99_count"),
-            F.floor(F.max("_c") * 1000 / F.sum("_c")).cast("long").alias("top1_share_x1000"),
-        )
     w = Window.orderBy(F.col("_c").asc())
     ranked = counts.withColumn("_rk", F.row_number().over(w)).withColumn(
         "_n", F.count("*").over(Window.partitionBy())

@@ -16,9 +16,7 @@ Check algebra (all pure Catalyst, zero Python):
   how MANY rows violate, not just that one did;
 - ``unique`` compares the non-NULL-key row count to
   ``count_distinct(cols)`` inside the same aggregate (Catalyst plans
-  the distinct via one Expand — still a single scan); ``approx=True``
-  swaps in HLL++ for the trillion-row case where an exact distinct's
-  shuffle is the cost;
+  the distinct via one Expand — still a single scan);
 - ``foreign_key`` is the one check that genuinely needs a second
   table: a broadcast left-anti probe of the dim (the fact side never
   shuffles), reported through the same schema.
@@ -90,27 +88,19 @@ def matches(col: str, pattern: str,
     )
 
 
-def unique(*cols: str, approx: bool = False) -> Check:
+def unique(*cols: str) -> Check:
     """failed = count(rows with a fully non-NULL key) − count(distinct
     cols): the number of surplus rows beyond one per key.
     ``count_distinct`` skips NULL keys, so the keyed count must too —
     comparing against ``count(*)`` would report every NULL-key row as
-    a "duplicate"; NULL keys are ``not_null``'s job, not uniqueness's.
-    ``approx`` swaps exact distinct (one Expand inside the same
-    aggregate) for HLL++ — at trillion-row scale the exact distinct's
-    expand/shuffle IS the audit cost, and a ±rsd duplicate count still
-    gates a batch."""
+    a "duplicate"; NULL keys are ``not_null``'s job, not uniqueness's."""
     keyed = None
     for c in cols:
         e = F.col(c).isNotNull()
         keyed = e if keyed is None else keyed & e
-    distinct = (
-        F.approx_count_distinct(*[F.col(c) for c in cols])
-        if approx
-        else F.count_distinct(*[F.col(c) for c in cols])
-    )
+    distinct = F.count_distinct(*[F.col(c) for c in cols])
     return Check(
-        name=f"unique({','.join(cols)})" + ("~" if approx else ""),
+        name=f"unique({','.join(cols)})",
         fail_expr=F.lit(False),
         agg_failed=(F.sum(keyed.cast("long")) - distinct).cast("long"),
     )

@@ -14,10 +14,15 @@ Five strategies, all deterministic and partition-invariant:
   hash family for production runs.
 - :func:`simhash` — B-bit SimHash over token hashes.
 - :func:`ngram_jaccard_pairs` — exact n-gram Jaccard for pair sets
-  (the verifier for MinHash, and a standalone near-dup strategy).
+  (the verifier for MinHash, and a standalone near-dup strategy),
+  scored by one inverted-index set-similarity join.
 - :func:`embedding_near_dups` — cosine near-dup over an embedding
-  column; brute-force blocked self-join baseline (see
-  operators/similarity.py for the LSH-bucketed scale path).
+  column: broadcast-corpus block scoring up to ``BLOCK_LIMIT`` rows;
+  :func:`embedding_near_dups_bucketed` is the LSH-bucketed scale path.
+  Both score with one numpy kernel (:func:`_cos_hits`).
+
+Each job has this one form; its independent checks are the DuckDB
+oracle queries and the pure-Python references in tests/test_dedup.py.
 
 Scale posture: signatures are computed per-row with higher-order
 array functions (no explode shuffle); the only wide ops are the
@@ -160,8 +165,8 @@ def shingle_frame(
     expression once per join branch (project collapse; exchange reuse
     does not apply across different shuffle keys), so a production run
     stages THIS frame once (parquet / catalog checkpoint) and feeds it
-    to :func:`jaccard_pairs_from_index` / :func:`incremental_dedup` via
-    :func:`build_dedup_index` instead of recomputing per branch.
+    to :func:`incremental_dedup` via :func:`build_dedup_index` instead
+    of recomputing per branch.
 
     Both hash families run the vectorized Arrow kernel (bit-exact
     values vs :func:`shingle_hashes`, ~3-12× faster than that
@@ -322,6 +327,14 @@ def jaccard_x1000(
     ).cast("long")
 
 
+# ngram_jaccard_pairs guards: the un-blocked all-pairs path takes at
+# most UNBLOCKED_LIMIT rows; a grouped input larger than
+# AUTO_EXACT_LIMIT rows gets the stop-shingle cap AUTO_MAX_DF
+UNBLOCKED_LIMIT = 10_000
+AUTO_EXACT_LIMIT = 100_000
+AUTO_MAX_DF = 1_000
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -330,14 +343,10 @@ def ngram_jaccard_pairs(
     threshold_x1000: int = 300,
     group_col: str | None = None,
     auto_block: bool = False,
-    unblocked_limit: int = 10_000,
-    method: str = "index",
-    max_df: int | str | None = "auto",
-    auto_exact_limit: int = 100_000,
-    auto_max_df: int = 1_000,
     mode: str = "djb2",
 ) -> DataFrame:
-    """exact n-gram Jaccard similarity for candidate pairs.
+    """exact n-gram Jaccard similarity for candidate pairs
+    (``id_a < id_b``, ``jaccard_x1000 ≥ threshold_x1000 ≥ 1``).
 
     ``mode`` selects the shingle hash family (see
     :func:`shingle_hashes`) and is threaded through the LSH banding of
@@ -347,35 +356,34 @@ def ngram_jaccard_pairs(
     oracle keeps ``"djb2"`` (VERDICT r4 wrong #2).
 
     Safe-by-default at scale (VERDICT r2 #5): the un-blocked all-pairs
-    self-join is O(N²) and only permitted for small inputs. Pass one of
+    join is O(N²) and only permitted for small inputs. Pass one of
 
     - ``group_col`` — exact pairs within blocks (classic blocking);
     - ``auto_block=True`` — candidate pairs from MinHash LSH banding,
       then *exact* Jaccard scored on candidates only. Linear-ish cost;
       recall < 1 for pairs whose signatures share no band (documented
       approximation — same trade as every production near-dup pipeline);
-    - neither — allowed only when the input has ≤ ``unblocked_limit``
+    - neither — allowed only when the input has ≤ ``UNBLOCKED_LIMIT``
       rows (cheap ``limit(n+1)`` probe); larger inputs raise rather
       than silently launching an accidental cartesian at 100 TB.
 
-    ``method="index"`` (default) scores via the inverted-index
-    set-similarity join (see :func:`_jaccard_index_join`) — identical
-    results for threshold ≥ 1, far cheaper than per-pair array
-    intersection; ``method="pairs"`` keeps the literal pairwise form
-    (also used automatically when ``threshold_x1000 < 1``, where
-    zero-overlap pairs must be emitted).
-
-    ``max_df`` guards the index join's skew term Σ df(h)² (a shingle in
-    k docs contributes k² join rows — one boilerplate header across a
-    100 TB corpus is an accidental cartesian). Default ``"auto"``
-    (VERDICT r3 #3): exact (no cap) for inputs ≤ ``auto_exact_limit``
-    rows; larger inputs get ``auto_max_df`` applied WITH a loud warning
-    (scores become lower bounds — see :func:`_jaccard_index_join`).
-    Pass ``max_df=None`` explicitly for exact-at-any-size, or an int to
-    choose the cap.
+    Without ``auto_block`` the scores come from the inverted-index
+    set-similarity join (see :func:`_jaccard_index_join`), which never
+    materializes a pair sharing zero shingles — hence the threshold of
+    at least 1. Its skew term Σ df(h)² (a shingle in k docs contributes
+    k² join rows — one boilerplate header across a 100 TB corpus is an
+    accidental cartesian) is guarded (VERDICT r3 #3): exact for inputs
+    ≤ ``AUTO_EXACT_LIMIT`` rows; larger grouped inputs drop shingles in
+    more than ``AUTO_MAX_DF`` docs WITH a loud warning (scores become
+    lower bounds — see :func:`_jaccard_index_join`).
     """
     from ..functions.shingles_arrow import with_shingles
 
+    if threshold_x1000 < 1:
+        raise ValueError(
+            f"ngram_jaccard_pairs: threshold_x1000={threshold_x1000} < 1; "
+            "the index join never emits pairs sharing no shingle"
+        )
     hdf = with_shingles(
         df.select(
             F.col(id_col).alias("id"),
@@ -390,12 +398,9 @@ def ngram_jaccard_pairs(
     # banding/index/verify branches below each consume it, and Catalyst
     # re-inlines the shingle kernel per branch (project collapse;
     # exchange reuse does not apply across different shuffle keys) —
-    # measured 3 kernel evaluations per query before r7. This is the
-    # in-query form of the documented production practice (stage the
-    # shingle frame, feed it to jaccard_pairs_from_index). Skipped for
-    # the guarded small pairwise path, which reads hdf only twice and
-    # stays fully lazy; the index path checkpoints after its size
-    # probes so an over-limit input still raises before materializing.
+    # measured 3 kernel evaluations per query before r7. The index path
+    # checkpoints after its size probes so an over-limit input still
+    # raises before materializing.
     if group_col is None and auto_block:
         hdf = hdf.localCheckpoint(eager=True)
         cand = minhash_candidates(
@@ -418,81 +423,31 @@ def ngram_jaccard_pairs(
             )
             .filter(F.col("jaccard_x1000") >= threshold_x1000)
         )
+    max_df = None
     if group_col is None:
-        probe = df.select(F.lit(1)).limit(unblocked_limit + 1).count()
-        if probe > unblocked_limit:
+        probe = df.select(F.lit(1)).limit(UNBLOCKED_LIMIT + 1).count()
+        if probe > UNBLOCKED_LIMIT:
             raise ValueError(
                 f"ngram_jaccard_pairs: un-blocked all-pairs join on "
-                f">{unblocked_limit} rows is O(N²); pass group_col=, "
-                "auto_block=True, or raise unblocked_limit explicitly"
+                f">{UNBLOCKED_LIMIT} rows is O(N²); pass group_col= or "
+                "auto_block=True"
             )
-    if method == "index" and threshold_x1000 >= 1:
-        if max_df == "auto":
-            # un-grouped inputs already passed the ≤ unblocked_limit
-            # probe above (≪ auto_exact_limit → exact); only grouped
-            # inputs need a size probe here
-            if group_col is None:
-                max_df = None
-            else:
-                probe = df.select(F.lit(1)).limit(auto_exact_limit + 1).count()
-                if probe > auto_exact_limit:
-                    import warnings
+    elif df.select(F.lit(1)).limit(AUTO_EXACT_LIMIT + 1).count() > AUTO_EXACT_LIMIT:
+        # un-grouped inputs already passed the ≤ UNBLOCKED_LIMIT probe
+        # (≪ AUTO_EXACT_LIMIT → exact); only grouped inputs get here
+        import warnings
 
-                    max_df = auto_max_df
-                    warnings.warn(
-                        f"ngram_jaccard_pairs: input exceeds "
-                        f"{auto_exact_limit} rows; applying stop-shingle "
-                        f"cap max_df={auto_max_df} (reported jaccard "
-                        "becomes a lower bound for pairs containing "
-                        "dropped high-frequency shingles). Pass "
-                        "max_df=None for an exact run, or an int to tune.",
-                        stacklevel=2,
-                    )
-                else:
-                    max_df = None
-        return _jaccard_index_join(
-            hdf.localCheckpoint(eager=True),
-            bool(group_col),
-            threshold_x1000,
-            max_df=max_df,
+        max_df = AUTO_MAX_DF
+        warnings.warn(
+            f"ngram_jaccard_pairs: input exceeds {AUTO_EXACT_LIMIT} rows; "
+            f"applying stop-shingle cap max_df={AUTO_MAX_DF} (reported "
+            "jaccard becomes a lower bound for pairs containing dropped "
+            "high-frequency shingles).",
+            stacklevel=2,
         )
-    a, b = hdf.alias("a"), hdf.alias("b")
-    cond = F.col("a.id") < F.col("b.id")
-    if group_col:
-        cond = cond & (F.col("a.grp") == F.col("b.grp"))
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            jaccard_x1000(
-                F.col("a.sh"), F.col("b.sh"), F.col("a.sz"), F.col("b.sz")
-            ).alias("jaccard_x1000"),
-        )
-        .filter(F.col("jaccard_x1000") >= threshold_x1000)
-    )
-
-
-def jaccard_pairs_from_index(
-    shingle_df: DataFrame,
-    threshold_x1000: int = 300,
-    max_df: int | None = None,
-    group_col: str | None = None,
-) -> DataFrame:
-    """exact-Jaccard pairs over a PRE-MATERIALIZED shingle frame
-    (``(id, sh, sz)`` as produced by :func:`shingle_frame`, optionally
-    plus a blocking column) — the persisted-postings seam for 100 TB
-    runs (VERDICT r4 next #2). ``_jaccard_index_join`` reads its input
-    twice (the two self-join sides; sizes ride the postings since r7);
-    when the input is a staged parquet table those are two columnar
-    scans, whereas the inline form recomputes the shingle kernel per
-    branch. Build once, persist via the catalog checkpoint, reuse
-    across batches."""
-    hdf = shingle_df
-    if group_col is not None and group_col != "grp":
-        hdf = hdf.withColumnRenamed(group_col, "grp")
     return _jaccard_index_join(
-        hdf, group_col is not None, threshold_x1000, max_df=max_df
+        hdf.localCheckpoint(eager=True), bool(group_col), threshold_x1000,
+        max_df=max_df,
     )
 
 
@@ -508,23 +463,17 @@ def _jaccard_index_join(
     (= |A∩B|), then ``union = |A|+|B|−|A∩B|``. Pairs sharing ZERO
     shingles never materialize (they cannot pass any threshold ≥ 1/1000),
     so cost is Σ_h df(h)² over shingle document frequencies instead of
-    |block|² array comparisons — results identical to the pairwise form
-    for threshold ≥ 1. Skew caveat: a shingle appearing in k docs
-    contributes k² join rows; natural-text 3-gram digests are
+    |block|² array comparisons. Skew caveat: a shingle appearing in k
+    docs contributes k² join rows; natural-text 3-gram digests are
     heavy-tailed but their squares stay below |block|² (measured
-    18.2 s → 12.0 s on the 5k-doc fixture, where generated boilerplate
-    makes df(h) unusually fat); a df(h) cap (stop-shingle drop) is the
-    standard guard if a corpus has pathological boilerplate.
+    18.2 s → 12.0 s against per-pair array intersection on the 5k-doc
+    fixture, where generated boilerplate makes df(h) unusually fat); a
+    df(h) cap (``max_df``, stop-shingle drop) is the standard guard if
+    a corpus has pathological boilerplate.
 
-    100 TB note: the plan evaluates the shingle kernel once per branch
-    (both self-join sides + the sizes branch — Catalyst re-inlines the
-    expression under project collapse and exchange reuse does not
-    apply across the different shuffle keys). At fixture scale the
-    kernel is a small fraction of the query; a real 100 TB run should
-    MATERIALIZE the shingle frame once (:func:`shingle_frame` →
-    parquet / catalog checkpoint) and feed it back through
-    :func:`jaccard_pairs_from_index`, the same way every production
-    set-similarity pipeline stages its inverted index."""
+    ``hdf`` is read twice (the two self-join sides), so callers hand in
+    a materialized shingle frame (:func:`ngram_jaccard_pairs`
+    checkpoints it first)."""
     # sz rides the postings (one extra int per posting row): the pair
     # aggregate below groups on (id_a, id_b, sz_a, sz_b) — sz is
     # functionally determined by the id, so the groups are unchanged —
@@ -690,156 +639,134 @@ def simhash_pairs(
     )
 
 
+# embedding_near_dups broadcasts the whole corpus; past this many rows
+# it raises and points at embedding_near_dups_bucketed
+BLOCK_LIMIT = 200_000
+
+
+def _length_groups(ids, vecs) -> dict:
+    """``{length: (ids int64, matrix float64, norms)}`` over the non-NULL
+    vectors, one dense matrix per vector LENGTH, rows sorted by id.
+    Norms fold left over the dim axis (index order, as ``norm_pre``)."""
+    import numpy as np
+
+    by_len: dict[int, list] = {}
+    for rid, vec in zip(ids, vecs):
+        if vec is not None:
+            by_len.setdefault(len(vec), []).append((rid, vec))
+    out = {}
+    for ln, rows in by_len.items():
+        rows.sort(key=lambda r: r[0])
+        gid = np.array([r[0] for r in rows], dtype=np.int64)
+        mat = np.array([r[1] for r in rows], dtype=np.float64)
+        nrm = np.zeros(len(gid), dtype=np.float64)
+        for d in range(ln):
+            nrm = nrm + mat[:, d] * mat[:, d]
+        out[ln] = (gid, mat, np.sqrt(nrm))
+    return out
+
+
+def _cos_hits(left: tuple, right: tuple, threshold_x1m: int) -> tuple:
+    """``(id_a, id_b, cosine_x1m)`` arrays for every left × right pair of
+    one length group with ``id_a < id_b`` and a finite
+    ``floor(cos·10⁶) ≥ threshold_x1m``. The dot product folds left over
+    the dim axis for all pairs at once — per pair the same add sequence
+    as ``cos_x1m_pairs`` and the DuckDB oracle, so scores are
+    bit-identical. A non-finite score (zero norm, NULL element) is
+    dropped, as the oracle's NULL score is."""
+    import numpy as np
+
+    ia, ma, na = left
+    ib, mb, nb = right
+    acc = np.zeros((len(ia), len(ib)), dtype=np.float64)
+    for d in range(ma.shape[1]):
+        acc = acc + ma[:, d][:, None] * mb[:, d][None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = np.floor(acc / (na[:, None] * nb[None, :]) * 1_000_000)
+    hit = np.isfinite(cos) & (cos >= threshold_x1m) & (ia[:, None] < ib[None, :])
+    ra, rb = np.nonzero(hit)
+    return ia[ra], ib[rb], cos[ra, rb].astype(np.int64)
+
+
+def _hits_frame(hits: list):
+    """one ``(id_a, id_b, cosine_x1m)`` int64 pandas frame from a list
+    of :func:`_cos_hits` results."""
+    import numpy as np
+    import pandas as pd
+
+    cols = ("id_a", "id_b", "cosine_x1m")
+    return pd.DataFrame(
+        {
+            c: np.concatenate([h[i] for h in hits]) if hits
+            else np.zeros(0, dtype=np.int64)
+            for i, c in enumerate(cols)
+        }
+    )
+
+
 def embedding_near_dups(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold_x1m: int = 800_000,
-    method: str = "auto",
-    block_limit: int = 200_000,
 ) -> DataFrame:
-    """brute-force cosine near-dup pairs (id_a < id_b, cos ≥ thr).
+    """brute-force cosine near-dup pairs (id_a < id_b, cos ≥ thr) for
+    corpora of at most ``BLOCK_LIMIT`` rows.
 
-    Baseline path: O(N²/2) — fine for verification blocks; at scale
-    pre-bucket with hyperplane LSH (similarity.ann_lsh_bucketed) and
-    run this within buckets only.
-
-    ``method``: ``"block"`` broadcasts the corpus matrix to every task
-    and scores each partition's rows against it inside ONE mapInPandas
-    stage — the N² pair rows never materialize in the plan and never
-    cross the Arrow socket (only the qualifying pairs come back). The
-    per-pair FP fold is the same index-order loop as everywhere else
-    (bit-identical, equality-pinned in tests). Classic "one side fits
-    in memory" brute-force shape; guarded by ``block_limit`` rows.
-    ``"pairs"`` is the literal self-join; ``"auto"`` picks block when
-    the corpus row count is within the broadcast guard and RAISES past
-    it (VERDICT r3 #2: the silent fallback to the literal O(N²)
-    pairwise join kicked in precisely where O(N²) is fatal — mirror
-    ``ngram_jaccard_pairs``' guard instead and point at the bucketed
-    scale path)."""
-    if method == "auto":
-        n = df.select(F.lit(1)).limit(block_limit + 1).count()
-        if n > block_limit:
-            raise ValueError(
-                f"embedding_near_dups: corpus exceeds block_limit="
-                f"{block_limit} rows; the brute-force paths are O(N²). "
-                "Use embedding_near_dups_bucketed (LSH-bucketed "
-                "self-join, the scale path), or pass method='pairs' "
-                "explicitly to accept the quadratic cost."
-            )
-        method = "block"
-    if method == "block":
-        return _near_dups_block(df, id_col, vec_col, threshold_x1m)
-    from ..functions.vectors import as_double, dot_pre, norm_pre
-
-    # norms AND double casts once per ROW, not per pair — Catalyst
-    # re-expands shared expressions across the self-join, so inline
-    # cosine() would fold three O(dim) passes (plus two array-allocating
-    # casts) into every one of the N²/2 pairs
-    v = df.select(
-        F.col(id_col).alias("id"),
-        as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("nrm", norm_pre(F.col("v")))
-    a, b = v.alias("a"), v.alias("b")
-    from ..functions.vectors import cos_x1m_pairs
-
-    return (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            # numpy-vectorized, fold-left-order (bit-identical to the
-            # HOF form and the DuckDB oracle; see vectors.py)
-            cos_x1m_pairs(
-                F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")
-            ).alias("cosine_x1m"),
-        )
-        .filter(F.col("cosine_x1m") >= threshold_x1m)
-    )
-
-
-def _near_dups_block(
-    df: DataFrame, id_col: str, vec_col: str, threshold_x1m: int
-) -> DataFrame:
-    """broadcast-corpus brute force (see embedding_near_dups)."""
-    import numpy as np
-    import pandas as pd
+    The corpus matrix is broadcast to every task and each partition's
+    rows are scored against it inside ONE mapInPandas stage — the N²
+    pair rows never materialize in the plan and never cross the Arrow
+    socket (only the qualifying pairs come back). Classic "one side
+    fits in memory" brute-force shape; each row is scored alone
+    against its larger-id partners, so a task holds O(corpus), never a
+    batch × corpus matrix. Vectors of different lengths never pair and
+    NULL vectors never score. Past the guard it RAISES (VERDICT r3 #2:
+    never launch O(N²) silently) and points at
+    :func:`embedding_near_dups_bucketed`, the scale path."""
     from pyspark.sql import types as T
 
-    rows = (
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-        .filter(F.col("v").isNotNull())
-        .collect()
+    src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).filter(
+        F.col("v").isNotNull()
     )
+    if df.select(F.lit(1)).limit(BLOCK_LIMIT + 1).count() > BLOCK_LIMIT:
+        raise ValueError(
+            f"embedding_near_dups: corpus exceeds {BLOCK_LIMIT} rows; "
+            "brute-force scoring is O(N²). Use embedding_near_dups_bucketed "
+            "(LSH-bucketed self-join, the scale path)."
+        )
+    rows = src.collect()
     if not rows:
         return df.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine_x1m long"
         )
-    # one dense matrix PER VECTOR LENGTH: pairs across different
-    # lengths score NULL in the pairwise path (zip_with padding) and
-    # are dropped by the threshold, so the block path must simply never
-    # score them — keeps block == pairs parity on ragged corpora
-    groups: dict[int, list] = {}
-    for r in rows:
-        groups.setdefault(len(r["v"]), []).append(r)
-    mats = {}
-    for dim, grp in groups.items():
-        ids = np.array([r["id"] for r in grp], dtype=np.int64)
-        mat = np.array([r["v"] for r in grp], dtype=np.float64)
-        # per-row norms, same fold order as norm_pre (fold-left)
-        nrm = np.zeros(len(ids), dtype=np.float64)
-        for d in range(dim):
-            nrm = nrm + mat[:, d] * mat[:, d]
-        nrm = np.sqrt(nrm)
-        mats[dim] = (ids, mat, nrm)
-    sc = df.sparkSession.sparkContext
-    b = sc.broadcast(mats)
-
+    b = df.sparkSession.sparkContext.broadcast(
+        _length_groups([r["id"] for r in rows], [r["v"] for r in rows])
+    )
     out_schema = T.StructType(
         [
-            T.StructField("id_a", T.LongType(), False),
-            T.StructField("id_b", T.LongType(), False),
-            T.StructField("cosine_x1m", T.LongType(), False),
+            T.StructField(c, T.LongType(), False)
+            for c in ("id_a", "id_b", "cosine_x1m")
         ]
     )
 
     def score(batches):
-        mats_b = b.value
-        for pdf in batches:
-            out_a, out_b, out_c = [], [], []
-            for rid, vec in zip(pdf["id"], pdf["v"]):
-                group = mats_b.get(len(vec))
-                if group is None:
-                    continue  # no same-length partner exists
-                bids, bmat, bnrm = group
-                # each unordered pair exactly once: this row is id_a,
-                # broadcast rows with larger id are the id_b side
-                mask = bids > rid
-                if not mask.any():
-                    continue
-                sub, subn, subi = bmat[mask], bnrm[mask], bids[mask]
-                a = np.asarray(vec, dtype=np.float64)
-                an = 0.0
-                acc = np.zeros(len(subi), dtype=np.float64)
-                for d in range(len(a)):  # fold-left over dims
-                    an = an + a[d] * a[d]
-                    acc = acc + a[d] * sub[:, d]
-                an = np.sqrt(an)
-                cosf = np.floor(acc / (an * subn) * 1_000_000)
-                # non-finite (0-norm / NULL element) scores NULL in the
-                # pairwise path and is threshold-dropped — mirror that
-                hit = np.isfinite(cosf) & (cosf >= threshold_x1m)
-                if hit.any():
-                    out_a.extend([rid] * int(hit.sum()))
-                    out_b.extend(subi[hit].tolist())
-                    out_c.extend(cosf[hit].astype(np.int64).tolist())
-            yield pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b, "cosine_x1m": out_c}
-            ).astype("int64")
+        import numpy as np
 
-    src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).filter(
-        F.col("v").isNotNull()  # the broadcast side filters too; a NULL
-    )  # here would crash len(vec) in score (ADVICE r3 #2)
+        corpus = b.value
+        for pdf in batches:
+            hits = []
+            for ln, (ia, ma, na) in _length_groups(pdf["id"], pdf["v"]).items():
+                ib, mb, nb = corpus[ln]
+                for i in range(len(ia)):
+                    # partners with a larger id: a suffix of the sorted group
+                    j = np.searchsorted(ib, ia[i], side="right")
+                    hits.append(_cos_hits(
+                        (ia[i:i + 1], ma[i:i + 1], na[i:i + 1]),
+                        (ib[j:], mb[j:], nb[j:]),
+                        threshold_x1m,
+                    ))
+            yield _hits_frame(hits)
+
     return src.mapInPandas(score, out_schema)
 
 
@@ -871,13 +798,12 @@ def embedding_near_dups_bucketed(
     materialized one Arrow row PER CANDIDATE PAIR carrying both full
     vectors (660k pairs × 2×64 doubles ≈ 650 MB across the Python
     boundary at sf0.1); cogrouping ships each vector once per probe —
-    O(rows), not O(pairs) — and forms the pair matrix inside numpy.
-    Per-pair arithmetic is the identical fold-left dim loop
-    (bit-identical scores, parity-pinned in tests). Per-bucket task
-    cost stays O(bucket²) — the same asymptotic work the join form did,
-    minus the pair-row serialization.
+    O(rows), not O(pairs) — and forms the pair matrix inside numpy
+    with the same kernel as :func:`embedding_near_dups` (bit-identical
+    scores). Per-bucket task cost stays O(bucket²) — the same
+    asymptotic work the join form did, minus the pair-row
+    serialization.
     """
-    import numpy as np
     import pandas as pd
 
     from .similarity import with_lsh_bucket
@@ -903,68 +829,13 @@ def embedding_near_dups_bucketed(
     )
 
     def score(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"id_a": pd.Series(dtype="int64"),
-             "id_b": pd.Series(dtype="int64"),
-             "cosine_x1m": pd.Series(dtype="int64")}
-        )
         if len(left) == 0 or len(right) == 0:
-            return empty
-        out_a: list = []
-        out_b: list = []
-        out_c: list = []
-        # one dense matrix per vector LENGTH per side: mismatched or
-        # NULL vectors scored NULL in the pairwise form (zip_with
-        # padding) and were threshold-dropped — here they simply never
-        # pair (identical survivors)
-        def groups(pdf):
-            g: dict[int, tuple] = {}
-            idc, vc = pdf.columns[0], pdf.columns[1]
-            ids_ok = []
-            for rid, vec in zip(pdf[idc], pdf[vc]):
-                if vec is None:
-                    continue
-                ids_ok.append((len(vec), rid, vec))
-            by_len: dict[int, list] = {}
-            for ln, rid, vec in ids_ok:
-                by_len.setdefault(ln, []).append((rid, vec))
-            for ln, rows in by_len.items():
-                ids = np.array([r[0] for r in rows], dtype=np.int64)
-                mat = np.array([r[1] for r in rows], dtype=np.float64)
-                # fold-left norms (index order — matches norm_pre)
-                nrm = np.zeros(len(ids), dtype=np.float64)
-                for d in range(ln):
-                    nrm = nrm + mat[:, d] * mat[:, d]
-                g[ln] = (ids, mat, np.sqrt(nrm))
-            return g
-        ga, gb = groups(left), groups(right)
-        for ln, (ia, ma, na) in ga.items():
-            gbv = gb.get(ln)
-            if gbv is None:
-                continue
-            ib, mb, nb = gbv
-            # fold-left over the dim axis across ALL pairs at once —
-            # per pair this is the same add sequence as cos_x1m_pairs
-            acc = np.zeros((len(ia), len(ib)), dtype=np.float64)
-            for d in range(ln):
-                acc = acc + ma[:, d][:, None] * mb[:, d][None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.floor(acc / (na[:, None] * nb[None, :]) * 1_000_000)
-            hit = (
-                np.isfinite(cos)
-                & (cos >= threshold_x1m)
-                & (ia[:, None] < ib[None, :])
-            )
-            ra, rb = np.nonzero(hit)
-            if len(ra):
-                out_a.extend(ia[ra].tolist())
-                out_b.extend(ib[rb].tolist())
-                out_c.extend(cos[ra, rb].astype(np.int64).tolist())
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {"id_a": out_a, "id_b": out_b, "cosine_x1m": out_c}
-        ).astype("int64")
+            return _hits_frame([])
+        ga = _length_groups(left["id"], left["v"])
+        gb = _length_groups(right["id_r"], right["v_r"])
+        return _hits_frame(
+            [_cos_hits(g, gb[ln], threshold_x1m) for ln, g in ga.items() if ln in gb]
+        )
 
     return (
         a.groupBy("probe")

@@ -144,7 +144,7 @@ def route_and_write(
                 on_done(stage)
 
     try:
-        base.collect()  # materializes the cache
+        base.count()  # materializes the cache; no row reaches the driver
         fan_out(routes, write_one)
     finally:
         base.unpersist()

@@ -6,8 +6,8 @@ Design (SURVEY.md §4.4): the slim table is the data checkpoint; this
 module adds (a) a JSON stage manifest keyed (run_id, stage) — a stage
 whose manifest entry exists is skipped on re-run, so a killed run
 resumes after its last completed write — and (b) a ``_lineage`` metrics
-table collected via ``mapInPandas`` (partition id, rows, bytes) with
-zero extra shuffle (piggybacks on an existing pass).
+table (partition id, rows, approximate bytes) from one JVM aggregate
+over ``spark_partition_id()`` — no row crosses into Python.
 
 On Iceberg the manifest role is played by snapshot metadata; the JSON
 manifest is the format-seam fallback and is what the kill/resume test
@@ -19,9 +19,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,36 +48,14 @@ class Manifest:
         )
 
 
-def with_partition_metrics(df: DataFrame) -> DataFrame:
-    """Append per-partition lineage columns without an extra pass:
-    each Arrow batch is tagged with its partition id; aggregating
-    ``_lineage`` afterwards gives (partition, rows, bytes).
-    """
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("_part_id", T.IntegerType(), False),
-            T.StructField("_part_bytes", T.LongType(), False),
-        ]
-    )
-
-    def tag(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["_part_id"] = pid
-            pdf["_part_bytes"] = int(pdf.memory_usage(deep=True).sum())
-            yield pdf
-
-    return df.mapInPandas(tag, schema)
-
-
-def lineage_summary(tagged: DataFrame) -> DataFrame:
-    return tagged.groupBy("_part_id").agg(
+def partition_metrics(df: DataFrame) -> DataFrame:
+    """``(_part_id int, rows long, approx_bytes long)`` per partition of
+    ``df``, as one map-side-combined aggregate over
+    ``spark_partition_id()``. ``approx_bytes`` is ``rows`` times the
+    schema's summed per-type ``defaultSize`` — Spark's own size
+    estimate for a row of that schema, not a measured payload."""
+    row_bytes = df._jdf.schema().defaultSize()  # JVM StructType: Σ fields
+    return df.groupBy(F.spark_partition_id().alias("_part_id")).agg(
         F.count("*").alias("rows"),
-        F.max("_part_bytes").alias("approx_bytes"),
+        (F.count("*") * row_bytes).cast("long").alias("approx_bytes"),
     )

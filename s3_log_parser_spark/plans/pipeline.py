@@ -133,12 +133,10 @@ def run_pipeline(
 
     lineage = None
     if verbose:
-        from .lineage import lineage_summary, with_partition_metrics
+        from .lineage import partition_metrics
 
         if not manifest.complete("lineage"):
-            catalog.write(
-                lineage_summary(with_partition_metrics(slim)), "_lineage"
-            )
+            catalog.write(partition_metrics(slim), "_lineage")
             manifest.mark("lineage")
         lineage = catalog.read("_lineage")
 

@@ -1,5 +1,5 @@
 """Single-pass data-quality audit: per-check failure counts, ratio
-budgets, exact/approx uniqueness, referential integrity, the gate,
+budgets, exact uniqueness, referential integrity, the gate,
 and the one-scan plan pin."""
 
 import io
@@ -111,17 +111,6 @@ def test_unique_ignores_null_keys(spark):
     rep = _report_dict(audit(df, [unique("k"), not_null("k")]))
     assert rep["unique(k)"] == (1, 5, False)
     assert rep["not_null(k)"] == (2, 5, False)
-
-
-def test_unique_approx_mode_close_to_exact(spark):
-    df = spark.range(5000).select((F.col("id") % 4000).alias("k"))
-    exact = _report_dict(audit(df, [unique("k")]))["unique(k)"]
-    approx = _report_dict(audit(df, [unique("k", approx=True)]))["unique(k)~"]
-    assert exact == (1000, 5000, False)
-    assert not approx[2]
-    # HLL++ default rsd is 5% of the DISTINCT count (4000), so the
-    # failure estimate inherits ±0.05·4000 — allow 3 sigma
-    assert abs(approx[0] - 1000) <= 600
 
 
 def test_audit_is_one_scan_however_many_checks(spark, tmp_path):

@@ -17,6 +17,52 @@ from s3_log_parser_spark.operators.dedup import (
 )
 
 
+def _jaccard_reference(hdf, threshold_x1000):
+    """pure-Python exact n-gram Jaccard over a collected shingle frame
+    ``(id, sh[, grp])``: ``floor(|A∩B|·1000/|A∪B|)`` for every
+    ``a < b`` (within a block when the frame carries ``grp``)."""
+    from itertools import combinations
+
+    rows = hdf.collect()
+    sets = {r["id"]: set(r["sh"]) for r in rows}
+    grp = {r["id"]: r.asDict().get("grp") for r in rows}
+    out = {}
+    for a, b in combinations(sorted(sets), 2):
+        if grp[a] != grp[b]:
+            continue
+        j = len(sets[a] & sets[b]) * 1000 // len(sets[a] | sets[b])
+        if j >= threshold_x1000:
+            out[(a, b)] = j
+    return out
+
+
+def _cosine_reference(rows, threshold_x1m):
+    """pure-Python fold-left integer cosine for every ``a < b`` pair of
+    ``(id, vector)`` rows: NULL vectors, different lengths, NULL
+    elements and zero norms never score."""
+    import math
+    from itertools import combinations
+
+    out = set()
+    for (ia, va), (ib, vb) in combinations(sorted(rows, key=lambda r: r[0]), 2):
+        if va is None or vb is None or len(va) != len(vb):
+            continue
+        if any(x is None for x in va) or any(y is None for y in vb):
+            continue
+        dot = na = nb = 0.0
+        for x, y in zip(va, vb):
+            dot = dot + x * y
+            na = na + x * x
+            nb = nb + y * y
+        den = math.sqrt(na) * math.sqrt(nb)
+        if den == 0:
+            continue
+        cos = math.floor(dot / den * 1_000_000)
+        if cos >= threshold_x1m:
+            out.add((ia, ib, cos))
+    return out
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
@@ -212,20 +258,23 @@ def test_jaccard_empty_union_is_zero(spark):
     assert r["j"] in (0, 1000)
 
 
-def test_ngram_jaccard_unblocked_guard(spark):
+def test_ngram_jaccard_unblocked_guard(spark, monkeypatch):
     """VERDICT r2 #5: un-blocked all-pairs on a big input must raise,
     not launch an accidental O(N^2) join."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
+    from s3_log_parser_spark.operators import dedup
     from s3_log_parser_spark.operators.dedup import ngram_jaccard_pairs
 
     big = spark.range(200).select(
         F.col("id").cast("string").alias("doc_id"),
         F.concat(F.lit("alpha beta gamma delta "), F.col("id")).alias("text"),
     )
-    with _pytest.raises(ValueError, match="O\\(N"):
-        ngram_jaccard_pairs(big, unblocked_limit=100)
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "UNBLOCKED_LIMIT", 100)
+        with _pytest.raises(ValueError, match="O\\(N"):
+            ngram_jaccard_pairs(big)
     # auto_block path executes and scores exact jaccard on candidates,
     # and every pair it emits is present in the exact all-pairs result
     approx = {
@@ -236,74 +285,94 @@ def test_ngram_jaccard_unblocked_guard(spark):
     }
     exact = {
         (r.id_a, r.id_b, r.jaccard_x1000)
-        for r in ngram_jaccard_pairs(
-            big, unblocked_limit=1000, threshold_x1000=100
-        ).collect()
+        for r in ngram_jaccard_pairs(big, threshold_x1000=100).collect()
     }
     assert approx <= exact
     assert approx, "LSH banding should catch the near-identical docs"
 
 
-def test_ngram_jaccard_index_equals_pairs(spark, docs):
-    """the inverted-index set-similarity join must equal the literal
-    pairwise form exactly (same pairs, same integer jaccard)."""
-    from s3_log_parser_spark.operators.dedup import ngram_jaccard_pairs
+def test_ngram_jaccard_index_matches_python_reference(spark, docs):
+    """the inverted-index set-similarity join returns exactly the
+    pairs and integer jaccard of a pure-Python scan over every a < b
+    (on the 5-doc fixture, and blocked by source on 300 sf0.001 docs)."""
+    from s3_log_parser_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        shingle_frame,
+    )
 
-    kw = dict(threshold_x1000=100, unblocked_limit=10_000)
-    p = {tuple(r) for r in ngram_jaccard_pairs(docs, method="pairs", **kw).collect()}
-    i = {tuple(r) for r in ngram_jaccard_pairs(docs, method="index", **kw).collect()}
-    assert p == i and p, "index join diverged from pairwise form"
+    for thr in (1, 100, 300):
+        got = {
+            (r.id_a, r.id_b): r.jaccard_x1000
+            for r in ngram_jaccard_pairs(docs, threshold_x1000=thr).collect()
+        }
+        want = _jaccard_reference(shingle_frame(docs), thr)
+        assert got == want and got, thr
+
+    corpus = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet"
+    ).filter("doc_id < 300")
+    got = {
+        (r.id_a, r.id_b): r.jaccard_x1000
+        for r in ngram_jaccard_pairs(
+            corpus, threshold_x1000=10, group_col="source"
+        ).collect()
+    }
+    sh = shingle_frame(corpus).join(
+        corpus.select(F.col("doc_id").alias("id"), F.col("source").alias("grp")),
+        "id",
+    )
+    want = _jaccard_reference(sh, 10)
+    assert got == want and len(got) > 10
+
+
+def test_ngram_jaccard_rejects_threshold_below_one(spark, docs):
+    """a threshold below 1/1000 would need pairs sharing no shingle,
+    which the index join never emits: it raises instead."""
+    with pytest.raises(ValueError, match="threshold_x1000"):
+        ngram_jaccard_pairs(docs, threshold_x1000=0)
 
 
 def test_embedding_block_equals_pairs(spark):
-    """broadcast-corpus block scoring must be bit-identical to the
-    pairwise join (same fold-left FP order)."""
+    """broadcast-corpus block scoring is bit-identical to a pure-Python
+    fold-left cosine over every pair of the 500 sf0.001 embeddings."""
     from s3_log_parser_spark.operators.dedup import embedding_near_dups
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    p = {
-        tuple(r)
-        for r in embedding_near_dups(
-            emb, threshold_x1m=200_000, method="pairs"
-        ).collect()
-    }
-    b = {
-        tuple(r)
-        for r in embedding_near_dups(
-            emb, threshold_x1m=200_000, method="block"
-        ).collect()
-    }
-    assert p == b and p
+    got = {tuple(r) for r in embedding_near_dups(emb, threshold_x1m=200_000).collect()}
+    want = _cosine_reference(
+        [(r.vec_id, r.embedding) for r in emb.collect()], 200_000
+    )
+    assert got == want and got
 
 
 def test_ngram_jaccard_stop_shingle_cap(spark, docs):
     """max_df drops only high-frequency shingles: results are a subset
     with lower-bound scores, and rare-shingle pairs are unaffected."""
-    from s3_log_parser_spark.operators.dedup import ngram_jaccard_pairs
+    from s3_log_parser_spark.operators.dedup import (
+        _jaccard_index_join,
+        ngram_jaccard_pairs,
+        shingle_frame,
+    )
 
     exact = {
         (r.id_a, r.id_b): r.jaccard_x1000
-        for r in ngram_jaccard_pairs(
-            docs, threshold_x1000=100, unblocked_limit=10_000
-        ).collect()
+        for r in ngram_jaccard_pairs(docs, threshold_x1000=100).collect()
     }
-    capped = {
-        (r.id_a, r.id_b): r.jaccard_x1000
-        for r in ngram_jaccard_pairs(
-            docs, threshold_x1000=100, unblocked_limit=10_000, max_df=3
-        ).collect()
-    }
+
+    def capped_at(max_df):
+        return {
+            (r.id_a, r.id_b): r.jaccard_x1000
+            for r in _jaccard_index_join(
+                shingle_frame(docs), False, 100, max_df=max_df
+            ).collect()
+        }
+
+    capped = capped_at(3)
     assert set(capped) <= set(exact)
     for pair, j in capped.items():
         assert j <= exact[pair], "capped jaccard must be a lower bound"
     # a huge cap changes nothing
-    uncapped = {
-        (r.id_a, r.id_b): r.jaccard_x1000
-        for r in ngram_jaccard_pairs(
-            docs, threshold_x1000=100, unblocked_limit=10_000, max_df=10**6
-        ).collect()
-    }
-    assert uncapped == exact
+    assert capped_at(10**6) == exact
 
 
 def test_simhash_64bit_banding_lossless(spark):
@@ -342,8 +411,8 @@ def test_simhash_64bit_banding_lossless(spark):
 
 def test_embedding_near_dups_null_and_ragged_vectors(spark):
     """ADVICE r3 #2/#3: a NULL or odd-length embedding must not fail the
-    job in EITHER brute-force path, and block == pairs parity must hold
-    on such corpora (NULL/cross-length pairs are dropped, same-length
+    job, and block scoring must match the Python fold-left cosine on
+    such corpora (NULL/cross-length pairs are dropped, same-length
     pairs still score)."""
     from s3_log_parser_spark.operators.dedup import embedding_near_dups
 
@@ -357,17 +426,9 @@ def test_embedding_near_dups_null_and_ragged_vectors(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     p = {
         tuple(r)
-        for r in embedding_near_dups(
-            emb, threshold_x1m=800_000, method="pairs"
-        ).collect()
+        for r in embedding_near_dups(emb, threshold_x1m=800_000).collect()
     }
-    b = {
-        tuple(r)
-        for r in embedding_near_dups(
-            emb, threshold_x1m=800_000, method="block"
-        ).collect()
-    }
-    assert p == b
+    assert p == _cosine_reference(rows, 800_000)
     ids = {(a, bb) for a, bb, _ in p}
     assert (1, 2) in ids and (4, 5) in ids  # same-length pairs survive
     assert all(3 not in pair for pair in ids)
@@ -390,21 +451,23 @@ def test_cosine_topk_null_embedding_survives(spark):
     assert [r.c_id for r in got] == [2, 4]  # NULL row never ranks
 
 
-def test_embedding_near_dups_auto_raises_past_guard(spark):
-    """VERDICT r3 #2: method='auto' past block_limit must raise with a
-    pointer to the bucketed scale path, never silently launch O(N²)."""
-    import pytest
-
-    from s3_log_parser_spark.operators.dedup import embedding_near_dups
+def test_embedding_near_dups_auto_raises_past_guard(spark, monkeypatch):
+    """VERDICT r3 #2: past BLOCK_LIMIT rows embedding_near_dups must
+    raise with a pointer to the bucketed scale path, never silently
+    launch O(N²)."""
+    from s3_log_parser_spark.operators import dedup
 
     emb = spark.range(10).select(
         F.col("id").alias("vec_id"),
         F.array(F.rand(7), F.rand(11)).alias("embedding"),
     )
+    monkeypatch.setattr(dedup, "BLOCK_LIMIT", 5)
     with pytest.raises(ValueError, match="bucketed"):
-        embedding_near_dups(emb, block_limit=5)
-    # explicit opt-in still works
-    assert embedding_near_dups(emb, block_limit=5, method="pairs").count() >= 0
+        dedup.embedding_near_dups(emb)
+    monkeypatch.setattr(dedup, "BLOCK_LIMIT", 10)
+    assert dedup.embedding_near_dups(emb).count() >= 0
+
+
 def test_simhash_default_is_production_geometry(spark):
     """VERDICT r3 #1: the default simhash_pairs geometry must be the
     64-bit/16-bit-band production mode, and its candidate set must
@@ -454,48 +517,43 @@ def test_simhash_default_is_production_geometry(spark):
     assert n64 < n16, (n64, n16)
 
 
-def test_ngram_jaccard_auto_stop_shingle_guard(spark, docs):
-    """VERDICT r3 #3: the default max_df='auto' is exact below
-    auto_exact_limit and applies a loud, capped lower-bound mode above
-    it — a boilerplate shingle can no longer drive Σ df(h)² unguarded
-    by default."""
+def test_ngram_jaccard_auto_stop_shingle_guard(spark, docs, monkeypatch):
+    """VERDICT r3 #3: a grouped input is exact below AUTO_EXACT_LIMIT
+    rows and gets a loud, capped lower-bound mode above it — a
+    boilerplate shingle can no longer drive Σ df(h)² unguarded."""
     import warnings
 
-    from s3_log_parser_spark.operators.dedup import ngram_jaccard_pairs
+    from s3_log_parser_spark.operators import dedup
+    from s3_log_parser_spark.operators.dedup import shingle_frame
 
     docs = docs.withColumn("grp", F.lit(1))
-    exact = {
-        (r.id_a, r.id_b): r.jaccard_x1000
-        for r in ngram_jaccard_pairs(
-            docs, threshold_x1000=100, unblocked_limit=10_000, max_df=None,
-            group_col="grp",
-        ).collect()
-    }
-    # small grouped input: auto == exact, no warning
+    exact = _jaccard_reference(shingle_frame(docs), 100)
+    # small grouped input: exact, no warning
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         auto_small = {
             (r.id_a, r.id_b): r.jaccard_x1000
             for r in ngram_jaccard_pairs(
-                docs, threshold_x1000=100, unblocked_limit=10_000,
-                group_col="grp",
+                docs, threshold_x1000=100, group_col="grp",
             ).collect()
         }
     assert auto_small == exact
     # past the (test-shrunk) limit: warns and caps
+    monkeypatch.setattr(dedup, "AUTO_EXACT_LIMIT", 3)
+    monkeypatch.setattr(dedup, "AUTO_MAX_DF", 2)
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         capped = {
             (r.id_a, r.id_b): r.jaccard_x1000
             for r in ngram_jaccard_pairs(
-                docs, threshold_x1000=100, unblocked_limit=10_000,
-                group_col="grp", auto_exact_limit=3, auto_max_df=3,
+                docs, threshold_x1000=100, group_col="grp",
             ).collect()
         }
     assert any("stop-shingle" in str(x.message) for x in w)
     assert set(capped) <= set(exact)
     for pair, j in capped.items():
         assert j <= exact[pair]
+    assert capped != exact, "the cap must drop a shared shingle here"
 
 
 def test_band_joins_are_equi_joins(spark):
@@ -720,24 +778,6 @@ def test_incremental_dedup_requires_history_state(spark):
     new = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError, match="seen_df .*or index"):
         incremental_dedup(new)
-
-
-def test_jaccard_pairs_from_index_matches_inline(spark, docs):
-    """the persisted-shingle-frame seam returns the same pairs as the
-    inline index-join path."""
-    from s3_log_parser_spark.operators.dedup import (
-        jaccard_pairs_from_index,
-        shingle_frame,
-    )
-
-    inline = ngram_jaccard_pairs(docs, threshold_x1000=300)
-    staged = jaccard_pairs_from_index(
-        shingle_frame(docs), threshold_x1000=300
-    )
-    key = lambda r: (r["id_a"], r["id_b"], r["jaccard_x1000"])  # noqa: E731
-    assert sorted(map(key, staged.collect())) == sorted(
-        map(key, inline.collect())
-    )
 
 
 def test_dup_clusters_chain_closure(spark):

@@ -2,11 +2,7 @@
 
 import os
 
-from s3_log_parser_spark.plans.lineage import (
-    Manifest,
-    lineage_summary,
-    with_partition_metrics,
-)
+from s3_log_parser_spark.plans.lineage import Manifest, partition_metrics
 
 
 def test_manifest_roundtrip(tmp_path):
@@ -28,13 +24,30 @@ def test_manifest_atomic_no_tmp_left(tmp_path):
 
 
 def test_partition_metrics_row_conservation(spark, transcripts):
-    tagged = with_partition_metrics(transcripts.repartition(6))
-    assert tagged.count() == transcripts.count()
-    summary = lineage_summary(tagged).collect()
+    df = transcripts.repartition(6)
+    summary = partition_metrics(df).collect()
     assert sum(r["rows"] for r in summary) == transcripts.count()
-    assert len(summary) == 6
+    assert sorted(r["_part_id"] for r in summary) == list(range(6))
+    row_bytes = df._jdf.schema().defaultSize()
     for r in summary:
-        assert r["approx_bytes"] > 0
+        assert r["approx_bytes"] == r["rows"] * row_bytes > 0
+    types = {f.name: f.dataType.simpleString() for f in partition_metrics(df).schema}
+    assert types == {"_part_id": "int", "rows": "bigint", "approx_bytes": "bigint"}
+
+
+def test_partition_metrics_plan_runs_no_python(spark, transcripts):
+    """the lineage table is one JVM aggregate: no row of the measured
+    frame is shipped to a Python worker."""
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        partition_metrics(transcripts.repartition(6)).explain("formatted")
+    plan = buf.getvalue()
+    assert "HashAggregate" in plan
+    for node in ("MapInPandas", "PythonUDF", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, node
 
 
 def test_raw_log_reader(spark, tmp_path, transcripts):

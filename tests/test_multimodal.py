@@ -97,7 +97,7 @@ def test_injectable_codec_contract(spark):
 
     # the real hook itself still raises (honest stub) through the SAME seam
     with _pytest.raises(Exception, match="NotImplementedError|decode"):
-        extract_media_metadata(media.limit(1), use_real_decoder=True).collect()
+        extract_media_metadata(media.limit(1), decoder=decode_real).collect()
     # and directly, with the documented contract signature
     with _pytest.raises(NotImplementedError):
         decode_real(b"\x89PNG", "image/png")

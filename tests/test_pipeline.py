@@ -292,8 +292,8 @@ def test_route_stage_releases_cube_cache_when_a_sink_write_fails(
 
 
 def test_percentiles_disc_exact_and_approx(spark):
-    """A5: exact mode = value at ascending rank ceil(p*n); approx mode
-    (the scale path) must land within the discrete value range."""
+    """A5: the value at ascending rank ceil(p*n) per key, NULLs
+    excluded."""
     from s3_log_parser_spark.operators.aggregate import percentiles_disc
 
     rows = [("a", v) for v in [10, 20, 30, 40, 50, 60, 70, 80, 90, 100]]
@@ -306,18 +306,9 @@ def test_percentiles_disc_exact_and_approx(spark):
     assert got["a"]["p990"] == 100
     assert got["b"]["n"] == 1 and got["b"]["p500"] == 7  # NULLs excluded
 
-    ap = {
-        r["k"]: r
-        for r in percentiles_disc(df, "k", "v", mode="approx").collect()
-    }
-    assert ap["a"]["n"] == 10
-    assert 40 <= ap["a"]["p500"] <= 60
-    assert ap["a"]["p950"] >= 90
-
 
 def test_profile_key_skew_modes(spark):
-    """skew profiler: exact stats on a planted hot key; approx mode
-    (mergeable, no global sort) lands within sketch error."""
+    """skew profiler: exact stats on a planted hot key."""
     from s3_log_parser_spark.operators.aggregate import profile_key_skew
 
     rows = [("hot", i) for i in range(90)] + [
@@ -331,9 +322,6 @@ def test_profile_key_skew_modes(spark):
     assert r["p50_count"] == 1      # rank ceil(11*0.5)=6 of [1×10, 90]
     assert r["p99_count"] == 90     # rank ceil(11*0.99)=11
     assert r["top1_share_x1000"] == 900
-    a = profile_key_skew(df, "k", mode="approx").collect()[0]
-    assert a["n_keys"] == 11 and a["max_count"] == 90
-    assert a["p50_count"] == 1
 
 
 def test_grouped_topk_deterministic_and_group_limited(spark):
