@@ -260,61 +260,6 @@ def gopher_pass(col: Column | str, **kw) -> Column:
     return gopher_flags(col, **kw)["gopher_pass"]
 
 
-def _dup_run_stats(items: Column) -> Column:
-    """``struct(docc, dxc, dac, top)`` over an ``array<string>`` —
-    duplicate-occurrence count, excess-occurrence chars, all-occurrence
-    chars of duplicated values, and the top value's total chars
-    (count × length). ONE in-row pass over the SORTED array (adjacent
-    equality finds duplicates — O(k log k) per row, no shuffle, no
-    per-element rescans of a computed array: the sort is a top-level
-    child evaluated once, the fold sees only lambda variables)."""
-    z = F.lit(0).cast("long")
-    init = F.struct(
-        F.lit(None).cast("string").alias("prev"),
-        F.lit(1).cast("long").alias("run"),
-        z.alias("docc"),
-        z.alias("dxc"),
-        z.alias("dac"),
-        z.alias("top"),
-    )
-
-    def step(acc: Column, x: Column) -> Column:
-        ln = F.length(x)
-        same = F.struct(
-            acc["prev"].alias("prev"),
-            (acc["run"] + 1).alias("run"),
-            (acc["docc"] + 1).alias("docc"),
-            (acc["dxc"] + ln).alias("dxc"),
-            (
-                acc["dac"]
-                + F.when(acc["run"] == 1, 2 * ln).otherwise(ln)
-            ).alias("dac"),
-            F.greatest(acc["top"], (acc["run"] + 1) * ln).alias("top"),
-        )
-        fresh = F.struct(
-            x.alias("prev"),
-            F.lit(1).cast("long").alias("run"),
-            acc["docc"].alias("docc"),
-            acc["dxc"].alias("dxc"),
-            acc["dac"].alias("dac"),
-            F.greatest(acc["top"], ln).alias("top"),
-        )
-        # NULL prev (initial) compares NULL → otherwise() → fresh run
-        return F.when(x == acc["prev"], same).otherwise(fresh)
-
-    return F.aggregate(
-        F.array_sort(items),
-        init,
-        step,
-        lambda acc: F.struct(
-            acc["docc"].alias("docc"),
-            acc["dxc"].alias("dxc"),
-            acc["dac"].alias("dac"),
-            acc["top"].alias("top"),
-        ),
-    )
-
-
 # Gopher repetition thresholds (Rae et al. 2021 appendix A1.2): a doc
 # PASSES a rule when its fraction is ≤ the threshold (percent).
 GOPHER_TOP_NGRAM_PCT = {2: 20, 3: 18, 4: 16}
@@ -322,11 +267,16 @@ GOPHER_DUP_NGRAM_PCT = {5: 15, 6: 14, 7: 13, 8: 12, 9: 11, 10: 10}
 
 
 def _dup_run_stats_sql(items: str) -> str:
-    """SQL text of :func:`_dup_run_stats` over an array expression —
-    identical fold, built as ONE string instead of ~60 py4j Column
-    calls (r7: the 11-fold flag suite cost ~1.0 s of pure driver time
-    per construction; string building is microseconds and the parsed
-    tree is the same)."""
+    """SQL text of ``struct(docc, dxc, dac, top)`` over an
+    ``array<string>`` expression — duplicate-occurrence count,
+    excess-occurrence chars, all-occurrence chars of duplicated values,
+    and the top value's total chars (count × length). ONE in-row pass
+    over the SORTED array (adjacent equality finds duplicates —
+    O(k log k) per row, no shuffle, no per-element rescans of a
+    computed array: the sort is a top-level child evaluated once, the
+    fold sees only lambda variables). Built as one string rather than
+    Column calls (r7: the Column form of the 11-fold flag suite cost
+    ~1.0 s of py4j driver time per construction)."""
     return (
         f"aggregate(array_sort({items}), "
         "named_struct('prev', CAST(NULL AS STRING), "
@@ -347,8 +297,11 @@ def _dup_run_stats_sql(items: str) -> str:
 
 
 def _shingles_sql(toks: str, n: int) -> str:
-    """SQL text of ``operators.dedup.shingles`` over a token-array
-    expression (same slice/zip_with ladder, same <n-token fallback)."""
+    """SQL text of the word n-gram shingles (array<string>) of a
+    token-array expression: one index-shifted ``slice`` per position
+    folded by ``zip_with`` (linear cost, see
+    ``operators.dedup._sliding_zip``); rows with < n tokens get their
+    whole token string as the single shingle."""
     k = f"greatest(size({toks}) - {n - 1}, 0)"
     cur = f"transform(slice({toks}, 1, {k}), t -> t)"
     for j in range(2, n + 1):
@@ -359,7 +312,7 @@ def _shingles_sql(toks: str, n: int) -> str:
     return f"IF(size({toks}) >= {n}, {cur}, array(array_join({toks}, ' ')))"
 
 
-def gopher_repetition_flags(col: Column | str) -> dict[str, Column]:
+def gopher_repetition_flags(col: str) -> dict[str, Column]:
     """The Gopher repetition-rule suite (Rae et al. 2021 A1.2) — the
     intra-document complement of :func:`gopher_flags` (A1.1) — as
     per-document boolean flags (True = PASSES), plus the conjunction
@@ -384,20 +337,8 @@ def gopher_repetition_flags(col: Column | str) -> dict[str, Column]:
     agree on the exact rule. Documents with < n tokens PASS the
     n-gram rules (no n-gram exists). Pure Catalyst: per-row sorts and
     folds only — quality gating at 100 TB stays map-side CPU with no
-    exchange.
-
-    Construction path (r7): for a string column name the whole flag
-    suite is generated as SQL TEXT (one ``F.expr`` per flag) — the
-    Column-by-Column form cost ~1.0 s of py4j driver time per call
-    (11 sort-folds built from ~60 Column calls each); the parsed trees
-    are identical, pinned by the SQL-vs-Column equality test. Column
-    inputs keep the Column form."""
-    if isinstance(col, str):
-        return _gopher_repetition_flags_sql(col)
-    return _gopher_repetition_flags_cols(col)
-
-
-def _gopher_repetition_flags_sql(col: str) -> dict[str, Column]:
+    exchange. ``col`` is a column name; the suite is generated as SQL
+    text, one ``F.expr`` per flag."""
     c = f"coalesce(`{col}`, '')"
     toks = f"filter(split(trim({c}), '\\\\s+'), t -> t != '')"
     ntok = f"size({toks})"
@@ -431,38 +372,6 @@ def _gopher_repetition_flags_sql(col: str) -> dict[str, Column]:
     return flags
 
 
-def _gopher_repetition_flags_cols(col: Column) -> dict[str, Column]:
-    from ..operators.dedup import shingles
-
-    c = F.coalesce(col, F.lit(""))
-    toks = tokens(c)
-    ntok = F.size(toks)
-    dc = F.greatest(F.length(c), F.lit(1)).cast("long")
-    lines = F.filter(F.split(c, "\n"), lambda x: F.trim(x) != "")
-    paras = F.filter(F.split(c, "\n\n"), lambda x: F.trim(x) != "")
-    ls = _dup_run_stats(lines)
-    ps = _dup_run_stats(paras)
-    n_lines = F.greatest(F.size(lines).cast("long"), F.lit(1).cast("long"))
-    n_paras = F.greatest(F.size(paras).cast("long"), F.lit(1).cast("long"))
-    flags: dict[str, Column] = {
-        "dup_line_ok": ls["docc"] * 100 <= n_lines * 30,
-        "dup_line_char_ok": ls["dxc"] * 100 <= dc * 20,
-        "dup_para_ok": ps["docc"] * 100 <= n_paras * 30,
-        "dup_para_char_ok": ps["dxc"] * 100 <= dc * 20,
-    }
-    for n, pct in GOPHER_TOP_NGRAM_PCT.items():
-        st = _dup_run_stats(shingles(c, n))
-        flags[f"top_{n}gram_ok"] = (ntok < n) | (st["top"] * 100 <= dc * pct)
-    for n, pct in GOPHER_DUP_NGRAM_PCT.items():
-        st = _dup_run_stats(shingles(c, n))
-        flags[f"dup_{n}gram_ok"] = (ntok < n) | (st["dac"] * 100 <= dc * pct)
-    passed = None
-    for f in flags.values():
-        passed = f if passed is None else (passed & f)
-    flags["repetition_pass"] = passed
-    return flags
-
-
 # whitespace / control classes spelled out as explicit char classes:
 # Java regex \s and RE2 \s disagree on vertical tab (Java includes
 # \x0B, RE2 does not), so the oracle would silently diverge on it.
@@ -471,12 +380,7 @@ _WS_RUN_RE = r"[ \t\n\r\x0B\x0C]+"
 _CTRL_RE = r"[\x00-\x08\x0E-\x1F\x7F]"
 
 
-def normalize_text(
-    col: Column | str,
-    lower: bool = True,
-    collapse_ws: bool = True,
-    strip_ctrl: bool = True,
-) -> Column:
+def normalize_text(col: Column | str) -> Column:
     """the standard pre-hash text cleanup every dedup/quality stage
     runs first: collapse whitespace runs (tab/newline/CR/VT/FF → one
     space, ends trimmed), strip remaining NON-whitespace control
@@ -488,13 +392,9 @@ def normalize_text(
     ``nfc_text(normalize_text(c))`` so lowering happens before
     combining marks are composed)."""
     c = F.coalesce(F.col(col) if isinstance(col, str) else col, F.lit(""))
-    if collapse_ws:
-        c = F.trim(F.regexp_replace(c, _WS_RUN_RE, " "))
-    if strip_ctrl:
-        c = F.regexp_replace(c, _CTRL_RE, "")
-    if lower:
-        c = F.lower(c)
-    return c
+    c = F.trim(F.regexp_replace(c, _WS_RUN_RE, " "))
+    c = F.regexp_replace(c, _CTRL_RE, "")
+    return F.lower(c)
 
 
 def nfc_text(col: Column | str) -> Column:

@@ -300,7 +300,6 @@ def cmd_ingest(args) -> None:
         checkpoint_dir=f"{args.output}/_checkpoint/ingest",
         near=not args.exact_only,
         threshold_x1000=args.near_threshold,
-        trigger_once=True,
         checks=checks,
         on_audit_fail=args.on_audit_fail,
     )

@@ -266,7 +266,6 @@ def time_rollup(
     keys: tuple[str, ...] = ("event_type",),
     value_col: str | None = "value",
     resolutions: tuple[str, ...] = ("minute", "hour", "day"),
-    persist_base: bool = True,
 ) -> DataFrame:
     """Multi-resolution time rollup (hypertable continuous-aggregate
     shape): per-key event counts + integer-scaled value sums at every
@@ -288,11 +287,9 @@ def time_rollup(
     re-aggregate. Expanding the BASE is |keys × minutes| × n_tiers
     rows, not raw × n_tiers, so the single-raw-scan property holds
     with no cache at all (r7: the previous union-of-reaggregates shape
-    needed ``persist_base`` to avoid 3 raw scans, and the persist's
+    needed a persisted base to avoid 3 raw scans, and the persist's
     first-run materialization cost 3× the whole unpersisted query at
-    bench scale — 6.9 s vs 2.3 s). ``persist_base`` is retained for
-    API compatibility and ignored: the base now has exactly one
-    consumer.
+    bench scale — 6.9 s vs 2.3 s).
 
     Sums are exact: ``value`` is scaled ×100 and summed as LONG (the
     repo's cross-engine rule — float summation order differs between
@@ -457,7 +454,6 @@ def value_histogram(
     value_col: str = "value",
     keys: tuple[str, ...] = (),
     scale: int = 1000,
-    strict: bool = True,
 ) -> DataFrame:
     """Log2-binned distribution of a fixed-point value per key — the
     mergeable distribution sketch (histograms add, and ~31 bins cover
@@ -469,21 +465,17 @@ def value_histogram(
     ``floor(v·scale + 0.5)`` is not symmetric rounding below zero, and
     :func:`histogram_quantiles` reports bin 0's bounds as [0, 0] —
     folding negatives into bin 0 would silently break that guarantee
-    (ADVICE r5). ``strict=True`` (default) enforces it row-locally
-    (raises at execution time on the first negative, no extra pass);
-    ``strict=False`` restores the fold-into-bin-0 behavior for callers
-    who treat bin 0 as "≤ 0, unbounded below". NULL values pass
-    through to a NULL bin either way."""
+    (ADVICE r5). The precondition is enforced row-locally (raises at
+    execution time on the first negative, no extra pass). NULL values
+    pass through to a NULL bin."""
     raw = F.col(value_col)
-    if strict:
-        # assert_true yields NULL when the condition holds and raises
-        # otherwise — a row-local guard with no extra scan
-        ok = F.assert_true(
-            raw.isNull() | (raw >= 0),
-            F.lit(f"value_histogram: negative {value_col}; pass "
-                  "strict=False to fold negatives into bin 0"),
-        )
-        raw = F.when(ok.isNull(), raw)
+    # assert_true yields NULL when the condition holds and raises
+    # otherwise — a row-local guard with no extra scan
+    ok = F.assert_true(
+        raw.isNull() | (raw >= 0),
+        F.lit(f"value_histogram: negative {value_col}"),
+    )
+    raw = F.when(ok.isNull(), raw)
     v = F.floor(raw * scale + F.lit(0.5)).cast("long")
     return (
         df.select(*keys, v.alias("_v"))
@@ -508,10 +500,8 @@ def histogram_quantiles(
     ``ceil(total·p/1000)`` provably lies in [lo, hi] of the returned
     bin (factor-of-2 bounds — the log2 trade; narrower bins = a finer
     binning function, same machinery). The guarantee requires the
-    histogram's non-negative-value precondition (enforced by
-    :func:`value_histogram` ``strict=True``): a ``strict=False``
-    histogram folds negatives into bin 0, whose reported [0, 0]
-    bounds then only mean "≤ 0".
+    histogram's non-negative-value precondition, which
+    :func:`value_histogram` enforces.
 
     Input is sketch-sized (≤ ~31 bins per key), so the one window pass
     + per-p min-bin aggregate here costs nothing at any corpus scale —

@@ -5,9 +5,10 @@ Five strategies, all deterministic and partition-invariant:
 - :func:`exact_dedup` — hash-groupBy on a canonical key; the winner
   within a duplicate group is chosen by explicit ordering (never
   ``dropDuplicates``, whose winner is partition-dependent).
-- :func:`shingles` / :func:`minhash_signature` / :func:`minhash_candidates`
-  — MinHash+LSH: shingle → K min-hashes → bands → bucket self-join →
-  candidate pairs → exact-Jaccard verification. The shingle hash is a
+- :func:`shingle_hashes` / :func:`minhash_signature` /
+  :func:`minhash_candidates` — MinHash+LSH: shingle → K min-hashes →
+  bands → bucket self-join → candidate pairs → exact-Jaccard
+  verification. The shingle hash is a
   DJB2 fold over per-token DJB2 digests (the reference kernel, applied
   hierarchically) so the DuckDB oracle reproduces signatures
   bit-for-bit at linear cost; ``mode="xxhash64"`` swaps in the codegen
@@ -50,14 +51,11 @@ def exact_dedup(
     df: DataFrame,
     key_cols: tuple[str, ...] = ("text",),
     order: tuple[str, ...] = ("doc_id",),
-    normalize: bool = True,
 ) -> DataFrame:
     """Keep one deterministic representative per duplicate group:
-    lowest ``order`` wins. Adds ``dup_count`` (group size)."""
-    key = [
-        F.md5(F.lower(F.trim(F.col(c)))) if normalize else F.md5(F.col(c))
-        for c in key_cols
-    ]
+    lowest ``order`` wins; the key is the lower+trim normalized text.
+    Adds ``dup_count`` (group size)."""
+    key = [F.md5(F.lower(F.trim(F.col(c)))) for c in key_cols]
     df = df.withColumn("_dupkey", F.concat(*key))
     w = Window.partitionBy("_dupkey").orderBy(*order)
     wc = Window.partitionBy("_dupkey")
@@ -82,19 +80,6 @@ def _sliding_zip(arr: Column, n: int, combine, first) -> Column:
     for j in range(2, n + 1):
         cur = F.zip_with(cur, F.slice(arr, j, k), combine)
     return cur
-
-
-def shingles(col: Column | str, n: int = 3) -> Column:
-    """word n-gram shingles as an array<string>; rows with < n tokens
-    get their whole token string as the single shingle."""
-    toks = tokens(col)
-    joined = F.array_join(toks, " ")
-    grams = _sliding_zip(
-        toks, n,
-        combine=lambda acc, t: F.concat(acc, F.lit(" "), t),
-        first=lambda t: t,
-    )
-    return F.when(F.size(toks) >= n, grams).otherwise(F.array(joined))
 
 
 _M32 = 1 << 32
@@ -850,7 +835,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     threshold_x1m: int = 950_000,
     n_cells: int = 8,
-    policy: str = "pairs",
 ) -> DataFrame:
     """SemDeDup-style embedding-space dedup (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus, compare pairs ONLY within a
@@ -866,9 +850,7 @@ def semantic_dedup(
     (``similarity.ivf_centroids`` / ``ivf_assign`` — no kmeans
     dependency, cross-engine exact), a cell-keyed self-join with
     integer-scaled cosine verify at ``threshold_x1m``, then the drop
-    rule: ``"pairs"`` drops the higher id of each qualifying pair,
-    ``"clusters"`` closes the pair graph transitively
-    (:func:`dup_clusters`) and keeps each component's lowest id.
+    rule: the higher id of each qualifying pair is dropped.
 
     Scale shape: the corpus never broadcasts and never all-pairs —
     cost is O(Σ cell²), so ``n_cells`` must grow with the corpus
@@ -878,8 +860,6 @@ def semantic_dedup(
     max_by aggregate (no window over the corpus)."""
     from .similarity import ivf_assign, ivf_centroids
 
-    if policy not in ("pairs", "clusters"):
-        raise ValueError(f"semantic_dedup: unknown policy {policy!r}")
     cent = ivf_centroids(corpus, id_col, vec_col, n_cells)
     assigned = ivf_assign(
         corpus.select(F.col(id_col), F.col(vec_col)), cent, id_col, vec_col
@@ -911,14 +891,7 @@ def semantic_dedup(
         .filter(F.col("cosine_x1m") >= threshold_x1m)
         .select("id_a", "id_b")
     )
-    if policy == "clusters":
-        drop = (
-            dup_clusters(pairs)
-            .filter(F.col("id") != F.col("cluster_id"))
-            .select(F.col("id").alias(id_col))
-        )
-    else:
-        drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return (
         assigned.select(id_col, "cell")
         .join(drop.withColumn("_d", F.lit(True)), id_col, "left")

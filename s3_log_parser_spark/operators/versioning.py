@@ -59,14 +59,13 @@ def corpus_diff(
     id_col: str = "doc_id",
     text_col: str = "text",
     normalize: bool = True,
-    check_unique: bool = True,
 ) -> DataFrame:
     """``(id, old_dig, new_dig, status)`` for every id in either
     snapshot. One tagged union + one hash aggregate — the two corpus
     scans never join and never sort; the only exchange is on the
     uniformly distributed id.
 
-    ``check_unique`` adds a per-id cardinality guard inside the SAME
+    A per-id cardinality guard runs inside the SAME
     aggregate (``raise_error`` inside the status CASE — lazy, zero
     extra passes, fails the job at execution time) against snapshots
     that carry a duplicate id — a diff over a non-snapshot input is
@@ -97,21 +96,19 @@ def corpus_diff(
         .when(F.col("old_dig") == F.col("new_dig"), F.lit("unchanged"))
         .otherwise(F.lit("changed"))
     )
-    if check_unique:
-        status = F.when(
-            (F.col("_no") > 1) | (F.col("_nn") > 1),
-            F.raise_error(
-                F.concat_ws(
-                    " ",
-                    F.lit(
-                        "corpus_diff: duplicate id within one snapshot"
-                        " (inputs must be id-unique — exact_dedup"
-                        " first):"
-                    ),
-                    F.col("id").cast("string"),
-                )
-            ),
-        ).otherwise(status)
+    status = F.when(
+        (F.col("_no") > 1) | (F.col("_nn") > 1),
+        F.raise_error(
+            F.concat_ws(
+                " ",
+                F.lit(
+                    "corpus_diff: duplicate id within one snapshot"
+                    " (inputs must be id-unique — exact_dedup first):"
+                ),
+                F.col("id").cast("string"),
+            )
+        ),
+    ).otherwise(status)
     return agg.select("id", "old_dig", "new_dig", status.alias("status"))
 
 

@@ -54,7 +54,6 @@ def start_ingest(
     text_col: str = "text",
     near: bool = True,
     threshold_x1000: int = 500,
-    trigger_once: bool = True,
     checks: list[Check] | None = None,
     on_audit_fail: str = "raise",
 ) -> StreamingQuery:
@@ -63,8 +62,8 @@ def start_ingest(
     ``index_path`` (its meta table fixes n/k/mode — a stream can't
     silently mix hash families) → accepted docs to
     ``{out_dir}/accepted`` (partitioned by ``_batch``) → index append.
-    ``trigger_once`` drains available input and stops (the daily-batch
-    deployment mode); ``False`` runs continuously.
+    The query drains available input and stops (the daily-batch
+    deployment mode).
 
     ``checks`` (``operators.audit`` expectations) gate each batch
     BEFORE any dedup work touches it: the one-scan audit report is
@@ -137,11 +136,10 @@ def start_ingest(
         finally:
             accepted.unpersist()
 
-    w = (
+    return (
         docs_stream.writeStream.foreachBatch(ingest_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        w = w.trigger(availableNow=True)
-    return w.start()

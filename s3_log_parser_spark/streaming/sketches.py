@@ -130,10 +130,10 @@ def start_hll_stream(
     key_col: str = "k",
     p: int = HLL_P,
     mode: str = "djb2",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
-    """Maintain a persisted HLL register table over a key stream.
-    Replay-safe without bookkeeping: max-merge is idempotent."""
+    """Maintain a persisted HLL register table over a key stream,
+    draining available input and stopping. Replay-safe without
+    bookkeeping: max-merge is idempotent."""
 
     def fold_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -141,12 +141,12 @@ def start_hll_stream(
         prev = read_hll_table(spark, table_path)
         _overwrite_tiny(hll_merge(prev, sk), table_path)
 
-    writer = keys_stream.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        keys_stream.writeStream.foreachBatch(fold_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def _batch_fingerprint(batch: DataFrame, key_col: str) -> tuple[int, int]:
@@ -170,9 +170,9 @@ def start_cms_stream(
     depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
     mode: str = "djb2",
-    trigger_once: bool = True,
 ) -> StreamingQuery:
-    """Maintain a persisted CMS counter table over a key stream.
+    """Maintain a persisted CMS counter table over a key stream,
+    draining available input and stopping.
 
     Sum-merge double-counts on replay, so each fold records
     (batch_id, content fingerprint) in the ``_meta`` sidecar. A
@@ -214,9 +214,9 @@ def start_cms_stream(
         )
         _overwrite_tiny(merged, table_path)
 
-    writer = keys_stream.writeStream.foreachBatch(fold_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        keys_stream.writeStream.foreachBatch(fold_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

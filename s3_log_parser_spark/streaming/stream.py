@@ -8,8 +8,9 @@ users tail transcript tables continuously. Shape:
 - the batch slim path (``plans.pipeline``): the one ``mapInArrow``
   parse kernel, flat encode, CASE WHEN classify and the CASE WHEN
   role/tool dims — MINUS the ST1 window (windows over unbounded data
-  need state): first-occurrence dedup of 206-START rows is
-  :func:`unique_starts_stream_exact`, one state entry per
+  need state) and with no event-time watermark: first-occurrence
+  dedup of 206-START rows is :func:`unique_starts_stream_exact`,
+  Spark's streaming ``dropDuplicates`` with one state entry per
   (ip_hash, key_hash) for the stream's lifetime,
 - ``foreachBatch`` multi-sink router — the streaming-native form of
   the batch cache-then-filter fan-out (single pass per micro-batch),
@@ -29,12 +30,14 @@ from ..plans.pipeline import _parse_encode_classify
 from ..sources.catalog import Catalog
 
 
-def build_slim_stream(transcripts: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+def build_slim_stream(transcripts: DataFrame) -> DataFrame:
     """Streaming version of plans.pipeline.build_slim: the same Arrow
     parse, encode, classify and role/tool dims (no Python UDF stage,
     no broadcast), with flags but without the ST1 window — the stateless
     bitmask with is_first=false; first-occurrence dedup of the start
-    rows is :func:`unique_starts_stream_exact`."""
+    rows is :func:`unique_starts_stream_exact`. No watermark: the
+    router is stateless, and a watermark would make the stateful dedup
+    drop late rows of files that are not ordered by ``ts``."""
     df = enrich_role_tool(_parse_encode_classify(transcripts))
     df = df.withColumn(
         "flags",
@@ -46,7 +49,7 @@ def build_slim_stream(transcripts: DataFrame, watermark: str = "10 minutes") -> 
             F.lit(False),
         ),
     )
-    return df.withWatermark("ts", watermark).select(*SLIM_COLUMNS)
+    return df.select(*SLIM_COLUMNS)
 
 
 def start_router(
@@ -93,73 +96,21 @@ def start_router(
 def unique_starts_stream_exact(slim_stream: DataFrame) -> DataFrame:
     """streaming ST1 with UNBOUNDED state (VERDICT r3 missing #4): one
     emitted row per distinct (ip_hash, key_hash) start key over the
-    WHOLE stream, via ``applyInPandasWithState`` holding one boolean
-    per seen key — a key that reappears hours after its watermark
-    would expire is still deduplicated, unlike
-    ``dropDuplicatesWithinWatermark``.
+    WHOLE stream — the 206-START filter, then Spark's streaming
+    ``dropDuplicates`` (one ``StreamingDeduplicate`` node, all in the
+    JVM). With no watermark upstream the operator keeps one state entry
+    per seen key for the stream's lifetime and recovers it from the
+    checkpoint, so a key that reappears hours later is still
+    deduplicated.
 
-    Scale posture: state is O(distinct keys) booleans in the state
-    store (RocksDB in production), hash-partitioned by key — the same
+    Scale posture: state is O(distinct keys) in the state store
+    (RocksDB in production), hash-partitioned by key — the same
     asymptotics as the batch window's shuffle, amortized over the
-    stream's lifetime. The emitted REPRESENTATIVE row is the
-    (ts, conv_id, turn_idx)-minimum within the micro-batch that first
-    contains the key; across micro-batches arrival order decides, so
-    the emitted KEY SET is exactly the batch ST1 key set while the
-    representative may differ on replays that split a key across
-    batches (inherent to any streaming dedup; the batch window stays
-    the bit-exact contract surface)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    starts = slim_stream.filter(
+    stream's lifetime. The emitted REPRESENTATIVE row is the first one
+    Spark sees for the key; the emitted KEY SET is exactly the batch
+    ST1 key set, while the representative may differ from the batch
+    window's (ts, conv_id, turn_idx)-minimum (inherent to any streaming
+    dedup; the batch window stays the bit-exact contract surface)."""
+    return slim_stream.filter(
         (F.col("http_code") == 206) & ((F.col("flags") % 4) >= 2)
-    )
-    schema = starts.schema
-    order_cols = [c for c in ("ts", "conv_id", "turn_idx") if c in starts.columns]
-
-    def first_per_key(key, pdfs, state):
-        import pandas as pd
-
-        if state.exists:
-            # key already emitted in an earlier micro-batch
-            for _ in pdfs:
-                pass
-            return
-        best = None
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue
-            cand = pdf.sort_values(order_cols).iloc[[0]] if order_cols else pdf.iloc[[0]]
-            if best is None:
-                best = cand
-            else:
-                both = pd.concat([best, cand])
-                best = both.sort_values(order_cols).iloc[[0]] if order_cols else both.iloc[[0]]
-        if best is not None:
-            state.update((True,))
-            yield best
-
-    return starts.groupBy("ip_hash", "key_hash").applyInPandasWithState(
-        first_per_key,
-        outputStructType=schema,
-        stateStructType="seen boolean",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def session_counts_stream(
-    slim_stream: DataFrame,
-    key_col: str = "conv_id",
-    gap: str = "30 minutes",
-) -> DataFrame:
-    """streaming sessionization: per-key gap-merged session windows
-    (``F.session_window`` — the engine-native form of
-    operators/sessions.sessionize) with event count per session.
-    Boundary nuance vs the batch operator: ``session_window`` treats an
-    event at EXACTLY ``gap`` after the previous one as a new session
-    (windows are [start, last+gap)), while the batch ``sessionize``
-    keeps it (strictly-greater rule). Off-boundary streams — i.e. any
-    real timestamped data — agree exactly."""
-    return slim_stream.groupBy(
-        F.session_window(F.col("ts"), gap).alias("sess"), F.col(key_col)
-    ).agg(F.count("*").alias("n_turns"))
+    ).dropDuplicates(["ip_hash", "key_hash"])

@@ -82,11 +82,10 @@ def test_interarrival_bins_microsecond_gaps(spark):
     assert got == {2: (1, 3), 3: (1, 4), 20: (1, 1_000_000)}
 
 
-def test_value_histogram_rejects_negatives_unless_opted_out(spark):
+def test_value_histogram_rejects_negatives(spark):
     """ADVICE r5: log2 bins are defined on magnitudes and
-    histogram_quantiles reports bin 0 as [0,0]; negatives must raise
-    under the default strict mode and fold into bin 0 only when the
-    caller opts out."""
+    histogram_quantiles reports bin 0 as [0,0]; a negative value must
+    raise instead of folding into bin 0."""
     import pytest as _pytest
     from pyspark.sql.utils import CapturedException
 
@@ -95,8 +94,3 @@ def test_value_histogram_rejects_negatives_unless_opted_out(spark):
     )
     with _pytest.raises(CapturedException, match="negative"):
         value_histogram(df).collect()
-    loose = {
-        r["bin"]: r["n"]
-        for r in value_histogram(df, strict=False).collect()
-    }
-    assert loose[0] == 1 and loose.get(None) == 1

@@ -140,8 +140,8 @@ def test_gopher_flags_pure_catalyst_one_scan(spark):
 def test_stream_slim_plan_is_one_arrow_map_no_udf_no_broadcast(spark, transcripts):
     """The streaming slim builder runs the batch slim path: exactly one
     Arrow map stage (the parse kernel) and no Python UDF stage or
-    broadcast. Built over a batch frame; ``withWatermark`` is a no-op
-    there and the rest of the plan is the micro-batch's."""
+    broadcast. Built over a batch frame, whose plan is the
+    micro-batch's."""
     import re
 
     from s3_log_parser_spark.streaming.stream import build_slim_stream
@@ -150,6 +150,24 @@ def test_stream_slim_plan_is_one_arrow_map_no_udf_no_broadcast(spark, transcript
     assert len(set(re.findall(r"MapInArrow\s+\((\d+)\)", plan))) == 1
     for node in ("ArrowEvalPython", "BatchEvalPython", "BroadcastExchange", "BroadcastHashJoin"):
         assert node not in plan
+
+
+def test_stream_unique_starts_plan_is_native_dedup(spark, tmp_path):
+    """Streaming first-occurrence dedup is Spark's own stateful
+    ``StreamingDeduplicate`` in the JVM: no pandas state function in a
+    Python worker and no event-time watermark (which would drop late
+    rows of files that are not ordered by ts)."""
+    from s3_log_parser_spark.schemas import TRANSCRIPT_SCHEMA
+    from s3_log_parser_spark.streaming.stream import (
+        build_slim_stream,
+        unique_starts_stream_exact,
+    )
+
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(str(tmp_path))
+    plan = _plan(unique_starts_stream_exact(build_slim_stream(stream)))
+    assert "StreamingDeduplicate" in plan
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert "EventTimeWatermark" not in plan
 
 
 def test_build_slim_and_route_write_plans_match_golden(spark, transcripts, tmp_path):

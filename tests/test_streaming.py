@@ -64,9 +64,9 @@ def test_stream_resume_no_duplicates(spark, stream_dirs):
 
 def test_stream_batch_rowset_equivalence(spark, transcripts, stream_dirs):
     """VERDICT r2 #9: full row-set equality between the streaming
-    sinks' union and the batch pipeline — modulo the documented
-    UNIQUE_IP divergence (watermark-scoped vs unbounded dedup), masked
-    on both sides."""
+    sinks' union and the batch pipeline — modulo the UNIQUE_IP bit,
+    which the stream's slim rows never set (streaming first-occurrence
+    dedup is unique_starts_stream_exact), masked on both sides."""
     from s3_log_parser_spark.operators.router import align_schema
     from s3_log_parser_spark.plans.pipeline import build_slim
 
@@ -153,9 +153,9 @@ def test_stream_router_all_rejected_then_empty_batch(spark, tmp_path):
 
 def test_stream_exact_dedup_unbounded_state(spark, transcripts, tmp_path_factory):
     """unique_starts_stream_exact: exactly ONE emitted row per distinct
-    (ip_hash, key_hash) start key across MULTIPLE micro-batches (the
-    regime where watermark-scoped dedup re-emits expired keys), and the
-    emitted key set equals the batch ST1 key set."""
+    (ip_hash, key_hash) start key across MULTIPLE micro-batches whose
+    files are not ordered by ts, and the emitted key set equals the
+    batch ST1 key set."""
     from s3_log_parser_spark.plans.pipeline import build_slim
     from s3_log_parser_spark.streaming.stream import unique_starts_stream_exact
 
@@ -195,71 +195,6 @@ def test_stream_exact_dedup_unbounded_state(spark, transcripts, tmp_path_factory
         .collect()
     }
     assert key_set == batch_keys
-
-
-def test_stream_session_window_matches_batch_sessionize(spark, tmp_path_factory):
-    """the engine-native streaming session_window must produce the same
-    (key, session-size) multiset as the batch sessionize operator on
-    off-boundary data (boundary semantics documented in
-    session_counts_stream)."""
-    from datetime import datetime, timedelta
-
-    from s3_log_parser_spark.operators.sessions import sessionize
-    from s3_log_parser_spark.streaming.stream import session_counts_stream
-
-    base = datetime(2024, 3, 1, 12, 0, 0)
-    rows = []
-    eid = 0
-    for conv, gaps_min in {
-        "conv-a": [0, 5, 10, 90, 95],       # 2 sessions: 3 + 2 events
-        "conv-b": [0, 40, 45, 46, 200],     # 3 sessions: 1 + 3 + 1
-    }.items():
-        for g in gaps_min:
-            rows.append((conv, eid, base + timedelta(minutes=g)))
-            eid += 1
-    # a far-future sentinel advances the (global) watermark past every
-    # real session's end so append mode emits them all — the eternal
-    # gotcha of bounded session-window tests
-    rows.append(("__flush__", eid, base + timedelta(days=2)))
-    df = spark.createDataFrame(rows, "conv_id string, event_id long, ts timestamp")
-
-    src = str(tmp_path_factory.mktemp("sess_src"))
-    out = str(tmp_path_factory.mktemp("sess_out"))
-    ckpt = str(tmp_path_factory.mktemp("sess_ckpt"))
-    df.write.mode("overwrite").parquet(src)
-    stream = spark.readStream.schema(df.schema).parquet(src)
-    q = (
-        session_counts_stream(
-            stream.withWatermark("ts", "10 minutes"), key_col="conv_id"
-        )
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = sorted(
-        (r["conv_id"], r["n_turns"])
-        for r in spark.read.parquet(out).collect()
-        if r["conv_id"] != "__flush__"
-    )
-
-    batch = sessionize(
-        df.filter("conv_id != '__flush__'"),
-        key_col="conv_id", order_cols=("ts", "event_id"), gap_seconds=1800,
-    )
-    want = sorted(
-        (r["conv_id"], r["n"])
-        for r in batch.groupBy("conv_id", "session_idx")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    assert got == want == [
-        ("conv-a", 2), ("conv-a", 3),
-        ("conv-b", 1), ("conv-b", 1), ("conv-b", 3),
-    ]
 
 
 def test_stream_exact_dedup_resumes_from_checkpoint(spark, tmp_path_factory):
@@ -372,9 +307,7 @@ def test_streaming_ingest_incremental_dedup(spark, tmp_path):
         .parquet(f"{src}/*")
     )
     out = str(tmp_path / "out")
-    q = start_ingest(
-        stream, idx_dir, out, str(tmp_path / "ckpt"), trigger_once=True
-    )
+    q = start_ingest(stream, idx_dir, out, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     got = spark.read.parquet(f"{out}/accepted")

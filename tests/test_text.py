@@ -278,14 +278,6 @@ def test_normalize_text_cleanup_rules(spark):
     assert got[2] == "xyz"
     assert got[3] == ""
     assert got[4] == "tab vert form"
-    # knobs off = passthrough of that step
-    keep_case = {
-        r["i"]: r["n"]
-        for r in df.select(
-            "i", normalize_text("s", lower=False).alias("n")
-        ).collect()
-    }
-    assert keep_case[0] == "Hello WORLD"
 
 
 def test_nfc_text_matches_unicodedata_and_duckdb(spark):
@@ -479,34 +471,3 @@ def test_repetition_short_docs_pass_ngram_gates(spark):
             assert got[i][f"dup_{n}gram_ok"] is True
         assert got[i]["dup_line_ok"] is True
 
-
-def test_repetition_flags_sql_form_equals_column_form(spark):
-    """the r7 SQL-text construction path must be expression-identical
-    to the Column-by-Column form (same folds, same escapes — the
-    regex/newline literals cross TWO escape layers, python and the SQL
-    parser, so pin values not just shapes)."""
-    from pyspark.sql import functions as F
-
-    from s3_log_parser_spark.functions.text import (
-        _gopher_repetition_flags_cols,
-        gopher_repetition_flags,
-    )
-
-    rows = [
-        (0, "aa bb aa bb cc\nline one\nline one\n\npar\n\npar"),
-        (1, "x " * 60),
-        (2, None),
-        (3, ""),
-        (4, "one two three four five six seven eight nine ten " * 3),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sql_fl = gopher_repetition_flags("text")
-    col_fl = _gopher_repetition_flags_cols(F.col("text"))
-    assert list(sql_fl) == list(col_fl)
-    a = df.select(
-        "doc_id", *[c.cast("int").alias(k) for k, c in sql_fl.items()]
-    ).collect()
-    b = df.select(
-        "doc_id", *[c.cast("int").alias(k) for k, c in col_fl.items()]
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))

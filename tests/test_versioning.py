@@ -76,8 +76,6 @@ def test_diff_duplicate_id_raises(spark):
     new = _docs(spark, [(1, "a")])
     with pytest.raises(Exception, match="duplicate id"):
         corpus_diff(old, new).collect()
-    # and the guard is optional for pre-verified snapshots
-    assert corpus_diff(old, new, check_unique=False).count() == 1
 
 
 def test_snapshot_digest_is_md5_of_canonical_text(spark):
@@ -98,7 +96,7 @@ def test_diff_plan_has_no_join_one_exchange(spark):
     new = _docs(spark, [(1, "a")])
     buf = io.StringIO()
     with redirect_stdout(buf):
-        corpus_diff(old, new, check_unique=False).explain("formatted")
+        corpus_diff(old, new).explain("formatted")
     plan = buf.getvalue()
     assert "Join" not in plan
     assert "Aggregate" in plan
