@@ -4394,8 +4394,12 @@ def _imp_scores(spark, sf):
     ), s AS (
       SELECT conv_id,
              CAST(COUNT(*) AS BIGINT) AS n_turns,
-             string_agg(role || ':' || coalesce(tool, ''), '|'
-                        ORDER BY turn_idx) AS sig
+             string_agg(
+               CAST(length(coalesce(role, '')) AS VARCHAR) || ':'
+                 || coalesce(role, '')
+                 || CAST(length(coalesce(tool, '')) AS VARCHAR) || ':'
+                 || coalesce(tool, ''),
+               '|' ORDER BY turn_idx) AS sig
       FROM u GROUP BY conv_id
     )
     SELECT conv_id, n_turns, sig,
@@ -4407,7 +4411,7 @@ def _imp_scores(spark, sf):
 )
 def _conv_dedup_rows(spark, sf):
     # structural conversation dedup: same-signature convs (identical
-    # role:tool turn sequences — templated/replayed conversations)
+    # length-prefixed role, tool turn sequences — templated/replayed conversations)
     # collapse to one canonical winner. The natural corpus has no
     # structural twins at sf0.01, so the oracled view PLANTS them
     # deterministically (every 5th conv re-keyed '~dup' — both engines

@@ -86,8 +86,6 @@ def quality_model_score(col: Column | str, mode: str = "djb2") -> Column:
     return linear_score(col, WEIGHTS_X1000, BIAS_X1000, mode)
 
 
-def quality_model_label(
-    col: Column | str, threshold: int = 0, mode: str = "djb2"
-) -> Column:
+def quality_model_label(col: Column | str, threshold: int = 0) -> Column:
     """boolean: does the distilled model call this text high-quality?"""
-    return quality_model_score(col, mode) >= F.lit(threshold)
+    return quality_model_score(col) >= F.lit(threshold)

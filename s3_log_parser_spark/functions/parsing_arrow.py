@@ -34,33 +34,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from .parsing import PARSED_FIELDS, S3_LINE_PATTERN
-
-# fields that must capture for the slim record; everything else becomes
-# non-capturing to halve RE2's per-row work
-_SLIM_NEEDED = {
-    "owner",
-    "ts_str",
-    "remote_ip",
-    "key",
-    "http_code",
-    "bytes_sent",
-    "object_size",
-    "total_time_ms",
-    "user_agent",
-    "range_header",
-}
-
-
-def _reduced_pattern() -> str:
-    pat = S3_LINE_PATTERN
-    for name, _ in PARSED_FIELDS:
-        if name not in _SLIM_NEEDED:
-            pat = pat.replace(f"(?P<{name}>", "(?:")
-    return pat
-
-
-SLIM_ARROW_PATTERN = _reduced_pattern()
+from .parsing import S3_LINE_PATTERN
 
 # capture-free twin of the full line pattern: with zero capture groups
 # RE2 stays in its DFA (a single linear scan); with 10 captures it falls
@@ -201,8 +175,8 @@ def parse_text_arrow(
             )
             okf = pc.and_(okdfa, shape_ok)
 
-            def masked(arr, default=None):
-                return pc.if_else(okf, arr, pa.scalar(default, arr.type))
+            def masked(arr):
+                return pc.if_else(okf, arr, pa.scalar(None, arr.type))
 
             ua = masked(le_s(qs, 5))
             ip = masked(le_s(tail6, 1))

@@ -29,14 +29,14 @@ Semantics reproduced exactly:
 
 Every shingle consumer (dedup, importance buckets, decontamination)
 runs this kernel. ``operators.dedup.shingle_hashes`` is the Catalyst
-form it is pinned against (and ``minhash_signature``'s input).
+form it is pinned against.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -102,9 +102,9 @@ def _xxh64_long_py(l: int, seed: int) -> int:
     return acc
 
 
-def _xxh64_bytes(data: bytes, seed: int = _XXH_SEED) -> int:
-    """full XXH64 over a byte string (python ints — run per DISTINCT
-    token only)."""
+def _xxh64_bytes(data: bytes) -> int:
+    """full XXH64 (seed ``_XXH_SEED``) over a byte string (python ints —
+    run per DISTINCT token only)."""
     import struct
 
     def rl(x, r):
@@ -113,10 +113,10 @@ def _xxh64_bytes(data: bytes, seed: int = _XXH_SEED) -> int:
     n = len(data)
     i = 0
     if n >= 32:
-        v1 = (seed + _XP1 + _XP2) & _M64
-        v2 = (seed + _XP2) & _M64
-        v3 = seed & _M64
-        v4 = (seed - _XP1) & _M64
+        v1 = (_XXH_SEED + _XP1 + _XP2) & _M64
+        v2 = (_XXH_SEED + _XP2) & _M64
+        v3 = _XXH_SEED & _M64
+        v4 = (_XXH_SEED - _XP1) & _M64
         while i + 32 <= n:
             k1, k2, k3, k4 = struct.unpack_from("<QQQQ", data, i)
             v1 = (rl((v1 + k1 * _XP2) & _M64, 31) * _XP1) & _M64
@@ -129,7 +129,7 @@ def _xxh64_bytes(data: bytes, seed: int = _XXH_SEED) -> int:
             acc ^= (rl((v * _XP2) & _M64, 31) * _XP1) & _M64
             acc = (acc * _XP1 + _XP4) & _M64
     else:
-        acc = (seed + _XP5) & _M64
+        acc = (_XXH_SEED + _XP5) & _M64
     acc = (acc + n) & _M64
     while i + 8 <= n:
         (k,) = struct.unpack_from("<Q", data, i)
@@ -322,7 +322,6 @@ def with_simhash(
     text_col: str,
     bits: int = 16,
     keep: tuple[str, ...] = (),
-    out_col: str = "simhash",
 ) -> DataFrame:
     """``df`` → ``(keep..., simhash long)`` via one row-local
     mapInArrow stage (no shuffle; values identical to the ``simhash``
@@ -332,7 +331,7 @@ def with_simhash(
     src = df.select(*keep, text_col)
     out_schema = T.StructType(
         [*[src.schema[k] for k in keep],
-         T.StructField(out_col, T.LongType(), False)]
+         T.StructField("simhash", T.LongType(), False)]
     )
 
     def fn(batches):
@@ -347,7 +346,7 @@ def with_simhash(
                 cols,
                 schema=pa.schema(
                     [batch.schema.field(i) for i in range(len(keep))]
-                    + [pa.field(out_col, pa.int64(), False)]
+                    + [pa.field("simhash", pa.int64(), False)]
                 ),
             )
 
@@ -359,10 +358,9 @@ def with_shingles(
     text_col: str,
     n: int = 3,
     keep: tuple[str, ...] = (),
-    out_col: str = "sh",
     mode: str = "djb2",
 ) -> DataFrame:
-    """``df`` → ``(keep..., out_col array<long>)`` via one mapInArrow
+    """``df`` → ``(keep..., sh array<long>)`` via one mapInArrow
     stage (the vectorized shingle kernel; ``mode`` selects the djb2
     parity family or the xxhash64 production family — both bit-exact
     vs the Catalyst chain, test-pinned). ``keep`` must name existing
@@ -376,7 +374,7 @@ def with_shingles(
         [
             *fields,
             T.StructField(
-                out_col, T.ArrayType(T.LongType(), False), False
+                "sh", T.ArrayType(T.LongType(), False), False
             ),
         ]
     )
@@ -393,7 +391,7 @@ def with_shingles(
             yield pa.RecordBatch.from_arrays(
                 cols, schema=pa.schema(
                     [batch.schema.field(i) for i in range(len(keep))]
-                    + [pa.field(out_col, pa.list_(pa.int64()), False)]
+                    + [pa.field("sh", pa.list_(pa.int64()), False)]
                 )
             )
 

@@ -116,18 +116,18 @@ def fingerprint(col: Column | str) -> Column:
     return djb2_expr(canon)
 
 
-def repetition_x1000(col: Column | str, n: int = 3) -> Column:
-    """intra-document n-gram repetition ∈ [0, 1000]: the fraction of
-    word n-gram OCCURRENCES that are repeats of an earlier n-gram in
+def repetition_x1000(col: Column | str) -> Column:
+    """intra-document 3-gram repetition ∈ [0, 1000]: the fraction of
+    word 3-gram OCCURRENCES that are repeats of an earlier 3-gram in
     the same doc (templated/looping text scores high — the standard
     "repetitious document" quality signal). Integer-scaled and floored,
-    pure Catalyst; rows with < n tokens score 0."""
+    pure Catalyst; rows with < 3 tokens score 0."""
     from ..operators.dedup import shingle_hashes
 
     c = F.col(col) if isinstance(col, str) else col
-    total = F.greatest(F.size(tokens(c)) - (n - 1), F.lit(1))
-    distinct = F.size(shingle_hashes(c, n))
-    return F.when(F.size(tokens(c)) < n, F.lit(0)).otherwise(
+    total = F.greatest(F.size(tokens(c)) - 2, F.lit(1))
+    distinct = F.size(shingle_hashes(c, 3))
+    return F.when(F.size(tokens(c)) < 3, F.lit(0)).otherwise(
         F.floor((total - distinct) * 1000 / total)
     ).cast("long")
 
@@ -171,13 +171,7 @@ _BULLET_CHARS = ("-", "*", "•")
 _ELLIPSIS_RE = r"\.\.\.|…"
 
 
-def gopher_flags(
-    col: Column | str,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_len: int = 3,
-    max_mean_len: int = 10,
-) -> dict[str, Column]:
+def gopher_flags(col: Column | str) -> dict[str, Column]:
     """the Gopher quality-rule suite as per-document boolean flags
     (True = the document PASSES that rule), plus ``n_words`` and the
     conjunction ``gopher_pass``.
@@ -186,7 +180,7 @@ def gopher_flags(
     multiplied, never divided) so the DuckDB oracle reproduces each
     flag bit-for-bit; the thresholds are the published defaults:
 
-    - ``word_count_ok``      min_words ≤ words ≤ max_words
+    - ``word_count_ok``      50 ≤ words ≤ 100,000
     - ``mean_word_len_ok``   3 ≤ mean word length ≤ 10
                              (3·n ≤ total_chars ≤ 10·n)
     - ``symbol_ratio_ok``    '#' count and '…'/'...' count each ≤ 0.1·words
@@ -236,9 +230,9 @@ def gopher_flags(
     ).cast("long")
     flags = {
         "n_words": n,
-        "word_count_ok": (n >= min_words) & (n <= max_words),
-        "mean_word_len_ok": (total_len >= min_mean_len * n)
-        & (total_len <= max_mean_len * n)
+        "word_count_ok": (n >= 50) & (n <= 100_000),
+        "mean_word_len_ok": (total_len >= 3 * n)
+        & (total_len <= 10 * n)
         & (n > 0),
         "symbol_ratio_ok": (n_hash * 10 <= n) & (n_ell * 10 <= n),
         "bullet_ok": n_bullet * 10 <= n_lines * 9,
@@ -255,9 +249,9 @@ def gopher_flags(
     return flags
 
 
-def gopher_pass(col: Column | str, **kw) -> Column:
+def gopher_pass(col: Column | str) -> Column:
     """True iff every Gopher rule passes — the filter-predicate form."""
-    return gopher_flags(col, **kw)["gopher_pass"]
+    return gopher_flags(col)["gopher_pass"]
 
 
 # Gopher repetition thresholds (Rae et al. 2021 appendix A1.2): a doc

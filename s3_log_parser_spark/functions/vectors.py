@@ -143,9 +143,9 @@ def hyperplane_bits(vec: Column, n_planes: int, dim: int) -> Column:
     return bucket.cast("int")
 
 
-def quantize_vec(col: Column | str, bits: int = 8) -> tuple[Column, Column]:
-    """symmetric per-vector scalar quantization → (q, scale):
-    ``q_i = floor(v_i/scale + 0.5)`` with ``scale = max|v|/(2^(bits-1)-1)``.
+def quantize_vec(col: Column | str) -> tuple[Column, Column]:
+    """symmetric per-vector int8 scalar quantization → (q, scale):
+    ``q_i = floor(v_i/scale + 0.5)`` with ``scale = max|v|/127``.
 
     Cross-engine exact: max/divide/floor are IEEE-deterministic and the
     explicit floor-half-up avoids engine-specific ROUND modes. The
@@ -159,10 +159,9 @@ def quantize_vec(col: Column | str, bits: int = 8) -> tuple[Column, Column]:
 
     Zero vectors quantize to all-zero with scale 0.
     """
-    qmax = (1 << (bits - 1)) - 1
     v = as_double(col)
     mx = F.aggregate(v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x)))
-    scale = mx / F.lit(float(qmax))
+    scale = mx / F.lit(127.0)
     q = F.when(
         mx == 0.0, F.transform(v, lambda x: F.lit(0).cast("long"))
     ).otherwise(

@@ -72,14 +72,9 @@ def fake_meta_formulas(byte_len: int) -> tuple[int, int, int, int]:
     )
 
 
-def extract_media_metadata(
-    df: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-    type_col: str = "media_type",
-    decoder=None,
-) -> DataFrame:
-    """mapInPandas media feature-extraction: one Arrow batch in, one
+def extract_media_metadata(df: DataFrame, decoder=None) -> DataFrame:
+    """mapInPandas media feature-extraction over
+    ``(media_id, payload, media_type)`` rows: one Arrow batch in, one
     metadata frame out. Blob stays executor-local.
 
     ``decoder``: an injectable codec callable satisfying the
@@ -93,13 +88,13 @@ def extract_media_metadata(
         from s3_log_parser_spark.functions.hashes import djb2_py
 
         for pdf in batches:
-            lens = pdf[payload_col].map(lambda b: 0 if b is None else len(b))
+            lens = pdf["payload"].map(lambda b: 0 if b is None else len(b))
             if decoder is not None:
                 # real-codec path: one decoder call per non-NULL payload,
                 # missing contract keys → NULL columns
                 decoded = [
                     decoder(b, t) if b is not None else {}
-                    for b, t in zip(pdf[payload_col], pdf[type_col])
+                    for b, t in zip(pdf["payload"], pdf["media_type"])
                 ]
 
                 def col(k):
@@ -116,14 +111,14 @@ def extract_media_metadata(
                 sample_rate = ((lens % 4 + 1) * 8000).astype("int32")
             out = pd.DataFrame(
                 {
-                    "media_id": pdf[id_col].astype("int64"),
-                    "media_type": pdf[type_col],
+                    "media_id": pdf["media_id"].astype("int64"),
+                    "media_type": pdf["media_type"],
                     "byte_len": lens.astype("int64"),
                     "width": width,
                     "height": height,
                     "n_frames": n_frames,
                     "sample_rate": sample_rate,
-                    "content_hash": pdf[payload_col]
+                    "content_hash": pdf["payload"]
                     .map(lambda b: djb2_py(b))
                     .astype("int64"),
                 }
@@ -133,15 +128,12 @@ def extract_media_metadata(
     return df.mapInPandas(run, MEDIA_META_SCHEMA)
 
 
-def frame_sample_plan(
-    df: DataFrame, every_nth: int = 5, id_col: str = "media_id"
-) -> DataFrame:
+def frame_sample_plan(df: DataFrame, every_nth: int = 5) -> DataFrame:
     """video frame-sampling plumbing: one output row per sampled frame
     index (decode stubbed; the explode/partitioning shape is the real
     part — downstream per-frame UDFs consume this layout)."""
-    meta = df
-    return meta.select(
-        id_col,
+    return df.select(
+        "media_id",
         F.explode(
             F.sequence(
                 F.lit(0),

@@ -180,15 +180,14 @@ def grouped_export_json(
     return json.dumps(doc, default=str, sort_keys=True)
 
 
-def percentiles_disc(
-    df: DataFrame,
-    key: str,
-    value: str,
-    ps_x1000: tuple[int, ...] = (500, 950, 990),
-) -> DataFrame:
-    """A5 (beyond the reference): per-key discrete percentiles of an
-    integer metric — the latency-summary aggregate every log pipeline
-    grows next after counts.
+# the per-mille ranks percentiles_disc reports: p500, p950, p990
+PCTS_X1000 = (500, 950, 990)
+
+
+def percentiles_disc(df: DataFrame, key: str, value: str) -> DataFrame:
+    """A5 (beyond the reference): per-key discrete percentiles
+    (``PCTS_X1000``) of an integer metric — the latency-summary
+    aggregate every log pipeline grows next after counts.
 
     Classic ``percentile_disc`` semantics — the value at ascending rank
     ``ceil(p·n)`` — implemented explicitly with ONE window (rank + group
@@ -212,7 +211,7 @@ def percentiles_disc(
         .withColumn("_n", F.count("*").over(wc))
     )
     aggs = [F.max("_n").cast("long").alias("n")]
-    for p in ps_x1000:
+    for p in PCTS_X1000:
         aggs.append(
             F.max(
                 F.when(
@@ -258,18 +257,19 @@ def profile_key_skew(df: DataFrame, key: str | Column) -> DataFrame:
 
 
 _ROLLUP_UNITS = ("minute", "hour", "day", "week", "month")
+# the group keys of a time rollup table, besides resolution and bucket
+ROLLUP_KEYS = ("event_type",)
 
 
 def time_rollup(
     df: DataFrame,
-    ts_col: str = "ts",
-    keys: tuple[str, ...] = ("event_type",),
     value_col: str | None = "value",
     resolutions: tuple[str, ...] = ("minute", "hour", "day"),
 ) -> DataFrame:
     """Multi-resolution time rollup (hypertable continuous-aggregate
-    shape): per-key event counts + integer-scaled value sums at every
-    requested resolution, coarse tiers DERIVED from the finest one.
+    shape): per-``ROLLUP_KEYS`` event counts + integer-scaled value
+    sums of ``ts`` buckets at every requested resolution, coarse tiers
+    DERIVED from the finest one.
 
     Beyond the reference (its only time bucketing is the integer day
     key, ``/root/reference/src/s3extract.c:159``); this is the
@@ -309,7 +309,7 @@ def time_rollup(
             f"to coarsest (subsequence of {_ROLLUP_UNITS}), got "
             f"{resolutions}"
         )
-    kcols = [F.col(k) for k in keys]
+    kcols = [F.col(k) for k in ROLLUP_KEYS]
     aggs = [F.count("*").cast("long").alias("n_events")]
     if value_col is not None:
         aggs.append(
@@ -318,9 +318,9 @@ def time_rollup(
             .alias("sum_value_x100")
         )
     base = df.groupBy(
-        *kcols, F.date_trunc(resolutions[0], F.col(ts_col)).alias("_b")
+        *kcols, F.date_trunc(resolutions[0], F.col("ts")).alias("_b")
     ).agg(*aggs)
-    measure_cols = [c for c in base.columns if c not in (*keys, "_b")]
+    measure_cols = [c for c in base.columns if c not in (*ROLLUP_KEYS, "_b")]
     if len(resolutions) == 1:
         out = base.withColumn("resolution", F.lit(resolutions[0]))
     else:
@@ -353,7 +353,7 @@ def time_rollup(
     # (cross-engine timestamp hashing is representation-sensitive)
     return out.select(
         "resolution",
-        *keys,
+        *ROLLUP_KEYS,
         F.date_format("_b", "yyyy-MM-dd HH:mm:ss").alias("bucket_start"),
         *measure_cols,
     )
@@ -393,7 +393,6 @@ def cube_counts(
     dims: list[str],
     measure: Column | None = None,
     measure_name: str = "sum_measure",
-    persist_base: bool = True,
 ) -> DataFrame:
     """All 2^len(dims) grouping-set margins with the raw input scanned
     ONCE: per-cell row count + an optional integer measure sum, and a
@@ -406,17 +405,17 @@ def cube_counts(
     Counts and sums are additive, so instead the finest cell table is
     aggregated once (map-side combine, one shuffle of |cells| rows)
     and every margin re-aggregates THAT — a table ~|dims cardinality
-    product| rows, not raw. ``persist_base`` pins it so the margin
-    branches don't re-trigger the scan; at production scale it's a
-    written table (the OLAP-cube materialization)."""
+    product| rows, not raw. Nothing is cached: every margin branch
+    plans the same finest-cell exchange, and adaptive execution's
+    exchange reuse runs it once (one raw scan; the other 2^d − 1
+    branches read it as ``ReusedExchange``). At production scale the
+    finest table is a written table (the OLAP-cube materialization)."""
     if not dims:
         raise ValueError("cube_counts needs at least one dim")
     aggs = [F.count("*").cast("long").alias("n")]
     if measure is not None:
         aggs.append(F.sum(measure).cast("long").alias(measure_name))
     finest = df.groupBy(*dims).agg(*aggs)
-    if persist_base:
-        finest = finest.persist()
     mcols = ["n"] + ([measure_name] if measure is not None else [])
     resum = [F.sum(c).cast("long").alias(c) for c in mcols]
     d = len(dims)
@@ -453,16 +452,15 @@ def value_histogram(
     df: DataFrame,
     value_col: str = "value",
     keys: tuple[str, ...] = (),
-    scale: int = 1000,
 ) -> DataFrame:
-    """Log2-binned distribution of a fixed-point value per key — the
+    """Log2-binned distribution of a ×1000 fixed-point value per key — the
     mergeable distribution sketch (histograms add, and ~31 bins cover
     any BIGINT range, so per-day histograms roll up like the HLL/CMS
     sketches). Returns (keys..., bin, n, sum_v): enough for range
     counts, coarse quantiles, and per-bin means.
 
     Values must be NON-NEGATIVE: log2 bins are defined on magnitudes,
-    ``floor(v·scale + 0.5)`` is not symmetric rounding below zero, and
+    ``floor(v·1000 + 0.5)`` is not symmetric rounding below zero, and
     :func:`histogram_quantiles` reports bin 0's bounds as [0, 0] —
     folding negatives into bin 0 would silently break that guarantee
     (ADVICE r5). The precondition is enforced row-locally (raises at
@@ -476,7 +474,7 @@ def value_histogram(
         F.lit(f"value_histogram: negative {value_col}"),
     )
     raw = F.when(ok.isNull(), raw)
-    v = F.floor(raw * scale + F.lit(0.5)).cast("long")
+    v = F.floor(raw * 1000 + F.lit(0.5)).cast("long")
     return (
         df.select(*keys, v.alias("_v"))
         .groupBy(*keys, log2_bin(F.col("_v")).alias("bin"))
@@ -554,11 +552,7 @@ def histogram_quantiles(
     )
 
 
-def time_rollup_merge(
-    existing: DataFrame,
-    delta: DataFrame,
-    keys: tuple[str, ...] = ("event_type",),
-) -> DataFrame:
+def time_rollup_merge(existing: DataFrame, delta: DataFrame) -> DataFrame:
     """Late-data refresh of a persisted :func:`time_rollup` table:
     counts and integer value sums are ADDITIVE, so folding a late
     batch in is ``time_rollup(late)`` unioned with the existing table
@@ -572,9 +566,9 @@ def time_rollup_merge(
     buckets the delta touches (the Iceberg seam — a parquet overwrite
     rewrites the whole aggregate table, which is still tiny relative
     to raw but not bucket-local). Inputs must share the rollup schema
-    (resolution, keys..., bucket_start, measures).
+    (resolution, ROLLUP_KEYS..., bucket_start, measures).
     """
-    on = ["resolution", *keys, "bucket_start"]
+    on = ["resolution", *ROLLUP_KEYS, "bucket_start"]
     if set(existing.columns) != set(delta.columns):
         raise ValueError(
             f"time_rollup_merge: schema mismatch {existing.columns} vs "

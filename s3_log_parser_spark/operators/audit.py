@@ -76,15 +76,13 @@ def accepted_values(col: str, values: list) -> Check:
     )
 
 
-def matches(col: str, pattern: str,
-            max_failed_ratio_x1000: int | None = None) -> Check:
+def matches(col: str, pattern: str) -> Check:
     """RE2/Java-compatible subset recommended (the repo's grok-bank
     lesson: stick to char classes both engines agree on)."""
     c = F.col(col)
     return Check(
         name=f"matches({col})",
         fail_expr=c.isNotNull() & ~c.rlike(pattern),
-        max_failed_ratio_x1000=max_failed_ratio_x1000,
     )
 
 
@@ -104,9 +102,6 @@ def unique(*cols: str) -> Check:
         fail_expr=F.lit(False),
         agg_failed=(F.sum(keyed.cast("long")) - distinct).cast("long"),
     )
-
-
-REPORT_COLS = ("check", "failed", "total", "passed")
 
 
 def audit(df: DataFrame, checks: list[Check]) -> DataFrame:
@@ -156,15 +151,12 @@ def audit(df: DataFrame, checks: list[Check]) -> DataFrame:
     )
 
 
-def foreign_key(
-    fact: DataFrame, key: str, dim: DataFrame, dim_key: str,
-    max_failed: int = 0,
-) -> DataFrame:
+def foreign_key(fact: DataFrame, key: str, dim: DataFrame, dim_key: str) -> DataFrame:
     """Referential-integrity check: fact rows whose non-NULL ``key``
-    has no match in ``dim``. ONE pass over the fact table: a broadcast
-    LEFT join marks orphans (dim-side NULL) and the same aggregate
-    computes total + failed — the fact side is neither shuffled nor
-    scanned twice. Same report schema as :func:`audit`."""
+    has no match in ``dim`` (passes only with no orphan). ONE pass
+    over the fact table: a broadcast LEFT join marks orphans (dim-side
+    NULL) and the same aggregate computes total + failed — the fact
+    side is neither shuffled nor scanned twice. Same report schema as :func:`audit`."""
     probe = F.broadcast(dim.select(F.col(dim_key).alias("__fk")).distinct())
     marked = fact.join(probe, fact[key] == F.col("__fk"), "left")
     orphan = (F.col(key).isNotNull() & F.col("__fk").isNull()).cast("long")
@@ -175,7 +167,7 @@ def foreign_key(
         F.lit(f"foreign_key({key})").alias("check"),
         "failed",
         "total",
-        (F.col("failed") <= F.lit(max_failed)).alias("passed"),
+        (F.col("failed") == 0).alias("passed"),
     )
 
 

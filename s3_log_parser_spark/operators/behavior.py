@@ -30,14 +30,12 @@ SECONDS_PER_DAY = 86400
 def funnel_steps(
     df: DataFrame,
     steps: list[str],
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
     max_events_per_key: int = 100_000,
 ) -> DataFrame:
-    """Per key: ``furthest_step`` ∈ [0, len(steps)] — the longest
+    """Per ``user_id``: ``furthest_step`` ∈ [0, len(steps)] — the longest
     prefix of ``steps`` appearing as an ordered subsequence of that
-    key's event stream (the standard "signup → view → click → buy"
+    key's ``event_type`` stream in ``(ts, event_id)`` order (the
+    standard "signup → view → click → buy"
     conversion semantics; repeats allowed, gaps allowed).
 
     Exact O(events) via a left fold over the time-sorted step events:
@@ -47,11 +45,13 @@ def funnel_steps(
     silently OOMing executor."""
     if not steps or len(set(steps)) != len(steps):
         raise ValueError("steps must be non-empty and distinct")
-    order = [F.col(c) for c in order_cols]
     per_key = (
-        df.filter(F.col(type_col).isin(steps))
-        .select(key_col, F.struct(*order, F.col(type_col).alias("_s")).alias("_e"))
-        .groupBy(key_col)
+        df.filter(F.col("event_type").isin(steps))
+        .select(
+            "user_id",
+            F.struct("ts", "event_id", F.col("event_type").alias("_s")).alias("_e"),
+        )
+        .groupBy("user_id")
         .agg(
             F.sort_array(F.collect_list("_e")).alias("_evs"),
             F.count("*").alias("_n"),
@@ -64,7 +64,7 @@ def funnel_steps(
                 F.format_string(
                     "funnel key exceeds max_events_per_key=%d: %s",
                     F.lit(max_events_per_key),
-                    F.col(key_col).cast("string"),
+                    F.col("user_id").cast("string"),
                 )
             )
         ),
@@ -83,20 +83,13 @@ def funnel_steps(
     furthest = F.aggregate(
         F.col("_evs"), F.lit(0), _advance
     ).cast("int")
-    return per_key.select(
-        F.col(key_col), furthest.alias("furthest_step")
-    )
+    return per_key.select("user_id", furthest.alias("furthest_step"))
 
 
-def funnel_conversion(
-    df: DataFrame,
-    steps: list[str],
-    key_col: str = "user_id",
-    **kw,
-) -> DataFrame:
+def funnel_conversion(df: DataFrame, steps: list[str]) -> DataFrame:
     """Funnel summary: users whose furthest step is exactly k, plus the
     cumulative reached-step-k count the conversion chart plots."""
-    per_user = funnel_steps(df, steps, key_col=key_col, **kw)
+    per_user = funnel_steps(df, steps)
     exact = per_user.groupBy("furthest_step").agg(
         F.count("*").cast("long").alias("n_users")
     )
@@ -109,18 +102,12 @@ def funnel_conversion(
     )
 
 
-def retention_cohorts(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """(cohort_day, offset_days, n_users): users first active on
+def retention_cohorts(df: DataFrame) -> DataFrame:
+    """(cohort_day, offset_days, n_users): ``user_id``s first active on
     cohort_day who were also active cohort_day+offset. offset 0 row =
     cohort size. Day bucket is the A2 integer day (epoch div 86400)."""
-    day = (F.unix_timestamp(F.col(ts_col)) / SECONDS_PER_DAY).cast("long")
-    active = df.select(
-        F.col(key_col).alias("_k"), day.alias("_day")
-    ).distinct()
+    day = (F.unix_timestamp(F.col("ts")) / SECONDS_PER_DAY).cast("long")
+    active = df.select(F.col("user_id").alias("_k"), day.alias("_day")).distinct()
     w = Window.partitionBy("_k")
     # min over the window reuses the distinct's hash partitioning on _k
     cohort = active.withColumn("_cohort", F.min("_day").over(w))
@@ -133,31 +120,28 @@ def retention_cohorts(
     )
 
 
-def windowed_anomalies(
-    df: DataFrame,
-    value_col: str = "value",
-    key_col: str = "user_id",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-    lookback: int = 8,
-    min_history: int = 4,
-    k_sigma: int = 3,
-    scale: int = 1000,
-) -> DataFrame:
-    """Append ``is_anomaly``: value > k·σ from the mean of that key's
-    trailing ``lookback`` values (strictly prior rows — the live-score
-    frame). All integer algebra on ×``scale`` fixed-point values:
+# windowed_anomalies: trailing window length, and flag threshold in σ
+LOOKBACK = 8
+K_SIGMA = 3
+
+
+def windowed_anomalies(df: DataFrame, min_history: int = 4) -> DataFrame:
+    """Append ``is_anomaly``: ``value`` > ``K_SIGMA``·σ from the mean
+    of that ``user_id``'s trailing ``LOOKBACK`` values in
+    ``(ts, event_id)`` order (strictly prior rows — the live-score
+    frame). All integer algebra on ×1000 fixed-point values:
 
         z² > k²  ⇔  (n·x − S)² > k²·(n·Q − S²)
 
     with S, Q the window sum and sum-of-squares — exact in BIGINT, no
     float variance (population σ; zero-variance history → any deviation
     flags). Rows with < ``min_history`` prior values get NULL."""
-    v = F.floor(F.col(value_col) * scale + F.lit(0.5)).cast("long")
+    v = F.floor(F.col("value") * 1000 + F.lit(0.5)).cast("long")
     base = df.withColumn("_v", v)
     w = (
-        Window.partitionBy(key_col)
-        .orderBy(*[F.col(c) for c in order_cols])
-        .rowsBetween(-lookback, -1)
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-LOOKBACK, -1)
     )
     n = F.count("_v").over(w)
     s = F.sum("_v").over(w)
@@ -168,20 +152,16 @@ def windowed_anomalies(
         (n < min_history) | F.col("_v").isNull(), F.lit(None).cast("boolean")
     ).otherwise(
         F.when(var_n2 == 0, dev != 0).otherwise(
-            dev * dev > F.lit(k_sigma * k_sigma) * var_n2
+            dev * dev > F.lit(K_SIGMA * K_SIGMA) * var_n2
         )
     )
     return base.withColumn("is_anomaly", flag).drop("_v")
 
 
-def anomaly_daily_counts(
-    df: DataFrame,
-    ts_col: str = "ts",
-    **kw,
-) -> DataFrame:
+def anomaly_daily_counts(df: DataFrame) -> DataFrame:
     """(day_bucket, n_checked, n_anomalies) roll-up of the flag."""
-    flagged = windowed_anomalies(df, **kw)
-    day = (F.unix_timestamp(F.col(ts_col)) / SECONDS_PER_DAY).cast("long")
+    flagged = windowed_anomalies(df)
+    day = (F.unix_timestamp(F.col("ts")) / SECONDS_PER_DAY).cast("long")
     return (
         flagged.withColumn("_day", day)
         .groupBy(F.col("_day").alias("day_bucket"))
@@ -196,13 +176,9 @@ def anomaly_daily_counts(
     )
 
 
-def interarrival_bins(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-) -> DataFrame:
-    """Global distribution of per-key inter-event gaps, log2-binned in
+def interarrival_bins(df: DataFrame) -> DataFrame:
+    """Global distribution of per-``user_id`` inter-event gaps in
+    ``(ts, event_id)`` order, log2-binned in
     MICROSECONDS: (gap_bin, n, sum_gap_us). The poll-rate/think-time
     profile that sizes sessionization gaps and cache TTLs. One window
     shuffle (lag over the key), then a map-side-combined ≤ ~46-bin
@@ -211,8 +187,8 @@ def interarrival_bins(
     is excluded."""
     from .aggregate import log2_bin
 
-    w = Window.partitionBy(key_col).orderBy(*[F.col(c) for c in order_cols])
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     gap = us - F.lag(us).over(w)
     return (
         df.select(gap.alias("_gap"))

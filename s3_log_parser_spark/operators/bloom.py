@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from ..functions.hashes import djb2_expr
 
-WORD_BITS = 32
 DEFAULT_M_BITS = 1 << 23
 DEFAULT_K_HASHES = 5
 
@@ -106,9 +105,8 @@ def bloom_probe(
     m_bits: int = DEFAULT_M_BITS,
     k_hashes: int = DEFAULT_K_HASHES,
     mode: str = "xxhash64",
-    out_col: str = "bloom_maybe",
 ) -> DataFrame:
-    """add ``out_col`` (boolean): could ``key_col`` be in the filter?
+    """add ``bloom_maybe`` (boolean): could ``key_col`` be in the filter?
 
     k broadcast LEFT joins on word_idx (one reused broadcast exchange)
     + a row-local conjunction of bit tests — the probed frame is never
@@ -155,4 +153,4 @@ def bloom_probe(
         + [f"_bw_idx{i}" for i in range(k_hashes)]
         + [f"_bw{i}" for i in range(k_hashes)]
     )
-    return out.withColumn(out_col, maybe).drop(*drop)
+    return out.withColumn("bloom_maybe", maybe).drop(*drop)

@@ -24,39 +24,35 @@ of only test-asserted.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def conv_stats(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    turn_idx_col: str = "turn_idx",
-    role_col: str = "role",
-    tool_col: str = "tool",
-    ts_col: str = "ts",
-    roles: tuple[str, ...] = ("user", "assistant", "system"),
-) -> DataFrame:
+# the roles conv_stats counts, one ``n_<role>`` column each
+COUNTED_ROLES = ("user", "assistant", "system")
+
+
+def conv_stats(df: DataFrame) -> DataFrame:
     """Per-conversation feature row: turn counts (total and per role),
     tool-call counts, distinct tools, wall-clock span (whole seconds,
     integer ``div`` — never a float quotient), and the turn-index
     contiguity flag. One aggregate pass."""
-    idx = F.col(turn_idx_col)
+    idx = F.col("turn_idx")
     aggs = [
         F.count("*").cast("long").alias("n_turns"),
         *[
-            F.sum((F.col(role_col) == r).cast("long"))
+            F.sum((F.col("role") == r).cast("long"))
             .cast("long")
             .alias(f"n_{r}")
-            for r in roles
+            for r in COUNTED_ROLES
         ],
-        F.sum(F.col(tool_col).isNotNull().cast("long"))
+        F.sum(F.col("tool").isNotNull().cast("long"))
         .cast("long")
         .alias("n_tool_calls"),
-        F.count_distinct(F.col(tool_col)).cast("long").alias("n_tools"),
+        F.count_distinct(F.col("tool")).cast("long").alias("n_tools"),
         F.expr(
-            f"(max(unix_micros(cast({ts_col} as timestamp))) - "
-            f"min(unix_micros(cast({ts_col} as timestamp)))) div 1000000"
+            "(max(unix_micros(cast(ts as timestamp))) - "
+            "min(unix_micros(cast(ts as timestamp)))) div 1000000"
         )
         .cast("long")
         .alias("span_sec"),
@@ -71,14 +67,10 @@ def conv_stats(
         .cast("int")
         .alias("turn_idx_contiguous"),
     ]
-    return df.groupBy(conv_col).agg(*aggs)
+    return df.groupBy("conv_id").agg(*aggs)
 
 
-def tool_cooccurrence(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    tool_col: str = "tool",
-) -> DataFrame:
+def tool_cooccurrence(df: DataFrame) -> DataFrame:
     """Corpus-wide (tool_a, tool_b) co-occurrence counts: in how many
     conversations were both tools called? The "which tools travel
     together" profile that drives tool-routing and bundling decisions.
@@ -93,8 +85,8 @@ def tool_cooccurrence(
     drops self-pairs.
     """
     ct = (
-        df.filter(F.col(tool_col).isNotNull())
-        .select(F.col(conv_col).alias("_c"), F.col(tool_col).alias("_t"))
+        df.filter(F.col("tool").isNotNull())
+        .select(F.col("conv_id").alias("_c"), F.col("tool").alias("_t"))
         .distinct()
     )
     a = ct.select(F.col("_c"), F.col("_t").alias("tool_a"))
@@ -107,15 +99,20 @@ def tool_cooccurrence(
     )
 
 
-def conv_signature(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    turn_idx_col: str = "turn_idx",
-    part_cols: tuple[str, ...] = ("role", "tool"),
-) -> DataFrame:
+def _len_prefixed(c: str) -> Column:
+    """``<chars>:<value>`` with NULL as '' — a field no separator in
+    the value can run into its neighbour."""
+    v = F.coalesce(F.col(c), F.lit(""))
+    return F.concat(F.length(v).cast("string"), F.lit(":"), v)
+
+
+def conv_signature(df: DataFrame) -> DataFrame:
     """``(conv_id, n_turns, sig)`` — one row per conversation with its
-    structural signature: the turn-ordered ``part_cols`` values joined
-    as ``role:tool|role:tool|…`` (NULL parts render as ''). Two
+    structural signature: the turn-ordered role and tool of each turn,
+    each field length-prefixed (``4:user6:search``, NULL renders as
+    ``0:``) and the turns joined with ``|``. The prefix makes the
+    string decode one way, so a tool name holding ``:`` or ``|`` cannot
+    pass for a turn boundary. Two
     conversations with the same signature have byte-identical structure
     (same roles, same tools, same order) — the conversation-grain
     analog of a document's exact-dedup digest, catching templated /
@@ -126,24 +123,17 @@ def conv_signature(
     restored per GROUP, so no window and no global sort. Per-conv state
     is the conversation's own turns (conversations are bounded — the
     same assumption every turn-ordering op here makes)."""
-    part = F.concat_ws(
-        ":", *[F.coalesce(F.col(c), F.lit("")) for c in part_cols]
-    )
-    rows = F.collect_list(F.struct(F.col(turn_idx_col).alias("i"), part.alias("p")))
+    part = F.concat(_len_prefixed("role"), _len_prefixed("tool"))
+    rows = F.collect_list(F.struct(F.col("turn_idx").alias("i"), part.alias("p")))
     sig = F.array_join(
         F.transform(F.array_sort(rows), lambda r: r["p"]), "|"
     )
-    return df.groupBy(F.col(conv_col).alias("conv_id")).agg(
+    return df.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"), sig.alias("sig")
     )
 
 
-def conv_dedup(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    turn_idx_col: str = "turn_idx",
-    part_cols: tuple[str, ...] = ("role", "tool"),
-) -> DataFrame:
+def conv_dedup(df: DataFrame) -> DataFrame:
     """structural conversation dedup: the signature frame plus
     ``group_size`` and ``keep`` (True on each signature's canonical
     winner — MIN conv_id, deterministic re-run to re-run). Downstream:
@@ -157,7 +147,7 @@ def conv_dedup(
     already accepts. One aggregate + one window on the digest."""
     from pyspark.sql import Window
 
-    sigs = conv_signature(df, conv_col, turn_idx_col, part_cols)
+    sigs = conv_signature(df)
     keyed = sigs.withColumn("_k", F.xxhash64("sig"))
     w = Window.partitionBy("_k")
     return (
@@ -171,11 +161,6 @@ def conv_dedup(
 
 def conv_examples(
     df: DataFrame,
-    conv_col: str = "conv_id",
-    turn_idx_col: str = "turn_idx",
-    role_col: str = "role",
-    text_col: str = "text",
-    tool_col: str = "tool",
     max_turns: int | None = None,
     max_chars: int | None = None,
 ) -> DataFrame:
@@ -196,17 +181,14 @@ def conv_examples(
     one; chunking belongs upstream at the document grain)."""
     rows = F.collect_list(
         F.struct(
-            F.col(turn_idx_col).alias("i"),
-            F.col(role_col).alias("role"),
-            F.col(text_col).alias("text"),
-            F.col(tool_col).alias("tool"),
+            F.col("turn_idx").alias("i"), "role", "text", "tool"
         )
     )
     msgs = F.transform(
         F.array_sort(rows),
         lambda r: F.struct(r["role"], r["text"], r["tool"]),
     )
-    out = df.groupBy(F.col(conv_col).alias("conv_id")).agg(
+    out = df.groupBy("conv_id").agg(
         F.count("*").cast("long").alias("n_turns"), msgs.alias("messages")
     )
     total = F.aggregate(
@@ -223,12 +205,7 @@ def conv_examples(
     return out
 
 
-def role_transitions(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    role_col: str = "role",
-    order_cols: tuple[str, ...] = ("turn_idx",),
-) -> DataFrame:
+def role_transitions(df: DataFrame) -> DataFrame:
     """Corpus-wide (from_role, to_role) bigram counts in turn order —
     the conversation-flow profile ("how often does the assistant speak
     twice in a row?"). One lag window on the conversation key, then a
@@ -237,12 +214,10 @@ def role_transitions(
     :func:`conv_stats` if needed)."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy(conv_col).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    prev = F.lag(F.col(role_col)).over(w)
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    prev = F.lag(F.col("role")).over(w)
     return (
-        df.select(prev.alias("from_role"), F.col(role_col).alias("to_role"))
+        df.select(prev.alias("from_role"), F.col("role").alias("to_role"))
         .filter(F.col("from_role").isNotNull())
         .groupBy("from_role", "to_role")
         .agg(F.count("*").cast("long").alias("n"))

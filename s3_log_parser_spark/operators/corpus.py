@@ -45,21 +45,17 @@ class CorpusPrepResult:
 
 def corpus_prep(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
     near_threshold_x1000: int = 500,
     min_tokens: int = 20,
     min_distinct_ratio_x1000: int = 330,
-    n: int = 3,
     policy: str = "pairs",
     mode: str = "djb2",
     model_filter: bool = False,
-    model_threshold: int = 0,
     gopher_filter: bool = False,
 ) -> CorpusPrepResult:
-    """Run the full corpus-prep DAG; returns the cleaned corpus and the
-    per-source token-budget statistics.
+    """Run the full corpus-prep DAG over a ``(doc_id, text, source, …)``
+    corpus (3-token shingles for the near-dup stage); returns the
+    cleaned corpus and the per-source token-budget statistics.
 
     ``policy`` selects the near-dup drop rule:
 
@@ -79,9 +75,9 @@ def corpus_prep(
     space starts colliding on trillion-shingle corpora).
 
     ``model_filter=True`` additionally keeps only docs the distilled
-    hashed-linear quality model (functions/classify.py) scores ≥
-    ``model_threshold`` — the model-based filter stage of a real
-    pretraining recipe, at zero extra shuffles.
+    hashed-linear quality model (functions/classify.py) scores ≥ 0 —
+    the model-based filter stage of a real pretraining recipe, at zero
+    extra shuffles.
 
     ``gopher_filter=True`` additionally applies the full published
     Gopher heuristic suite (functions/text.py: rule flags A1.1 +
@@ -96,16 +92,13 @@ def corpus_prep(
     # and without the checkpoint Catalyst re-runs the md5-window winner
     # per branch. At 100 TB this is the staged-intermediate the module
     # docstring already prescribes for the shingle frame.
-    exact = exact_dedup(df, key_cols=(text_col,), order=(id_col,)).localCheckpoint(
+    exact = exact_dedup(df, key_cols=("text",), order=("doc_id",)).localCheckpoint(
         eager=True
     )
 
     # 2) near-dup removal — LSH-banded candidates, exact Jaccard verify
     pairs = ngram_jaccard_pairs(
         exact,
-        id_col=id_col,
-        text_col=text_col,
-        n=n,
         threshold_x1000=near_threshold_x1000,
         auto_block=True,
         mode=mode,
@@ -117,15 +110,15 @@ def corpus_prep(
         drop = (
             dup_clusters(pairs)
             .filter(F.col("id") != F.col("cluster_id"))
-            .select(F.col("id").alias(id_col))
+            .select(F.col("id").alias("doc_id"))
         )
     else:
         # drop the higher id of each qualifying pair
-        drop = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    kept = exact.join(drop, id_col, "left_anti")
+        drop = pairs.select(F.col("id_b").alias("doc_id")).distinct()
+    kept = exact.join(drop, "doc_id", "left_anti")
 
     # 3) quality filter — integer-scaled Catalyst features, no Python
-    feats = quality_features(text_col)
+    feats = quality_features("text")
     clean = kept.filter(
         (feats["n_tokens"] >= min_tokens)
         & (feats["distinct_ratio_x1000"] >= min_distinct_ratio_x1000)
@@ -140,26 +133,23 @@ def corpus_prep(
         # always the model's TRAINING-time bucket hash (djb2) — a
         # weight table is meaningless under any other feature hash, so
         # this deliberately does not follow the corpus `mode`
-        clean = clean.filter(
-            quality_model_label(text_col, model_threshold)
-        )
+        clean = clean.filter(quality_model_label("text"))
     if gopher_filter:
         # 3c) the published Gopher suite: rule flags (A1.1) +
         # repetition flags (A1.2), both row-local Catalyst predicates
         from ..functions.text import gopher_pass, gopher_repetition_flags
 
         clean = clean.filter(
-            gopher_pass(text_col)
-            & gopher_repetition_flags(text_col)["repetition_pass"]
+            gopher_pass("text") & gopher_repetition_flags("text")["repetition_pass"]
         )
 
     # 4) per-source token budget
     stats = (
-        clean.groupBy(source_col)
+        clean.groupBy("source")
         .agg(
             F.count("*").alias("n_docs"),
-            F.sum(token_count(text_col)).cast("long").alias("sum_tokens"),
-            F.sum(bpe_token_count(text_col)).cast("long").alias("sum_bpe"),
+            F.sum(token_count("text")).cast("long").alias("sum_tokens"),
+            F.sum(bpe_token_count("text")).cast("long").alias("sum_bpe"),
         )
     )
     return CorpusPrepResult(clean=clean, stats=stats)

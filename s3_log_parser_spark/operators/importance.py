@@ -15,13 +15,13 @@ Arithmetic is exact-integer (house rule — the DuckDB oracle reproduces
 every value digit-for-digit): per-bucket weight is the add-one-smoothed
 frequency ratio
 
-    weight_x{scale} = ((target_n + 1) * scale) div (raw_n + 1)
+    weight_x1000 = ((target_n + 1) * SCALE) div (raw_n + 1)
 
 NOT the log-ratio of normalized probabilities. Dropping the
 (raw_total / target_total) normalizer multiplies every bucket's ratio
 by the same constant, so per-doc rankings — the thing resampling
 consumes — are unchanged, while the arithmetic stays in BIGINT: with
-``scale`` = 1000 the product is exact far past any real per-bucket
+``SCALE`` = 1000 the product is exact far past any real per-bucket
 count (overflow needs target_n > ~9.2e15). The log-space sum of the
 original paper is order-isomorphic to this sum-of-ratios only
 approximately; we document the surrogate rather than paying float
@@ -39,16 +39,18 @@ from pyspark.sql import functions as F
 
 from .dedup import shingle_hashes
 
+# fixed-point scale of the weights and scores: ``weight_x1000``,
+# ``imp_x1000``
+SCALE = 1000
 
-def ngram_buckets(
-    col: Column | str, n: int = 2, buckets: int = 4096, mode: str = "djb2"
-) -> Column:
+
+def ngram_buckets(col: Column | str, n: int = 2, buckets: int = 4096) -> Column:
     """distinct hashed n-gram feature buckets of a text column
-    (array<long>, values in [0, buckets)). ``mode="xxhash64"`` selects
-    the production hash family; ``djb2`` is the oracle-parity family."""
+    (array<long>, values in [0, buckets)) over the djb2 oracle-parity
+    shingle family."""
     return F.array_distinct(
         F.transform(
-            shingle_hashes(col, n, mode),
+            shingle_hashes(col, n),
             lambda h: F.pmod(h, F.lit(buckets)),
         )
     )
@@ -79,17 +81,14 @@ def bucket_frame(
 def bucket_weights(
     raw: DataFrame,
     target: DataFrame,
-    text_col: str = "text",
     n: int = 2,
     buckets: int = 4096,
-    mode: str = "djb2",
-    scale: int = 1000,
     raw_buckets: DataFrame | None = None,
     target_buckets: DataFrame | None = None,
 ) -> DataFrame:
-    """per-bucket importance weight table:
-    ``(bucket, raw_n, target_n, weight_x{scale})`` with
-    ``weight = ((target_n + 1) * scale) div (raw_n + 1)`` (add-one
+    """per-bucket importance weight table over the ``text`` column:
+    ``(bucket, raw_n, target_n, weight_x1000)`` with
+    ``weight = ((target_n + 1) * SCALE) div (raw_n + 1)`` (add-one
     smoothed, exact BIGINT). ≤ ``buckets`` rows — always broadcastable.
 
     Both corpora's presence streams are tagged and UNIONED into ONE
@@ -97,7 +96,7 @@ def bucket_weights(
     key exchange) — no join of the count tables at all, so the outer-
     join semantics (a bucket seen in only one corpus still gets a
     smoothed weight) fall out for free. Buckets seen in neither corpus
-    don't need a row — scorers coalesce their weight to ``scale`` (the
+    don't need a row — scorers coalesce their weight to ``SCALE`` (the
     smoothed (0+1)/(0+1) ratio) at lookup time.
 
     ``raw_buckets`` / ``target_buckets`` (r7): pre-exploded bucket
@@ -110,7 +109,7 @@ def bucket_weights(
 
     def _tagged(df: DataFrame, pre: DataFrame | None, rc: int, tc: int) -> DataFrame:
         b = pre if pre is not None else bucket_frame(
-            df, text_col, n, buckets, mode
+            df, "text", n, buckets, "djb2"
         )
         return b.select(
             "bucket",
@@ -130,48 +129,41 @@ def bucket_weights(
     # floor division on non-negative BIGINTs — identical to DuckDB's
     # `//`. Integer `div`, not F.floor of a double `/` (ADVICE r6): the
     # double intermediate silently loses exactness once
-    # (target_n+1)*scale exceeds 2^53 (~9e12 docs per bucket at
-    # scale=1000); `div` stays in 64-bit integers the whole way, the
-    # same house rule retrieval.py applies to its score arithmetic.
-    if scale <= 0:
-        raise ValueError("scale must be positive")
-    w = F.expr(f"((target_n + 1) * {int(scale)}) div (raw_n + 1)")
-    return j.withColumn(f"weight_x{scale}", w)
+    # (target_n+1)*SCALE exceeds 2^53 (~9e12 docs per bucket); `div`
+    # stays in 64-bit integers the whole way, the same house rule
+    # retrieval.py applies to its score arithmetic.
+    w = F.expr(f"((target_n + 1) * {SCALE}) div (raw_n + 1)")
+    return j.withColumn("weight_x1000", w)
 
 
 def importance_scores(
     df: DataFrame,
     weights: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 2,
     buckets: int = 4096,
-    mode: str = "djb2",
-    scale: int = 1000,
     buckets_df: DataFrame | None = None,
 ) -> DataFrame:
-    """``(id_col, n_feats, imp_x{scale})`` per document: the sum of its
+    """``(doc_id, n_feats, imp_x1000)`` per document: the sum of its
     distinct feature buckets' weights (buckets absent from the weight
-    table count ``scale``, the smoothed neutral ratio). Target-like
-    documents score high, raw-typical documents score ≈ n_feats·scale.
+    table count ``SCALE``, the smoothed neutral ratio). Target-like
+    documents score high, raw-typical documents score ≈ n_feats·SCALE.
 
     Plan shape: explode → ONE broadcast hash join against the
     ≤ ``buckets``-row weight table → hash re-aggregate on the doc id.
     No sort, no corpus-sized shuffle beyond the id re-aggregate."""
-    wcol = f"weight_x{scale}"
     b = (
         buckets_df
         if buckets_df is not None
-        else bucket_frame(df, text_col, n, buckets, mode, keep=(id_col,))
+        else bucket_frame(df, "text", n, buckets, "djb2", keep=("doc_id",))
     )
     j = b.join(
-        F.broadcast(weights.select("bucket", wcol)), "bucket", "left"
+        F.broadcast(weights.select("bucket", "weight_x1000")), "bucket", "left"
     )
-    return j.groupBy(id_col).agg(
+    return j.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_feats"),
-        F.sum(F.coalesce(F.col(wcol), F.lit(scale)))
+        F.sum(F.coalesce(F.col("weight_x1000"), F.lit(SCALE)))
         .cast("long")
-        .alias(f"imp_x{scale}"),
+        .alias("imp_x1000"),
     )
 
 
@@ -179,12 +171,8 @@ def importance_resample(
     df: DataFrame,
     weights: DataFrame,
     k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 2,
     buckets: int = 4096,
-    mode: str = "djb2",
-    scale: int = 1000,
     buckets_df: DataFrame | None = None,
 ) -> DataFrame:
     """the top-``k`` most target-like documents (deterministic total
@@ -192,11 +180,8 @@ def importance_resample(
     global top-k is a TakeOrderedAndProject (per-partition heaps, no
     full sort); joining back to the original rows is an id equi-join
     against a ≤k-row broadcast side."""
-    scores = importance_scores(
-        df, weights, id_col, text_col, n, buckets, mode, scale,
-        buckets_df=buckets_df,
-    )
+    scores = importance_scores(df, weights, n, buckets, buckets_df=buckets_df)
     top = scores.orderBy(
-        F.col(f"imp_x{scale}").desc(), F.col(id_col).asc()
+        F.col("imp_x1000").desc(), F.col("doc_id").asc()
     ).limit(k)
-    return df.join(F.broadcast(top), id_col, "inner")
+    return df.join(F.broadcast(top), "doc_id", "inner")

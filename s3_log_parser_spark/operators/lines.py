@@ -63,18 +63,14 @@ def _line_key(mode: str):
 
 
 def _exploded_lines(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    delim: str,
-    carry_cols: tuple[str, ...] = (),
+    df: DataFrame, delim: str, carry_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     # F.split takes a REGEX — escape the literal delimiter (DuckDB's
     # string_split is literal; un-escaped metacharacters would silently
     # diverge the two engines)
-    parts = F.split(F.coalesce(F.col(text_col), F.lit("")), re.escape(delim))
+    parts = F.split(F.coalesce(F.col("text"), F.lit("")), re.escape(delim))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in carry_cols],
         F.posexplode(parts).alias("pos", "line"),
     )
@@ -82,8 +78,6 @@ def _exploded_lines(
 
 def line_frequencies(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     delim: str = "\n",
     min_chars: int = 1,
     key_mode: str = "xxhash64",
@@ -95,7 +89,7 @@ def line_frequencies(
     always kept by :func:`line_dedup`). Materialize this once per
     corpus snapshot and feed it back via ``freq=`` to amortize across
     runs — same seam as ``DedupIndex`` for document-level dedup."""
-    ex = _exploded_lines(df, id_col, text_col, delim)
+    ex = _exploded_lines(df, delim)
     # pin the key family on the frame itself: column metadata survives
     # parquet round-trips, and line_dedup refuses a freq= whose pin
     # disagrees with the call (ADVICE r5: a freq table built under a
@@ -106,17 +100,15 @@ def line_frequencies(
         ex.filter(F.length("line") >= min_chars)
         .select(
             _line_key(key_mode).alias("line_key", metadata=meta),
-            F.col(id_col),
+            F.col("doc_id"),
         )
         .groupBy("line_key")
-        .agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
+        .agg(F.count_distinct(F.col("doc_id")).alias("n_docs"))
     )
 
 
 def line_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     delim: str = "\n",
     max_docs: int = 1,
     min_chars: int = 1,
@@ -126,7 +118,7 @@ def line_dedup(
 ) -> DataFrame:
     """remove every line that occurs in more than ``max_docs`` distinct
     documents; keep surviving lines in original order. Returns one row
-    per input document: ``id_col``, cleaned ``text_col``,
+    per input document: ``doc_id``, cleaned ``text``,
     ``n_lines_kept``, ``n_lines_dropped`` — a document whose every line
     was boilerplate survives with empty text and ``n_lines_kept = 0``
     (dropping empty docs is the caller's policy, same as
@@ -141,9 +133,9 @@ def line_dedup(
     corpus-wide join to recover them afterwards) and come back via
     ``first()`` in the reassembly aggregate.
     """
-    ex = _exploded_lines(df, id_col, text_col, delim, carry_cols)
+    ex = _exploded_lines(df, delim, carry_cols)
     if freq is None:
-        freq = line_frequencies(df, id_col, text_col, delim, min_chars, key_mode)
+        freq = line_frequencies(df, delim, min_chars, key_mode)
     else:
         # a supplied frequency table must have been built under the
         # SAME key family/split rules: verify the pin that
@@ -180,7 +172,7 @@ def line_dedup(
     # empty text yields one (empty) line, so every input doc owns at
     # least one exploded row and survives the groupBy.
     marked = keyed.join(drop_keys, "line_key", "left")
-    agg = marked.groupBy(id_col).agg(
+    agg = marked.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(
                 F.when(F.col("_drop").isNull(), F.struct("pos", "line"))
@@ -191,10 +183,8 @@ def line_dedup(
     )
     kept_n = F.size("_ls").cast("long")
     return agg.select(
-        F.col(id_col),
-        F.concat_ws(delim, F.transform("_ls", lambda s: s["line"])).alias(
-            text_col
-        ),
+        F.col("doc_id"),
+        F.concat_ws(delim, F.transform("_ls", lambda s: s["line"])).alias("text"),
         *[F.col(c) for c in carry_cols],
         kept_n.alias("n_lines_kept"),
         (F.col("_n_total") - kept_n).alias("n_lines_dropped"),

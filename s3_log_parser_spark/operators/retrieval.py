@@ -25,9 +25,9 @@ Scale shape:
   (queries are the small side by construction).
 
 64-bit envelope: the cleared-fraction numerator is
-``idf_x1000 · tf · (100 + k1_x100) · sumdl · 100`` — every factor
+``idf_x1000 · tf · (100 + K1_X100) · sumdl · 100`` — every factor
 counts (ADVICE r6: a sumdl-only bound was ~2000× too generous). With
-the default k1 the constant factor is 22,000, so the product is exact
+k1 = 1.2 the constant factor is 22,000, so the product is exact
 while ``idf_x1000 · tf · sumdl ≲ 4e14`` per retrieval shard — e.g. a
 worst-case idf of ~21,400 (N ≈ 2e9 docs, df = 1) and tf ≤ 1e3 caps
 ``sumdl`` near 2e7; common-term queries (low idf, modest tf) reach
@@ -43,45 +43,47 @@ from pyspark.sql import functions as F
 
 from ..functions.text import token_count, tokens
 
+# BM25 k1 = 1.2 and b = 0.75 (the Lucene defaults), carried ×100 so the
+# tf normalization stays integer
+K1_X100 = 120
+B_X100 = 75
+# reciprocal-rank-fusion constant (Cormack et al.'s k = 60)
+K_RRF = 60
+
 
 def bm25_topk(
     docs: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    k1_x100: int = 120,
-    b_x100: int = 75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    q_id_col: str = "q_id",
-    q_text_col: str = "q_text",
 ) -> DataFrame:
-    """top-k documents per query by BM25. Returns
+    """top-k ``(doc_id, text)`` documents per ``(q_id, q_text)`` query
+    by BM25. Returns
     ``(q_id, rank, doc_id, score_x1000)`` with deterministic ordering
     (score DESC, doc id ASC). Standard bag-of-terms query semantics:
     each distinct query term counts once (query-side tf is ignored,
     as in Lucene); documents sharing no query term are unscored."""
-    d_id, term = F.col(id_col), F.col("term")
+    d_id = F.col("doc_id")
     qterms = queries.select(
-        F.col(q_id_col),
-        F.explode(F.array_distinct(tokens(q_text_col))).alias("term"),
+        F.col("q_id"),
+        F.explode(F.array_distinct(tokens("q_text"))).alias("term"),
     )
     uniq_terms = qterms.select("term").distinct()
 
     # corpus-side postings, pruned to query terms BEFORE aggregating
     posted = (
-        docs.select(d_id, F.explode(tokens(text_col)).alias("term"))
+        docs.select(d_id, F.explode(tokens("text")).alias("term"))
         .join(F.broadcast(uniq_terms), "term")
     )
-    tf = posted.groupBy(id_col, "term").agg(
+    tf = posted.groupBy("doc_id", "term").agg(
         F.count("*").cast("long").alias("tf")
     )
     dfreq = tf.groupBy("term").agg(
         F.count("*").cast("long").alias("df")
     )
-    dl = docs.select(d_id, token_count(text_col).cast("long").alias("dl"))
+    dl = docs.select(d_id, token_count("text").cast("long").alias("dl"))
     totals = docs.agg(
         F.count("*").cast("long").alias("n_docs"),
-        F.sum(token_count(text_col)).cast("long").alias("sumdl"),
+        F.sum(token_count("text")).cast("long").alias("sumdl"),
     )
 
     idf_x1000 = F.floor(
@@ -96,16 +98,16 @@ def bm25_topk(
     #   num = tf·(100 + k1)·sumdl·100
     #   den = tf·10000·sumdl + k1·((100 − b)·sumdl + b·dl·N)
     num = (
-        F.col("tf") * F.lit(100 + k1_x100) * F.col("sumdl") * F.lit(100)
+        F.col("tf") * F.lit(100 + K1_X100) * F.col("sumdl") * F.lit(100)
     )
-    den = F.col("tf") * F.lit(10000) * F.col("sumdl") + F.lit(k1_x100) * (
-        F.lit(100 - b_x100) * F.col("sumdl")
-        + F.lit(b_x100) * F.col("dl") * F.col("n_docs")
+    den = F.col("tf") * F.lit(10000) * F.col("sumdl") + F.lit(K1_X100) * (
+        F.lit(100 - B_X100) * F.col("sumdl")
+        + F.lit(B_X100) * F.col("dl") * F.col("n_docs")
     )
     scored = (
         tf.join(F.broadcast(qterms), "term")
         .join(F.broadcast(dfreq), "term")
-        .join(dl, id_col)
+        .join(dl, "doc_id")
         .crossJoin(F.broadcast(totals))
         .withColumn("idf_x1000", idf_x1000)
         .withColumn("_num", F.col("idf_x1000") * num)
@@ -115,32 +117,29 @@ def bm25_topk(
         # `div` stays in 64-bit integers (all contributions are
         # non-negative, so div == floor division)
         .withColumn("_c", F.expr("_num div _den").cast("long"))
-        .groupBy(q_id_col, id_col)
+        .groupBy("q_id", "doc_id")
         .agg(F.sum("_c").cast("long").alias("score_x1000"))
     )
-    w = Window.partitionBy(q_id_col).orderBy(
+    w = Window.partitionBy("q_id").orderBy(
         F.col("score_x1000").desc(), d_id.asc()
     )
     return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", id_col, "score_x1000")
+        .select("q_id", "rank", "doc_id", "score_x1000")
     )
 
 
 def rrf_fuse(
     ranked: list[DataFrame],
     k: int = 10,
-    k_rrf: int = 60,
-    q_id_col: str = "q_id",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """reciprocal-rank fusion of retriever outputs — the standard
     hybrid-retrieval combiner (Cormack et al., SIGIR 2009): each input
     frame must carry ``(q_id, rank, doc_id)`` (the shape
     :func:`bm25_topk` and ``similarity.cosine_topk``/``ivf_topk``
     emit); a doc's fused score is
-    ``Σ_retrievers floor(1e6 / (k_rrf + rank))`` — integer end to end,
+    ``Σ_retrievers floor(1e6 / (K_RRF + rank))`` — integer end to end,
     so fusion is cross-engine exact regardless of how incomparable the
     retrievers' raw scores are (that incomparability is WHY rank
     fusion, not score fusion, is the default).
@@ -152,9 +151,9 @@ def rrf_fuse(
         raise ValueError("rrf_fuse: need at least one ranked input")
     parts = [
         df.select(
-            F.col(q_id_col),
-            F.col(id_col),
-            F.expr(f"1000000 div ({k_rrf} + rank)")
+            "q_id",
+            "doc_id",
+            F.expr(f"1000000 div ({K_RRF} + rank)")
             .cast("long")
             .alias("_c"),
         )
@@ -163,14 +162,14 @@ def rrf_fuse(
     allc = parts[0]
     for p in parts[1:]:
         allc = allc.unionByName(p)
-    fused = allc.groupBy(q_id_col, id_col).agg(
+    fused = allc.groupBy("q_id", "doc_id").agg(
         F.sum("_c").cast("long").alias("rrf_x1m")
     )
-    w = Window.partitionBy(q_id_col).orderBy(
-        F.col("rrf_x1m").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("q_id").orderBy(
+        F.col("rrf_x1m").desc(), F.col("doc_id").asc()
     )
     return (
         fused.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
-        .select(q_id_col, "rank", id_col, "rrf_x1m")
+        .select("q_id", "rank", "doc_id", "rrf_x1m")
     )

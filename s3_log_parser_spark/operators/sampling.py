@@ -71,19 +71,18 @@ def split_bucket(
 
 def hash_split(
     df: DataFrame,
-    id_col: str = "doc_id",
     weights: tuple[tuple[str, int], ...] = DEFAULT_SPLITS,
     salt: str = "v1",
     mode: str = "djb2",
 ) -> DataFrame:
     """add a ``split`` column assigning each row to a named split by
-    cumulative per-mille weight over :func:`split_bucket`. Row-local
-    (no shuffle, no state): the assignment of one doc can never change
-    because other docs arrived."""
+    cumulative per-mille weight over :func:`split_bucket` of
+    ``doc_id``. Row-local (no shuffle, no state): the assignment of one
+    doc can never change because other docs arrived."""
     total = sum(w for _, w in weights)
     if total != 1000:
         raise ValueError(f"hash_split: weights must sum to 1000, got {total}")
-    b = split_bucket(id_col, salt, mode)
+    b = split_bucket("doc_id", salt, mode)
     expr = None
     acc = 0
     for name, w in weights:
@@ -99,10 +98,9 @@ def _running_start(
     base: DataFrame,
     part: list[str],
     id_col: str,
-    n_col: str = "_n",
     bucket_ids: int = 65536,
 ) -> DataFrame:
-    """add ``_start`` = the per-group running ``n_col`` total BEFORE
+    """add ``_start`` = the per-group running ``_n`` total BEFORE
     each row under deterministic id-order concatenation — the scalable
     prefix sum behind the budget samplers and packers.
 
@@ -141,9 +139,9 @@ def _running_start(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     b = base.withColumn("_bkt", bucket).withColumn(
-        "_lend", F.sum(n_col).over(wl)
+        "_lend", F.sum("_n").over(wl)
     )
-    sub = b.groupBy(*part, "_bkt").agg(F.sum(n_col).alias("_bt"))
+    sub = b.groupBy(*part, "_bkt").agg(F.sum("_n").alias("_bt"))
     wo = (
         Window.partitionBy(*part)
         .orderBy(F.col("_bkt").asc())
@@ -155,7 +153,7 @@ def _running_start(
     return (
         b.join(F.broadcast(off), part + ["_bkt"])
         .withColumn(
-            "_start", F.col("_boff") + F.col("_lend") - F.col(n_col)
+            "_start", F.col("_boff") + F.col("_lend") - F.col("_n")
         )
         .drop("_bkt", "_lend", "_boff")
     )
@@ -164,10 +162,7 @@ def _running_start(
 def sample_to_token_budget(
     df: DataFrame,
     budget_tokens: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     by: str | None = None,
-    count_col: Column | None = None,
 ) -> DataFrame:
     """deterministic prefix-by-id sampling: walk documents in ``id``
     order (per ``by`` group when given) and keep each doc whose
@@ -176,14 +171,12 @@ def sample_to_token_budget(
     on re-run. The first doc of a group is always kept (a budget
     smaller than one doc still yields that doc — truncation is the
     tokenizer's job, not the sampler's). Offsets via the two-level
-    :func:`_running_start` (no single-task fold). ``count_col`` swaps
-    in any per-doc size expression (e.g. ``bpe_token_count_real`` for
-    a real-tokenizer budget); default is the whitespace token count."""
+    :func:`_running_start` (no single-task fold); a doc's size is its
+    whitespace token count."""
     part = [by] if by else []
-    cnt = token_count(text_col) if count_col is None else count_col
-    base = df.withColumn("_n", cnt.cast("long"))
+    base = df.withColumn("_n", token_count("text").cast("long"))
     return (
-        _running_start(base, part, id_col)
+        _running_start(base, part, "doc_id")
         .filter(F.col("_start") < budget_tokens)
         .drop("_n", "_start")
     )
@@ -193,12 +186,8 @@ def sample_to_mixture(
     df: DataFrame,
     total_budget_tokens: int,
     weights: dict[str, int],
-    by: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    count_col: Column | None = None,
 ) -> DataFrame:
-    """cut a corpus to a target SOURCE MIXTURE: each group named in
+    """cut a corpus to a target SOURCE MIXTURE: each ``source`` named in
     ``weights`` (per-mille shares of ``total_budget_tokens``) is
     prefix-sampled to ``floor(total · w / 1000)`` tokens by the same
     deterministic walk-in-id-order rule as
@@ -219,12 +208,11 @@ def sample_to_mixture(
             for x in (g, total_budget_tokens * w // 1000)
         ]
     )
-    cnt = token_count(text_col) if count_col is None else count_col
-    budget = F.element_at(budget_map, F.col(by))
-    base = df.withColumn("_n", cnt.cast("long"))
+    budget = F.element_at(budget_map, F.col("source"))
+    base = df.withColumn("_n", token_count("text").cast("long"))
     # NULL budget (group not in the mixture) fails the comparison → dropped
     return (
-        _running_start(base, [by], id_col)
+        _running_start(base, ["source"], "doc_id")
         .filter(F.col("_start") < budget)
         .drop("_n", "_start")
     )
@@ -265,7 +253,6 @@ def shuffle_key(
 
 def deterministic_shuffle(
     df: DataFrame,
-    id_col: str = "doc_id",
     seed: str = "v1",
     shards: int | None = None,
     mode: str = "djb2",
@@ -280,23 +267,20 @@ def deterministic_shuffle(
     permutation). Without ``shards`` a global ``orderBy`` is used —
     fine for verification scale, but at 100 TB always pass shards.
     Adds the key as ``shuffle_key``."""
-    keyed = df.withColumn("shuffle_key", shuffle_key(id_col, seed, mode))
+    keyed = df.withColumn("shuffle_key", shuffle_key("doc_id", seed, mode))
     if shards is not None:
         return keyed.repartitionByRange(
-            shards, "shuffle_key", id_col
-        ).sortWithinPartitions("shuffle_key", id_col)
-    return keyed.orderBy("shuffle_key", id_col)
+            shards, "shuffle_key", "doc_id"
+        ).sortWithinPartitions("shuffle_key", "doc_id")
+    return keyed.orderBy("shuffle_key", "doc_id")
 
 
 def stratified_sample(
     df: DataFrame,
     n_per_group: int,
-    by: str = "source",
-    id_col: str = "doc_id",
     seed: str = "v1",
-    mode: str = "djb2",
 ) -> DataFrame:
-    """deterministic per-stratum sample: keep each group's ``n`` rows
+    """deterministic per-stratum sample: keep each ``source``'s ``n`` rows
     with the SMALLEST seeded shuffle keys (:func:`shuffle_key`) — a
     reproducible uniform draw with no RNG state and no count pass.
     Unlike fraction-based ``df.sampleBy`` (seed interacts with
@@ -312,11 +296,11 @@ def stratified_sample(
     ≤ n·groups·tasks rows, never the corpus (plan-pinned in tests)."""
     if n_per_group < 1:
         raise ValueError(f"stratified_sample: n_per_group={n_per_group}")
-    w = Window.partitionBy(by).orderBy(
-        F.col("_sk").asc(), F.col(id_col).asc()
+    w = Window.partitionBy("source").orderBy(
+        F.col("_sk").asc(), F.col("doc_id").asc()
     )
     return (
-        df.withColumn("_sk", shuffle_key(id_col, seed, mode))
+        df.withColumn("_sk", shuffle_key("doc_id", seed))
         .withColumn("sample_rank", F.row_number().over(w).cast("long"))
         .filter(F.col("sample_rank") <= n_per_group)
         .drop("_sk")
@@ -327,8 +311,6 @@ def chunk_documents(
     df: DataFrame,
     chunk_tokens: int = 256,
     overlap_tokens: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """split each document's token stream into fixed-size windows with
     optional overlap — the retrieval/embedding chunking stage (RAG
@@ -337,7 +319,7 @@ def chunk_documents(
     ``stride = chunk_tokens - overlap_tokens``; the final chunk may be
     short; a doc shorter than one chunk yields exactly one chunk;
     empty docs yield none. Returns one row per chunk:
-    ``(id, chunk_id, chunk_text, n_tokens)``. ``chunk_text`` re-joins
+    ``(doc_id, chunk_id, chunk_text, n_tokens)``. ``chunk_text`` re-joins
     whitespace tokens with single spaces (runs of whitespace collapse —
     chunking is defined on the token stream, not raw bytes).
 
@@ -351,9 +333,9 @@ def chunk_documents(
             f"0 <= overlap < chunk, got {chunk_tokens}/{overlap_tokens}"
         )
     stride = chunk_tokens - overlap_tokens
-    toks = tokens(text_col)
+    toks = tokens("text")
     base = df.select(
-        F.col(id_col), toks.alias("_tk"), F.size(toks).alias("_n")
+        F.col("doc_id"), toks.alias("_tk"), F.size(toks).alias("_n")
     ).filter(F.col("_n") > 0)
     # ceil((n - chunk)/stride) + 1 for n > chunk, else 1
     n_chunks = F.when(F.col("_n") <= chunk_tokens, F.lit(1)).otherwise(
@@ -371,7 +353,7 @@ def chunk_documents(
             F.explode(F.sequence(F.lit(0).cast("long"), (n_chunks - 1).cast("long"))),
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.col("chunk_id"),
             F.array_join(piece, " ").alias("chunk_text"),
             F.size(piece).cast("long").alias("n_tokens"),
@@ -382,10 +364,7 @@ def chunk_documents(
 def pack_sequences(
     df: DataFrame,
     ctx_tokens: int = 2048,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     by: str | None = "source",
-    count_col: Column | None = None,
 ) -> DataFrame:
     """assign each doc the context-window bin where it STARTS under
     deterministic id-order concatenation within its group:
@@ -393,15 +372,13 @@ def pack_sequences(
     and ``n_tokens``. This is the streaming-concatenation packing model
     (docs straddle bin boundaries; the bin of record is where the doc
     begins) — the estimate every pretraining pipeline uses to size a
-    run before materializing packed examples. ``count_col`` swaps in a
-    real-tokenizer size (see sample_to_token_budget)."""
+    run before materializing packed examples."""
     part = [by] if by else []
-    cnt = token_count(text_col) if count_col is None else count_col
-    base = df.withColumn("n_tokens", cnt.cast("long")).withColumn(
+    base = df.withColumn("n_tokens", token_count("text").cast("long")).withColumn(
         "_n", F.col("n_tokens")
     )
     return (
-        _running_start(base, part, id_col)
+        _running_start(base, part, "doc_id")
         .withColumn(
             "pack_bin", F.floor(F.col("_start") / ctx_tokens).cast("long")
         )
@@ -412,14 +389,11 @@ def pack_sequences(
 def pack_examples(
     df: DataFrame,
     ctx_tokens: int = 2048,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    by: str | None = "source",
     ids_col: Column | None = None,
 ) -> DataFrame:
     """MATERIALIZE packed training examples: the per-group token
     stream under deterministic id-order concatenation, cut into
-    fixed-length windows — one row per ``(group, pack_bin)`` with the
+    fixed-length windows — one row per ``(source, pack_bin)`` with the
     actual ``input_ids`` array (length ``ctx_tokens`` for every bin but
     the group's last), ``n_tokens``, and ``n_docs`` contributing.
     Unlike :func:`pack_sequences` (which only ESTIMATES bin counts by
@@ -431,7 +405,7 @@ def pack_examples(
     ``ids_col`` supplies the per-doc token-id array; the default is
     the DJB2-of-whitespace-token ids (pure Catalyst, DuckDB-oracle
     reproducible — the parity family). Pass
-    ``functions.bpe.bpe_token_ids(text_col)`` for real BPE ids (the
+    ``functions.bpe.bpe_token_ids("text")`` for real BPE ids (the
     production tokenizer; benched, golden-pinned elsewhere).
 
     Shape at scale: the two-level :func:`_running_start` offsets
@@ -441,18 +415,15 @@ def pack_examples(
     slices keyed by (group, bin). Token ids cross that exchange once —
     the floor for materialization, since the output IS the ids. Empty
     docs contribute nothing and are dropped before the window."""
-    part = [by] if by else []
+    part = ["source"]
     if ids_col is None:
-        ids_col = F.transform(
-            tokens(text_col), lambda t: djb2_expr(t)
-        )
-    cols = ([F.col(by)] if by else []) + [F.col(id_col), ids_col.alias("_ids")]
+        ids_col = F.transform(tokens("text"), lambda t: djb2_expr(t))
     base = (
-        df.select(*cols)
+        df.select("source", "doc_id", ids_col.alias("_ids"))
         .withColumn("_n", F.size("_ids").cast("long"))
         .filter(F.col("_n") > 0)
     )
-    base = _running_start(base, part, id_col).withColumn(
+    base = _running_start(base, part, "doc_id").withColumn(
         "_end", F.col("_start") + F.col("_n")
     )
     c = F.lit(ctx_tokens)
@@ -492,16 +463,12 @@ def pack_examples(
 
 
 def pack_stats(
-    df: DataFrame,
-    ctx_tokens: int = 2048,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    by: str = "source",
+    df: DataFrame, ctx_tokens: int = 2048, by: str = "source"
 ) -> DataFrame:
     """per-group packing summary: docs, bins, tokens, and fill rate
     ×1000 (``sum_tokens / (n_bins · ctx)`` floored) — how much of the
     allocated context space the corpus actually fills."""
-    packed = pack_sequences(df, ctx_tokens, id_col, text_col, by)
+    packed = pack_sequences(df, ctx_tokens, by)
     return packed.groupBy(by).agg(
         F.count("*").cast("long").alias("n_docs"),
         F.count_distinct(F.col("pack_bin")).cast("long").alias("n_bins"),

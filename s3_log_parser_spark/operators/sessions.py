@@ -18,42 +18,30 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def sessionize(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """Append ``session_idx`` (0-based per key, in ``order_cols`` order):
-    a new session starts when the gap to the previous event exceeds
-    ``gap_seconds`` (strictly greater, microsecond-exact)."""
-    w = Window.partitionBy(key_col).orderBy(*[F.col(c) for c in order_cols])
+def sessionize(df: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+    """Append ``session_idx`` (0-based per ``user_id``, in
+    ``(ts, event_id)`` order): a new session starts when the gap to the
+    previous event exceeds ``gap_seconds`` (strictly greater,
+    microsecond-exact)."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # cast: unix_micros rejects TIMESTAMP_NTZ (parquet-inferred); the
     # session is UTC-pinned so the instant is unchanged
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
     prev = F.lag(us).over(w)
     new_s = F.when(
         prev.isNull() | ((us - prev) > gap_seconds * 1_000_000), F.lit(1)
     ).otherwise(F.lit(0))
-    run = Window.partitionBy(key_col).orderBy(
-        *[F.col(c) for c in order_cols]
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return df.withColumn("session_idx", (F.sum(new_s).over(run) - 1).cast("long"))
 
 
-def session_stats(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    order_cols: tuple[str, ...] = ("ts", "event_id"),
-    gap_seconds: int = 1800,
-) -> DataFrame:
-    """Per-key session summary: session count, event count, largest
-    session, and total in-session span (whole seconds, floored)."""
-    s = sessionize(df, key_col, ts_col, order_cols, gap_seconds)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    per = s.groupBy(key_col, "session_idx").agg(
+def session_stats(df: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+    """Per-``user_id`` session summary over ``(ts, event_id)`` order:
+    session count, event count, largest session, and total in-session
+    span (whole seconds, floored)."""
+    s = sessionize(df, gap_seconds=gap_seconds)
+    us = F.unix_micros(F.col("ts").cast("timestamp"))
+    per = s.groupBy("user_id", "session_idx").agg(
         F.count("*").alias("_n"),
         (F.max(us) - F.min(us)).alias("_span_us"),
     ).withColumn(
@@ -62,7 +50,7 @@ def session_stats(
         # cross-engine exact compare (DuckDB side uses `//`)
         "_span_sec", F.expr("_span_us div 1000000")
     )
-    return per.groupBy(key_col).agg(
+    return per.groupBy("user_id").agg(
         F.count("*").alias("n_sessions"),
         F.sum("_n").cast("long").alias("n_events"),
         F.max("_n").cast("long").alias("max_session_events"),

@@ -8,8 +8,7 @@
 - :func:`ann_lsh_bucketed` — the scale path: deterministic
   random-hyperplane LSH buckets (functions/vectors.hyperplane_bits),
   candidates only within matching buckets → turns O(|Q|·N) into
-  O(|Q|·N/2^planes) at a recall cost; multi-probe via XOR-1 neighbors
-  optional.
+  O(|Q|·N/2^planes) at a recall cost; multi-probe via XOR-1 neighbors.
 - :func:`ivf_topk` — IVF-style: k-means-free centroid assignment using
   a deterministic sample of corpus rows as centroids, probe the
   nearest ``nprobe`` cells only.
@@ -20,12 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import (
-    as_double,
-    dot_pre,
-    hyperplane_bits,
-    norm_pre,
-)
+from ..functions.vectors import as_double, hyperplane_bits, norm_pre
 
 
 def _with_norm(df, vec, out="nrm"):
@@ -49,24 +43,19 @@ def _cos_x1m(a_vec, b_vec, a_nrm, b_nrm):
     return cos_x1m_pairs(a_vec, b_vec, a_nrm, b_nrm)
 
 
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """exact top-k by cosine for each query row (query ≠ candidate).
+def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """exact top-k by cosine over ``(vec_id, embedding)`` for each
+    query row (query ≠ candidate).
 
     Deterministic ordering: (cosine_x1m DESC, candidate id ASC) — the
     integer-scaled cosine makes rank stable across engines.
     """
     q = _with_norm(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")),
         "q_vec", "q_nrm",
     )
     c = _with_norm(
-        corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")),
+        corpus.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")),
         "c_vec", "c_nrm",
     )
     scored = (
@@ -101,42 +90,35 @@ def with_lsh_bucket(
 def ann_lsh_bucketed(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 4,
     dim: int = 64,
-    probe_radius: int = 1,
 ) -> DataFrame:
-    """approximate top-k: candidates restricted to the query's LSH
-    bucket (multi-probe: also buckets within Hamming distance
-    ``probe_radius`` of it — the standard recall fix for sign-LSH on
+    """approximate top-k over ``(vec_id, embedding)``: candidates
+    restricted to the query's LSH bucket (multi-probe: also the buckets
+    within Hamming distance 1 of it — the standard recall fix for sign-LSH on
     near-orthogonal data). Equi-join on bucket → hash join instead of a
     cross join; the bucket column is also the natural Iceberg partition
     for a persisted ANN index table."""
     q = _with_norm(
         with_lsh_bucket(
             queries.select(
-                F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
+                F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
             ),
             "q_vec", n_planes, dim,
         ),
         "q_vec", "q_nrm",
     )
-    if probe_radius >= 1:
-        # probe the query's bucket plus each single-bit flip of it
-        probes = F.array(
-            F.col("lsh_bucket"),
-            *[
-                F.col("lsh_bucket").bitwiseXOR(F.lit(1 << j))
-                for j in range(n_planes)
-            ],
-        )
-        q = q.withColumn("lsh_bucket", F.explode(probes))
+    # probe the query's bucket plus each single-bit flip of it
+    probes = F.array(
+        F.col("lsh_bucket"),
+        *[F.col("lsh_bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)],
+    )
+    q = q.withColumn("lsh_bucket", F.explode(probes))
     c = _with_norm(
         with_lsh_bucket(
             corpus.select(
-                F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
+                F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
             ),
             "c_vec", n_planes, dim,
         ),
@@ -163,14 +145,9 @@ def ann_lsh_bucketed(
     )
 
 
-def ivf_centroids(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 8,
-) -> DataFrame:
+def ivf_centroids(corpus: DataFrame, n_cells: int = 8) -> DataFrame:
     """deterministic pseudo-random centroid pick: the ``n_cells``
-    smallest Knuth multiplicative hashes of the id — uniform across the
+    smallest Knuth multiplicative hashes of ``vec_id`` — uniform across the
     id space, reproducible in any engine, no kmeans dependency. At
     scale the pick is a TakeOrderedAndProject over (hash, id, vec) —
     one scan, no shuffle of the corpus. Returns
@@ -179,13 +156,13 @@ def ivf_centroids(
     # (id mod 2^31) * K mod 2^32: stays inside signed-64 range even for
     # huge ids (ANSI mode would error on a real overflow)
     cent_rank = F.pmod(
-        F.pmod(F.col(id_col).cast("long"), F.lit(1 << 31)) * F.lit(2654435761),
+        F.pmod(F.col("vec_id").cast("long"), F.lit(1 << 31)) * F.lit(2654435761),
         F.lit(1 << 32),
     )
     return _with_norm(
         corpus.select(
-            F.col(id_col).alias("cent_id"),
-            F.col(vec_col).alias("cent_vec"),
+            F.col("vec_id").alias("cent_id"),
+            F.col("embedding").alias("cent_vec"),
             cent_rank.alias("_cr"),
         )
         .orderBy("_cr", "cent_id")
@@ -213,7 +190,6 @@ def ivf_assign(
     cent: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    out: str = "cell",
 ) -> DataFrame:
     """max-cosine cell assignment of every row against a broadcast
     centroid frame. A row_number window would shuffle AND sort all
@@ -235,7 +211,7 @@ def ivf_assign(
         F.col(id_col),
         F.col("_best.v").alias(vec_col),
         F.col("_best.n").alias(f"{id_col}_nrm"),
-        F.col("_best.c").alias(out),
+        F.col("_best.c").alias("cell"),
     )
 
 
@@ -245,7 +221,6 @@ def _ivf_probe(
     id_col: str,
     vec_col: str,
     nprobe: int,
-    out: str = "cell",
 ) -> DataFrame:
     """the QUERY side: each row probes its ``nprobe`` nearest cells
     (row_number window — queries are the small side)."""
@@ -258,7 +233,7 @@ def _ivf_probe(
             F.col(id_col),
             F.col(vec_col),
             F.col("_nrm").alias(f"{id_col}_nrm"),
-            F.col("cent_id").alias(out),
+            F.col("cent_id").alias("cell"),
         )
     )
 
@@ -266,22 +241,21 @@ def _ivf_probe(
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_cells: int = 8,
     nprobe: int = 2,
 ) -> DataFrame:
-    """IVF-flat ANN: deterministic centroids (:func:`ivf_centroids`),
+    """IVF-flat ANN over ``(vec_id, embedding)``: deterministic
+    centroids (:func:`ivf_centroids`),
     rows assigned to their max-cosine centroid (:func:`ivf_assign`),
     queries probe the ``nprobe`` nearest cells."""
-    cent = ivf_centroids(corpus, id_col, vec_col, n_cells)
+    cent = ivf_centroids(corpus, n_cells=n_cells)
     c = ivf_assign(
-        corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")),
+        corpus.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")),
         cent, "c_id", "c_vec",
     )
     q = _ivf_probe(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")),
+        queries.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")),
         cent, "q_id", "q_vec", nprobe,
     )
     scored = (
@@ -307,14 +281,9 @@ def ivf_topk(
 
 
 def cosine_topk_quantized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    bits: int = 8,
+    corpus: DataFrame, queries: DataFrame, k: int = 5
 ) -> DataFrame:
-    """top-k by cosine over int8-quantized vectors — the storage/compute
+    """top-k by cosine over int8-quantized ``embedding`` vectors — the storage/compute
     trade every large ANN deployment makes: per-vector symmetric scalar
     quantization (functions/vectors.quantize_vec) shrinks the corpus 4×
     (float32 → int8) and the pairwise dot products become exact integer
@@ -324,7 +293,7 @@ def cosine_topk_quantized(
     from ..functions.vectors import quantize_vec
 
     def qz(df: DataFrame) -> DataFrame:
-        q, _ = quantize_vec(F.col(vec_col), bits)
-        return df.select(F.col(id_col), q.alias(vec_col))
+        q, _ = quantize_vec(F.col("embedding"))
+        return df.select("vec_id", q.alias("embedding"))
 
-    return cosine_topk(qz(corpus), qz(queries), id_col, vec_col, k)
+    return cosine_topk(qz(corpus), qz(queries), k=k)

@@ -93,11 +93,9 @@ def hll_constant(p: int = HLL_P) -> float:
     return alpha * m * m * float(1 << R)
 
 
-def hll_rank_cols(
-    key: Column, p: int = HLL_P, mode: str = "djb2"
-) -> tuple[Column, Column]:
-    """(bucket, rank) of one key: low ``p`` hash bits pick the
-    register, the remaining ``HLL_BITS-p`` bits' leading-zero count
+def hll_rank_cols(key: Column, mode: str = "djb2") -> tuple[Column, Column]:
+    """(bucket, rank) of one key: low ``HLL_P`` hash bits pick the
+    register, the remaining ``HLL_BITS-HLL_P`` bits' leading-zero count
     (+1) is the rank. ``length(bin(w))`` is the exact bit length — no
     float log2, whose floor misrounds at power-of-two boundaries.
 
@@ -110,25 +108,22 @@ def hll_rank_cols(
     0.71 s at sf0.1). MinHash's K copies were K *different*
     expressions — nothing to eliminate — hence its explode rewrite."""
     h = _hash31(key, mode)
-    m = 1 << p
-    suffix_bits = HLL_BITS - p
-    bucket = (h % F.lit(m)).cast("int")
+    suffix_bits = HLL_BITS - HLL_P
+    bucket = (h % F.lit(1 << HLL_P)).cast("int")
     # arithmetic shiftright == div for non-negative h, power-of-two m
-    w = F.shiftright(h, p)
+    w = F.shiftright(h, HLL_P)
     rank = F.when(w == 0, F.lit(suffix_bits + 1)).otherwise(
         F.lit(suffix_bits + 1) - F.length(F.bin(w))
     ).cast("int")
     return bucket, rank
 
 
-def hll_sketch(
-    df: DataFrame, key: Column | str, p: int = HLL_P, mode: str = "djb2"
-) -> DataFrame:
-    """``(bucket int, r int)`` register table, ≤ 2^p rows from any
+def hll_sketch(df: DataFrame, key: Column | str, mode: str = "djb2") -> DataFrame:
+    """``(bucket int, r int)`` register table, ≤ 2^``HLL_P`` rows from any
     input size (absent buckets implicitly rank 0). One scan, one
     map-side-combined aggregate."""
     k = F.col(key) if isinstance(key, str) else key
-    bucket, rank = hll_rank_cols(k, p, mode)
+    bucket, rank = hll_rank_cols(k, mode)
     return (
         df.select(bucket.alias("bucket"), rank.alias("r"))
         .groupBy("bucket")
@@ -146,10 +141,9 @@ def hll_merge(*sketches: DataFrame) -> DataFrame:
     return u.groupBy("bucket").agg(F.max("r").alias("r"))
 
 
-def hll_estimate(
-    sketch: DataFrame, p: int = HLL_P, correction: bool = True
-) -> DataFrame:
-    """One row: ``(n_registers, z_int, est_x1000)``.
+def hll_estimate(sketch: DataFrame, correction: bool = True) -> DataFrame:
+    """One row: ``(n_registers, z_int, est_x1000)`` of a 2^``HLL_P``
+    register table.
 
     ``z_int = Σ 2^(R - r_j)`` over all m registers (absent → 2^R) is an
     exact BIGINT; the raw estimate ``α·m²·2^R / z_int`` is one double
@@ -159,9 +153,9 @@ def hll_estimate(
     cross-engine oracles should pass ``correction=False`` (raw mode)
     and verify on inputs past the small range, where raw is the
     estimator of record anyway."""
-    m = 1 << p
-    R = HLL_BITS - p + 1
-    num = hll_constant(p)
+    m = 1 << HLL_P
+    R = HLL_BITS - HLL_P + 1
+    num = hll_constant()
     agg = sketch.agg(
         F.count("*").cast("long").alias("n_registers"),
         (
@@ -185,11 +179,10 @@ def hll_estimate(
     )
 
 
-def hll_estimate_py(ranks: dict[int, int], p: int = HLL_P,
-                    correction: bool = True) -> float:
+def hll_estimate_py(ranks: dict[int, int], correction: bool = True) -> float:
     """Pure-python reference estimator (pytest pin for both branches)."""
-    m = 1 << p
-    R = HLL_BITS - p + 1
+    m = 1 << HLL_P
+    R = HLL_BITS - HLL_P + 1
     alpha = 0.7213 / (1.0 + 1.079 / m)
     z_int = sum(1 << (R - r) for r in ranks.values())
     z_int += (m - len(ranks)) * (1 << R)

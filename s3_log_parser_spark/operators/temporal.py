@@ -106,15 +106,11 @@ def asof_join(
 def range_join(
     left: DataFrame,
     intervals: DataFrame,
-    on: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
-    by: tuple[str, ...] = ("user_id",),
     bucket_seconds: int = 3600,
     max_buckets_per_interval: int | None = 1_000,
 ) -> DataFrame:
     """interval-containment join: every ``left`` row paired with every
-    interval (same ``by`` key) satisfying ``start ≤ ts < end``
+    interval (same ``user_id``) satisfying ``start_ts ≤ ts < end_ts``
     (inner-join semantics — a row inside two overlapping intervals
     yields two output rows). The second temporal operator Spark lacks
     natively ("which maintenance window / session / deploy covered
@@ -124,7 +120,7 @@ def range_join(
     per-key cross product (O(|L|·|I|) per key — fatal at 100 TB).
     Instead both sides are quantized to fixed ``bucket_seconds`` time
     buckets — each interval EXPLODES to the buckets it overlaps, each
-    event maps to exactly one — then an equi-join on (by…, bucket) +
+    event maps to exactly one — then an equi-join on (user_id, bucket) +
     the exact residual predicate. Cost: |L| + Σ interval-spans join
     rows, all hash-distributed. Pick ``bucket_seconds`` near the
     typical interval length (a too-small bucket inflates the explode;
@@ -134,10 +130,10 @@ def range_join(
     with a loud error; pass None to skip the probe.
     """
     us = 1_000_000 * bucket_seconds
-    iv = intervals.filter(F.col(end_col) > F.col(start_col))
-    startb = F.floor(_us(start_col) / us)
+    iv = intervals.filter(F.col("end_ts") > F.col("start_ts"))
+    startb = F.floor(_us("start_ts") / us)
     # end is EXCLUSIVE: the bucket of the last contained microsecond
-    endb = F.floor((_us(end_col) - 1) / us)
+    endb = F.floor((_us("end_ts") - 1) / us)
     if max_buckets_per_interval is not None:
         worst = iv.agg(F.max(endb - startb + 1).alias("m")).first()["m"]
         if worst is not None and worst > max_buckets_per_interval:
@@ -148,12 +144,12 @@ def range_join(
                 "multiply the interval side by that factor"
             )
     ivx = iv.withColumn("_bucket", F.explode(F.sequence(startb, endb)))
-    lx = left.withColumn("_bucket", F.floor(_us(on) / us))
-    cond = [lx[c] == ivx[c] for c in by] + [lx["_bucket"] == ivx["_bucket"]]
+    lx = left.withColumn("_bucket", F.floor(_us("ts") / us))
+    cond = [lx["user_id"] == ivx["user_id"], lx["_bucket"] == ivx["_bucket"]]
     joined = lx.join(ivx, cond).filter(
-        (lx[on] >= ivx[start_col]) & (lx[on] < ivx[end_col])
+        (lx["ts"] >= ivx["start_ts"]) & (lx["ts"] < ivx["end_ts"])
     )
-    keep_iv = [c for c in intervals.columns if c not in (*by,)]
+    keep_iv = [c for c in intervals.columns if c != "user_id"]
     return joined.select(
         *[lx[c] for c in left.columns],
         *[ivx[c] for c in keep_iv],

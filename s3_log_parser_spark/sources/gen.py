@@ -22,6 +22,10 @@ from ..schemas import ROLES, TOOL_NAMES, USER_AGENTS
 
 SEED = 42
 MEGABYTE = 1 << 20
+# share of turns on the hot conversation conv-0 (percent), and share of
+# turns with truncated or bad-timestamp text (per mille)
+HOT_FRACTION_PCT = 10
+MALFORMED_PER_MILLE = 5
 
 
 def _h(seed_tag: int):
@@ -38,30 +42,27 @@ def _h(seed_tag: int):
 def gen_transcripts(
     spark: SparkSession,
     rows: int = 10_000,
-    n_convs: int | None = None,
-    hot_fraction_pct: int = 10,
-    malformed_per_mille: int = 5,
     partitions: int | None = None,
 ) -> DataFrame:
     """Build the transcripts fact table: (conv_id, turn_idx, role, text, tool, ts).
 
-    - hot-key skew: ``hot_fraction_pct``% of turns land on conv-0
-      (exercises salting/AQE skew handling, north_rule).
+    - hot-key skew: ``HOT_FRACTION_PCT``% of turns land on conv-0
+      (exercises salting/AQE skew handling, north_rule); the rest
+      spread over ``max(20, rows // 50) - 1`` other conversations.
     - ~14% of turns are 206 partial downloads split ≈⅓/⅓/⅓ into
       start/mid/end range positions (fake_logs.c:43-44, 94-99 intent).
     - 1% of non-206 turns carry 404/500/403 (E5/P3 domain).
-    - ``malformed_per_mille``/1000 turns have truncated or bad-timestamp
+    - ``MALFORMED_PER_MILLE``/1000 turns have truncated or bad-timestamp
       text → parse_status fixtures for the rejects sink.
     """
-    if n_convs is None:
-        n_convs = max(20, rows // 50)
+    n_convs = max(20, rows // 50)
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
 
     df = spark.range(0, rows, numPartitions=partitions)
 
     # --- conversation identity with deliberate skew --------------------
-    is_hot = (_h(1) % 100) < hot_fraction_pct
+    is_hot = (_h(1) % 100) < HOT_FRACTION_PCT
     conv_num = F.when(is_hot, F.lit(0)).otherwise(
         F.lit(1) + (_h(2) % F.lit(max(1, n_convs - 1)))
     )
@@ -174,7 +175,7 @@ def gen_transcripts(
     ).otherwise(base)
 
     # malformed slice: truncate or corrupt the timestamp
-    mal = (_h(18) % 1000) < malformed_per_mille
+    mal = (_h(18) % 1000) < MALFORMED_PER_MILLE
     mal_kind = _h(19) % 2
     text = (
         F.when(mal & (mal_kind == 0), F.substring(base, 1, 40))

@@ -13,12 +13,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def read_raw_logs(
-    spark: SparkSession, path: str, conv_from_ip: bool = True
-) -> DataFrame:
+def read_raw_logs(spark: SparkSession, path: str) -> DataFrame:
     """raw log text files → transcripts-shaped DataFrame.
 
-    conv identity defaults to the remote-ip token (field 4) so the
+    conv identity is the remote-ip token (field 4) so the
     stable-turn-ordering window and conv-keyed stages have a key;
     turn_idx is the line's order within that conversation by file
     position (the distributed surrogate for the reference's
@@ -28,11 +26,7 @@ def read_raw_logs(
     df = lines.select(F.col("value").alias("text"))
     ip = F.regexp_extract("text", r"^\S+ \S+ \[[^\]]*\] (\S+)", 1)
     ts_str = F.regexp_extract("text", r"\[([^\]]*)\]", 1)
-    conv = (
-        F.when(ip != "", F.concat(F.lit("conv-"), ip)).otherwise(F.lit("conv-?"))
-        if conv_from_ip
-        else F.lit("conv-0")
-    )
+    conv = F.when(ip != "", F.concat(F.lit("conv-"), ip)).otherwise(F.lit("conv-?"))
     df = df.withColumn("conv_id", conv).withColumn(
         # try_: NULL on malformed lines in both ANSI modes
         "ts", F.try_to_timestamp(ts_str, F.lit("dd/MMM/yyyy:HH:mm:ss Z"))

@@ -50,17 +50,15 @@ def start_ingest(
     index_path: str,
     out_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     near: bool = True,
     threshold_x1000: int = 500,
     checks: list[Check] | None = None,
     on_audit_fail: str = "raise",
 ) -> StreamingQuery:
-    """start the ingestion stream: per micro-batch, intra-batch exact
-    dedup → :func:`incremental_dedup` against the index at
-    ``index_path`` (its meta table fixes n/k/mode — a stream can't
-    silently mix hash families) → accepted docs to
+    """start the ingestion stream over ``(doc_id, text, …)`` documents:
+    per micro-batch, intra-batch exact dedup → :func:`incremental_dedup`
+    against the index at ``index_path`` (its meta table fixes n/k/mode —
+    a stream can't silently mix hash families) → accepted docs to
     ``{out_dir}/accepted`` (partitioned by ``_batch``) → index append.
     The query drains available input and stops (the daily-batch
     deployment mode).
@@ -107,19 +105,13 @@ def start_ingest(
                     )
                 return  # skip the batch; the audit table records why
         batch = exact_dedup(
-            batch, key_cols=(text_col,), order=(id_col,)
+            batch, key_cols=("text",), order=("doc_id",)
         ).drop("dup_count")
-        index = read_dedup_index(spark, index_path)
         accepted = incremental_dedup(
             batch,
-            id_col=id_col,
-            text_col=text_col,
             near=near,
             threshold_x1000=threshold_x1000,
-            n=index.n,
-            k=index.k,
-            mode=index.mode,
-            index=index,
+            index=read_dedup_index(spark, index_path),
         ).persist()
         try:
             (
@@ -130,9 +122,7 @@ def start_ingest(
                 .parquet(f"{out_dir}/accepted")
             )
             if accepted.count() > 0:
-                append_to_dedup_index(
-                    accepted, index_path, id_col, text_col
-                )
+                append_to_dedup_index(accepted, index_path)
         finally:
             accepted.unpersist()
 

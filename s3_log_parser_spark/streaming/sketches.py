@@ -49,9 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.sketch import (
-    CMS_DEPTH,
     CMS_WIDTH,
-    HLL_P,
     cms_merge,
     cms_sketch,
     hll_merge,
@@ -128,7 +126,6 @@ def start_hll_stream(
     table_path: str,
     checkpoint_dir: str,
     key_col: str = "k",
-    p: int = HLL_P,
     mode: str = "djb2",
 ) -> StreamingQuery:
     """Maintain a persisted HLL register table over a key stream,
@@ -137,7 +134,7 @@ def start_hll_stream(
 
     def fold_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        sk = hll_sketch(batch, key_col, p=p, mode=mode)
+        sk = hll_sketch(batch, key_col, mode=mode)
         prev = read_hll_table(spark, table_path)
         _overwrite_tiny(hll_merge(prev, sk), table_path)
 
@@ -167,7 +164,6 @@ def start_cms_stream(
     table_path: str,
     checkpoint_dir: str,
     key_col: str = "k",
-    depth: int = CMS_DEPTH,
     width: int = CMS_WIDTH,
     mode: str = "djb2",
 ) -> StreamingQuery:
@@ -204,7 +200,7 @@ def start_cms_stream(
                 f"checkpoint, or start a NEW counter table for the new "
                 f"lineage and cms_merge() the two tables offline."
             )
-        sk = cms_sketch(batch, key_col, depth=depth, width=width, mode=mode)
+        sk = cms_sketch(batch, key_col, width=width, mode=mode)
         fp, n = _batch_fingerprint(batch, key_col)
         merged = (
             cms_merge(prev.drop(*_CMS_META_COLS), sk)

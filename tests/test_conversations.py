@@ -158,8 +158,27 @@ def test_conv_signature_restores_turn_order(spark):
         rows, "conv_id string, turn_idx long, role string, tool string"
     )
     got = conv_signature(df).collect()[0]
-    assert got["sig"] == "system:boot|assistant:|user:"
+    assert got["sig"] == "6:system4:boot|9:assistant0:|4:user0:"
     assert got["n_turns"] == 3
+
+
+def test_conv_dedup_separator_in_tool_name_does_not_collide(spark):
+    # one turn whose tool name spells out a second turn under a
+    # ``role:tool|role:tool`` join must not match a real two-turn conv
+    from s3_log_parser_spark.operators.conversations import conv_dedup
+
+    rows = [
+        ("p", 0, "user", "x|user:y"),
+        ("q", 0, "user", "x"),
+        ("q", 1, "user", "y"),
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx long, role string, tool string"
+    )
+    got = {r["conv_id"]: r for r in conv_dedup(df).collect()}
+    assert got["p"]["sig"] != got["q"]["sig"]
+    assert got["p"]["group_size"] == 1 and got["q"]["group_size"] == 1
+    assert got["p"]["keep"] and got["q"]["keep"]
 
 
 def test_conv_dedup_flags_and_winner(spark):

@@ -9,7 +9,7 @@ from s3_log_parser_spark.operators.dedup import (
     hamming64,
     jaccard_x1000,
     minhash_candidates,
-    minhash_signature,
+    minhash_signatures_df,
     ngram_jaccard_pairs,
     shingle_hashes,
     simhash,
@@ -105,8 +105,8 @@ def test_jaccard_near_dup_vs_distinct(spark, docs):
 
 
 def test_minhash_identical_docs_share_signature(spark, docs):
-    sig = docs.select("doc_id", *minhash_signature("text", k=8))
-    rows = {r["doc_id"]: tuple(r[f"mh_{i}"] for i in range(8)) for r in sig.collect()}
+    sig = minhash_signatures_df(docs, k=8)
+    rows = {r["id"]: tuple(r[f"mh_{i}"] for i in range(8)) for r in sig.collect()}
     assert rows[0] == rows[2]
     assert rows[0] != rows[3]
     # near-dups share most minhashes (probabilistic but deterministic

@@ -1,9 +1,12 @@
-"""Every top-level function and class in the package has a caller.
+"""Every top-level function, class and module constant in the package
+has a reader.
 
 A name counts as used when it appears in any ``.py`` file of the
 checkout outside the lines of its own definition: a call, an import, a
-re-export or a name string looked up at run time all count. The
-generated ``bpe_merges.py`` data module is skipped.
+re-export or a name string looked up at run time all count. Module
+constants are the names bound by a top-level assignment (dunder names
+such as ``__all__`` are exempt). The generated ``bpe_merges.py`` data
+module is skipped.
 """
 
 import ast
@@ -29,20 +32,35 @@ def _words(lines):
     return Counter(w for line in lines for w in WORD.findall(line))
 
 
+def _defined_names(node):
+    """(name, first line) of what a top-level statement defines."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+        return [(node.name, first)]
+    targets = []
+    if isinstance(node, ast.Assign):
+        targets = node.targets
+    elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+        targets = [node.target]
+    names = [
+        n.id
+        for t in targets
+        for n in ast.walk(t)
+        if isinstance(n, ast.Name) and not n.id.startswith("__")
+    ]
+    return [(name, node.lineno) for name in names]
+
+
 def test_every_package_function_and_class_has_a_caller():
     sources = {p: open(p, encoding="utf-8").read().splitlines() for p in _py_files()}
     everywhere = sum((_words(src) for src in sources.values()), Counter())
-    uncalled = []
+    unread = []
     for path, lines in sources.items():
         if not path.startswith(PACKAGE + os.sep):
             continue
         for node in ast.parse("\n".join(lines)).body:
-            if not isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                continue
-            first = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            own = _words(lines[first - 1 : node.end_lineno])
-            if everywhere[node.name] == own[node.name]:
-                uncalled.append(f"{os.path.relpath(path, ROOT)}:{node.name}")
-    assert not uncalled, f"no caller anywhere in the checkout: {uncalled}"
+            for name, first in _defined_names(node):
+                own = _words(lines[first - 1 : node.end_lineno])
+                if everywhere[name] == own[name]:
+                    unread.append(f"{os.path.relpath(path, ROOT)}:{name}")
+    assert not unread, f"no reader anywhere in the checkout: {unread}"

@@ -69,25 +69,32 @@ def test_cms_lookup_broadcasts_the_grid(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_cube_counts_margins_read_cached_cells_not_raw(spark, tmp_path):
+def test_cube_counts_margins_reuse_one_cell_exchange_not_raw(spark, tmp_path):
+    """Every grouping-set branch re-aggregates the finest-cell table,
+    and exchange reuse runs that table's shuffle once: the final
+    adaptive plan holds ONE raw parquet scan and 2^d - 1
+    ``ReusedExchange`` nodes, and no cache is left pinned."""
     from s3_log_parser_spark.operators.aggregate import cube_counts
 
     p = str(tmp_path / "cells")
     spark.createDataFrame(
-        [("a", i % 3, i) for i in range(100)], "t string, w long, v long"
+        [("a", i % 3, i % 5, i) for i in range(100)],
+        "t string, w long, u long, v long",
     ).write.parquet(p)
     df = spark.read.parquet(p)
-    out = cube_counts(df, ["t", "w"], F.col("v"))
-    plan = _plan(out)
-    # every grouping-set branch reads the persisted finest tier (an
-    # InMemoryTableScan), never raw parquet: the only parquet scan in
-    # the tree is the ONE node inside the cached relation (the
-    # formatted plan re-displays it per branch under the same node id)
-    import re
-
-    ids = set(re.findall(r"Scan parquet\s+\((\d+)\)", plan))
-    assert len(ids) == 1
-    assert plan.count("InMemoryTableScan") >= 4
+    jsc = spark.sparkContext._jsc
+    for dims in (["t", "w"], ["t", "w", "u"]):
+        out = cube_counts(df, dims, F.col("v"))
+        pinned = jsc.getPersistentRDDs().size()
+        out.collect()
+        # the formatted plan of an executed query prints the final plan
+        # first, then the initial plan (one scan per branch)
+        plan = _plan(out)
+        assert "== Final Plan ==" in plan
+        final = plan.split("== Initial Plan ==")[0]
+        assert final.count("Scan parquet") == 1
+        assert final.count("ReusedExchange") == (1 << len(dims)) - 1
+        assert jsc.getPersistentRDDs().size() == pinned
 
 
 def test_bm25_broadcasts_everything_and_heaps_topk(spark):
