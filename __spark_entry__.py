@@ -3020,8 +3020,7 @@ def _line_dedup_stats(spark, sf):
     # identically in both engines (every ' table ' token boundary becomes
     # a line break — plain left-to-right literal replace, no regex).
     # key_mode='raw' is the oracle-parity mode; raw==djb2==xxhash64 is
-    # pytest-pinned, and the production xxhash64 family is benched
-    # separately (line_dedup_xxhash64).
+    # pytest-pinned (test_lines key-mode parity).
     from s3_log_parser_spark.functions.hashes import djb2_expr
     from s3_log_parser_spark.operators.lines import line_dedup
 
@@ -3338,7 +3337,7 @@ def _pack_examples_stats(spark, sf):
     # pack_sequences' start-bin estimate). ids_fp pins the full id
     # sequence of every window (DJB2 fold), so content and order are
     # both oracle-checked. Default ids are the DJB2-of-token parity
-    # family; real-BPE ids are the production mode (benched).
+    # family; real-BPE ids are the production mode (pytest-pinned).
     from s3_log_parser_spark.operators.sampling import pack_examples
 
     out = pack_examples(_t(spark, sf, "documents"), ctx_tokens=64)
@@ -4373,7 +4372,7 @@ def _imp_scores(spark, sf):
     docs = _t(spark, sf, "documents")
     # ONE staged kernel pass feeds the raw stream, the target slice AND
     # the scoring stream (three kernel evaluations before r7)
-    bf = bucket_frame(docs, "text", 2, 512, "djb2", keep=("doc_id",))
+    bf = bucket_frame(docs, 2, 512, keep=("doc_id",))
     bf = bf.localCheckpoint(eager=True)
     w = bucket_weights(
         docs, docs.filter(F.col("doc_id") % 7 == 0), n=2, buckets=512,
@@ -4852,7 +4851,7 @@ def _imp_resample(spark, sf):
 
     docs = _t(spark, sf, "documents")
     # ONE staged kernel pass feeds weights (both streams) and scoring
-    bf = bucket_frame(docs, "text", 2, 512, "djb2", keep=("doc_id",))
+    bf = bucket_frame(docs, 2, 512, keep=("doc_id",))
     bf = bf.localCheckpoint(eager=True)
     w = bucket_weights(
         docs, docs.filter(F.col("doc_id") % 7 == 0), n=2, buckets=512,

@@ -15,9 +15,9 @@ in-lambda-reference trap — literals don't). Scoring therefore composes
 with any scan at zero extra exchanges: the exact property a 100 TB
 quality-filter stage needs.
 
-Hash families mirror the rest of the repo: ``mode="djb2"`` is the
-cross-engine parity family (the DuckDB oracle recomputes every bucket
-and weight), ``mode="xxhash64"`` the codegen production family.
+Tokens hash with djb2, the cross-engine parity family: the DuckDB
+oracle recomputes every bucket and weight, and the offline trainer
+buckets with the same hash, so the table and the scorer agree.
 Training lives OFFLINE in ``tools/train_quality.py`` (numpy logistic
 regression distilling :func:`..functions.text.quality_score_x1000`);
 the committed table is ``quality_weights.py``.
@@ -34,32 +34,20 @@ from .text import tokens
 DEFAULT_BUCKETS = 4096
 
 
-def token_buckets(
-    col: Column | str, n_buckets: int = DEFAULT_BUCKETS, mode: str = "djb2"
-) -> Column:
-    """array<long> of hashed feature buckets, one per token."""
-    toks = tokens(col)
-    if mode == "xxhash64":
-        return F.transform(
-            toks, lambda t: F.pmod(F.xxhash64(t), F.lit(n_buckets))
-        )
-    if mode != "djb2":
-        raise ValueError(f"token_buckets: unknown mode {mode!r}")
-    return F.transform(toks, lambda t: F.pmod(djb2_expr(t), F.lit(n_buckets)))
+def token_buckets(col: Column | str, n_buckets: int = DEFAULT_BUCKETS) -> Column:
+    """array<long> of djb2 feature buckets, one per token."""
+    return F.transform(
+        tokens(col), lambda t: F.pmod(djb2_expr(t), F.lit(n_buckets))
+    )
 
 
-def linear_score(
-    col: Column | str,
-    weights: list[int],
-    bias: int = 0,
-    mode: str = "djb2",
-) -> Column:
+def linear_score(col: Column | str, weights: list[int], bias: int = 0) -> Column:
     """long column: the hashed-linear logit (×1000) of each row's text.
 
     ``weights`` (len = n_buckets) becomes a single array LITERAL in the
     plan; the fold adds ``weights[bucket]`` per token row-locally. The
     decision rule is ``score >= threshold`` — integer end to end, so
-    the DuckDB oracle reproduces it exactly in djb2 mode.
+    the DuckDB oracle reproduces it exactly.
 
     The literal is built with ONE ``F.expr`` call: ``F.lit(list)``
     materializes a py4j Column per element, which for the 4096-bucket
@@ -68,7 +56,7 @@ def linear_score(
     one ``array(...)`` SQL string is milliseconds for the same plan
     literal."""
     w = F.expr(f"array({','.join(str(int(v)) for v in weights)})")
-    buckets = token_buckets(col, len(weights), mode)
+    buckets = token_buckets(col, len(weights))
     return (
         F.aggregate(
             buckets,
@@ -79,11 +67,11 @@ def linear_score(
     ).cast("long")
 
 
-def quality_model_score(col: Column | str, mode: str = "djb2") -> Column:
+def quality_model_score(col: Column | str) -> Column:
     """logit (×1000) of the committed distilled quality model."""
     from .quality_weights import BIAS_X1000, WEIGHTS_X1000
 
-    return linear_score(col, WEIGHTS_X1000, BIAS_X1000, mode)
+    return linear_score(col, WEIGHTS_X1000, BIAS_X1000)
 
 
 def quality_model_label(col: Column | str, threshold: int = 0) -> Column:

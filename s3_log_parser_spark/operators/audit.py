@@ -21,10 +21,10 @@ Check algebra (all pure Catalyst, zero Python):
   table: a broadcast left-anti probe of the dim (the fact side never
   shuffles), reported through the same schema.
 
-Thresholds: each check takes ``max_failed`` (absolute) or
+Thresholds: a check passes with zero failing rows, or, when it sets
 ``max_failed_ratio_x1000`` (per-mille, integer — the repo's
-cross-engine arithmetic rule), so "≤ 0.1% bad timestamps" is a
-declarable contract, not a hardcoded zero.
+cross-engine arithmetic rule), with at most that share of the rows, so
+"≤ 0.1% bad timestamps" is a declarable contract, not a hardcoded zero.
 """
 
 from __future__ import annotations
@@ -43,7 +43,6 @@ class Check:
 
     name: str
     fail_expr: Column
-    max_failed: int = 0
     max_failed_ratio_x1000: int | None = None
     # uniqueness-style checks aggregate directly instead of per-row
     agg_failed: Column | None = field(default=None, repr=False)
@@ -128,7 +127,7 @@ def audit(df: DataFrame, checks: list[Check]) -> DataFrame:
     # over the single aggregated row — no second pass, no driver loop
     pairs = []
     for i, ch in enumerate(checks):
-        budget = F.lit(ch.max_failed)
+        budget = F.lit(0)
         if ch.max_failed_ratio_x1000 is not None:
             # floor(total·r/1000) — the same arithmetic FORM the DuckDB
             # oracle uses (floor of a double product), so the parity is

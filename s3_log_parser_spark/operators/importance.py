@@ -57,21 +57,15 @@ def ngram_buckets(col: Column | str, n: int = 2, buckets: int = 4096) -> Column:
 
 
 def bucket_frame(
-    df: DataFrame,
-    text_col: str,
-    n: int,
-    buckets: int,
-    mode: str,
-    keep: tuple[str, ...] = (),
+    df: DataFrame, n: int, buckets: int, keep: tuple[str, ...] = ()
 ) -> DataFrame:
-    """``(keep..., bucket)`` exploded distinct-bucket rows — the
-    vectorized Arrow shingle kernel (bit-exact vs :func:`ngram_buckets`;
-    the bucket fold on the small ``sh`` arrays stays Catalyst)."""
+    """``(keep..., bucket)`` exploded distinct-bucket rows of the
+    ``text`` column — the vectorized Arrow djb2 shingle kernel
+    (bit-exact vs :func:`ngram_buckets`; the bucket fold on the small
+    ``sh`` arrays stays Catalyst)."""
     from ..functions.shingles_arrow import with_shingles
 
-    sh = with_shingles(
-        df.select(*keep, F.col(text_col)), text_col, n, keep=keep, mode=mode
-    )
+    sh = with_shingles(df, "text", n, keep=keep)
     bkts = F.array_distinct(
         F.transform(F.col("sh"), lambda h: F.pmod(h, F.lit(buckets)))
     )
@@ -108,9 +102,7 @@ def bucket_weights(
     from ONE kernel pass."""
 
     def _tagged(df: DataFrame, pre: DataFrame | None, rc: int, tc: int) -> DataFrame:
-        b = pre if pre is not None else bucket_frame(
-            df, "text", n, buckets, "djb2"
-        )
+        b = pre if pre is not None else bucket_frame(df, n, buckets)
         return b.select(
             "bucket",
             F.lit(rc).alias("_r"),
@@ -154,7 +146,7 @@ def importance_scores(
     b = (
         buckets_df
         if buckets_df is not None
-        else bucket_frame(df, "text", n, buckets, "djb2", keep=("doc_id",))
+        else bucket_frame(df, n, buckets, keep=("doc_id",))
     )
     j = b.join(
         F.broadcast(weights.select("bucket", "weight_x1000")), "bucket", "left"

@@ -406,7 +406,7 @@ def pack_examples(
     the DJB2-of-whitespace-token ids (pure Catalyst, DuckDB-oracle
     reproducible — the parity family). Pass
     ``functions.bpe.bpe_token_ids("text")`` for real BPE ids (the
-    production tokenizer; benched, golden-pinned elsewhere).
+    production tokenizer, pytest-pinned in test_sampling).
 
     Shape at scale: the two-level :func:`_running_start` offsets
     (bucket-local windows, never a whole group through one task), a

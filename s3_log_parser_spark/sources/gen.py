@@ -39,11 +39,7 @@ def _h(seed_tag: int):
     )
 
 
-def gen_transcripts(
-    spark: SparkSession,
-    rows: int = 10_000,
-    partitions: int | None = None,
-) -> DataFrame:
+def gen_transcripts(spark: SparkSession, rows: int = 10_000) -> DataFrame:
     """Build the transcripts fact table: (conv_id, turn_idx, role, text, tool, ts).
 
     - hot-key skew: ``HOT_FRACTION_PCT``% of turns land on conv-0
@@ -56,10 +52,7 @@ def gen_transcripts(
       text → parse_status fixtures for the rejects sink.
     """
     n_convs = max(20, rows // 50)
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism
-
-    df = spark.range(0, rows, numPartitions=partitions)
+    df = spark.range(0, rows)  # defaultParallelism partitions
 
     # --- conversation identity with deliberate skew --------------------
     is_hot = (_h(1) % 100) < HOT_FRACTION_PCT

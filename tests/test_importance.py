@@ -120,9 +120,9 @@ def test_staged_bucket_frame_matches_direct_paths(spark):
 
     docs = _docs(spark)
     target = docs.filter(F.col("doc_id") <= 2)
-    bf = bucket_frame(
-        docs, "text", 2, _BUCKETS, "djb2", keep=("doc_id",)
-    ).localCheckpoint(eager=True)
+    bf = bucket_frame(docs, 2, _BUCKETS, keep=("doc_id",)).localCheckpoint(
+        eager=True
+    )
 
     w_direct = bucket_weights(docs, target, n=2, buckets=_BUCKETS)
     w_staged = bucket_weights(

@@ -17,6 +17,12 @@ callers; the generated ``bpe_merges.py`` data module is skipped):
   supplies enough positional arguments to reach it (the ``self`` /
   ``cls`` of a method is not counted), or passes ``*args`` /
   ``**kwargs``, which may carry anything.
+
+The defaulted fields of a package ``@dataclass`` are options too: a
+field with a default (``= value``, ``field(default=…)`` or
+``field(default_factory=…)``) counts as set when
+some call of the class passes it by keyword, or by position in field
+order, or passes ``*args`` / ``**kwargs``.
 """
 
 import ast
@@ -57,9 +63,45 @@ def _defaulted(fn: ast.FunctionDef):
     return out
 
 
-def test_every_defaulted_parameter_is_set_by_some_call():
+def _is_dataclass(cls: ast.ClassDef) -> bool:
+    decorators = [d.func if isinstance(d, ast.Call) else d for d in cls.decorator_list]
+    return any(
+        getattr(d, "id", getattr(d, "attr", None)) == "dataclass" for d in decorators
+    )
+
+
+def _defaulted_fields(cls: ast.ClassDef):
+    """(positional index, name) of each defaulted ``__init__`` field."""
+    out, idx = [], 0
+    for st in cls.body:
+        if not (isinstance(st, ast.AnnAssign) and isinstance(st.target, ast.Name)):
+            continue
+        v = st.value
+        if isinstance(v, ast.Call) and getattr(v.func, "id", None) == "field":
+            defaulted = {k.arg for k in v.keywords} & {"default", "default_factory"}
+        else:
+            defaulted = v is not None
+        if defaulted:
+            out.append((idx, st.target.id))
+        idx += 1
+    return out
+
+
+def _unset(name, params, calls, shift=0):
+    return [
+        param
+        for idx, param in params
+        if not any(
+            star or param in kws or (idx is not None and idx - shift < npos)
+            for npos, kws, star in calls.get(name, [])
+        )
+    ]
+
+
+def _calls_and_defs():
     calls = defaultdict(list)  # callee name -> [(n positional, keywords, star)]
     defs = []
+    classes = []
     for path in _py_files():
         tree = ast.parse(open(path, encoding="utf-8").read())
         aliases = {
@@ -79,22 +121,33 @@ def test_every_defaulted_parameter_is_set_by_some_call():
                 )
                 kws = {k.arg for k in node.keywords}
                 calls[name].append((len(node.args), kws, star))
-            elif path.startswith(PACKAGE + os.sep) and isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef)
-            ):
+            elif not path.startswith(PACKAGE + os.sep):
+                continue
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 defs.append((path, node))
+            elif isinstance(node, ast.ClassDef) and _is_dataclass(node):
+                classes.append((path, node))
+    return calls, defs, classes
 
+
+def test_every_defaulted_parameter_is_set_by_some_call():
+    calls, defs, _ = _calls_and_defs()
     unset = []
     for path, fn in defs:
         args = fn.args.posonlyargs + fn.args.args
         shift = 1 if args and args[0].arg in ("self", "cls") else 0
-        for idx, param in _defaulted(fn):
-            if not any(
-                star or param in kws or (idx is not None and idx - shift < npos)
-                for npos, kws, star in calls.get(fn.name, [])
-            ):
-                unset.append(
-                    f"{os.path.relpath(path, ROOT)}:{fn.lineno} "
-                    f"{fn.name}({param})"
-                )
+        unset += [
+            f"{os.path.relpath(path, ROOT)}:{fn.lineno} {fn.name}({param})"
+            for param in _unset(fn.name, _defaulted(fn), calls, shift)
+        ]
     assert not unset, f"defaulted parameters no call sets: {unset}"
+
+
+def test_every_defaulted_dataclass_field_is_set_by_some_call():
+    calls, _, classes = _calls_and_defs()
+    unset = [
+        f"{os.path.relpath(path, ROOT)}:{cls.lineno} {cls.name}.{name}"
+        for path, cls in classes
+        for name in _unset(cls.name, _defaulted_fields(cls), calls)
+    ]
+    assert not unset, f"defaulted dataclass fields no call sets: {unset}"
