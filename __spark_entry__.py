@@ -1861,7 +1861,9 @@ def _tpii(spark, sf):
 def _decontam(spark, sf):
     # benchmark decontamination: 8-gram collisions between the corpus
     # (doc_id >= 50) and the "eval set" (doc_id < 50); benchmark
-    # shingle set broadcast, corpus never shuffles
+    # shingle set broadcast, corpus never shuffles. The operator hashes
+    # shingles with xxhash64 and the oracle with djb2: the hit counts
+    # agree wherever neither family collides (sf0.001-sf0.1 checked)
     from s3_log_parser_spark.operators.decontam import contamination_hits
 
     docs = _t(spark, sf, "documents")
@@ -1872,7 +1874,7 @@ def _decontam(spark, sf):
     )
 
 
-# shared by incremental_dedup_stats (inline history derivation) and
+# shared by incremental_dedup_stats (index built in memory) and
 # incremental_dedup_indexed (persisted DedupIndex path) — the operator
 # contract is identical, only where the history state comes from differs
 _INC_DEDUP_SQL = f"""
@@ -1935,12 +1937,15 @@ def _inc_dedup(spark, sf):
     # daily-ingestion dedup: the new batch (doc_id >= 250) against the
     # accepted history (doc_id < 250) — exact digest anti-join, then
     # MinHash band join new×history + exact Jaccard verify
-    from s3_log_parser_spark.operators.dedup import incremental_dedup
+    from s3_log_parser_spark.operators.dedup import (
+        build_dedup_index,
+        incremental_dedup,
+    )
 
     docs = _t(spark, sf, "documents")
     hist = docs.filter(F.col("doc_id") < 250)
     new = docs.filter(F.col("doc_id") >= 250)
-    out = incremental_dedup(new, hist, threshold_x1000=500)
+    out = incremental_dedup(new, build_dedup_index(hist), threshold_x1000=500)
     return new.agg(F.count("*").alias("n_new")).crossJoin(
         out.agg(
             F.count("*").alias("n_survive"),
@@ -1955,7 +1960,7 @@ def _inc_dedup_idx(spark, sf):
     # PERSISTED DedupIndex (digests/signatures/shingles parquet tables
     # written once, read back) — the 100 TB shape where per-batch cost
     # never re-derives history state (VERDICT r4 next #2); results must
-    # equal the inline-derivation query bit-for-bit
+    # equal the in-memory-index query bit-for-bit
     import shutil
     import tempfile
 
@@ -3019,15 +3024,14 @@ def _line_dedup_stats(spark, sf):
     # The fixture text has no newlines, so a multi-line view is derived
     # identically in both engines (every ' table ' token boundary becomes
     # a line break — plain left-to-right literal replace, no regex).
-    # key_mode='raw' is the oracle-parity mode; raw==djb2==xxhash64 is
-    # pytest-pinned (test_lines key-mode parity).
+    # line_dedup keys on the line string itself, as the oracle does.
     from s3_log_parser_spark.functions.hashes import djb2_expr
     from s3_log_parser_spark.operators.lines import line_dedup
 
     d = _t(spark, sf, "documents").withColumn(
         "text", F.replace("text", F.lit(" table "), F.lit("\n"))
     )
-    out = line_dedup(d, key_mode="raw", max_docs=1, min_chars=1)
+    out = line_dedup(d, max_docs=1, min_chars=1)
     return out.select(
         "doc_id",
         djb2_expr("text").alias("clean_fp"),
@@ -4011,6 +4015,8 @@ def _turns_from_events(spark, sf):
                 AS BIGINT) AS n_assistant,
            CAST(SUM(CASE WHEN role = 'system' THEN 1 ELSE 0 END) AS BIGINT)
              AS n_system,
+           CAST(SUM(CASE WHEN role = 'tool' THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_tool,
            CAST(COUNT(tool) AS BIGINT) AS n_tool_calls,
            CAST(COUNT(DISTINCT tool) AS BIGINT) AS n_tools,
            CAST((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) // 1000000

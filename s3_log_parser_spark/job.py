@@ -151,14 +151,12 @@ def cmd_prep(args) -> None:
             docs,
             delim=args.line_delim,
             max_docs=args.line_max_docs,
-            key_mode=args.hash_mode,
             carry_cols=carry,
         ).drop("n_lines_kept", "n_lines_dropped").persist()
         stages.append(docs)
         print(f"line dedup: {n0} docs rewritten (boilerplate lines removed)")
     if args.index:
-        # ingestion-mode against a persisted DedupIndex (with Bloom
-        # sidecars if the index was built with them): per-batch cost
+        # ingestion-mode against a persisted DedupIndex: per-batch cost
         # never re-derives history state
         from .operators.dedup import incremental_dedup, read_dedup_index
 
@@ -171,10 +169,10 @@ def cmd_prep(args) -> None:
         print(f"index dedup: {n0} -> {docs.count()} docs")
     elif args.history:
         # ingestion-mode: dedup the batch against everything already
-        # accepted before in-batch prep
-        from .operators.dedup import incremental_dedup
+        # accepted before in-batch prep (index built in memory)
+        from .operators.dedup import build_dedup_index, incremental_dedup
 
-        hist = spark.read.parquet(args.history)
+        hist = build_dedup_index(spark.read.parquet(args.history))
         n0 = docs.count()
         docs = incremental_dedup(
             docs, hist, threshold_x1000=args.near_threshold
@@ -186,9 +184,7 @@ def cmd_prep(args) -> None:
 
         bench = spark.read.parquet(args.benchmark)
         n0 = docs.count()
-        docs = decontaminate(
-            docs, bench, n=args.decontam_n, mode=args.hash_mode
-        ).persist()
+        docs = decontaminate(docs, bench, n=args.decontam_n).persist()
         stages.append(docs)
         print(f"decontamination: {n0} -> {docs.count()} docs")
     res = corpus_prep(
@@ -275,12 +271,7 @@ def cmd_ingest(args) -> None:
 
         empty = spark.createDataFrame([], static.schema)
         write_dedup_index(
-            build_dedup_index(
-                empty,
-                mode=args.hash_mode,
-                bloom_m_bits=args.bloom_bits,
-            ),
-            args.index,
+            build_dedup_index(empty, mode=args.hash_mode), args.index
         )
         print(f"bootstrapped empty dedup index at {args.index} "
               f"(mode={args.hash_mode})")
@@ -488,15 +479,16 @@ def main(argv: list[str] | None = None) -> None:
     )
     pr.add_argument(
         "--hash-mode", choices=["djb2", "xxhash64"], default="djb2",
-        help="shingle hash family (djb2 = cross-engine parity; "
-        "xxhash64 = 64-bit codegen family for production scale)",
+        help="shingle hash family of the near-dup stage and the shuffle "
+        "(djb2 = cross-engine parity; xxhash64 = 64-bit codegen family "
+        "for production scale); line dedup keys on the line itself and "
+        "decontamination always uses xxhash64",
     )
     pr.add_argument("--history", help="parquet of already-accepted docs "
                     "(incremental dedup against it first)")
     pr.add_argument("--index", help="persisted DedupIndex dir (see "
                     "operators.dedup.write_dedup_index) — preferred "
-                    "over --history: per-batch cost, Bloom fast path "
-                    "when the index carries sidecars")
+                    "over --history: per-batch cost")
     pr.add_argument("--benchmark", help="parquet of eval docs "
                     "(n-gram decontamination)")
     pr.add_argument("--decontam-n", type=int, default=13)
@@ -546,9 +538,6 @@ def main(argv: list[str] | None = None) -> None:
                      default="xxhash64",
                      help="index hash family (pinned in meta on first "
                      "run; later runs must match)")
-    ing.add_argument("--bloom-bits", type=int, default=0,
-                     help="Bloom sidecar size in bits (0 = none); "
-                     "~10x expected distinct docs for ~1%% FP")
 
     pf = sub.add_parser(
         "profile",

@@ -1,5 +1,6 @@
-"""Distributed Bloom filter as a tiny DataFrame — the membership
-sidecar for incremental ingestion dedup.
+"""Distributed Bloom filter as a tiny DataFrame — a membership
+pre-filter for dedup-style probes (driver query
+``bloom_prefilter_stats``).
 
 Spark 4.1 does not expose ``bloom_filter_agg``/``might_contain`` in the
 public function registry (they are internal to AQE runtime filtering),

@@ -28,8 +28,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-# the roles conv_stats counts, one ``n_<role>`` column each
-COUNTED_ROLES = ("user", "assistant", "system")
+# the roles conv_stats counts, one ``n_<role>`` column each: the
+# generator's ``schemas.ROLES`` (user/assistant/tool) plus ``system``
+COUNTED_ROLES = ("user", "assistant", "system", "tool")
 
 
 def conv_stats(df: DataFrame) -> DataFrame:

@@ -1071,19 +1071,10 @@ class DedupIndex:
     - ``shingles`` — ``(id, sh, sz)`` shingle sets (exact-Jaccard
                      verify leg; schema = :func:`shingle_frame`)
 
-    plus two optional Bloom sidecars (``bloom_m_bits > 0``), each a
-    ``(word_idx, word)`` bitmap ≤ m/32 rows (operators/bloom.py):
-
-    - ``bloom``       — over the digest strings (exact leg pre-filter)
-    - ``bands_bloom`` — over the band-key strings of ``sigs`` at
-      ``rows_per_band`` (near leg pre-filter)
-
-    With the sidecars present, :func:`incremental_dedup` probes each
-    batch row against the broadcast bitmaps and only *maybe* rows touch
-    the history tables — and those touches are broadcast-semi scans of
-    history (map-side), so the history side is never shuffled. False
-    positives cost an extra exact check; results are identical to the
-    bloom-less path.
+    ``n``/``k``/``mode``/``rows_per_band`` are pinned in the persisted
+    ``meta`` table. Index directories written by older versions may
+    also hold ``bloom/`` and ``bands_bloom/`` sidecar tables; they are
+    never read.
     """
 
     digests: DataFrame
@@ -1092,17 +1083,7 @@ class DedupIndex:
     n: int = 3
     k: int = 8
     mode: str = "djb2"
-    bloom: DataFrame | None = None
-    bands_bloom: DataFrame | None = None
-    bloom_m: int = 0
-    bloom_k: int = 0
     rows_per_band: int = 2
-
-
-def _band_key(bs: Column) -> Column:
-    """string form of a band struct — the generic Bloom key (djb2 mode
-    needs a string; the separator keeps (1,23) and (12,3) distinct)."""
-    return F.concat_ws("|", bs["band"], F.to_json(bs["sig"]))
 
 
 def build_dedup_index(
@@ -1110,62 +1091,37 @@ def build_dedup_index(
     n: int = 3,
     k: int = 8,
     mode: str = "djb2",
-    bloom_m_bits: int = 0,
-    bloom_k: int = 5,
     rows_per_band: int = 2,
 ) -> DedupIndex:
     """derive the index frames from an accepted ``(doc_id, text, …)``
     corpus (the shingle
     frame is materialized eagerly — one kernel pass — and the other
     frames derive from it; persist durably with
-    :func:`write_dedup_index` / the catalog checkpoint).
-    ``bloom_m_bits > 0`` adds the two Bloom sidecars (size the bits at
-    ~10× the expected distinct-doc count for ~1% false positives)."""
-    from .bloom import bloom_build
-
+    :func:`write_dedup_index` / the catalog checkpoint)."""
     digest = F.md5(F.lower(F.trim(F.col("text"))))
     digests = df.select(digest.alias("_dig")).distinct()
     # one materialized shingle frame feeds BOTH the signature and the
     # shingles tables (r7): the pre-split form ran the shingle kernel
     # once per consumer (sigs write + shingles write + any live use)
     sh = shingle_frame(df, n=n, mode=mode).localCheckpoint(eager=True)
-    sigs = _sigs_from_shingle_frame(sh, k)
-    blm = bands = None
-    if bloom_m_bits:
-        blm = bloom_build(digests, "_dig", bloom_m_bits, bloom_k, mode)
-        bands = bloom_build(
-            _minhash_bands(sigs, k, rows_per_band)
-            .select(_band_key(F.col("bs")).alias("_bk")),
-            "_bk", bloom_m_bits, bloom_k, mode,
-        )
     return DedupIndex(
         digests=digests,
-        sigs=sigs,
+        sigs=_sigs_from_shingle_frame(sh, k),
         shingles=sh,
         n=n, k=k, mode=mode,
-        bloom=blm, bands_bloom=bands,
-        bloom_m=bloom_m_bits if blm is not None else 0,
-        bloom_k=bloom_k if blm is not None else 0,
         rows_per_band=rows_per_band,
     )
 
 
 def _write_index_tables(writes: "list[tuple[DataFrame, str, str]]") -> None:
-    """run independent (df, path, mode) parquet writes CONCURRENTLY
-    from a small thread pool (guide §2.6): the index tables are
-    independent jobs, and each tiny write pays ~1 s of fixed
-    shuffle-stage + commit overhead when run back-to-back — overlapped,
-    the wall cost is the slowest single write. Threads share the
-    session; each ``.write`` blocks its own thread only."""
-    from concurrent.futures import ThreadPoolExecutor
+    """run the independent ``(df, path, mode)`` parquet writes of the
+    index tables concurrently (:func:`router.fan_out`): each tiny write
+    pays ~1 s of fixed shuffle-stage + commit overhead when run
+    back-to-back — overlapped, the wall cost is the slowest single
+    write."""
+    from .router import fan_out
 
-    def one(args):
-        df, path, mode = args
-        df.write.mode(mode).parquet(path)
-
-    with ThreadPoolExecutor(max_workers=min(4, len(writes))) as ex:
-        for f in [ex.submit(one, w) for w in writes]:
-            f.result()
+    fan_out(writes, lambda w: w[0].write.mode(w[2]).parquet(w[1]))
 
 
 def write_dedup_index(index: DedupIndex, path: str) -> None:
@@ -1173,7 +1129,7 @@ def write_dedup_index(index: DedupIndex, path: str) -> None:
     parquet tables (meta pins n/k/mode so a reader can't silently mix
     hash families). Appending a day's accepted docs = appending their
     three frames to these tables. The table writes are independent and
-    run concurrently (see :func:`_write_index_tables`)."""
+    run concurrently."""
     from ..session import literal_frame
 
     spark = index.digests.sparkSession
@@ -1181,76 +1137,49 @@ def write_dedup_index(index: DedupIndex, path: str) -> None:
     # LogicalRDD (python scan) measured 3.5 s vs 0.2 s (guide §4)
     meta = literal_frame(
         spark,
-        [(index.n, index.k, index.mode, index.bloom_m, index.bloom_k,
-          index.rows_per_band)],
-        "n int, k int, mode string, bloom_m long, bloom_k int, "
-        "rows_per_band int",
+        [(index.n, index.k, index.mode, index.rows_per_band)],
+        "n int, k int, mode string, rows_per_band int",
     ).coalesce(1)
-    writes = [
+    _write_index_tables([
         (index.digests, f"{path}/digests", "overwrite"),
         (index.sigs, f"{path}/sigs", "overwrite"),
         (index.shingles, f"{path}/shingles", "overwrite"),
         (meta, f"{path}/meta", "overwrite"),
-    ]
-    if index.bloom is not None:
-        writes += [
-            (index.bloom, f"{path}/bloom", "overwrite"),
-            (index.bands_bloom, f"{path}/bands_bloom", "overwrite"),
-        ]
-    _write_index_tables(writes)
+    ])
 
 
 def compact_dedup_index(spark, path: str) -> None:
     """table maintenance for the append loop: rewrite the index with
     duplicate digests collapsed (append lets a digest repeat across
-    batches — correct for the anti-join, wasteful to scan), duplicate
-    (id, signature/shingle) rows dropped (a replayed batch can append
-    the same doc twice; the overwrite output sink dedups itself, the
-    index tables don't — dropDuplicates is safe HERE, uniquely, because
-    same-id rows are bit-identical derivations of the same doc, so the
-    partition-dependent winner carries identical values), and bitmap
-    fragments pre-ORed so readers skip
-    the merge aggregate. Run it like any compaction job — periodically,
-    not per batch. Uses an eager snapshot before each overwrite (the
-    rewrite plan reads the very files it replaces)."""
+    batches — correct for the anti-join, wasteful to scan) and
+    duplicate (id, signature/shingle) rows dropped (a replayed batch
+    can append the same doc twice; the overwrite output sink dedups
+    itself, the index tables don't — dropDuplicates is safe HERE,
+    uniquely, because same-id rows are bit-identical derivations of
+    the same doc, so the partition-dependent winner carries identical
+    values). Run it like any compaction job — periodically, not per
+    batch. Each table is rewritten by a staged swap
+    (:func:`sources.maintenance.overwrite_staged`), so a write that
+    fails leaves that table as it was."""
+    from ..sources.maintenance import overwrite_staged
+
     idx = read_dedup_index(spark, path)
-
-    def _rewrite(df: DataFrame, sub: str) -> None:
-        df.localCheckpoint(eager=True).write.mode("overwrite").parquet(
-            f"{path}/{sub}"
-        )
-
-    _rewrite(idx.digests.distinct(), "digests")
-    _rewrite(idx.sigs.dropDuplicates(["id"]), "sigs")
-    _rewrite(idx.shingles.dropDuplicates(["id"]), "shingles")
-    if idx.bloom is not None:
-        # read_dedup_index already returns the merged (bit_or) form
-        _rewrite(idx.bloom, "bloom")
-        _rewrite(idx.bands_bloom, "bands_bloom")
+    overwrite_staged(idx.digests.distinct(), f"{path}/digests")
+    overwrite_staged(idx.sigs.dropDuplicates(["id"]), f"{path}/sigs")
+    overwrite_staged(idx.shingles.dropDuplicates(["id"]), f"{path}/shingles")
 
 
 def read_dedup_index(spark, path: str) -> DedupIndex:
     """load a persisted index; the returned frames are columnar scans,
     so every downstream use reads parquet instead of recomputing
     signatures/shingles from the raw history text."""
-    meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    md = meta.asDict()
-    bloom_m = md.get("bloom_m") or 0  # pre-sidecar meta has no column
-    blm = bands = None
-    if bloom_m:
-        from .bloom import bloom_merge
-
-        # appends write per-batch bitmap fragments; OR them on read
-        blm = bloom_merge(spark.read.parquet(f"{path}/bloom"))
-        bands = bloom_merge(spark.read.parquet(f"{path}/bands_bloom"))
+    meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
     return DedupIndex(
         digests=spark.read.parquet(f"{path}/digests"),
         sigs=spark.read.parquet(f"{path}/sigs"),
         shingles=spark.read.parquet(f"{path}/shingles"),
         n=meta["n"], k=meta["k"], mode=meta["mode"],
-        bloom=blm, bands_bloom=bands,
-        bloom_m=bloom_m, bloom_k=md.get("bloom_k") or 0,
-        rows_per_band=md.get("rows_per_band") or 2,
+        rows_per_band=meta.get("rows_per_band") or 2,
     )
 
 
@@ -1282,30 +1211,20 @@ def append_to_dedup_index(
     meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
     inc = build_dedup_index(
         snap, n=meta["n"], k=meta["k"], mode=meta["mode"],
-        bloom_m_bits=meta.get("bloom_m") or 0,
-        bloom_k=meta.get("bloom_k") or 5,
         rows_per_band=meta.get("rows_per_band") or 2,
     )
-    writes = [
+    _write_index_tables([
         (inc.digests, f"{path}/digests", "append"),
         (inc.sigs, f"{path}/sigs", "append"),
         (inc.shingles, f"{path}/shingles", "append"),
-    ]
-    if inc.bloom is not None:
-        # appended as fragments; read_dedup_index ORs them back together
-        writes += [
-            (inc.bloom, f"{path}/bloom", "append"),
-            (inc.bands_bloom, f"{path}/bands_bloom", "append"),
-        ]
-    _write_index_tables(writes)
+    ])
 
 
 def incremental_dedup(
     new_df: DataFrame,
-    seen_df: DataFrame | None = None,
+    index: DedupIndex,
     near: bool = True,
     threshold_x1000: int = 500,
-    index: DedupIndex | None = None,
 ) -> DataFrame:
     """Dedup a NEW ingestion batch against the HISTORICAL corpus — the
     daily-pipeline shape (the self-join operators above dedup within
@@ -1322,56 +1241,22 @@ def incremental_dedup(
        Same banding family as :func:`minhash_candidates`, but
        new × history instead of self-join.
 
-    History state comes from ``index`` when given (a
-    :class:`DedupIndex`, typically :func:`read_dedup_index` of the
-    persisted table — n/k/mode and the band width are taken FROM the
-    index so the two sides can't disagree) and is derived from
-    ``seen_df`` otherwise under :func:`build_dedup_index`'s defaults
-    (convenient for tests/small runs, but it recomputes history
-    signatures per call — at 100 TB always pass ``index``). Returns
-    the surviving rows of ``new_df`` (all columns). Within-batch
-    duplicates are NOT removed here — run :func:`exact_dedup` /
-    `corpus_prep` on the batch first.
+    History state is ``index``: :func:`read_dedup_index` of the
+    persisted table, or :func:`build_dedup_index` of a history frame
+    for a one-off run. n/k/mode and the band width are taken FROM the
+    index so the two sides can't disagree. Returns the surviving rows
+    of ``new_df`` (all columns). Within-batch duplicates are NOT
+    removed here — run :func:`exact_dedup` / `corpus_prep` on the
+    batch first.
     """
-    if index is None:
-        if seen_df is None:
-            raise ValueError(
-                "incremental_dedup: pass seen_df (derive history state "
-                "inline) or index= (persisted DedupIndex)"
-            )
-        index = build_dedup_index(seen_df)
     n, k, mode = index.n, index.k, index.mode
     rows_per_band = index.rows_per_band
     digest = F.md5(F.lower(F.trim(F.col("text"))))
-    keyed = new_df.withColumn("_dig", digest)
-    if index.bloom is not None:
-        from .bloom import bloom_probe
-
-        # Bloom fast path: probe the batch against the broadcast digest
-        # bitmap — rows the filter rules out are definitely new and
-        # never touch history. The *maybe* rows (true dups + false
-        # positives, a small set for a mostly-novel batch) broadcast
-        # into a LEFT SEMI against the history digest table, which is
-        # therefore scanned map-side and NEVER SHUFFLED; the hit set
-        # (≤ |maybe|) broadcasts back into the anti-join. The batch is
-        # scanned twice (the two union branches) — map-side work,
-        # traded for removing the batch×history shuffle. Identical
-        # survivors to the bloom-less path: no false negatives.
-        probed = bloom_probe(
-            keyed, index.bloom, "_dig",
-            index.bloom_m, index.bloom_k, mode,
-        )
-        maybe = probed.filter(F.col("bloom_maybe"))
-        hits = index.digests.join(
-            F.broadcast(maybe.select("_dig").distinct()), "_dig", "left_semi"
-        )
-        survivors = (
-            probed.filter(~F.col("bloom_maybe"))
-            .unionByName(maybe.join(F.broadcast(hits), "_dig", "left_anti"))
-            .drop("bloom_maybe", "_dig")
-        )
-    else:
-        survivors = keyed.join(index.digests, "_dig", "left_anti").drop("_dig")
+    survivors = (
+        new_df.withColumn("_dig", digest)
+        .join(index.digests, "_dig", "left_anti")
+        .drop("_dig")
+    )
     if not near:
         return survivors
     # one materialized shingle frame for the batch side (r7): both the
@@ -1382,29 +1267,6 @@ def incremental_dedup(
         _sigs_from_shingle_frame(surv_sh, k), k, rows_per_band
     )
     seen_bands = _minhash_bands(index.sigs, k, rows_per_band)
-    if index.bands_bloom is not None:
-        from .bloom import bloom_probe
-
-        # same shape for the near leg: only new bands whose key might
-        # exist in history enter the join, and the history band side is
-        # first trimmed by a broadcast semi-join on those keys — the
-        # full history signature table streams map-side past a
-        # broadcast, no shuffle. Any band value actually present in
-        # history always survives the probe, so the candidate pair set
-        # is identical to the unfiltered join.
-        nb = bloom_probe(
-            new_bands.withColumn("_bk", _band_key(F.col("bs"))),
-            index.bands_bloom, "_bk",
-            index.bloom_m, index.bloom_k, mode,
-        ).filter(F.col("bloom_maybe"))
-        seen_bands = (
-            seen_bands.withColumn("_bk", _band_key(F.col("bs")))
-            .join(
-                F.broadcast(nb.select("_bk").distinct()), "_bk", "left_semi"
-            )
-            .drop("_bk")
-        )
-        new_bands = nb.drop("bloom_maybe", "_bk")
     cand = (
         new_bands.alias("a")
         .join(seen_bands.alias("b"), F.col("a.bs") == F.col("b.bs"))

@@ -18,12 +18,14 @@ from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.catalog import Catalog
+
+T = TypeVar("T")
 
 
 @dataclass
@@ -80,16 +82,17 @@ def sink_layout(routed: DataFrame, partition_by: tuple[str, ...]) -> DataFrame:
     return routed.repartition(nshuf, *[F.col(c) for c in partition_by], salt)
 
 
-def fan_out(routes: list[Route], write_one: Callable[[Route], None]) -> None:
-    """Run ``write_one`` for every route from a thread pool. Sinks are
+def fan_out(jobs: list[T], write_one: Callable[[T], None]) -> None:
+    """Run ``write_one`` for every job (a sink's route, a dedup index
+    table) from a thread pool, one thread each. The writes are
     independent jobs, so submitting them concurrently lets the Spark
     scheduler fill cores across their scan/write barriers (threads share
     the SparkSession; each write blocks its own thread only). With all
-    four in flight the scheduler interleaves their stages, so the
+    four sinks in flight the scheduler interleaves their stages, so the
     scan/commit barriers of one sink hide behind the compute of the
     others (oversubscription just queues tasks)."""
-    with ThreadPoolExecutor(max_workers=len(routes)) as ex:
-        for f in [ex.submit(write_one, r) for r in routes]:
+    with ThreadPoolExecutor(max_workers=len(jobs)) as ex:
+        for f in [ex.submit(write_one, j) for j in jobs]:
             f.result()
 
 

@@ -68,6 +68,38 @@ def _fs_for(spark: SparkSession, path: str):
     return jpath.getFileSystem(conf), jpath
 
 
+def overwrite_staged(df: DataFrame, path: str) -> None:
+    """Crash-safe overwrite of a table that ``df`` may itself read:
+    materialize (severing lineage BEFORE touching the table the plan
+    reads from), write to a hidden sibling, swap via two renames. A
+    plain ``mode("overwrite")`` deletes the target before its write
+    job runs, so a failed write would lose the table; here the live
+    table is never deleted before its replacement is fully committed.
+    The caller picks the file count (e.g. ``coalesce(1)`` for
+    sketch-sized tables)."""
+    spark = df.sparkSession
+    fs, target = _fs_for(spark, path)
+    JPath = spark._jvm.org.apache.hadoop.fs.Path
+    run_id = uuid.uuid4().hex[:12]
+    parent = target.getParent()
+    base = target.getName()
+    staged = JPath(parent, f".{base}.staged.{run_id}")
+    old = JPath(parent, f".{base}.old.{run_id}")
+
+    df.localCheckpoint(eager=True).write.mode("overwrite").parquet(str(staged))
+    had_prev = fs.exists(target)
+    if had_prev and not fs.rename(target, old):  # pragma: no cover
+        fs.delete(staged, True)
+        raise RuntimeError(f"staged overwrite: rename away failed: {path}")
+    if not fs.rename(staged, target):  # pragma: no cover
+        if had_prev:
+            fs.rename(old, target)  # roll back
+        fs.delete(staged, True)
+        raise RuntimeError(f"staged overwrite: swap-in failed: {path}")
+    if had_prev:
+        fs.delete(old, True)
+
+
 def _is_data_file(name: str) -> bool:
     return name.endswith(".parquet") and not name.startswith((".", "_"))
 

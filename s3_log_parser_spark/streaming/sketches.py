@@ -27,22 +27,20 @@ is the whole design:
   mismatch raises loudly instead of silently under- or
   double-counting.
 
-Table overwrites are staged: write the merged sketch to a hidden
-sibling dir, then swap with two FS renames (the same protocol as
-``sources.maintenance.compact_table``). A plain ``mode("overwrite")``
-would delete the table at job START, so a crash mid-write would
-destroy the whole accumulated history — the one artifact this design
-promises never to rebuild from raw. The crash window is now two
-metadata renames; hidden leftovers (dot-prefixed) are invisible to
-readers and recoverable by hand. All paths go through the Hadoop
+Table overwrites are staged (``sources.maintenance.overwrite_staged``):
+write the merged sketch to a hidden sibling dir, then swap with two FS
+renames (the same protocol as ``sources.maintenance.compact_table``).
+A plain ``mode("overwrite")`` would delete the table at job START, so
+a crash mid-write would destroy the whole accumulated history — the
+one artifact this design promises never to rebuild from raw. The
+crash window is now two metadata renames; hidden leftovers
+(dot-prefixed) are invisible to readers and recoverable by hand. All paths go through the Hadoop
 FileSystem API, so file://, hdfs:// and s3a:// behave identically
 (an ``os.path`` check would treat every remote table as absent and
 quietly reset it each batch).
 """
 
 from __future__ import annotations
-
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -55,7 +53,7 @@ from ..operators.sketch import (
     hll_merge,
     hll_sketch,
 )
-from ..sources.maintenance import _fs_for
+from ..sources.maintenance import _fs_for, overwrite_staged
 
 _HLL_SCHEMA = "bucket int, r int"
 # the CMS table carries its replay bookkeeping as constant columns
@@ -90,37 +88,6 @@ def cms_counters(spark: SparkSession, path: str) -> DataFrame:
     return read_cms_table(spark, path).drop(*_CMS_META_COLS)
 
 
-def _overwrite_tiny(df: DataFrame, path: str) -> None:
-    """Staged overwrite of a sketch-sized table: materialize (severing
-    lineage BEFORE touching the table the plan reads from — the
-    DedupIndex self-overwrite trap), write to a hidden sibling, swap
-    via two renames. Never deletes the live table before its
-    replacement is fully committed."""
-    spark = df.sparkSession
-    fs, target = _fs_for(spark, path)
-    jvm = spark._jvm
-    JPath = jvm.org.apache.hadoop.fs.Path
-    run_id = uuid.uuid4().hex[:12]
-    parent = target.getParent()
-    base = target.getName()
-    staged = JPath(parent, f".{base}.staged.{run_id}")
-    old = JPath(parent, f".{base}.old.{run_id}")
-
-    materialized = df.localCheckpoint(eager=True)
-    materialized.coalesce(1).write.mode("overwrite").parquet(str(staged))
-    had_prev = fs.exists(target)
-    if had_prev and not fs.rename(target, old):  # pragma: no cover
-        fs.delete(staged, True)
-        raise RuntimeError(f"sketch overwrite: rename away failed: {path}")
-    if not fs.rename(staged, target):  # pragma: no cover
-        if had_prev:
-            fs.rename(old, target)  # roll back
-        fs.delete(staged, True)
-        raise RuntimeError(f"sketch overwrite: swap-in failed: {path}")
-    if had_prev:
-        fs.delete(old, True)
-
-
 def start_hll_stream(
     keys_stream: DataFrame,
     table_path: str,
@@ -136,7 +103,7 @@ def start_hll_stream(
         spark = batch.sparkSession
         sk = hll_sketch(batch, key_col, mode=mode)
         prev = read_hll_table(spark, table_path)
-        _overwrite_tiny(hll_merge(prev, sk), table_path)
+        overwrite_staged(hll_merge(prev, sk).coalesce(1), table_path)
 
     return (
         keys_stream.writeStream.foreachBatch(fold_batch)
@@ -208,7 +175,7 @@ def start_cms_stream(
             .withColumn("_fp", F.lit(fp).cast("long"))
             .withColumn("_fn", F.lit(n).cast("long"))
         )
-        _overwrite_tiny(merged, table_path)
+        overwrite_staged(merged.coalesce(1), table_path)
 
     return (
         keys_stream.writeStream.foreachBatch(fold_batch)

@@ -1,9 +1,8 @@
-"""operators/bloom.py — relational Bloom filter + DedupIndex sidecars.
+"""operators/bloom.py — relational Bloom filter.
 
-Correctness contract: NO false negatives ever (exactness of the
-surrounding dedup depends on it); false positives only cost extra
-exact checks. Scale contract: probing never shuffles the probed side,
-and the bloom-enabled incremental exact leg never shuffles history.
+Correctness contract: NO false negatives ever (an exact check behind
+the filter depends on it); false positives only cost extra exact
+checks. Scale contract: probing never shuffles the probed side.
 """
 
 import pyspark.sql.functions as F
@@ -69,161 +68,3 @@ def test_merge_equals_full_build(spark):
     assert merged.subtract(full).count() == 0
     assert full.subtract(merged).count() == 0
 
-
-HIST_TEXT = (
-    "the quick brown fox jumps over one lazy dog while seven other "
-    "animals watch from a distant hill"
-)
-
-
-def _hist(spark):
-    return spark.createDataFrame(
-        [(0, HIST_TEXT),
-         (1, "entirely separate historical record about glacier melt "
-             "rates in northern fjords")],
-        "doc_id long, text string",
-    )
-
-
-def _batch(spark):
-    return spark.createDataFrame(
-        [
-            (100, HIST_TEXT),                              # exact dup
-            (101, HIST_TEXT.replace("seven", "nine")),     # near dup
-            (102, "totally fresh content about sailing boats across "
-                  "quiet northern lakes during autumn"),
-        ],
-        "doc_id long, text string",
-    )
-
-
-def test_incremental_dedup_bloom_parity(spark, tmp_path):
-    """bloom-sidecar index path returns EXACTLY the plain-index
-    survivors (both legs), through a write→read round-trip."""
-    from s3_log_parser_spark.operators.dedup import (
-        build_dedup_index,
-        incremental_dedup,
-        read_dedup_index,
-        write_dedup_index,
-    )
-
-    hist, new = _hist(spark), _batch(spark)
-    idx_dir = str(tmp_path / "bloom_index")
-    write_dedup_index(
-        build_dedup_index(hist, bloom_m_bits=M, bloom_k=K), idx_dir
-    )
-    idx = read_dedup_index(spark, idx_dir)
-    assert idx.bloom_m == M and idx.bloom is not None
-
-    out = incremental_dedup(new, index=idx, threshold_x1000=500)
-    assert {r["doc_id"] for r in out.collect()} == {102}
-    exact_only = incremental_dedup(new, index=idx, near=False)
-    assert {r["doc_id"] for r in exact_only.collect()} == {101, 102}
-
-
-def test_incremental_dedup_bloom_exact_leg_no_shuffle_join(spark, tmp_path):
-    """with the digest bloom, the exact leg is broadcast joins only —
-    the history digest table is scanned map-side, never shuffled."""
-    from s3_log_parser_spark.operators.dedup import (
-        build_dedup_index,
-        incremental_dedup,
-        read_dedup_index,
-        write_dedup_index,
-    )
-
-    idx_dir = str(tmp_path / "bloom_index2")
-    write_dedup_index(
-        build_dedup_index(_hist(spark), bloom_m_bits=M, bloom_k=K), idx_dir
-    )
-    idx = read_dedup_index(spark, idx_dir)
-    out = incremental_dedup(_batch(spark), index=idx, near=False)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in plan
-    assert {r["doc_id"] for r in out.collect()} == {101, 102}
-
-
-def test_append_maintains_bloom(spark, tmp_path):
-    """daily loop with sidecars: append batch-1 survivors, then batch 2
-    must drop dups of BOTH original history and batch-1 accepts —
-    bitmap fragments OR back together on read."""
-    from s3_log_parser_spark.operators.dedup import (
-        append_to_dedup_index,
-        build_dedup_index,
-        incremental_dedup,
-        read_dedup_index,
-        write_dedup_index,
-    )
-
-    idx_dir = str(tmp_path / "bloom_index3")
-    write_dedup_index(
-        build_dedup_index(_hist(spark), bloom_m_bits=M, bloom_k=K), idx_dir
-    )
-    b1 = incremental_dedup(
-        _batch(spark), index=read_dedup_index(spark, idx_dir),
-        threshold_x1000=500,
-    ).persist()
-    assert {r["doc_id"] for r in b1.collect()} == {102}
-    append_to_dedup_index(b1, idx_dir)
-
-    b2 = spark.createDataFrame(
-        [(200, "totally fresh content about sailing boats across quiet "
-               "northern lakes during autumn"),     # dup of batch-1 accept
-         (201, HIST_TEXT),                          # dup of original history
-         (202, "genuinely novel follow-up story regarding mountain trail "
-               "maintenance crews and their tools")],
-        "doc_id long, text string",
-    )
-    out = incremental_dedup(
-        b2, index=read_dedup_index(spark, idx_dir), threshold_x1000=500
-    )
-    assert {r["doc_id"] for r in out.collect()} == {202}
-
-
-def test_compact_dedup_index(spark, tmp_path):
-    """compaction removes append-duplicated digests/rows and pre-ORs
-    bitmap fragments; dedup results are unchanged afterwards."""
-    from s3_log_parser_spark.operators.dedup import (
-        append_to_dedup_index,
-        build_dedup_index,
-        compact_dedup_index,
-        incremental_dedup,
-        read_dedup_index,
-        write_dedup_index,
-    )
-
-    idx_dir = str(tmp_path / "bloom_index4")
-    write_dedup_index(
-        build_dedup_index(_hist(spark), bloom_m_bits=M, bloom_k=K), idx_dir
-    )
-    # simulate a replayed append: the same accepted doc lands twice
-    accept = spark.createDataFrame(
-        [(300, "replayed accepted document about harbor ferries and "
-               "their winter maintenance schedule")],
-        "doc_id long, text string",
-    )
-    append_to_dedup_index(accept, idx_dir)
-    append_to_dedup_index(accept, idx_dir)
-    before = read_dedup_index(spark, idx_dir)
-    assert before.digests.count() > before.digests.distinct().count()
-
-    compact_dedup_index(spark, idx_dir)
-    after = read_dedup_index(spark, idx_dir)
-    assert after.digests.count() == after.digests.distinct().count()
-    assert after.sigs.groupBy("id").count().filter("count > 1").count() == 0
-    # bitmap fragments collapsed to one row per word
-    raw_bloom = spark.read.parquet(f"{idx_dir}/bloom")
-    assert (
-        raw_bloom.groupBy("word_idx").count().filter("count > 1").count()
-        == 0
-    )
-    # behavior unchanged: history dup + replayed-accept dup both drop
-    batch = spark.createDataFrame(
-        [(400, HIST_TEXT),
-         (401, "replayed accepted document about harbor ferries and "
-               "their winter maintenance schedule"),
-         (402, "an unrelated report on tidal measurements near the "
-               "eastern breakwater during spring")],
-        "doc_id long, text string",
-    )
-    out = incremental_dedup(batch, index=after, threshold_x1000=500)
-    assert {r["doc_id"] for r in out.collect()} == {402}

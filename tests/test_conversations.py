@@ -50,6 +50,17 @@ def test_conv_stats_features(spark):
     assert got["c"]["n_tool_calls"] == 0 and got["c"]["n_tools"] == 0
 
 
+def test_conv_stats_role_columns_cover_generated_turns(spark):
+    """every generated turn lands in exactly one ``n_<role>`` column:
+    the generator's roles (schemas.ROLES) are all counted."""
+    from s3_log_parser_spark.operators.conversations import COUNTED_ROLES
+    from s3_log_parser_spark.sources.gen import gen_transcripts
+
+    stats = conv_stats(gen_transcripts(spark, rows=2000))
+    n_roles = sum(F.col(f"n_{r}") for r in COUNTED_ROLES)
+    assert stats.filter(n_roles != F.col("n_turns")).count() == 0
+
+
 def test_conv_stats_one_aggregate_no_window(spark, tmp_path):
     import io
     import re

@@ -642,14 +642,17 @@ def test_incremental_dedup_semantics(spark):
     """ingestion-batch dedup vs history: exact text match dropped,
     near-dup of a historical doc dropped, genuinely new doc kept;
     near=False keeps near-dups."""
-    from s3_log_parser_spark.operators.dedup import incremental_dedup
+    from s3_log_parser_spark.operators.dedup import (
+        build_dedup_index,
+        incremental_dedup,
+    )
 
     hist_text = (
         "the quick brown fox jumps over one lazy dog while seven other "
         "animals watch from a distant hill"
     )
-    hist = spark.createDataFrame(
-        [(0, hist_text)], "doc_id long, text string"
+    hist = build_dedup_index(
+        spark.createDataFrame([(0, hist_text)], "doc_id long, text string")
     )
     new = spark.createDataFrame(
         [
@@ -706,20 +709,33 @@ def test_decontamination(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan  # corpus side never shuffles
-    # production 64-bit family finds the same contamination set (both
-    # sides shingle under the same family, so hits correspond 1:1)
-    prod = {
-        r["doc_id"]: r["n_hits"]
-        for r in contamination_hits(
-            docs, bench, n=5, mode="xxhash64"
-        ).collect()
-    }
-    assert prod == hits
+
+
+def test_decontamination_no_hash_collision_hit(spark):
+    """two different 5-grams whose 32-bit DJB2 shingle values are equal
+    (djb2("aB") == djb2("b!"), so the token digests and the fold agree)
+    share no n-gram: the clean doc is neither flagged nor removed."""
+    from s3_log_parser_spark.functions.hashes import djb2_py
+    from s3_log_parser_spark.operators.decontam import (
+        contamination_hits,
+        decontaminate,
+    )
+
+    assert djb2_py("aB") == djb2_py("b!")
+    bench = spark.createDataFrame(
+        [(0, "w1 w2 b! w4 w5")], "doc_id long, text string"
+    )
+    docs = spark.createDataFrame(
+        [(10, "w1 w2 aB w4 w5")], "doc_id long, text string"
+    )
+    assert contamination_hits(docs, bench, n=5).count() == 0
+    kept = {r["doc_id"] for r in decontaminate(docs, bench, n=5).collect()}
+    assert kept == {10}
 
 
 def test_incremental_dedup_persisted_index(spark, tmp_path):
     """the persisted-DedupIndex path must (a) produce exactly the
-    inline-derivation survivors and (b) never scan the raw history
+    in-memory-index survivors and (b) never scan the raw history
     table — per-batch cost scales with the batch, not the history."""
     from s3_log_parser_spark.operators.dedup import (
         build_dedup_index,
@@ -759,9 +775,10 @@ def test_incremental_dedup_persisted_index(spark, tmp_path):
 
     out = incremental_dedup(new, index=idx, threshold_x1000=500)
     assert {r["doc_id"] for r in out.collect()} == {102}
-    # parity with the inline-derivation path
+    # parity with an index built in memory (never written)
     base = incremental_dedup(
-        new, spark.read.parquet(hist_raw), threshold_x1000=500
+        new, build_dedup_index(spark.read.parquet(hist_raw)),
+        threshold_x1000=500,
     )
     assert {r["doc_id"] for r in base.collect()} == {102}
 
@@ -773,14 +790,6 @@ def test_incremental_dedup_persisted_index(spark, tmp_path):
     assert not any("hist_raw_docs" in f for f in files)
     for part in ("digests", "sigs", "shingles"):
         assert any(f"dedup_index/{part}" in f for f in files)
-
-
-def test_incremental_dedup_requires_history_state(spark):
-    from s3_log_parser_spark.operators.dedup import incremental_dedup
-
-    new = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="seen_df .*or index"):
-        incremental_dedup(new)
 
 
 def test_dup_clusters_chain_closure(spark):
@@ -966,6 +975,158 @@ def test_append_to_dedup_index_with_persisted_survivors(spark, tmp_path):
         r["id"] for r in spark.read.parquet(f"{idx}/shingles").collect()
     }
     assert shing_ids == {0, 7}
+
+
+IDX_HIST_TEXT = (
+    "the quick brown fox jumps over one lazy dog while seven other "
+    "animals watch from a distant hill"
+)
+REPLAYED_TEXT = (
+    "replayed accepted document about harbor ferries and their winter "
+    "maintenance schedule"
+)
+
+
+def _idx_hist(spark):
+    return spark.createDataFrame(
+        [(0, IDX_HIST_TEXT),
+         (1, "entirely separate historical record about glacier melt "
+             "rates in northern fjords")],
+        "doc_id long, text string",
+    )
+
+
+def _replayed_index(spark, idx_dir):
+    """a persisted index whose append was replayed: the same accepted
+    doc landed twice, so every table holds duplicate rows."""
+    from s3_log_parser_spark.operators.dedup import (
+        append_to_dedup_index,
+        build_dedup_index,
+        write_dedup_index,
+    )
+
+    write_dedup_index(build_dedup_index(_idx_hist(spark)), idx_dir)
+    accept = spark.createDataFrame(
+        [(300, REPLAYED_TEXT)], "doc_id long, text string"
+    )
+    append_to_dedup_index(accept, idx_dir)
+    append_to_dedup_index(accept, idx_dir)
+
+
+def test_append_maintains_index(spark, tmp_path):
+    """daily loop: append batch-1 survivors, then batch 2 must drop
+    dups of BOTH original history and batch-1 accepts."""
+    from s3_log_parser_spark.operators.dedup import (
+        append_to_dedup_index,
+        build_dedup_index,
+        incremental_dedup,
+        read_dedup_index,
+        write_dedup_index,
+    )
+
+    fresh = (
+        "totally fresh content about sailing boats across quiet "
+        "northern lakes during autumn"
+    )
+    idx_dir = str(tmp_path / "index")
+    write_dedup_index(build_dedup_index(_idx_hist(spark)), idx_dir)
+    b1 = incremental_dedup(
+        spark.createDataFrame(
+            [
+                (100, IDX_HIST_TEXT),                           # exact dup
+                (101, IDX_HIST_TEXT.replace("seven", "nine")),  # near dup
+                (102, fresh),
+            ],
+            "doc_id long, text string",
+        ),
+        read_dedup_index(spark, idx_dir),
+        threshold_x1000=500,
+    ).persist()
+    assert {r["doc_id"] for r in b1.collect()} == {102}
+    append_to_dedup_index(b1, idx_dir)
+    b1.unpersist()
+
+    b2 = spark.createDataFrame(
+        [(200, fresh),                              # dup of batch-1 accept
+         (201, IDX_HIST_TEXT),                      # dup of original history
+         (202, "genuinely novel follow-up story regarding mountain trail "
+               "maintenance crews and their tools")],
+        "doc_id long, text string",
+    )
+    out = incremental_dedup(
+        b2, read_dedup_index(spark, idx_dir), threshold_x1000=500
+    )
+    assert {r["doc_id"] for r in out.collect()} == {202}
+
+
+def test_compact_dedup_index(spark, tmp_path):
+    """compaction removes append-duplicated digests/rows; dedup results
+    are unchanged afterwards."""
+    from s3_log_parser_spark.operators.dedup import (
+        compact_dedup_index,
+        incremental_dedup,
+        read_dedup_index,
+    )
+
+    idx_dir = str(tmp_path / "index")
+    _replayed_index(spark, idx_dir)
+    before = read_dedup_index(spark, idx_dir)
+    assert before.digests.count() > before.digests.distinct().count()
+
+    compact_dedup_index(spark, idx_dir)
+    after = read_dedup_index(spark, idx_dir)
+    assert after.digests.count() == after.digests.distinct().count()
+    assert after.sigs.groupBy("id").count().filter("count > 1").count() == 0
+    # behavior unchanged: history dup + replayed-accept dup both drop
+    batch = spark.createDataFrame(
+        [(400, IDX_HIST_TEXT),
+         (401, REPLAYED_TEXT),
+         (402, "an unrelated report on tidal measurements near the "
+               "eastern breakwater during spring")],
+        "doc_id long, text string",
+    )
+    out = incremental_dedup(batch, after, threshold_x1000=500)
+    assert {r["doc_id"] for r in out.collect()} == {402}
+
+
+def test_compact_dedup_index_failed_write_keeps_index(
+    spark, tmp_path, monkeypatch
+):
+    """a table write that fails mid-compaction (here: the sigs rewrite,
+    after digests was rewritten) must leave the index readable with
+    every row it had. A plain overwrite deletes the target before its
+    write job runs, so the failure would lose the sigs table."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from s3_log_parser_spark.operators.dedup import (
+        compact_dedup_index,
+        read_dedup_index,
+    )
+
+    idx_dir = str(tmp_path / "index")
+    _replayed_index(spark, idx_dir)
+    before = read_dedup_index(spark, idx_dir)
+    n_sigs, n_shingles = before.sigs.count(), before.shingles.count()
+    digests = {r["_dig"] for r in before.digests.collect()}
+
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if "sigs" in path:
+            # an unknown codec fails inside the write job, after an
+            # overwrite has cleared its target
+            self.option("compression", "no-such-codec")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(Exception):
+        compact_dedup_index(spark, idx_dir)
+    monkeypatch.undo()
+
+    after = read_dedup_index(spark, idx_dir)
+    assert after.sigs.count() == n_sigs
+    assert after.shingles.count() == n_shingles
+    assert {r["_dig"] for r in after.digests.collect()} == digests
 
 
 def test_dup_clusters_string_ids_full_closure(spark):

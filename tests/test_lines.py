@@ -1,12 +1,8 @@
 """Line-level (boilerplate) dedup: operators/lines.py."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from s3_log_parser_spark.operators.lines import (
-    line_dedup,
-    line_frequencies,
-)
+from s3_log_parser_spark.operators.lines import line_dedup
 
 BOILER = "accept cookies to continue"
 
@@ -45,21 +41,6 @@ def test_line_dedup_drops_cross_doc_lines_keeps_order(spark, docs):
     assert out[5]["text"] == "unique five alpha"
 
 
-def test_line_dedup_key_mode_parity(spark, docs):
-    base = sorted(
-        line_dedup(docs, key_mode="raw").collect(),
-        key=lambda r: r["doc_id"],
-    )
-    for mode in ("djb2", "xxhash64"):
-        got = sorted(
-            line_dedup(docs, key_mode=mode).collect(),
-            key=lambda r: r["doc_id"],
-        )
-        assert got == base, mode
-    with pytest.raises(ValueError, match="key mode"):
-        line_dedup(docs, key_mode="md5")
-
-
 def test_line_dedup_max_docs_and_min_chars(spark, docs):
     # max_docs=4: even the boilerplate (4 docs) is within tolerance
     out4 = {r["doc_id"]: r for r in line_dedup(docs, max_docs=4).collect()}
@@ -73,25 +54,6 @@ def test_line_dedup_max_docs_and_min_chars(spark, docs):
     assert out[5]["text"] == "ok\nunique five alpha"
 
 
-def test_line_dedup_precomputed_freq_seam(spark, docs):
-    """feeding a materialized line_frequencies frame reproduces the
-    inline result — the persisted-table seam for corpus snapshots."""
-    freq = line_frequencies(docs).cache()
-    try:
-        with_seam = sorted(
-            line_dedup(docs, freq=freq).collect(), key=lambda r: r["doc_id"]
-        )
-        inline = sorted(
-            line_dedup(docs).collect(), key=lambda r: r["doc_id"]
-        )
-        assert with_seam == inline
-        # the frequency table itself counts DISTINCT docs per line
-        n_docs = {r["n_docs"] for r in freq.collect()}
-        assert max(n_docs) == 4  # the boilerplate line
-    finally:
-        freq.unpersist()
-
-
 def test_line_dedup_roundtrip_when_no_duplicates(spark):
     """a corpus with all-unique lines passes through byte-identical —
     pins the split/reassemble pair (ordering, delimiter, no trimming)."""
@@ -103,10 +65,9 @@ def test_line_dedup_roundtrip_when_no_duplicates(spark):
 
 
 def test_line_dedup_scan_counts(spark, docs, tmp_path):
-    """inline mode scans the corpus exactly twice (the frequency pass
-    and the rewrite pass — a frequency-based removal can't do better
-    without materializing the exploded frame); with a precomputed
-    ``freq=`` table it is ONE scan. The flag-join design keeps it
+    """the corpus is scanned exactly twice (the frequency pass and the
+    rewrite pass — a frequency-based removal can't do better without
+    materializing the exploded frame). The flag-join design keeps it
     there — the old anti-join + separate totals pass was three."""
     p = str(tmp_path / "docs.parquet")
     docs.write.parquet(p)
@@ -115,15 +76,8 @@ def test_line_dedup_scan_counts(spark, docs, tmp_path):
         line_dedup(stored)._jdf.queryExecution().executedPlan().toString()
     )
     # scans are distinguished by ReadSchema: the corpus reads
-    # (doc_id, text), the freq table reads (line_key, n_docs)
+    # (doc_id, text)
     assert plan.count("struct<doc_id:bigint,text:string>") == 2, plan
-    fp = str(tmp_path / "freq.parquet")
-    line_frequencies(stored).write.parquet(fp)
-    seamed = line_dedup(stored, freq=spark.read.parquet(fp))
-    plan1 = seamed._jdf.queryExecution().executedPlan().toString()
-    assert plan1.count("struct<doc_id:bigint,text:string>") == 1, plan1
-    # and the n_docs > max_docs filter is pushed into the freq scan
-    assert "GreaterThan(n_docs,1)" in plan1
 
 
 def test_line_dedup_custom_delimiter_regex_escaped(spark):
@@ -156,29 +110,3 @@ def test_line_dedup_carry_cols(spark):
     assert out[0]["text"] == "mine zero"
     assert out[0]["lang"] == "en" and out[0]["source"] == "web"
     assert out[1]["lang"] == "de" and out[1]["source"] == "code"
-
-
-def test_line_dedup_freq_pin_mismatch_raises(spark, docs, tmp_path):
-    """ADVICE r5: a freq= table built under a different key family
-    silently drops nothing. line_frequencies pins its parameters as
-    column metadata (surviving a parquet round-trip); line_dedup
-    refuses a mismatched table."""
-    import pytest as _pytest
-
-    p = str(tmp_path / "freq")
-    line_frequencies(docs, key_mode="djb2").write.parquet(p)
-    back = spark.read.parquet(p)
-    pin = dict(back.schema["line_key"].metadata)
-    assert pin["key_mode"] == "djb2" and pin["delim"] == "\n"
-    with _pytest.raises(ValueError, match="different parameters"):
-        line_dedup(docs, key_mode="xxhash64", freq=back)
-    # matching family passes and equals the inline result
-    seam = sorted(
-        line_dedup(docs, key_mode="djb2", freq=back).collect(),
-        key=lambda r: r["doc_id"],
-    )
-    inline = sorted(
-        line_dedup(docs, key_mode="djb2").collect(),
-        key=lambda r: r["doc_id"],
-    )
-    assert seam == inline

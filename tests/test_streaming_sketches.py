@@ -42,18 +42,16 @@ def test_hll_stream_two_batches_equals_batch_sketch(spark, tmp_path_factory):
 
 
 def test_hll_fold_is_replay_idempotent(spark, tmp_path_factory):
-    from s3_log_parser_spark.streaming.sketches import (
-        _overwrite_tiny,
-        hll_merge,
-    )
+    from s3_log_parser_spark.sources.maintenance import overwrite_staged
+    from s3_log_parser_spark.streaming.sketches import hll_merge
 
     tbl = str(tmp_path_factory.mktemp("hll_replay")) + "/registers"
     batch = _keys(spark, 0, 500)
     sk = hll_sketch(batch, "k")
-    _overwrite_tiny(sk, tbl)
+    overwrite_staged(sk, tbl)
     before = sorted(map(tuple, read_hll_table(spark, tbl).collect()))
     # replay: fold the same batch again — max-merge must be a no-op
-    _overwrite_tiny(hll_merge(read_hll_table(spark, tbl), sk), tbl)
+    overwrite_staged(hll_merge(read_hll_table(spark, tbl), sk), tbl)
     after = sorted(map(tuple, read_hll_table(spark, tbl).collect()))
     assert after == before
 
@@ -139,10 +137,10 @@ def test_staged_overwrite_leaves_no_visible_siblings(
 
     out = str(tmp_path_factory.mktemp("hll_swap"))
     tbl = out + "/registers"
-    from s3_log_parser_spark.streaming.sketches import _overwrite_tiny
+    from s3_log_parser_spark.sources.maintenance import overwrite_staged
 
-    _overwrite_tiny(hll_sketch(_keys(spark, 0, 100), "k"), tbl)
-    _overwrite_tiny(hll_sketch(_keys(spark, 0, 200), "k"), tbl)
+    overwrite_staged(hll_sketch(_keys(spark, 0, 100), "k"), tbl)
+    overwrite_staged(hll_sketch(_keys(spark, 0, 200), "k"), tbl)
     visible = [e for e in os.listdir(out) if not e.startswith(".")]
     assert visible == ["registers"]
     # no hidden staged/old leftovers either on the happy path
