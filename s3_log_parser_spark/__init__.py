@@ -19,7 +19,7 @@ Package layout
                    similarity search.
 - ``plans``      — the end-to-end pipeline DAG + lineage/resume.
 - ``streaming``  — structured-streaming variant of the router.
-- ``multimodal`` — binary-column plumbing with stubbed decoders.
+- ``multimodal`` — binary-column plumbing with length-derived metadata.
 """
 
 __version__ = "0.1.0"

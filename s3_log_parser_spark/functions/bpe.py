@@ -52,17 +52,14 @@ for _i, (_a, _b) in enumerate(MERGES):
     _MERGED_ID.setdefault(_a + _b, MERGED_ID_BASE + _i)
 
 
-def bpe_symbols(
-    pretoken: str, rank: dict[tuple[str, str], int] | None = None
-) -> list[str]:
+def bpe_symbols(pretoken: str) -> list[str]:
     """the BPE symbol sequence for one pre-token (pure-Python
     reference): greedy lowest-rank adjacent merge until fixed point."""
-    rank = _RANK if rank is None else rank
     w = list(pretoken)
     while len(w) > 1:
         best_i, best_r = -1, None
         for i in range(len(w) - 1):
-            r = rank.get((w[i], w[i + 1]))
+            r = _RANK.get((w[i], w[i + 1]))
             if r is not None and (best_r is None or r < best_r):
                 best_i, best_r = i, r
         if best_r is None:
@@ -71,9 +68,9 @@ def bpe_symbols(
     return w
 
 
-def bpe_units(pretoken: str, rank: dict[tuple[str, str], int] | None = None) -> int:
+def bpe_units(pretoken: str) -> int:
     """number of BPE units for one pre-token (pure-Python reference)."""
-    return len(bpe_symbols(pretoken, rank))
+    return len(bpe_symbols(pretoken))
 
 
 def symbol_id(sym: str) -> int:

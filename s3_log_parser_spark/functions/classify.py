@@ -74,6 +74,7 @@ def quality_model_score(col: Column | str) -> Column:
     return linear_score(col, WEIGHTS_X1000, BIAS_X1000)
 
 
-def quality_model_label(col: Column | str, threshold: int = 0) -> Column:
-    """boolean: does the distilled model call this text high-quality?"""
-    return quality_model_score(col) >= F.lit(threshold)
+def quality_model_label(col: Column | str) -> Column:
+    """boolean: does the distilled model call this text high-quality
+    (a non-negative logit)?"""
+    return quality_model_score(col) >= F.lit(0)

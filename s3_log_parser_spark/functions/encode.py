@@ -2,13 +2,11 @@
 
 The columnar analog of ``extract_log_entry``
 (``/root/reference/src/s3parser.c:373-408``): every scalar derivation
-is a Catalyst expression, in two shapes:
-
-- :func:`encode_slim_flat` — production: over the flat typed columns
-  of the Arrow parse kernel, which has already computed the DJB2
-  hashes (``functions/parsing_arrow.py``).
-- :func:`encode_slim` — the reference: over the ``parsed`` struct of
-  ``parse_text_sql``, hashing with ``djb2_expr``.
+is a Catalyst expression in :func:`encode_slim_flat`, over the flat
+typed columns of the Arrow parse kernel, which has already computed
+the DJB2 hashes (``functions/parsing_arrow.py``). The Catalyst
+reference parse reaches the same columns through
+``plans.pipeline._parse_sql_flat`` and then runs this same encode.
 
 The packed 28-byte struct's compression role is played by
 Parquet/Iceberg columnar encoding (SURVEY.md §4).
@@ -20,65 +18,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import SECONDS_PER_DAY
-from .hashes import djb2_expr, first_path_segment
-from .parsing import clamp_http_code, parse_range
-
-
-def encode_slim(df: DataFrame) -> DataFrame:
-    """Derive all slim columns from a DataFrame holding ``parsed``
-    (struct), ``event_ts``, ``parse_status`` and the transcript columns.
-
-    Expects to run after parse; enrichment (system/platform) and flags
-    attach separately (operators/enrich.py, operators/flags.py).
-    """
-    p = F.col("parsed")
-    byte_start, byte_end = parse_range(p["range_header"])
-    return (
-        df
-        # E1 epoch (UTC-pinned; reference mktime uses local tz — fixed)
-        .withColumn("ts_unix", F.unix_timestamp(F.col("event_ts")))
-        # A2 day bucket: integer day key for byte-parity with
-        # s3extract.c:159 (timestamp / 86400)
-        .withColumn(
-            "day_bucket",
-            (F.col("ts_unix") / SECONDS_PER_DAY).cast("long"),
-        )
-        # E2 DJB2 dictionary hashes (src/s3parser.c:377-379)
-        .withColumn("ip_hash", djb2_expr(p["remote_ip"]))
-        .withColumn("key_hash", djb2_expr(p["key"]))
-        .withColumn("tool_hash", djb2_expr(first_path_segment(p["key"])))
-        .withColumn("conv_hash", djb2_expr(F.col("conv_id")))
-        # E3 KB quantization (floor division by 1024)
-        .withColumn(
-            "bytes_sent_kb", F.floor(p["bytes_sent"] / 1024).cast("int")
-        )
-        .withColumn(
-            "object_size_kb", F.floor(p["object_size"] / 1024).cast("int")
-        )
-        # E4 ms passthrough
-        .withColumn("download_time_ms", p["total_time_ms"].cast("int"))
-        # P3 domain clamp + E5 narrowing compat
-        .withColumn("http_code", clamp_http_code(p["http_code"]))
-        .withColumn("http_code_u8", F.pmod(F.col("http_code"), F.lit(256)).cast("int"))
-        # E6 completion percent (integer division, 0-guard)
-        .withColumn(
-            "completion_percent",
-            F.when(
-                p["object_size"].isNull() | (p["object_size"] == 0), F.lit(0)
-            )
-            .otherwise(F.floor(p["bytes_sent"] * 100 / p["object_size"]))
-            .cast("int"),
-        )
-        # P5 range decode feeding ST2
-        .withColumn("byte_start", byte_start)
-        .withColumn("byte_end", byte_end)
-        .withColumn("object_size", p["object_size"])
-    )
+from .parsing import clamp_http_code
 
 
 def encode_slim_flat(df: DataFrame) -> DataFrame:
-    """encode stage over the flat typed columns ``parse_text_arrow``
-    emits (same derivations as encode_slim, zero struct access)."""
+    """Derive the encoded slim columns from the flat typed columns
+    ``parse_text_arrow`` emits: E1 epoch and A2 integer day bucket
+    (UTC-pinned; the reference's mktime uses local tz), E3 KB
+    quantization, E4 ms passthrough, P3 domain clamp + E5 narrowing,
+    E6 completion percent (integer division, 0-guard). The E2 DJB2
+    hashes and the P5 range arrive with the parse."""
     return (
         df.withColumn("ts_unix", F.unix_timestamp(F.col("event_ts")))
         .withColumn(

@@ -19,8 +19,8 @@ every per-row operation inside Arrow C++ kernels via ``mapInArrow``:
   (honoring %z, unlike the reference's local-time mktime — SURVEY P2);
 - guarded casts (digit-mask → cast) for the numeric fields.
 
-After ``encode_slim_flat`` the slim columns equal those of the
-zero-Python reference ``parsing.parse_text_sql`` → ``encode_slim``
+Its flat columns equal those of the zero-Python reference
+``parsing.parse_text_sql`` projected by ``plans.pipeline._parse_sql_flat``
 (pinned by tests/test_pipeline.py, tests/test_parsing.py and
 tests/test_property_roundtrip.py).
 """

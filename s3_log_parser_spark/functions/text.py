@@ -133,7 +133,7 @@ def repetition_x1000(col: Column | str) -> Column:
 
 
 # simple, cross-dialect (java regex == RE2) PII patterns — detection
-# counts and redaction for training-data hygiene. Deliberately narrow:
+# counts for training-data hygiene. Deliberately narrow:
 # high-precision patterns only (an email-shaped token, an intl-ish
 # phone run); recall-heavy PII systems are model-based and out of scope.
 PII_PATTERNS = {
@@ -149,16 +149,6 @@ def pii_counts(col: Column | str) -> dict[str, Column]:
         kind: F.size(F.regexp_extract_all(c, F.lit(pat), F.lit(0))).cast("long")
         for kind, pat in PII_PATTERNS.items()
     }
-
-
-def pii_redact(col: Column | str) -> Column:
-    """replace each PII match with '<{KIND}>' (deterministic order:
-    email first so phone digits inside an address never re-match)."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = c
-    for kind, pat in PII_PATTERNS.items():
-        out = F.regexp_replace(out, pat, f"<{kind.upper()}>")
-    return out
 
 
 # The Gopher rule-set stopword bank (Rae et al. 2021, appendix A1.1 —

@@ -2,13 +2,10 @@
 with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
 The Spark-side plumbing — schema, partition behavior, UDF signature,
-batch shape — is real and tested. The actual codec work is stubbed:
-this container has no image/audio libraries, so :func:`decode_real`
-raises ``NotImplementedError``. Without a decoder,
-:func:`extract_media_metadata` computes deterministic pseudo-metadata
-from the payload length (:func:`fake_meta_formulas`, the formulas the
-DuckDB oracle reproduces from ``octet_length``). A PIL/ffmpeg codec
-plugs in as ``extract_media_metadata(decoder=...)``.
+batch shape — is real and tested. The codec work is not: the package
+depends on no image/audio library, so :func:`extract_media_metadata`
+computes deterministic pseudo-metadata from the payload length (the
+formulas the DuckDB oracle reproduces from ``octet_length``).
 
 Scale posture: binary payloads never shuffle — decode/extract runs
 map-side in the scan stage; metadata-only downstream ops select away
@@ -38,50 +35,13 @@ MEDIA_META_SCHEMA = T.StructType(
 )
 
 
-def decode_real(payload: bytes, media_type: str) -> dict:  # pragma: no cover
-    """Real codec hook — deliberately unimplemented in this container.
-
-    DECODER CONTRACT (what a PIL/ffmpeg-backed implementation — or any
-    callable passed as ``extract_media_metadata(decoder=...)`` — must
-    satisfy; pinned by tests/test_multimodal.py's fake-codec contract
-    test):
-
-    - called once per non-NULL payload with ``(payload: bytes,
-      media_type: str)``;
-    - returns a mapping with any subset of the keys ``width``,
-      ``height``, ``n_frames``, ``sample_rate`` (ints); missing keys
-      become NULL in the output row (e.g. audio has no width);
-    - raises to fail the task (corrupt-payload policy belongs inside
-      the decoder — return ``{}`` to emit an all-NULL metadata row).
-    """
-    raise NotImplementedError(
-        "media decode requires PIL/ffmpeg/soundfile, not present in this "
-        "environment; pass decoder= (same contract) or use the fake path"
-    )
-
-
-def fake_meta_formulas(byte_len: int) -> tuple[int, int, int, int]:
-    """deterministic pseudo-metadata from payload length (oracle-SQL
-    reproducible: width = len % 640 + 16, height = (len*7) % 480 + 16,
-    n_frames = len % 30 + 1, sample_rate = (len % 4 + 1) * 8000)."""
-    return (
-        byte_len % 640 + 16,
-        (byte_len * 7) % 480 + 16,
-        byte_len % 30 + 1,
-        (byte_len % 4 + 1) * 8000,
-    )
-
-
-def extract_media_metadata(df: DataFrame, decoder=None) -> DataFrame:
+def extract_media_metadata(df: DataFrame) -> DataFrame:
     """mapInPandas media feature-extraction over
     ``(media_id, payload, media_type)`` rows: one Arrow batch in, one
-    metadata frame out. Blob stays executor-local.
-
-    ``decoder``: an injectable codec callable satisfying the
-    :func:`decode_real` contract — the seam where PIL/ffmpeg plugs in
-    (``decoder=decode_real`` is the real hook, which raises here).
-    Without one, deterministic fake metadata is derived from payload
-    length (oracle-reproducible).
+    metadata frame out. Blob stays executor-local. The metadata is
+    derived from the payload length ``len`` (oracle-reproducible):
+    width = len % 640 + 16, height = (len*7) % 480 + 16, n_frames =
+    len % 30 + 1, sample_rate = (len % 4 + 1) * 8000.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -89,35 +49,15 @@ def extract_media_metadata(df: DataFrame, decoder=None) -> DataFrame:
 
         for pdf in batches:
             lens = pdf["payload"].map(lambda b: 0 if b is None else len(b))
-            if decoder is not None:
-                # real-codec path: one decoder call per non-NULL payload,
-                # missing contract keys → NULL columns
-                decoded = [
-                    decoder(b, t) if b is not None else {}
-                    for b, t in zip(pdf["payload"], pdf["media_type"])
-                ]
-
-                def col(k):
-                    return pd.Series(
-                        [d.get(k) for d in decoded], dtype="Int32"
-                    )
-
-                width, height = col("width"), col("height")
-                n_frames, sample_rate = col("n_frames"), col("sample_rate")
-            else:
-                width = (lens % 640 + 16).astype("int32")
-                height = ((lens * 7) % 480 + 16).astype("int32")
-                n_frames = (lens % 30 + 1).astype("int32")
-                sample_rate = ((lens % 4 + 1) * 8000).astype("int32")
             out = pd.DataFrame(
                 {
                     "media_id": pdf["media_id"].astype("int64"),
                     "media_type": pdf["media_type"],
                     "byte_len": lens.astype("int64"),
-                    "width": width,
-                    "height": height,
-                    "n_frames": n_frames,
-                    "sample_rate": sample_rate,
+                    "width": (lens % 640 + 16).astype("int32"),
+                    "height": ((lens * 7) % 480 + 16).astype("int32"),
+                    "n_frames": (lens % 30 + 1).astype("int32"),
+                    "sample_rate": ((lens % 4 + 1) * 8000).astype("int32"),
                     "content_hash": pdf["payload"]
                     .map(lambda b: djb2_py(b))
                     .astype("int64"),

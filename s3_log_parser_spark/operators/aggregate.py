@@ -107,6 +107,8 @@ def grouped_export(
 
 
 _HASH_COLS = ("ip_hash", "key_hash", "tool_hash", "conv_hash")
+# the most groups grouped_export_json materializes on the driver
+MAX_EXPORT_GROUPS = 100_000
 
 
 def grouped_export_json(
@@ -115,7 +117,6 @@ def grouped_export_json(
     group_name: str,
     max_rows_per_group: int = 1000,
     member_order: tuple[str, ...] = (),
-    max_groups: int = 100_000,
 ) -> str:
     """S6: the reference's grouped-JSON document shape —
     ``{"grouped_by": name, "groups": {key: {"count": N, "logs": [...]}},
@@ -133,7 +134,7 @@ def grouped_export_json(
 
     This document is inherently driver-materialized (the reference
     holds every group in RAM, README.md:220-235); members are capped
-    per group, and ``max_groups`` bounds driver memory on the group
+    per group, and ``MAX_EXPORT_GROUPS`` bounds driver memory on the group
     axis (raises rather than silently truncating — the router's
     per-sink tables remain the scale path, SURVEY §2.7).
     """
@@ -158,12 +159,12 @@ def grouped_export_json(
     grouped = grouped_export(
         fmt, key, max_rows_per_group=max_rows_per_group,
         member_order=member_order,
-    ).limit(max_groups + 1).collect()
-    if len(grouped) > max_groups:
+    ).limit(MAX_EXPORT_GROUPS + 1).collect()
+    if len(grouped) > MAX_EXPORT_GROUPS:
         raise ValueError(
-            f"grouped_export_json: >{max_groups} groups would be "
-            "materialized on the driver; raise max_groups explicitly or "
-            "use the router's per-sink tables (the scale path)"
+            f"grouped_export_json: >{MAX_EXPORT_GROUPS} groups would be "
+            "materialized on the driver; use the router's per-sink "
+            "tables (the scale path)"
         )
     groups = {
         str(r[key]): {
@@ -256,20 +257,17 @@ def profile_key_skew(df: DataFrame, key: str | Column) -> DataFrame:
     )
 
 
-_ROLLUP_UNITS = ("minute", "hour", "day", "week", "month")
 # the group keys of a time rollup table, besides resolution and bucket
 ROLLUP_KEYS = ("event_type",)
+# the rollup tiers, finest first: coarse tiers derive from the first
+ROLLUP_RESOLUTIONS = ("minute", "hour", "day")
 
 
-def time_rollup(
-    df: DataFrame,
-    value_col: str | None = "value",
-    resolutions: tuple[str, ...] = ("minute", "hour", "day"),
-) -> DataFrame:
+def time_rollup(df: DataFrame) -> DataFrame:
     """Multi-resolution time rollup (hypertable continuous-aggregate
-    shape): per-``ROLLUP_KEYS`` event counts + integer-scaled value
-    sums of ``ts`` buckets at every requested resolution, coarse tiers
-    DERIVED from the finest one.
+    shape): per-``ROLLUP_KEYS`` event counts + integer-scaled ``value``
+    sums of ``ts`` buckets at every ``ROLLUP_RESOLUTIONS`` tier, coarse
+    tiers DERIVED from the finest one.
 
     Beyond the reference (its only time bucketing is the integer day
     key, ``/root/reference/src/s3extract.c:159``); this is the
@@ -295,60 +293,41 @@ def time_rollup(
     repo's cross-engine rule — float summation order differs between
     engines, integer sums don't).
     """
-    for r in resolutions:
-        if r not in _ROLLUP_UNITS:
-            raise ValueError(f"time_rollup: unknown resolution {r!r}")
-    # coarse tiers derive from resolutions[0], so the tuple must run
-    # finest → coarsest (ADVICE r5: ('day','hour') would silently emit
-    # an 'hour' tier aggregated from day buckets — right labels, wrong
-    # values)
-    ranks = [_ROLLUP_UNITS.index(r) for r in resolutions]
-    if ranks != sorted(ranks) or len(set(ranks)) != len(ranks):
-        raise ValueError(
-            "time_rollup: resolutions must be unique and ordered finest "
-            f"to coarsest (subsequence of {_ROLLUP_UNITS}), got "
-            f"{resolutions}"
-        )
     kcols = [F.col(k) for k in ROLLUP_KEYS]
-    aggs = [F.count("*").cast("long").alias("n_events")]
-    if value_col is not None:
-        aggs.append(
-            F.sum(F.round(F.col(value_col) * 100).cast("long"))
-            .cast("long")
-            .alias("sum_value_x100")
-        )
     base = df.groupBy(
-        *kcols, F.date_trunc(resolutions[0], F.col("ts")).alias("_b")
-    ).agg(*aggs)
-    measure_cols = [c for c in base.columns if c not in (*ROLLUP_KEYS, "_b")]
-    if len(resolutions) == 1:
-        out = base.withColumn("resolution", F.lit(resolutions[0]))
-    else:
-        # one explode of the tiny base into (resolution, bucket) rows,
-        # one hash re-aggregate: the finest tier's re-aggregation is
-        # the identity (its groups are singletons), coarser tiers sum
-        tier_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(res).alias("r"),
-                    F.date_trunc(res, F.col("_b")).alias("b"),
-                )
-                for res in resolutions
-            ]
-        )
-        out = (
-            base.select(
-                *kcols,
-                *[F.col(c) for c in measure_cols],
-                F.explode(tier_structs).alias("_t"),
+        *kcols, F.date_trunc(ROLLUP_RESOLUTIONS[0], F.col("ts")).alias("_b")
+    ).agg(
+        F.count("*").cast("long").alias("n_events"),
+        F.sum(F.round(F.col("value") * 100).cast("long"))
+        .cast("long")
+        .alias("sum_value_x100"),
+    )
+    measure_cols = ["n_events", "sum_value_x100"]
+    # one explode of the tiny base into (resolution, bucket) rows, one
+    # hash re-aggregate: the finest tier's re-aggregation is the
+    # identity (its groups are singletons), coarser tiers sum
+    tier_structs = F.array(
+        *[
+            F.struct(
+                F.lit(res).alias("r"),
+                F.date_trunc(res, F.col("_b")).alias("b"),
             )
-            .groupBy(
-                F.col("_t.r").alias("resolution"),
-                *kcols,
-                F.col("_t.b").alias("_b"),
-            )
-            .agg(*[F.sum(c).cast("long").alias(c) for c in measure_cols])
+            for res in ROLLUP_RESOLUTIONS
+        ]
+    )
+    out = (
+        base.select(
+            *kcols,
+            *[F.col(c) for c in measure_cols],
+            F.explode(tier_structs).alias("_t"),
         )
+        .groupBy(
+            F.col("_t.r").alias("resolution"),
+            *kcols,
+            F.col("_t.b").alias("_b"),
+        )
+        .agg(*[F.sum(c).cast("long").alias(c) for c in measure_cols])
+    )
     # bucket_start as a formatted string: identical text both engines
     # (cross-engine timestamp hashing is representation-sensitive)
     return out.select(

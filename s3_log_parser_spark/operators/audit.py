@@ -21,10 +21,11 @@ Check algebra (all pure Catalyst, zero Python):
   table: a broadcast left-anti probe of the dim (the fact side never
   shuffles), reported through the same schema.
 
-Thresholds: a check passes with zero failing rows, or, when it sets
-``max_failed_ratio_x1000`` (per-mille, integer — the repo's
-cross-engine arithmetic rule), with at most that share of the rows, so
-"≤ 0.1% bad timestamps" is a declarable contract, not a hardcoded zero.
+Thresholds: a check passes with zero failing rows, or, when a
+:class:`Check` sets ``max_failed_ratio_x1000`` (per-mille, integer —
+the repo's cross-engine arithmetic rule), with at most that share of
+the rows, so "≤ 0.1% bad timestamps" is a declarable contract, not a
+hardcoded zero.
 """
 
 from __future__ import annotations
@@ -56,14 +57,13 @@ def not_null(*cols: str) -> Check:
     return Check(name=f"not_null({','.join(cols)})", fail_expr=fail)
 
 
-def in_range(col: str, lo, hi, max_failed_ratio_x1000: int | None = None) -> Check:
+def in_range(col: str, lo, hi) -> Check:
     """Violated when the value is non-NULL and outside [lo, hi]
     (compose with not_null to also reject NULLs)."""
     c = F.col(col)
     return Check(
         name=f"in_range({col},{lo},{hi})",
         fail_expr=c.isNotNull() & ~c.between(F.lit(lo), F.lit(hi)),
-        max_failed_ratio_x1000=max_failed_ratio_x1000,
     )
 
 
@@ -168,12 +168,3 @@ def foreign_key(fact: DataFrame, key: str, dim: DataFrame, dim_key: str) -> Data
         "total",
         (F.col("failed") == 0).alias("passed"),
     )
-
-
-def audit_gate(report: DataFrame) -> None:
-    """Raise if any check failed — the batch-gating call site. The
-    report is sketch-sized (one row per check), so the collect is
-    driver-trivial."""
-    bad = [r["check"] for r in report.filter(~F.col("passed")).collect()]
-    if bad:
-        raise ValueError(f"audit_gate: failed checks: {bad}")

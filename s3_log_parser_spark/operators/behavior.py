@@ -25,13 +25,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SECONDS_PER_DAY = 86400
+# funnel_steps: the most step events one key may collect
+MAX_EVENTS_PER_KEY = 100_000
 
 
-def funnel_steps(
-    df: DataFrame,
-    steps: list[str],
-    max_events_per_key: int = 100_000,
-) -> DataFrame:
+def funnel_steps(df: DataFrame, steps: list[str]) -> DataFrame:
     """Per ``user_id``: ``furthest_step`` ∈ [0, len(steps)] — the longest
     prefix of ``steps`` appearing as an ordered subsequence of that
     key's ``event_type`` stream in ``(ts, event_id)`` order (the
@@ -40,7 +38,7 @@ def funnel_steps(
 
     Exact O(events) via a left fold over the time-sorted step events:
     state = steps matched so far, advance when the next needed step
-    arrives. ``max_events_per_key`` bounds the collected array — a key
+    arrives. ``MAX_EVENTS_PER_KEY`` bounds the collected array — a key
     past it means a bot/skew key that needs upstream triage, not a
     silently OOMing executor."""
     if not steps or len(set(steps)) != len(steps):
@@ -59,11 +57,11 @@ def funnel_steps(
     )
     per_key = per_key.withColumn(
         "_evs",
-        F.when(F.col("_n") <= max_events_per_key, F.col("_evs")).otherwise(
+        F.when(F.col("_n") <= MAX_EVENTS_PER_KEY, F.col("_evs")).otherwise(
             F.raise_error(
                 F.format_string(
-                    "funnel key exceeds max_events_per_key=%d: %s",
-                    F.lit(max_events_per_key),
+                    "funnel key exceeds MAX_EVENTS_PER_KEY=%d: %s",
+                    F.lit(MAX_EVENTS_PER_KEY),
                     F.col("user_id").cast("string"),
                 )
             )
@@ -120,12 +118,14 @@ def retention_cohorts(df: DataFrame) -> DataFrame:
     )
 
 
-# windowed_anomalies: trailing window length, and flag threshold in σ
+# windowed_anomalies: trailing window length, flag threshold in σ, and
+# the prior values a row needs before it is scored
 LOOKBACK = 8
 K_SIGMA = 3
+MIN_HISTORY = 4
 
 
-def windowed_anomalies(df: DataFrame, min_history: int = 4) -> DataFrame:
+def windowed_anomalies(df: DataFrame) -> DataFrame:
     """Append ``is_anomaly``: ``value`` > ``K_SIGMA``·σ from the mean
     of that ``user_id``'s trailing ``LOOKBACK`` values in
     ``(ts, event_id)`` order (strictly prior rows — the live-score
@@ -135,7 +135,7 @@ def windowed_anomalies(df: DataFrame, min_history: int = 4) -> DataFrame:
 
     with S, Q the window sum and sum-of-squares — exact in BIGINT, no
     float variance (population σ; zero-variance history → any deviation
-    flags). Rows with < ``min_history`` prior values get NULL."""
+    flags). Rows with < ``MIN_HISTORY`` prior values get NULL."""
     v = F.floor(F.col("value") * 1000 + F.lit(0.5)).cast("long")
     base = df.withColumn("_v", v)
     w = (
@@ -149,7 +149,7 @@ def windowed_anomalies(df: DataFrame, min_history: int = 4) -> DataFrame:
     dev = n * F.col("_v") - s
     var_n2 = n * q - s * s  # n² · population variance
     flag = F.when(
-        (n < min_history) | F.col("_v").isNull(), F.lit(None).cast("boolean")
+        (n < MIN_HISTORY) | F.col("_v").isNull(), F.lit(None).cast("boolean")
     ).otherwise(
         F.when(var_n2 == 0, dev != 0).otherwise(
             dev * dev > F.lit(K_SIGMA * K_SIGMA) * var_n2

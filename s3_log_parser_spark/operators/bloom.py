@@ -92,13 +92,6 @@ def bloom_build(
     )
 
 
-def bloom_merge(bitmap_df: DataFrame) -> DataFrame:
-    """OR together bitmap fragments (e.g. per-batch appends of the
-    ingestion index) into one row per word — unions of Bloom filters
-    with identical (m, k, mode) are exact."""
-    return bitmap_df.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
-
-
 def bloom_probe(
     df: DataFrame,
     bitmap_df: DataFrame,

@@ -160,11 +160,7 @@ def conv_dedup(df: DataFrame) -> DataFrame:
     )
 
 
-def conv_examples(
-    df: DataFrame,
-    max_turns: int | None = None,
-    max_chars: int | None = None,
-) -> DataFrame:
+def conv_examples(df: DataFrame) -> DataFrame:
     """Assemble one training example per conversation — the SFT-export
     grain: ``(conv_id, n_turns, total_chars, messages)`` where
     ``messages`` is ``array<struct<role, text, tool>>`` in turn order.
@@ -176,10 +172,7 @@ def conv_examples(
     restored in-row by ``array_sort`` on the leading index field) — no
     window, no global sort; per-group state is one conversation's own
     turns, the bounded-conversation assumption every turn-ordering op
-    here makes. ``max_turns`` / ``max_chars`` are example-level gates
-    applied AFTER assembly (oversized conversations drop whole — a
-    truncated dialogue is a corrupt training example, not a smaller
-    one; chunking belongs upstream at the document grain)."""
+    here makes."""
     rows = F.collect_list(
         F.struct(
             F.col("turn_idx").alias("i"), "role", "text", "tool"
@@ -197,13 +190,9 @@ def conv_examples(
         F.lit(0).cast("long"),
         lambda acc, m: acc + F.length(F.coalesce(m["text"], F.lit(""))),
     )
-    out = out.select("conv_id", "n_turns", total.alias("total_chars"),
-                     "messages")
-    if max_turns is not None:
-        out = out.filter(F.col("n_turns") <= max_turns)
-    if max_chars is not None:
-        out = out.filter(F.col("total_chars") <= max_chars)
-    return out
+    return out.select(
+        "conv_id", "n_turns", total.alias("total_chars"), "messages"
+    )
 
 
 def role_transitions(df: DataFrame) -> DataFrame:

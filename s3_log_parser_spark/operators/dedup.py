@@ -872,7 +872,11 @@ def semantic_dedup(
     )
 
 
-def dup_clusters(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
+# label-propagation rounds dup_clusters runs before it gives up
+CLUSTER_MAX_ITER = 50
+
+
+def dup_clusters(pairs: DataFrame) -> DataFrame:
     """connected components over a verified ``(id_a, id_b)`` duplicate-pair graph —
     the transitive closure the pair-drop rule lacks (VERDICT r4
     missing #2: A~B and B~C chain even when A~C was never a candidate
@@ -906,8 +910,8 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     is deferred because near-dup graphs are hub-shaped and converge in
     2-3 plain rounds (measured: the extra per-round join quadrupled
     fixture wall time when applied from round 1) — shallow graphs pay
-    nothing, deep chains still get the log bound. ``max_iter`` is a
-    generous backstop; a graph that somehow still hasn't converged
+    nothing, deep chains still get the log bound. ``CLUSTER_MAX_ITER``
+    is a generous backstop; a graph that somehow still hasn't converged
     raises rather than returning a partial closure.
     """
     # both edge directions from ONE evaluation of the (often expensive)
@@ -944,7 +948,7 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     prev_sum = (
         labels.agg(F.sum("label")).collect()[0][0] if numeric else None
     )
-    for i in range(max_iter):
+    for i in range(CLUSTER_MAX_ITER):
         nbr = edges.withColumnRenamed("src", "id").join(labels, "id").select(
             F.col("dst").alias("id"), "label"
         )
@@ -986,8 +990,9 @@ def dup_clusters(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
             return labels.select("id", F.col("label").alias("cluster_id"))
     edges.unpersist()
     raise RuntimeError(
-        f"dup_clusters: no fixpoint after {max_iter} label-propagation "
-        "rounds — component diameter exceeds 2^max_iter; raise max_iter"
+        f"dup_clusters: no fixpoint after {CLUSTER_MAX_ITER} label-propagation "
+        "rounds — component diameter exceeds 2^CLUSTER_MAX_ITER; raise "
+        "CLUSTER_MAX_ITER"
     )
 
 

@@ -42,16 +42,19 @@ from .dedup import shingle_hashes
 # fixed-point scale of the weights and scores: ``weight_x1000``,
 # ``imp_x1000``
 SCALE = 1000
+# the default feature space: word n-gram length and hashed bucket count
+NGRAM_N = 2
+BUCKETS = 4096
 
 
-def ngram_buckets(col: Column | str, n: int = 2, buckets: int = 4096) -> Column:
+def ngram_buckets(col: Column | str) -> Column:
     """distinct hashed n-gram feature buckets of a text column
-    (array<long>, values in [0, buckets)) over the djb2 oracle-parity
-    shingle family."""
+    (array<long>, values in [0, BUCKETS)) over the djb2 oracle-parity
+    shingle family, ``NGRAM_N`` words long."""
     return F.array_distinct(
         F.transform(
-            shingle_hashes(col, n),
-            lambda h: F.pmod(h, F.lit(buckets)),
+            shingle_hashes(col, NGRAM_N),
+            lambda h: F.pmod(h, F.lit(BUCKETS)),
         )
     )
 
@@ -75,8 +78,8 @@ def bucket_frame(
 def bucket_weights(
     raw: DataFrame,
     target: DataFrame,
-    n: int = 2,
-    buckets: int = 4096,
+    n: int = NGRAM_N,
+    buckets: int = BUCKETS,
     raw_buckets: DataFrame | None = None,
     target_buckets: DataFrame | None = None,
 ) -> DataFrame:
@@ -131,8 +134,8 @@ def bucket_weights(
 def importance_scores(
     df: DataFrame,
     weights: DataFrame,
-    n: int = 2,
-    buckets: int = 4096,
+    n: int = NGRAM_N,
+    buckets: int = BUCKETS,
     buckets_df: DataFrame | None = None,
 ) -> DataFrame:
     """``(doc_id, n_feats, imp_x1000)`` per document: the sum of its
@@ -163,8 +166,8 @@ def importance_resample(
     df: DataFrame,
     weights: DataFrame,
     k: int,
-    n: int = 2,
-    buckets: int = 4096,
+    n: int = NGRAM_N,
+    buckets: int = BUCKETS,
     buckets_df: DataFrame | None = None,
 ) -> DataFrame:
     """the top-``k`` most target-like documents (deterministic total

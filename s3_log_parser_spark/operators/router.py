@@ -159,13 +159,3 @@ def route_and_write(
         r.name: catalog.read(f"{r.name}_counts", schema=counts[r.name].schema)
         for r in routes
     }
-
-
-def align_schema(df: DataFrame, like: DataFrame) -> DataFrame:
-    """Reorder + cast columns to match ``like`` — partitioned-parquet
-    read-back moves partition columns to the end and re-infers their
-    types (e.g. a LONG day_bucket comes back INT), so set-equality
-    checks must re-align first."""
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in like.schema.fields]
-    )

@@ -31,11 +31,13 @@ from ..functions.hashes import djb2_expr
 from ..functions.text import token_count, tokens
 
 # per-mille split weights (sum to 1000)
-DEFAULT_SPLITS: tuple[tuple[str, int], ...] = (
+SPLITS: tuple[tuple[str, int], ...] = (
     ("train", 900),
     ("val", 50),
     ("test", 50),
 )
+# the salt of the split hash; changing it re-rolls every assignment
+SPLIT_SALT = "v1"
 
 
 # affine universal-hash post-mix over the MinHash family's prime: raw
@@ -49,43 +51,28 @@ SPLIT_MIX_B = 7
 SPLIT_MIX_P = 4294967311  # smallest prime > 2^32 (= dedup.MINHASH_P)
 
 
-def split_bucket(
-    id_col: Column | str, salt: str = "v1", mode: str = "djb2"
-) -> Column:
+def split_bucket(id_col: Column | str) -> Column:
     """deterministic per-mille bucket of a document id:
-    ``((A·DJB2(salt || ':' || id) + B) mod P) mod 1000`` (see the mix
-    constants above). Reproducible in the DuckDB oracle
-    digit-for-digit; changing the salt re-rolls every assignment (the
-    standard way to draw a fresh validation set without touching the
-    data). ``mode="xxhash64"`` is the production family (same policy
-    as the dedup suite: 64-bit codegen hashing, no oracle)."""
+    ``((A·DJB2(SPLIT_SALT || ':' || id) + B) mod P) mod 1000`` (see the
+    mix constants above). Reproducible in the DuckDB oracle
+    digit-for-digit."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
-    if mode == "xxhash64":
-        return F.pmod(F.xxhash64(F.lit(salt), c), F.lit(1000))
-    h = djb2_expr(F.concat(F.lit(salt), F.lit(":"), c.cast("string")))
+    h = djb2_expr(F.concat(F.lit(SPLIT_SALT), F.lit(":"), c.cast("string")))
     return F.pmod(
         F.pmod(h * F.lit(SPLIT_MIX_A) + F.lit(SPLIT_MIX_B), F.lit(SPLIT_MIX_P)),
         F.lit(1000),
     )
 
 
-def hash_split(
-    df: DataFrame,
-    weights: tuple[tuple[str, int], ...] = DEFAULT_SPLITS,
-    salt: str = "v1",
-    mode: str = "djb2",
-) -> DataFrame:
+def hash_split(df: DataFrame) -> DataFrame:
     """add a ``split`` column assigning each row to a named split by
-    cumulative per-mille weight over :func:`split_bucket` of
+    cumulative per-mille ``SPLITS`` weight over :func:`split_bucket` of
     ``doc_id``. Row-local (no shuffle, no state): the assignment of one
     doc can never change because other docs arrived."""
-    total = sum(w for _, w in weights)
-    if total != 1000:
-        raise ValueError(f"hash_split: weights must sum to 1000, got {total}")
-    b = split_bucket("doc_id", salt, mode)
+    b = split_bucket("doc_id")
     expr = None
     acc = 0
-    for name, w in weights:
+    for name, w in SPLITS:
         acc += w
         cond = b < acc
         expr = F.when(cond, F.lit(name)) if expr is None else expr.when(
@@ -94,11 +81,14 @@ def hash_split(
     return df.withColumn("split", expr)
 
 
+# ids per bucket of the two-level prefix sum in _running_start
+RUNNING_BUCKET_IDS = 65536
+
+
 def _running_start(
     base: DataFrame,
     part: list[str],
     id_col: str,
-    bucket_ids: int = 65536,
 ) -> DataFrame:
     """add ``_start`` = the per-group running ``_n`` total BEFORE
     each row under deterministic id-order concatenation — the scalable
@@ -109,27 +99,28 @@ def _running_start(
     (with a handful of sources, a single-task fold at 100 TB — the
     semantics never needed that). Same output, two levels instead:
 
-    1. bucket rows by ``floor(id / bucket_ids)`` — order-aligned with
-       id for numeric id columns (for non-numeric ids the bucket is a
-       constant and the scheme degenerates to the single-window form,
+    1. bucket rows by ``floor(id / RUNNING_BUCKET_IDS)`` — order-aligned
+       with id for numeric id columns (for non-numeric ids the bucket is
+       a constant and the scheme degenerates to the single-window form,
        still correct);
     2. running sum WITHIN each (group, bucket) — tasks bounded by
-       ~``bucket_ids`` rows for dense ids, whatever the corpus size;
+       ~``RUNNING_BUCKET_IDS`` rows for dense ids, whatever the corpus
+       size;
     3. per-(group, bucket) subtotals → a prefix window ordered by
        bucket over that SLIM table (one task per group, but over
        3-column subtotal rows, not the data) → broadcast the bucket
        offsets back onto the data.
 
     Fully lazy (no driver collect) and deterministic. At extreme
-    bucket counts (very sparse 64-bit id spaces) raise ``bucket_ids``
-    so the broadcast offset table stays small.
+    bucket counts (very sparse 64-bit id spaces) raise
+    ``RUNNING_BUCKET_IDS`` so the broadcast offset table stays small.
     """
     from pyspark.sql.types import NumericType
 
     c = F.col(id_col)
     numeric = isinstance(base.schema[id_col].dataType, NumericType)
     bucket = (
-        F.floor(c.cast("long") / F.lit(bucket_ids))
+        F.floor(c.cast("long") / F.lit(RUNNING_BUCKET_IDS))
         if numeric
         else F.lit(0).cast("long")
     )

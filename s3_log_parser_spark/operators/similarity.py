@@ -79,8 +79,16 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     )
 
 
+# sign-LSH hyperplanes and embedding width of ann_lsh_bucketed
+LSH_PLANES = 4
+LSH_DIM = 64
+
+
 def with_lsh_bucket(
-    df: DataFrame, vec_col: str = "embedding", n_planes: int = 4, dim: int = 64
+    df: DataFrame,
+    vec_col: str = "embedding",
+    n_planes: int = LSH_PLANES,
+    dim: int = LSH_DIM,
 ) -> DataFrame:
     return df.withColumn(
         "lsh_bucket", hyperplane_bits(F.col(vec_col), n_planes, dim)
@@ -91,8 +99,6 @@ def ann_lsh_bucketed(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    n_planes: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
     """approximate top-k over ``(vec_id, embedding)``: candidates
     restricted to the query's LSH bucket (multi-probe: also the buckets
@@ -105,14 +111,14 @@ def ann_lsh_bucketed(
             queries.select(
                 F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
             ),
-            "q_vec", n_planes, dim,
+            "q_vec",
         ),
         "q_vec", "q_nrm",
     )
     # probe the query's bucket plus each single-bit flip of it
     probes = F.array(
         F.col("lsh_bucket"),
-        *[F.col("lsh_bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)],
+        *[F.col("lsh_bucket").bitwiseXOR(F.lit(1 << j)) for j in range(LSH_PLANES)],
     )
     q = q.withColumn("lsh_bucket", F.explode(probes))
     c = _with_norm(
@@ -120,7 +126,7 @@ def ann_lsh_bucketed(
             corpus.select(
                 F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
             ),
-            "c_vec", n_planes, dim,
+            "c_vec",
         ),
         "c_vec", "c_nrm",
     )

@@ -34,12 +34,10 @@ of a Python-precomputed literal by the integer harmonic sum, floored at
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashes import djb2_expr, djb2_py
+from ..functions.hashes import djb2_expr
 from .sampling import SHUFFLE_SQ_P, SPLIT_MIX_A, SPLIT_MIX_B, SPLIT_MIX_P
 
 HLL_P = 9  # 512 registers; standard error 1.04/sqrt(512) ~= 4.6%
@@ -73,13 +71,6 @@ def _hash31(key: Column, mode: str) -> Column:
             F.xxhash64(key).bitwiseAND(F.lit((1 << 62) - 1)), 31
         )
     raise ValueError(f"unknown hash mode {mode!r}")
-
-
-def hll_hash_py(key: str) -> int:
-    """Pure-python twin of the djb2-mode ``_hash31`` (test pin)."""
-    b = (djb2_py(key) * SPLIT_MIX_A + SPLIT_MIX_B) % SPLIT_MIX_P
-    m = b % SHUFFLE_SQ_P
-    return (m * m) % SHUFFLE_SQ_P
 
 
 def hll_constant(p: int = HLL_P) -> float:
@@ -177,20 +168,6 @@ def hll_estimate(sketch: DataFrame, correction: bool = True) -> DataFrame:
         "z_int",
         F.floor(est * 1000).cast("long").alias("est_x1000"),
     )
-
-
-def hll_estimate_py(ranks: dict[int, int], correction: bool = True) -> float:
-    """Pure-python reference estimator (pytest pin for both branches)."""
-    m = 1 << HLL_P
-    R = HLL_BITS - HLL_P + 1
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    z_int = sum(1 << (R - r) for r in ranks.values())
-    z_int += (m - len(ranks)) * (1 << R)
-    raw = alpha * m * m * float(1 << R) / float(z_int)
-    v_empty = m - len(ranks)
-    if correction and raw <= 2.5 * m and v_empty > 0:
-        return m * math.log(m / v_empty)
-    return raw
 
 
 # ---------------------------------------------------------------------------

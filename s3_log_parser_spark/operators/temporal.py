@@ -38,11 +38,9 @@ def asof_join(
     on: str = "ts",
     by: tuple[str, ...] = ("user_id",),
     right_cols: tuple[str, ...] = ("state_id",),
-    tolerance_seconds: int | None = None,
 ) -> DataFrame:
     """backward-inclusive as-of join; returns every ``left`` row plus
-    the matched ``right_cols`` (NULL when no earlier right row exists,
-    or when the match is older than ``tolerance_seconds``).
+    the matched ``right_cols`` (NULL when no earlier right row exists).
 
     ``right`` must be unique per ``(by, on)`` — pre-aggregate if not
     (equal-timestamp duplicates would make the winning payload
@@ -53,13 +51,10 @@ def asof_join(
     left_cols = left.columns
     # union schema: (by..., _ts, _side, _rv, <left-only carry cols>) —
     # by/_ts are real on BOTH sides (they drive the partition/sort);
-    # the right payload travels as ONE struct column (carrying the
-    # right timestamp for the tolerance check); left-only columns ride
-    # as NULL on right rows
+    # the right payload travels as ONE struct column; left-only
+    # columns ride as NULL on right rows
     carry = [c for c in left_cols if c not in by]
-    rv = F.struct(
-        F.col(on).alias("_rts"), *[F.col(c) for c in right_cols]
-    )
+    rv = F.struct(*[F.col(c) for c in right_cols])
     r = right.select(
         *[F.col(c) for c in by],
         F.col(on).alias("_ts"),
@@ -88,26 +83,20 @@ def asof_join(
         .withColumn("_m", matched)
         .filter(F.col("_side") == 1)
     )
-    if tolerance_seconds is not None:
-        out = out.withColumn(
-            "_m",
-            F.when(
-                _us(F.col("_ts")) - _us(F.col("_m._rts"))
-                <= tolerance_seconds * 1_000_000,
-                F.col("_m"),
-            ),
-        )
     return out.select(
         *[F.col(c) for c in left_cols],
         *[F.col("_m")[c].alias(c) for c in right_cols],
     )
 
 
+# the most time buckets one interval may explode to in range_join
+MAX_BUCKETS_PER_INTERVAL = 1_000
+
+
 def range_join(
     left: DataFrame,
     intervals: DataFrame,
     bucket_seconds: int = 3600,
-    max_buckets_per_interval: int | None = 1_000,
 ) -> DataFrame:
     """interval-containment join: every ``left`` row paired with every
     interval (same ``user_id``) satisfying ``start_ts ≤ ts < end_ts``
@@ -125,24 +114,23 @@ def range_join(
     rows, all hash-distributed. Pick ``bucket_seconds`` near the
     typical interval length (a too-small bucket inflates the explode;
     a too-big one inflates false candidate pairs — same tuning story
-    as every banded join in this repo). ``max_buckets_per_interval``
+    as every banded join in this repo). ``MAX_BUCKETS_PER_INTERVAL``
     guards the degenerate explode (a year-long interval at 1 s buckets)
-    with a loud error; pass None to skip the probe.
+    with a loud error.
     """
     us = 1_000_000 * bucket_seconds
     iv = intervals.filter(F.col("end_ts") > F.col("start_ts"))
     startb = F.floor(_us("start_ts") / us)
     # end is EXCLUSIVE: the bucket of the last contained microsecond
     endb = F.floor((_us("end_ts") - 1) / us)
-    if max_buckets_per_interval is not None:
-        worst = iv.agg(F.max(endb - startb + 1).alias("m")).first()["m"]
-        if worst is not None and worst > max_buckets_per_interval:
-            raise ValueError(
-                f"range_join: an interval spans {worst} buckets of "
-                f"{bucket_seconds}s (> {max_buckets_per_interval}); raise "
-                "bucket_seconds (or the guard) — exploding it would "
-                "multiply the interval side by that factor"
-            )
+    worst = iv.agg(F.max(endb - startb + 1).alias("m")).first()["m"]
+    if worst is not None and worst > MAX_BUCKETS_PER_INTERVAL:
+        raise ValueError(
+            f"range_join: an interval spans {worst} buckets of "
+            f"{bucket_seconds}s (> {MAX_BUCKETS_PER_INTERVAL}); raise "
+            "bucket_seconds — exploding it would multiply the interval "
+            "side by that factor"
+        )
     ivx = iv.withColumn("_bucket", F.explode(F.sequence(startb, endb)))
     lx = left.withColumn("_bucket", F.floor(_us("ts") / us))
     cond = [lx["user_id"] == ivx["user_id"], lx["_bucket"] == ivx["_bucket"]]

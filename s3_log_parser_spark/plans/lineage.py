@@ -17,34 +17,57 @@ exercises.
 from __future__ import annotations
 
 import json
-import os
 import time
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..sources.maintenance import _fs_for
 
 
 class Manifest:
-    def __init__(self, root: str, run_id: str):
-        self.dir = os.path.join(root, "_manifest", run_id)
-        os.makedirs(self.dir, exist_ok=True)
+    """``<root>/_manifest/<run_id>/<stage>.json``, one file per
+    completed stage, through the Hadoop FileSystem API so that a
+    ``file://``, ``hdfs://`` or ``s3a://`` root holds its own manifest
+    next to its tables."""
+
+    def __init__(self, spark: SparkSession, root: str, run_id: str):
+        self.dir = f"{root.rstrip('/')}/_manifest/{run_id}"
+        self._fs, jdir = _fs_for(spark, self.dir)
+        self._Path = spark._jvm.org.apache.hadoop.fs.Path
+        self._fs.mkdirs(jdir)
 
     def _path(self, stage: str) -> str:
         safe = stage.replace("/", "_").replace(":", "_")
-        return os.path.join(self.dir, f"{safe}.json")
+        return f"{self.dir}/{safe}.json"
 
     def complete(self, stage: str) -> bool:
-        return os.path.exists(self._path(stage))
+        return self._fs.exists(self._Path(self._path(stage)))
 
     def mark(self, stage: str, **meta) -> None:
-        tmp = self._path(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"stage": stage, "ts": time.time(), **meta}, f)
-        os.replace(tmp, self._path(stage))  # atomic → no torn manifests
+        # write-then-rename: a reader sees the whole entry or none
+        target = self._Path(self._path(stage))
+        tmp = self._Path(self._path(stage) + ".tmp")
+        body = json.dumps({"stage": stage, "ts": time.time(), **meta})
+        out = self._fs.create(tmp, True)
+        try:
+            out.write(bytearray(body.encode("utf-8")))
+        finally:
+            out.close()
+        if self._fs.exists(target):  # rename never replaces a file
+            self._fs.delete(target, False)
+        if not self._fs.rename(tmp, target):  # pragma: no cover
+            raise RuntimeError(f"manifest: rename failed: {target}")
 
     def stages(self) -> list[str]:
+        names = [
+            st.getPath().getName()
+            for st in self._fs.listStatus(self._Path(self.dir))
+        ]
         return sorted(
-            f[: -len(".json")] for f in os.listdir(self.dir) if f.endswith(".json")
+            n[: -len(".json")]
+            for n in names
+            if n.endswith(".json") and not n.startswith(".")
         )
 
 

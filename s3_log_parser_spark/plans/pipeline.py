@@ -27,8 +27,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.encode import SLIM_COLUMNS, encode_slim
-from ..functions.parsing import parse_text_sql
+from ..functions.encode import SLIM_COLUMNS
+from ..functions.hashes import djb2_expr, first_path_segment
+from ..functions.parsing import parse_range, parse_text_sql
 from ..operators.enrich import classify_when, enrich_role_tool
 from ..operators.flags import with_flags
 from ..operators.router import route_and_write
@@ -45,18 +46,53 @@ class PipelineResult:
     lineage: DataFrame | None = None
 
 
+def _encode_classify(parsed: DataFrame) -> DataFrame:
+    """Flat encode and user-agent classify over the parse kernel's flat
+    columns. The encode function is looked up on its module at call
+    time, so a wrapper set on the module attribute (the benchmark's
+    layer tracer) sees every call."""
+    from ..functions.encode import encode_slim_flat
+
+    return classify_when(encode_slim_flat(parsed)).drop("user_agent")
+
+
 def _parse_encode_classify(transcripts: DataFrame) -> DataFrame:
     """Parse, flat encode and user-agent classify: the slim columns
     before flags and dims. The Arrow kernel is one ``mapInArrow``
     stage. Both ``build_slim`` and the streaming ``build_slim_stream``
-    start here. The parse and encode functions are looked up on their
-    modules at call time, so a wrapper set on the module attribute
-    (the benchmark's layer tracer) sees every call."""
-    from ..functions.encode import encode_slim_flat
+    start here; like the encode function, the parse function is looked
+    up on its module at call time."""
     from ..functions.parsing_arrow import parse_text_arrow
 
-    df = encode_slim_flat(parse_text_arrow(transcripts, "text", "conv_id"))
-    return classify_when(df).drop("user_agent")
+    return _encode_classify(parse_text_arrow(transcripts, "text", "conv_id"))
+
+
+def _parse_sql_flat(transcripts: DataFrame) -> DataFrame:
+    """The zero-Python Catalyst reference parse (``parse_text_sql``)
+    projected to the flat columns ``parse_text_arrow`` emits: DJB2
+    hashes via ``djb2_expr``, the byte range via ``parse_range``, the
+    raw numeric fields and ``user_agent``; ``text`` is dropped."""
+    p = F.col("parsed")
+    byte_start, byte_end = parse_range(p["range_header"])
+    return (
+        parse_text_sql(transcripts, "text")
+        .withColumns(
+            {
+                "ip_hash": djb2_expr(p["remote_ip"]),
+                "key_hash": djb2_expr(p["key"]),
+                "tool_hash": djb2_expr(first_path_segment(p["key"])),
+                "conv_hash": djb2_expr(F.col("conv_id")),
+                "http_code_raw": p["http_code"],
+                "bytes_sent": p["bytes_sent"],
+                "object_size": p["object_size"],
+                "total_time_ms": p["total_time_ms"],
+                "byte_start": byte_start,
+                "byte_end": byte_end,
+                "user_agent": p["user_agent"],
+            }
+        )
+        .drop("parsed", "text")
+    )
 
 
 def build_slim(transcripts: DataFrame, use_sql_parser: bool = False) -> DataFrame:
@@ -65,16 +101,12 @@ def build_slim(transcripts: DataFrame, use_sql_parser: bool = False) -> DataFram
     The production path is the Arrow-native fused parse (mapInArrow +
     RE2 + dictionary-encoded DJB2) — exactly ONE vectorized stage, zero
     per-row Python objects (north_rule). ``use_sql_parser`` selects the
-    zero-Python Catalyst reference (``parse_text_sql`` → ``encode_slim``)
-    the production path is checked against in tests and the benchmark.
+    zero-Python Catalyst reference parse (:func:`_parse_sql_flat`) the
+    production path is checked against in tests and the benchmark;
+    both parses feed the same encode, classify, flags and dims.
     """
     if use_sql_parser:
-        df = encode_slim(parse_text_sql(transcripts, "text"))
-        # E7/E8: pattern banks are compile-time constants → CASE WHEN
-        # chains (whole-stage codegen)
-        df = classify_when(
-            df.withColumn("user_agent", F.col("parsed")["user_agent"])
-        ).drop("user_agent")
+        df = _encode_classify(_parse_sql_flat(transcripts))
     else:
         df = _parse_encode_classify(transcripts)
     # window BEFORE the role/tool dims: with_flags' ST1 exchange is the
@@ -103,7 +135,7 @@ def run_pipeline(
     slim, only when asked for.
     """
     catalog = Catalog(spark, out_dir)
-    manifest = Manifest(out_dir, run_id)
+    manifest = Manifest(spark, out_dir, run_id)
     timings: dict[str, float] = {}
 
     t0 = time.perf_counter()

@@ -46,13 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.sketch import (
-    CMS_WIDTH,
-    cms_merge,
-    cms_sketch,
-    hll_merge,
-    hll_sketch,
-)
+from ..operators.sketch import cms_merge, cms_sketch, hll_merge, hll_sketch
 from ..sources.maintenance import _fs_for, overwrite_staged
 
 _HLL_SCHEMA = "bucket int, r int"
@@ -131,7 +125,6 @@ def start_cms_stream(
     table_path: str,
     checkpoint_dir: str,
     key_col: str = "k",
-    width: int = CMS_WIDTH,
     mode: str = "djb2",
 ) -> StreamingQuery:
     """Maintain a persisted CMS counter table over a key stream,
@@ -167,7 +160,7 @@ def start_cms_stream(
                 f"checkpoint, or start a NEW counter table for the new "
                 f"lineage and cms_merge() the two tables offline."
             )
-        sk = cms_sketch(batch, key_col, width=width, mode=mode)
+        sk = cms_sketch(batch, key_col, mode=mode)
         fp, n = _batch_fingerprint(batch, key_col)
         merged = (
             cms_merge(prev.drop(*_CMS_META_COLS), sk)

@@ -84,10 +84,13 @@ def test_funnel_ties_within_same_timestamp_break_by_event_id(spark):
     assert funnel_steps(rev, STEPS).collect()[0].furthest_step == 1
 
 
-def test_funnel_skew_guard_raises(spark):
+def test_funnel_skew_guard_raises(spark, monkeypatch):
+    from s3_log_parser_spark.operators import behavior
+
     ev = _events(spark, [(1, "signup", i % 60) for i in range(30)])
-    with pytest.raises(Exception, match="max_events_per_key"):
-        funnel_steps(ev, STEPS, max_events_per_key=10).collect()
+    monkeypatch.setattr(behavior, "MAX_EVENTS_PER_KEY", 10)
+    with pytest.raises(Exception, match="MAX_EVENTS_PER_KEY"):
+        funnel_steps(ev, STEPS).collect()
 
 
 def test_funnel_rejects_bad_steps():
@@ -131,7 +134,7 @@ def test_windowed_anomaly_flags_spike_only(spark):
         [(1, "m", _ts(i), i, v) for i, v in enumerate(vals)],
         SCHEMA + ", value double",
     )
-    rows = windowed_anomalies(ev, min_history=4).orderBy("event_id").collect()
+    rows = windowed_anomalies(ev).orderBy("event_id").collect()
     flags = [r.is_anomaly for r in rows]
     # first 4 rows lack history → NULL; the spike flags; the return to
     # baseline is ALSO a 3σ deviation from the spike-inflated window
@@ -145,7 +148,7 @@ def test_windowed_anomaly_zero_variance_history(spark):
         [(1, "m", _ts(i), i, v) for i, v in enumerate(vals)],
         SCHEMA + ", value double",
     )
-    rows = windowed_anomalies(ev, min_history=4).orderBy("event_id").collect()
+    rows = windowed_anomalies(ev).orderBy("event_id").collect()
     assert rows[4].is_anomaly is False  # 5.0 after four 5.0s
     assert rows[5].is_anomaly is True  # ANY deviation from zero variance
 

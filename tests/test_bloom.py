@@ -7,11 +7,7 @@ checks. Scale contract: probing never shuffles the probed side.
 
 import pyspark.sql.functions as F
 
-from s3_log_parser_spark.operators.bloom import (
-    bloom_build,
-    bloom_merge,
-    bloom_probe,
-)
+from s3_log_parser_spark.operators.bloom import bloom_build, bloom_probe
 
 M = 1 << 14
 K = 5
@@ -53,18 +49,3 @@ def test_probe_plan_never_shuffles_probed_side(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan
-
-
-def test_merge_equals_full_build(spark):
-    """union-of-blooms == bloom-of-union for identical (m, k, mode) —
-    what makes per-batch bitmap APPENDS exact."""
-    a, b = _keys(spark, 0, 200), _keys(spark, 200, 400)
-    merged = bloom_merge(
-        bloom_build(a, "k", M, K, "djb2").unionByName(
-            bloom_build(b, "k", M, K, "djb2")
-        )
-    )
-    full = bloom_build(_keys(spark, 0, 400), "k", M, K, "djb2")
-    assert merged.subtract(full).count() == 0
-    assert full.subtract(merged).count() == 0
-

@@ -77,9 +77,11 @@ def test_custom_weights_and_label(spark):
     ).collect()[0]
     assert out["s"] == 500
     lab = _df(spark).select(
-        quality_model_label("text", threshold=10**12).alias("l")
+        quality_model_score("text").alias("s"),
+        quality_model_label("text").alias("l"),
     ).collect()
-    assert all(not r["l"] for r in lab)  # absurd threshold → all False
+    # the label is the sign of the logit
+    assert all(r["l"] == (r["s"] >= 0) for r in lab)
 
 
 def test_bucket_range(spark):

@@ -232,25 +232,6 @@ def test_conv_examples_assembles_in_turn_order(spark):
     assert b["total_chars"] == 0 and b["messages"][0]["text"] is None
 
 
-def test_conv_examples_gates_drop_whole_conversations(spark):
-    from s3_log_parser_spark.operators.conversations import conv_examples
-
-    rows = [("a", i, "user", None, "x" * 10) for i in range(5)] + [
-        ("b", 0, "user", None, "y" * 100)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "conv_id string, turn_idx long, role string, tool string, "
-        "text string",
-    )
-    assert {
-        r["conv_id"] for r in conv_examples(df, max_turns=4).collect()
-    } == {"b"}
-    assert {
-        r["conv_id"] for r in conv_examples(df, max_chars=50).collect()
-    } == {"a"}
-
-
 def test_conv_examples_write_json_is_sft_jsonl(spark, tmp_path):
     import json
     import os

@@ -920,19 +920,18 @@ def test_dedup_index_daily_append_loop(spark, tmp_path):
     assert {r["doc_id"] for r in surv3.collect()} == {202}
 
 
-def test_dup_clusters_pointer_doubling_long_chain(spark):
+def test_dup_clusters_pointer_doubling_long_chain(spark, monkeypatch):
     """a 40-node path has diameter 39; pointer doubling must close it
-    within ~log2(39)+slack rounds — max_iter=8 would RAISE under plain
-    one-hop propagation."""
+    within ~log2(39)+slack rounds — a limit of 8 rounds would RAISE
+    under plain one-hop propagation."""
+    from s3_log_parser_spark.operators import dedup
     from s3_log_parser_spark.operators.dedup import dup_clusters
 
+    monkeypatch.setattr(dedup, "CLUSTER_MAX_ITER", 8)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
-    got = {
-        r["id"]: r["cluster_id"]
-        for r in dup_clusters(chain, max_iter=8).collect()
-    }
+    got = {r["id"]: r["cluster_id"] for r in dup_clusters(chain).collect()}
     assert got == {i: 0 for i in range(41)}
 
 

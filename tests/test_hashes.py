@@ -44,7 +44,7 @@ def test_djb2_null_is_seed(spark):
 def test_extract_path_semantics(spark):
     # mirrors extract_path (src/s3parser.c:420-451): strip leading /,
     # take until next /, hash; NULL/'' → 5381 — the tool_hash form
-    # encode_slim computes
+    # the Catalyst reference parse computes
     cases = [
         ("/tech-talk/episode-1.mp3", djb2_py("tech-talk")),
         ("tech-talk/episode-1.mp3", djb2_py("tech-talk")),

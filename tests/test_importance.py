@@ -4,6 +4,7 @@ deterministic top-k resample."""
 
 from pyspark.sql import functions as F
 
+from s3_log_parser_spark.operators import importance
 from s3_log_parser_spark.operators.importance import (
     bucket_weights,
     importance_resample,
@@ -37,14 +38,15 @@ def _weights(spark):
     return docs, bucket_weights(docs, target, n=2, buckets=_BUCKETS)
 
 
-def test_bucket_weights_match_python_replica(spark):
+def test_bucket_weights_match_python_replica(spark, monkeypatch):
     """the weight table equals an independent python fold over the
     per-doc bucket sets Spark itself extracted."""
+    monkeypatch.setattr(importance, "BUCKETS", _BUCKETS)
     docs, w = _weights(spark)
     per_doc = {
         r["doc_id"]: set(r["b"])
         for r in docs.select(
-            "doc_id", ngram_buckets("text", 2, _BUCKETS).alias("b")
+            "doc_id", ngram_buckets("text").alias("b")
         ).collect()
     }
     raw_n: dict[int, int] = {}
@@ -74,9 +76,10 @@ def test_scores_rank_target_like_docs_higher(spark):
     assert min(scores[1], scores[2]) > max(scores[3], scores[4], scores[5])
 
 
-def test_unseen_buckets_score_neutral(spark):
+def test_unseen_buckets_score_neutral(spark, monkeypatch):
     """a doc whose vocabulary was never trained on gets exactly
     n_feats·scale — the smoothed (0+1)/(0+1) ratio per feature."""
+    monkeypatch.setattr(importance, "BUCKETS", _BUCKETS)
     docs, w = _weights(spark)
     novel = spark.createDataFrame(
         [(99, "omega kappa lambda omega kappa")], "doc_id long, text string"
@@ -86,7 +89,7 @@ def test_unseen_buckets_score_neutral(spark):
     trained = {r["bucket"] for r in w.collect()}
     nb = set(
         novel.select(
-            F.explode(ngram_buckets("text", 2, _BUCKETS)).alias("b")
+            F.explode(ngram_buckets("text")).alias("b")
         ).toPandas()["b"]
     )
     if nb & trained:  # 64 buckets — collision possible; only then relax

@@ -70,18 +70,19 @@ def test_run_verbose_writes_lineage(spark, tmp_path, capsys):
     assert rows == 1000, "lineage row counts must cover every slim row"
 
 
-def test_grouped_export_json_max_groups_guard(spark):
+def test_grouped_export_json_max_groups_guard(spark, monkeypatch):
     """VERDICT r2 #6: the driver-materialized export must refuse
     unbounded group counts instead of OOMing the driver."""
+    from s3_log_parser_spark.operators import aggregate
     from s3_log_parser_spark.operators.aggregate import grouped_export_json
 
     df = spark.range(100).withColumn("k", F.col("id") % 50)
-    with pytest.raises(ValueError, match="max_groups"):
-        grouped_export_json(df, "k", "fifty_groups", max_groups=10)
-    # raising the cap succeeds
-    doc = json.loads(
-        grouped_export_json(df, "k", "fifty_groups", max_groups=50)
-    )
+    monkeypatch.setattr(aggregate, "MAX_EXPORT_GROUPS", 10)
+    with pytest.raises(ValueError, match=">10 groups"):
+        grouped_export_json(df, "k", "fifty_groups")
+    # a cap at the group count succeeds
+    monkeypatch.setattr(aggregate, "MAX_EXPORT_GROUPS", 50)
+    doc = json.loads(grouped_export_json(df, "k", "fifty_groups"))
     assert doc["total_groups"] == 50
 
 

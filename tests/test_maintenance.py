@@ -1,17 +1,15 @@
 """Parquet maintenance: small-file compaction (row-set-preserving,
-idempotent, partition-values intact) and data-skipping layout
-(disjoint per-file min/max ranges, verified from the footers)."""
+idempotent, partition-values intact, a failed rewrite keeps the
+partition)."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from s3_log_parser_spark.operators.router import align_schema
+from helpers import align_schema
 from s3_log_parser_spark.sources.maintenance import (
     compact_table,
-    file_column_ranges,
-    layout_for_skipping,
-    overlap_pairs,
     partition_file_stats,
 )
 
@@ -84,30 +82,35 @@ def test_partition_file_stats_leaf_dirs(spark, tmp_path):
     assert all(s.n_files == 4 and s.bytes > 0 for s in stats)
 
 
-def test_layout_for_skipping_disjoint_file_ranges(spark, tmp_path):
-    scattered = str(tmp_path / "scattered")
-    ranged = str(tmp_path / "ranged")
-    df = _events(spark, 8000)
+def test_compact_failed_write_keeps_partition_rows(
+    spark, tmp_path, monkeypatch
+):
+    """a staged rewrite that fails inside its write job must leave the
+    partition readable with every row and file it had, and no staged
+    sibling behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
 
-    # round-robin write: every file spans the whole user_id domain
-    df.repartition(8).write.parquet(scattered)
-    # range layout: each file owns a disjoint slice of the domain
-    layout_for_skipping(df, "user_id", num_files=8).write.parquet(ranged)
+    path = str(tmp_path / "sink")
+    df = _events(spark, 1000)
+    df.repartition(8).write.partitionBy("day").parquet(path)
+    files_before = sorted(_data_files(path))
+    entries_before = sorted(os.listdir(path))
 
-    bad = file_column_ranges(scattered, "user_id")
-    good = file_column_ranges(ranged, "user_id")
-    assert len(bad) == len(good) == 8
-    # scattered: all pairs overlap; ranged: boundary-sharing neighbors
-    # at most (repartitionByRange splits BETWEEN key values, so a key
-    # never spans two files — but adjacent ranges may touch)
-    assert overlap_pairs(bad) == 8 * 7 // 2
-    assert overlap_pairs(good) <= 7
-    # disjoint slices: sorted mins are strictly increasing
-    mins = [lo for lo, _ in good]
-    assert mins == sorted(set(mins))
+    real_parquet = DataFrameWriter.parquet
 
+    def failing_parquet(self, target, *args, **kwargs):
+        if "staged" in target:
+            # an unknown codec fails inside the write job, after an
+            # overwrite has cleared its target
+            self.option("compression", "no-such-codec")
+        return real_parquet(self, target, *args, **kwargs)
 
-def test_layout_row_set_unchanged(spark):
-    df = _events(spark, 2000)
-    out = layout_for_skipping(df, "user_id")
-    assert out.exceptAll(df).isEmpty() and df.exceptAll(out).isEmpty()
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    with pytest.raises(Exception):
+        compact_table(spark, path)
+    monkeypatch.undo()
+
+    assert sorted(_data_files(path)) == files_before
+    assert sorted(os.listdir(path)) == entries_before
+    back = align_schema(spark.read.parquet(path), df)
+    assert back.exceptAll(df).isEmpty() and df.exceptAll(back).isEmpty()

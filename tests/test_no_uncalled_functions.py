@@ -2,11 +2,17 @@
 has a reader.
 
 A name counts as used when it appears in any ``.py`` file of the
-checkout outside the lines of its own definition: a call, an import, a
-re-export or a name string looked up at run time all count. Module
-constants are the names bound by a top-level assignment (dunder names
-such as ``__all__`` are exempt). The generated ``bpe_merges.py`` data
-module is skipped.
+checkout outside ``tests/`` and outside the lines of its own
+definition: a call, an import, a re-export or a name string looked up
+at run time all count. Module constants are the names bound by a
+top-level assignment (dunder names such as ``__all__`` are exempt).
+The generated ``bpe_merges.py`` data module is skipped.
+
+Tests do not count as readers, for the same reason they do not count
+as callers of an option (an option is justified only when two callers
+need different values, not counting tests and examples): code only a
+test runs is part of no program. A pure-Python reference a test checks
+the package against lives in the test.
 """
 
 import ast
@@ -17,12 +23,17 @@ from collections import Counter
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "s3_log_parser_spark")
 SKIP = {"bpe_merges.py"}
+TESTS = os.path.join(ROOT, "tests")
 WORD = re.compile(r"\w+")
 
 
 def _py_files():
     for d, subdirs, files in os.walk(ROOT):
-        subdirs[:] = [s for s in subdirs if not s.startswith((".", "__"))]
+        subdirs[:] = [
+            s
+            for s in subdirs
+            if not s.startswith((".", "__")) and os.path.join(d, s) != TESTS
+        ]
         for f in files:
             if f.endswith(".py") and f not in SKIP:
                 yield os.path.join(d, f)

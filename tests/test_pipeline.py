@@ -136,7 +136,7 @@ def test_route_stage_leaves_session_conf_untouched(spark, transcripts, tmp_path)
 
 
 def test_routed_row_set_equality(spark, piperun):
-    from s3_log_parser_spark.operators.router import align_schema
+    from helpers import align_schema
 
     out, res = piperun
     cat = Catalog(spark, out)
@@ -181,7 +181,7 @@ def test_resume_skips_completed_and_is_idempotent(spark, transcripts, tmp_path):
     }
     # simulate a kill after slim + 2 sinks: drop two manifest entries
     # and the sink dirs, then re-run with the same run_id
-    m = Manifest(out, "r1")
+    m = Manifest(spark, out, "r1")
     for stage, table in [("sink:by_day", "by_day"), ("sink:rejects", "rejects")]:
         os.remove(m._path(stage))
         shutil.rmtree(os.path.join(out, table))
@@ -193,9 +193,47 @@ def test_resume_skips_completed_and_is_idempotent(spark, transcripts, tmp_path):
     assert m.complete("slim")
 
 
+def test_resume_on_file_uri_out_dir_skips_every_stage(
+    spark, transcripts, tmp_path, monkeypatch
+):
+    """an out dir given as a ``file://`` URI keeps its manifest under
+    that dir (not under a relative ``./file:`` tree in the working
+    directory), and a second run with the same run id skips every
+    stage: no table is rewritten and no entry is re-marked."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = str(tmp_path / "out")
+    uri = "file://" + out
+
+    def files():
+        return {
+            os.path.relpath(os.path.join(d, f), out): os.path.getmtime(
+                os.path.join(d, f)
+            )
+            for d, _, names in os.walk(out)
+            for f in names
+        }
+
+    run_pipeline(spark, transcripts, uri, run_id="r1")
+    entries = sorted(os.listdir(os.path.join(out, "_manifest", "r1")))
+    assert [e for e in entries if e.endswith(".json")] == [
+        "sink_by_day.json",
+        "sink_by_role.json",
+        "sink_by_tool.json",
+        "sink_rejects.json",
+        "slim.json",
+    ]
+    assert os.listdir(cwd) == []
+    before = files()
+    run_pipeline(spark, transcripts, uri, run_id="r1")
+    assert files() == before
+    assert os.listdir(cwd) == []
+
+
 def test_parser_paths_agree(spark, transcripts):
     """the production Arrow-native fused parse and the zero-Python SQL
-    reference (parse_text_sql → encode_slim) produce identical slim
+    reference (parse_text_sql → _parse_sql_flat) produce identical slim
     tables (exceptAll both ways empty)."""
     arrow = build_slim(transcripts)
     sql = build_slim(transcripts, use_sql_parser=True)

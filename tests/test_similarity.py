@@ -47,7 +47,7 @@ def test_topk_deterministic_ranking(spark, emb):
 
 def test_ann_results_subset_of_bucket_and_ranked(spark, emb):
     q = emb.filter("vec_id < 5")
-    out = ann_lsh_bucketed(emb, q, k=3, n_planes=4, dim=64)
+    out = ann_lsh_bucketed(emb, q, k=3)
     rows = out.collect()
     assert len(rows) > 0
     for r in rows:
@@ -69,7 +69,7 @@ def test_ann_recall_reasonable(spark, emb):
     }
     ann = {
         r["q_id"]: r["c_id"]
-        for r in ann_lsh_bucketed(emb, q, k=1, n_planes=4, dim=64).collect()
+        for r in ann_lsh_bucketed(emb, q, k=1).collect()
     }
     hits = sum(1 for k in exact if ann.get(k) == exact[k])
     # multi-probe radius 1 → ~5/16 of the corpus scanned per query;

@@ -1,19 +1,50 @@
 """Mergeable sketch laws: HLL register parity + merge algebra, CMS
 never-undercount + linearity."""
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
+from s3_log_parser_spark.functions.hashes import djb2_py
+from s3_log_parser_spark.operators.sampling import (
+    SHUFFLE_SQ_P,
+    SPLIT_MIX_A,
+    SPLIT_MIX_B,
+    SPLIT_MIX_P,
+)
 from s3_log_parser_spark.operators.sketch import (
+    HLL_BITS,
+    HLL_P,
     cms_lookup,
     cms_merge,
     cms_sketch,
     hll_estimate,
-    hll_estimate_py,
-    hll_hash_py,
     hll_merge,
     hll_sketch,
 )
+
+
+def hll_hash_py(key: str) -> int:
+    """Pure-python twin of the djb2-mode ``sketch._hash31``."""
+    b = (djb2_py(key) * SPLIT_MIX_A + SPLIT_MIX_B) % SPLIT_MIX_P
+    m = b % SHUFFLE_SQ_P
+    return (m * m) % SHUFFLE_SQ_P
+
+
+def hll_estimate_py(ranks: dict[int, int], correction: bool = True) -> float:
+    """Pure-python reference estimator of ``hll_estimate`` (both
+    branches)."""
+    m = 1 << HLL_P
+    R = HLL_BITS - HLL_P + 1
+    alpha = 0.7213 / (1.0 + 1.079 / m)
+    z_int = sum(1 << (R - r) for r in ranks.values())
+    z_int += (m - len(ranks)) * (1 << R)
+    raw = alpha * m * m * float(1 << R) / float(z_int)
+    v_empty = m - len(ranks)
+    if correction and raw <= 2.5 * m and v_empty > 0:
+        return m * math.log(m / v_empty)
+    return raw
 
 
 @pytest.fixture(scope="module")

@@ -67,7 +67,7 @@ def test_stream_batch_rowset_equivalence(spark, transcripts, stream_dirs):
     sinks' union and the batch pipeline — modulo the UNIQUE_IP bit,
     which the stream's slim rows never set (streaming first-occurrence
     dedup is unique_starts_stream_exact), masked on both sides."""
-    from s3_log_parser_spark.operators.router import align_schema
+    from helpers import align_schema
     from s3_log_parser_spark.plans.pipeline import build_slim
 
     src, out, ckpt = stream_dirs

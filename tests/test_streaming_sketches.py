@@ -63,14 +63,14 @@ def test_cms_stream_merges_across_batches(spark, tmp_path_factory):
 
     _keys(spark, 0, 500).write.mode("append").parquet(src)
     stream = spark.readStream.schema("k string").parquet(src)
-    start_cms_stream(stream, tbl, ckpt, width=64).awaitTermination(120)
+    start_cms_stream(stream, tbl, ckpt).awaitTermination(120)
 
     _keys(spark, 500, 900).write.mode("append").parquet(src)
     stream = spark.readStream.schema("k string").parquet(src)
-    start_cms_stream(stream, tbl, ckpt, width=64).awaitTermination(120)
+    start_cms_stream(stream, tbl, ckpt).awaitTermination(120)
 
     want = sorted(
-        map(tuple, cms_sketch(_keys(spark, 0, 900), "k", width=64).collect())
+        map(tuple, cms_sketch(_keys(spark, 0, 900), "k").collect())
     )
     got = sorted(map(tuple, cms_counters(spark, tbl).collect()))
     assert got == want
@@ -86,13 +86,13 @@ def test_cms_identical_replay_is_noop(spark, tmp_path_factory):
     _keys(spark, 0, 500).write.mode("append").parquet(src)
     stream = spark.readStream.schema("k string").parquet(src)
     start_cms_stream(
-        stream, tbl, str(tmp_path_factory.mktemp("ck1")), width=64
+        stream, tbl, str(tmp_path_factory.mktemp("ck1"))
     ).awaitTermination(120)
     want = sorted(map(tuple, cms_counters(spark, tbl).collect()))
 
     stream = spark.readStream.schema("k string").parquet(src)
     start_cms_stream(
-        stream, tbl, str(tmp_path_factory.mktemp("ck2")), width=64
+        stream, tbl, str(tmp_path_factory.mktemp("ck2"))
     ).awaitTermination(120)
     got = sorted(map(tuple, cms_counters(spark, tbl).collect()))
     assert got == want  # no double-count
@@ -113,7 +113,7 @@ def test_cms_lineage_reset_over_changed_source_raises(
     _keys(spark, 0, 500).write.mode("append").parquet(src)
     stream = spark.readStream.schema("k string").parquet(src)
     start_cms_stream(
-        stream, tbl, str(tmp_path_factory.mktemp("ck1")), width=64
+        stream, tbl, str(tmp_path_factory.mktemp("ck1"))
     ).awaitTermination(120)
     before = sorted(map(tuple, cms_counters(spark, tbl).collect()))
 
@@ -122,7 +122,7 @@ def test_cms_lineage_reset_over_changed_source_raises(
     _keys(spark, 500, 900).write.mode("append").parquet(src)
     stream = spark.readStream.schema("k string").parquet(src)
     q = start_cms_stream(
-        stream, tbl, str(tmp_path_factory.mktemp("ck2")), width=64
+        stream, tbl, str(tmp_path_factory.mktemp("ck2"))
     )
     with pytest.raises(StreamingQueryException, match="lineage reset"):
         q.awaitTermination(120)

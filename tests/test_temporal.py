@@ -42,18 +42,6 @@ def test_asof_backward_inclusive_semantics(spark, frames):
     assert set(out.columns) == {"event_id", "user_id", "ts", "state_id"}
 
 
-def test_asof_tolerance(spark, frames):
-    left, right = frames
-    out = asof_join(
-        left, right, on="ts", by=("user_id",),
-        right_cols=("state_id",), tolerance_seconds=30,
-    )
-    got = {r["event_id"]: r["state_id"] for r in out.collect()}
-    # 13 is 60s after state 101 → dropped by the 30s tolerance;
-    # 14 is 60s after state 200 → dropped too; 12 is 20s after 100 → kept
-    assert got == {10: None, 11: 100, 12: 100, 13: None, 14: None, 15: None}
-
-
 def test_asof_single_window_shuffle(spark, frames):
     """the plan must contain exactly ONE exchange (the by-key window
     partitioning) and no join node at all — the property that makes
@@ -102,7 +90,8 @@ def test_range_join_containment_semantics(spark):
     assert sorted((r["event_id"], r["win_id"]) for r in out2.collect()) == got
 
 
-def test_range_join_explode_guard(spark):
+def test_range_join_explode_guard(spark, monkeypatch):
+    from s3_log_parser_spark.operators import temporal
     from s3_log_parser_spark.operators.temporal import range_join
 
     iv = spark.createDataFrame(
@@ -118,11 +107,13 @@ def test_range_join_explode_guard(spark):
         "event_id long, user_id long, ts string",
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     with pytest.raises(ValueError, match="spans .* buckets"):
-        range_join(ev, iv, bucket_seconds=60, max_buckets_per_interval=100)
-    # guard off → runs (60-day interval × 1h buckets is fine)
-    assert range_join(
-        ev, iv, bucket_seconds=3600, max_buckets_per_interval=None
-    ).count() == 1
+        range_join(ev, iv, bucket_seconds=60)
+    # the guard reads MAX_BUCKETS_PER_INTERVAL: 60 day buckets pass the
+    # default 1,000 and fail a limit of 50
+    assert range_join(ev, iv, bucket_seconds=86400).count() == 1
+    monkeypatch.setattr(temporal, "MAX_BUCKETS_PER_INTERVAL", 50)
+    with pytest.raises(ValueError, match="spans 60 buckets"):
+        range_join(ev, iv, bucket_seconds=86400)
 
 
 # --------------------------------------------------------------------
@@ -159,21 +150,6 @@ def test_time_rollup_hierarchy(spark):
         rows = [r for r in out if r.resolution == res]
         assert sum(r.n_events for r in rows) == 5
         assert sum(r.sum_value_x100 for r in rows) == 1775
-
-
-def test_time_rollup_no_value_and_bad_resolution(spark):
-    from s3_log_parser_spark.operators.aggregate import time_rollup
-
-    df = spark.createDataFrame(
-        [("a", "2024-01-01 00:00:10")], "event_type string, ts string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    out = time_rollup(df, value_col=None, resolutions=("hour", "day"))
-    assert "sum_value_x100" not in out.columns
-    assert out.count() == 2  # one hour bucket + one day bucket
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="unknown resolution"):
-        time_rollup(df, resolutions=("fortnight",))
 
 
 def test_time_rollup_single_raw_scan(spark):
@@ -243,18 +219,13 @@ def test_time_rollup_merge_rejects_schema_mismatch(spark):
         time_rollup_merge(a, a.withColumnRenamed("n_events", "n"))
 
 
-def test_time_rollup_rejects_misordered_resolutions(spark):
-    """ADVICE r5: coarse tiers derive from resolutions[0]; a
-    ('day','hour') call would emit an 'hour' tier aggregated from day
-    buckets — right labels, wrong values. Must raise."""
-    import pytest as _pytest
+def test_time_rollup_rejects_misordered_resolutions():
+    """ADVICE r5: coarse tiers derive from the first resolution, so a
+    ('day', 'hour') order would emit an 'hour' tier aggregated from day
+    buckets — right labels, wrong values. The fixed tiers must run
+    strictly finest to coarsest."""
+    from s3_log_parser_spark.operators.aggregate import ROLLUP_RESOLUTIONS
 
-    from s3_log_parser_spark.operators.aggregate import time_rollup
-
-    df = spark.createDataFrame(
-        [("a", "2024-01-01 00:00:00", 1.0)], "event_type string, ts string, value double"
-    ).withColumn("ts", F.to_timestamp("ts"))
-    with _pytest.raises(ValueError, match="finest"):
-        time_rollup(df, resolutions=("day", "hour"))
-    with _pytest.raises(ValueError, match="finest"):
-        time_rollup(df, resolutions=("hour", "hour", "day"))
+    units = ("minute", "hour", "day", "week", "month")
+    ranks = [units.index(r) for r in ROLLUP_RESOLUTIONS]
+    assert ranks == sorted(set(ranks))

@@ -73,9 +73,10 @@ def test_fingerprint_order_invariant(spark):
     assert got[0] == djb2_py("a b c")  # canonical form is sorted-distinct join
 
 
-def test_bpe_real_merge_loop(spark):
+def test_bpe_real_merge_loop(spark, monkeypatch):
     """real BPE: greedy lowest-rank merge parity with hand-checked
     cases + Spark UDF == pure-Python reference on the fixture docs."""
+    from s3_log_parser_spark.functions import bpe
     from s3_log_parser_spark.functions.bpe import (
         bpe_token_count_py,
         bpe_token_count_real,
@@ -83,10 +84,11 @@ def test_bpe_real_merge_loop(spark):
     )
 
     # hand-checkable: with rank {('a','b'):0, ('ab','c'):1}, "abc" -> 1
-    rank = {("a", "b"): 0, ("ab", "c"): 1}
-    assert bpe_units("abc", rank) == 1
-    assert bpe_units("acb", rank) == 3  # no adjacent merge applies
-    assert bpe_units("", rank) == 0
+    with monkeypatch.context() as m:
+        m.setattr(bpe, "_RANK", {("a", "b"): 0, ("ab", "c"): 1})
+        assert bpe_units("abc") == 1
+        assert bpe_units("acb") == 3  # no adjacent merge applies
+        assert bpe_units("") == 0
     assert bpe_token_count_py(None) == 0
     assert bpe_token_count_py("") == 0
 
@@ -124,8 +126,8 @@ def test_repetition_x1000(spark):
     assert got[2] == 0 and got[3] == 0 and got[4] == 0
 
 
-def test_pii_counts_and_redact(spark):
-    from s3_log_parser_spark.functions.text import pii_counts, pii_redact
+def test_pii_counts(spark):
+    from s3_log_parser_spark.functions.text import pii_counts
 
     rows = [
         (1, "contact me at jane.doe@example.com or +1 (555) 123-4567 ok"),
@@ -135,17 +137,12 @@ def test_pii_counts_and_redact(spark):
     df = spark.createDataFrame(rows, "id long, t string")
     c = pii_counts("t")
     got = {
-        r["id"]: (r["e"], r["p"], r["red"])
+        r["id"]: (r["e"], r["p"])
         for r in df.select(
-            "id", c["email"].alias("e"), c["phone"].alias("p"),
-            pii_redact("t").alias("red"),
+            "id", c["email"].alias("e"), c["phone"].alias("p")
         ).collect()
     }
-    assert got[1][0] == 1 and got[1][1] == 1
-    assert "<EMAIL>" in got[1][2] and "<PHONE>" in got[1][2]
-    assert "example.com" not in got[1][2] and "555" not in got[1][2]
-    assert got[2] == (0, 0, "no pii here at all")
-    assert got[3][0] == 0 and got[3][2] is None
+    assert got == {1: (1, 1), 2: (0, 0), 3: (0, 0)}
 
 
 def test_bpe_token_ids(spark):
@@ -195,55 +192,6 @@ def test_bpe_token_ids(spark):
         .collect()
     }
     assert got == want
-
-
-def test_pii_redaction_roundtrip_on_derived_view(spark):
-    """redaction round-trip over the oracle's derived PII view (sf0.001
-    docs + synthetic emails/phones): after pii_redact, the detectors
-    find ZERO residual matches in every row, and rows that never gained
-    PII are byte-identical."""
-    from s3_log_parser_spark.functions.text import pii_counts, pii_redact
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    derived = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 3 == 0,
-                F.concat(
-                    F.lit(" contact agent"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("@example.com now"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                F.col("doc_id") % 5 == 0,
-                F.concat(
-                    F.lit(" or call +1 555 000 "),
-                    F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-                ),
-            ).otherwise(F.lit("")),
-        ).alias("t"),
-    )
-    pre = pii_counts("t")
-    n_with_pii = derived.filter(
-        (pre["email"] > 0) | (pre["phone"] > 0)
-    ).count()
-    assert n_with_pii > 0  # the view must actually plant PII
-    red = derived.select(
-        "doc_id", "t", pii_redact("t").alias("r")
-    )
-    post = pii_counts("r")
-    assert red.filter((post["email"] > 0) | (post["phone"] > 0)).count() == 0
-    untouched = derived.filter(
-        (F.col("doc_id") % 3 != 0) & (F.col("doc_id") % 5 != 0)
-    ).count()
-    same = red.filter(
-        (F.col("doc_id") % 3 != 0) & (F.col("doc_id") % 5 != 0)
-        & (F.col("t") == F.col("r"))
-    ).count()
-    assert untouched == same
 
 
 def test_pii_oracle_patterns_pinned():
