@@ -4,7 +4,7 @@ The regex proxy in :mod:`text` (``bpe_token_count``) counts
 letter/digit/punct runs — a labeled approximation. This module applies
 a genuine BPE encoder (standard algorithm: greedy lowest-rank adjacent
 merge until fixed point) over the committed 32,768-merge table
-(:mod:`bpe_merges`, trained once by ``tools/train_bpe.py`` on a
+(``bpe_merges.txt``, trained once by ``tools/train_bpe.py`` on a
 deterministic synthetic Zipfian stream — production-tokenizer
 vocabulary scale), making token budgets meaningful for a training-data
 pipeline — and, since round 5, materializes the token-ID arrays a
@@ -28,6 +28,7 @@ the Arrow boundary as one int64 per row; ids as one int64 array.
 
 from __future__ import annotations
 
+import pkgutil
 import re
 from functools import lru_cache
 
@@ -37,9 +38,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from .bpe_merges import MERGES
 from .text import BPE_RE
 
+# one ``a b`` merge per line, in rank order: every symbol is ASCII
+# without whitespace. Read as package data, so it also loads from a
+# ``--py-files`` zip.
+MERGES: list[tuple[str, str]] = [
+    tuple(line.split(" "))
+    for line in pkgutil.get_data(__package__, "bpe_merges.txt")
+    .decode("ascii")
+    .splitlines()
+]
 _RANK: dict[tuple[str, str], int] = {pair: i for i, pair in enumerate(MERGES)}
 
 # merged-symbol string → token id (0x110000 + rank of the merge that

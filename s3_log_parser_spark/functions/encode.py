@@ -52,33 +52,3 @@ def encode_slim_flat(df: DataFrame) -> DataFrame:
             .cast("int"),
         )
     )
-
-
-SLIM_COLUMNS = [
-    "conv_id",
-    "turn_idx",
-    "role",
-    "role_id",
-    "tool",
-    "tool_id",
-    "ts",
-    "ts_unix",
-    "day_bucket",
-    "conv_hash",
-    "ip_hash",
-    "key_hash",
-    "tool_hash",
-    "bytes_sent_kb",
-    "object_size_kb",
-    "download_time_ms",
-    "http_code",
-    "http_code_u8",
-    "system_id",
-    "os_id",
-    "device_id",
-    "platform_id",
-    "platform_id_u8",
-    "completion_percent",
-    "flags",
-    "parse_status",
-]

@@ -12,8 +12,8 @@ two ways:
 - :func:`parse_text_sql` — pure-Catalyst ``regexp_extract`` per field
   from the same pattern, returning the full typed ``parsed`` struct:
   the zero-Python reference the Arrow kernel is checked against, the
-  source of the byte-exact round-trip (:func:`reassemble_text`) and
-  the shape the DuckDB oracle mirrors.
+  source of the byte-exact round-trip (``tests/helpers.py``
+  ``reassemble_text``) and the shape the DuckDB oracle mirrors.
 
 Typed casts (P4), http-code domain clamp (P3), timestamp parse (P2) and
 range split (P5) happen *after* extraction in Catalyst so failures feed
@@ -137,46 +137,6 @@ def parse_range(col: Column | str) -> tuple[Column, Column]:
     start = F.regexp_extract(c, r"bytes=?(\d+)-(\d+)", 1).try_cast("long")
     end = F.regexp_extract(c, r"bytes=?(\d+)-(\d+)", 2).try_cast("long")
     return start, end
-
-
-def reassemble_text(parsed: Column) -> Column:
-    """Rebuild the raw line from the parsed struct — byte-exact inverse
-    of the grok bank for parse_status='ok' rows (north_rule round-trip).
-    """
-    p = parsed
-    base = F.concat_ws(
-        " ",
-        p["owner"],
-        p["bucket"],
-        F.concat(F.lit("["), p["ts_str"], F.lit("]")),
-        p["remote_ip"],
-        p["requester"],
-        p["req_id"],
-        p["operation"],
-        p["key"],
-        F.concat(F.lit('"'), p["request_uri"], F.lit('"')),
-        p["http_code"].cast("string"),
-        p["error_code"],
-        p["bytes_sent"].cast("string"),
-        p["object_size"].cast("string"),
-        p["total_time_ms"].cast("string"),
-        p["turnaround_ms"].cast("string"),
-        F.concat(F.lit('"'), p["referrer"], F.lit('"')),
-        F.concat(F.lit('"'), p["user_agent"], F.lit('"')),
-        p["version_id"],
-        p["host_id"],
-        p["sig_version"],
-        p["cipher"],
-        p["auth_type"],
-        p["host_header"],
-        p["tls_version"],
-        p["access_point_arn"],
-        p["acl_required"],
-    )
-    return F.when(
-        p["range_header"].isNotNull(),
-        F.concat(base, F.lit(' "'), p["range_header"], F.lit('"')),
-    ).otherwise(base)
 
 
 def contains_pattern(col: Column | str, pattern: str) -> Column:

@@ -16,10 +16,7 @@ Check algebra (all pure Catalyst, zero Python):
   how MANY rows violate, not just that one did;
 - ``unique`` compares the non-NULL-key row count to
   ``count_distinct(cols)`` inside the same aggregate (Catalyst plans
-  the distinct via one Expand — still a single scan);
-- ``foreign_key`` is the one check that genuinely needs a second
-  table: a broadcast left-anti probe of the dim (the fact side never
-  shuffles), reported through the same schema.
+  the distinct via one Expand — still a single scan).
 
 Thresholds: a check passes with zero failing rows, or, when a
 :class:`Check` sets ``max_failed_ratio_x1000`` (per-mille, integer —
@@ -147,24 +144,4 @@ def audit(df: DataFrame, checks: list[Check]) -> DataFrame:
         row.select(F.explode(F.array(*pairs)).alias("r"))
         .select("r.*")
         .orderBy("check")
-    )
-
-
-def foreign_key(fact: DataFrame, key: str, dim: DataFrame, dim_key: str) -> DataFrame:
-    """Referential-integrity check: fact rows whose non-NULL ``key``
-    has no match in ``dim`` (passes only with no orphan). ONE pass
-    over the fact table: a broadcast LEFT join marks orphans (dim-side
-    NULL) and the same aggregate computes total + failed — the fact
-    side is neither shuffled nor scanned twice. Same report schema as :func:`audit`."""
-    probe = F.broadcast(dim.select(F.col(dim_key).alias("__fk")).distinct())
-    marked = fact.join(probe, fact[key] == F.col("__fk"), "left")
-    orphan = (F.col(key).isNotNull() & F.col("__fk").isNull()).cast("long")
-    return marked.agg(
-        F.coalesce(F.sum(orphan), F.lit(0)).cast("long").alias("failed"),
-        F.count(F.lit(1)).cast("long").alias("total"),
-    ).select(
-        F.lit(f"foreign_key({key})").alias("check"),
-        "failed",
-        "total",
-        (F.col("failed") == 0).alias("passed"),
     )

@@ -1153,27 +1153,6 @@ def write_dedup_index(index: DedupIndex, path: str) -> None:
     ])
 
 
-def compact_dedup_index(spark, path: str) -> None:
-    """table maintenance for the append loop: rewrite the index with
-    duplicate digests collapsed (append lets a digest repeat across
-    batches — correct for the anti-join, wasteful to scan) and
-    duplicate (id, signature/shingle) rows dropped (a replayed batch
-    can append the same doc twice; the overwrite output sink dedups
-    itself, the index tables don't — dropDuplicates is safe HERE,
-    uniquely, because same-id rows are bit-identical derivations of
-    the same doc, so the partition-dependent winner carries identical
-    values). Run it like any compaction job — periodically, not per
-    batch. Each table is rewritten by a staged swap
-    (:func:`sources.maintenance.overwrite_staged`), so a write that
-    fails leaves that table as it was."""
-    from ..sources.maintenance import overwrite_staged
-
-    idx = read_dedup_index(spark, path)
-    overwrite_staged(idx.digests.distinct(), f"{path}/digests")
-    overwrite_staged(idx.sigs.dropDuplicates(["id"]), f"{path}/sigs")
-    overwrite_staged(idx.shingles.dropDuplicates(["id"]), f"{path}/shingles")
-
-
 def read_dedup_index(spark, path: str) -> DedupIndex:
     """load a persisted index; the returned frames are columnar scans,
     so every downstream use reads parquet instead of recomputing
@@ -1197,8 +1176,7 @@ def append_to_dedup_index(
     from its meta table, so a caller can't silently mix hash families)
     and append them. Appended digests may repeat an existing digest
     across batches — harmless, the exact leg is an anti-join (presence
-    test); run :func:`compact_dedup_index` during table maintenance if
-    storage matters. Cost: O(batch), the history is never touched.
+    test). Cost: O(batch), the history is never touched.
 
     The accepted frame's lineage is TRUNCATED (eager localCheckpoint)
     before any write. ``accepted_df`` normally comes out of

@@ -105,18 +105,17 @@ def bank_winner(ua: Column, bank: Column, default: int) -> Column:
 
 
 def enrich_role_tool(df: DataFrame) -> DataFrame:
-    """Attach the role/tool dimensions: ``role_id``, ``tool_id`` and
-    ``tool_dim_hash`` (the tool name's DJB2, FIXTURES.md §2).
+    """Attach the role/tool dimensions ``role_id`` and ``tool_id``
+    (FIXTURES.md §2).
 
     The dims are compile-time-constant tables (3 roles, 20 tools), so
     the lookup is CASE WHEN, not a join: the left-join contract (NULL
     for a NULL or unknown key) with zero BroadcastExchange stages and
     no exchange on the fact side.
     """
-    from ..functions.hashes import djb2_py
     from ..schemas import ROLES, TOOL_NAMES
 
-    # SQL text, not a 46-When Column loop (r7): same CASE trees,
+    # SQL text, not a 23-When Column loop (r7): same CASE trees,
     # ~0.15 s of py4j per construction saved; distinct match values
     # make the WHEN order irrelevant
     role_sql = (
@@ -133,15 +132,6 @@ def enrich_role_tool(df: DataFrame) -> DataFrame:
         )
         + " ELSE CAST(NULL AS INT) END AS INT)"
     )
-    tool_hash_sql = (
-        "CAST(CASE "
-        + " ".join(
-            f"WHEN tool = {_sqlq(t)} THEN {djb2_py(t)}" for t in TOOL_NAMES
-        )
-        + " ELSE CAST(NULL AS BIGINT) END AS BIGINT)"
-    )
-    return (
-        df.withColumn("role_id", F.expr(role_sql))
-        .withColumn("tool_id", F.expr(tool_id_sql))
-        .withColumn("tool_dim_hash", F.expr(tool_hash_sql))
+    return df.withColumn("role_id", F.expr(role_sql)).withColumn(
+        "tool_id", F.expr(tool_id_sql)
     )

@@ -34,10 +34,9 @@ binary-feature variant of hashed-ngram models.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import shingle_hashes
 
 # fixed-point scale of the weights and scores: ``weight_x1000``,
 # ``imp_x1000``
@@ -47,25 +46,14 @@ NGRAM_N = 2
 BUCKETS = 4096
 
 
-def ngram_buckets(col: Column | str) -> Column:
-    """distinct hashed n-gram feature buckets of a text column
-    (array<long>, values in [0, BUCKETS)) over the djb2 oracle-parity
-    shingle family, ``NGRAM_N`` words long."""
-    return F.array_distinct(
-        F.transform(
-            shingle_hashes(col, NGRAM_N),
-            lambda h: F.pmod(h, F.lit(BUCKETS)),
-        )
-    )
-
-
 def bucket_frame(
     df: DataFrame, n: int, buckets: int, keep: tuple[str, ...] = ()
 ) -> DataFrame:
     """``(keep..., bucket)`` exploded distinct-bucket rows of the
     ``text`` column — the vectorized Arrow djb2 shingle kernel
-    (bit-exact vs :func:`ngram_buckets`; the bucket fold on the small
-    ``sh`` arrays stays Catalyst)."""
+    (bit-exact vs the Catalyst ``shingle_hashes`` bucket fold that
+    ``tests/test_importance.py`` pins it against; the bucket fold on the
+    small ``sh`` arrays stays Catalyst)."""
     from ..functions.shingles_arrow import with_shingles
 
     sh = with_shingles(df, "text", n, keep=keep)

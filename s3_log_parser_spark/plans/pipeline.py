@@ -27,7 +27,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.encode import SLIM_COLUMNS
 from ..functions.hashes import djb2_expr, first_path_segment
 from ..functions.parsing import parse_range, parse_text_sql
 from ..operators.enrich import classify_when, enrich_role_tool
@@ -116,7 +115,7 @@ def build_slim(transcripts: DataFrame, use_sql_parser: bool = False) -> DataFram
     # BroadcastExchange; column values do not depend on position)
     df = with_flags(df)
     df = enrich_role_tool(df)
-    return df.select(*SLIM_COLUMNS)
+    return df.select(*SLIM_SCHEMA.fieldNames())
 
 
 def run_pipeline(

@@ -2,11 +2,9 @@
 partitioned Parquet otherwise (SURVEY.md §7 — no Iceberg jar in this
 sandbox, identical call sites either way).
 
-At 100 TB the real deployment is Iceberg with ``bucket(N, conv_id)``
-partitioning on the fact/slim tables (co-locates a conversation's
-turns → the stable-turn-ordering window and conv-keyed aggregations
-shuffle-free via storage-partitioned joins) and day partitioning on
-the sinks (partition pruning for time-ranged queries).
+Both branches take the same identity-column partition spec
+(``partition_by``); the sinks partition by day, so time-ranged queries
+prune partitions.
 """
 
 from __future__ import annotations
@@ -42,50 +40,28 @@ class Catalog:
         table: str,
         mode: str = "overwrite",
         partition_by: tuple[str, ...] = (),
-        bucket: tuple[int, str] | None = None,
     ) -> None:
-        """Write ``df`` with an identical partition spec on both format
-        branches: ``partition_by`` identity columns plus an optional
-        ``bucket=(N, col)`` transform (Iceberg ``bucket(N, col)``; on
-        the Parquet fallback a derived ``_bucket`` identity column —
-        same row co-location, coarser pruning)."""
+        """Write ``df`` with the same ``partition_by`` identity columns
+        on both format branches."""
         if self.iceberg:
-            self._write_iceberg(df, table, mode, partition_by, bucket)
+            self._write_iceberg(df, table, mode, partition_by)
             return
-        w_df = df
-        parts = list(partition_by)
-        if bucket is not None:
-            n, col = bucket
-            from pyspark.sql import functions as F
-
-            w_df = df.withColumn("_bucket", F.pmod(F.xxhash64(col), F.lit(n)))
-            parts.append("_bucket")
-        w = w_df.write.mode(mode)
-        if parts:
-            w = w.partitionBy(*parts)
+        w = df.write.mode(mode)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
 
     def _write_iceberg(
-        self,
-        df: DataFrame,
-        table: str,
-        mode: str,
-        partition_by: tuple[str, ...],
-        bucket: tuple[int, str] | None,
+        self, df: DataFrame, table: str, mode: str, partition_by: tuple[str, ...]
     ) -> None:
         """Iceberg branch of the seam. The partition spec mirrors the
         parquet branch exactly (contract-tested via a mocked writeTo in
         tests/test_catalog.py — no runtime jar in this sandbox)."""
         from pyspark.sql import functions as F
-        from pyspark.sql.functions import partitioning
 
         w = df.writeTo(f"{table}")
-        transforms = [F.col(c) for c in partition_by]
-        if bucket is not None:
-            n, col = bucket
-            transforms.append(partitioning.bucket(n, col))
-        if transforms:
-            w = w.partitionedBy(transforms[0], *transforms[1:])
+        if partition_by:
+            w = w.partitionedBy(*[F.col(c) for c in partition_by])
         if mode == "overwrite":
             w.createOrReplace()
         else:

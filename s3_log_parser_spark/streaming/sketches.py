@@ -71,15 +71,10 @@ def read_hll_table(spark: SparkSession, path: str) -> DataFrame:
 
 def read_cms_table(spark: SparkSession, path: str) -> DataFrame:
     """Raw persisted CMS table INCLUDING the ``_hwm/_fp/_fn``
-    bookkeeping columns; use :func:`cms_counters` for lookups."""
+    bookkeeping columns; drop them before a ``cms_lookup``."""
     if not _exists(spark, path):
         return spark.createDataFrame([], _CMS_SCHEMA)
     return spark.read.parquet(path)
-
-
-def cms_counters(spark: SparkSession, path: str) -> DataFrame:
-    """The (row, bucket, n) counter grid, ready for ``cms_lookup``."""
-    return read_cms_table(spark, path).drop(*_CMS_META_COLS)
 
 
 def start_hll_stream(

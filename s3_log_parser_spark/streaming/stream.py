@@ -22,11 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.encode import SLIM_COLUMNS
 from ..operators.enrich import enrich_role_tool
 from ..operators.flags import chunk_flags
 from ..operators.router import Route, default_routes, fan_out, sink_layout
 from ..plans.pipeline import _parse_encode_classify
+from ..schemas import SLIM_SCHEMA
 from ..sources.catalog import Catalog
 
 
@@ -49,7 +49,7 @@ def build_slim_stream(transcripts: DataFrame) -> DataFrame:
             F.lit(False),
         ),
     )
-    return df.select(*SLIM_COLUMNS)
+    return df.select(*SLIM_SCHEMA.fieldNames())
 
 
 def start_router(

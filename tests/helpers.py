@@ -1,6 +1,6 @@
 """Shared test helpers (not a test module)."""
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -12,3 +12,43 @@ def align_schema(df: DataFrame, like: DataFrame) -> DataFrame:
     return df.select(
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in like.schema.fields]
     )
+
+
+def reassemble_text(parsed: Column) -> Column:
+    """Rebuild the raw line from the parsed struct — byte-exact inverse
+    of the grok bank for parse_status='ok' rows (north_rule round-trip).
+    """
+    p = parsed
+    base = F.concat_ws(
+        " ",
+        p["owner"],
+        p["bucket"],
+        F.concat(F.lit("["), p["ts_str"], F.lit("]")),
+        p["remote_ip"],
+        p["requester"],
+        p["req_id"],
+        p["operation"],
+        p["key"],
+        F.concat(F.lit('"'), p["request_uri"], F.lit('"')),
+        p["http_code"].cast("string"),
+        p["error_code"],
+        p["bytes_sent"].cast("string"),
+        p["object_size"].cast("string"),
+        p["total_time_ms"].cast("string"),
+        p["turnaround_ms"].cast("string"),
+        F.concat(F.lit('"'), p["referrer"], F.lit('"')),
+        F.concat(F.lit('"'), p["user_agent"], F.lit('"')),
+        p["version_id"],
+        p["host_id"],
+        p["sig_version"],
+        p["cipher"],
+        p["auth_type"],
+        p["host_header"],
+        p["tls_version"],
+        p["access_point_arn"],
+        p["acl_required"],
+    )
+    return F.when(
+        p["range_header"].isNotNull(),
+        F.concat(base, F.lit(' "'), p["range_header"], F.lit('"')),
+    ).otherwise(base)

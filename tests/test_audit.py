@@ -1,6 +1,5 @@
 """Single-pass data-quality audit: per-check failure counts, ratio
-budgets, exact uniqueness, referential integrity and the one-scan plan
-pin."""
+budgets, exact uniqueness and the one-scan plan pin."""
 
 import io
 import re
@@ -12,7 +11,6 @@ from pyspark.sql import functions as F
 from s3_log_parser_spark.operators.audit import (
     accepted_values,
     audit,
-    foreign_key,
     in_range,
     matches,
     not_null,
@@ -131,30 +129,6 @@ def test_audit_is_one_scan_however_many_checks(spark, tmp_path):
     scans = set(re.findall(r"Scan parquet\s+\((\d+)\)", plan))
     assert len(scans) == 1
     assert "Python" not in plan
-
-
-def test_foreign_key_orphans_and_broadcast(spark):
-    fact = _frame(spark)
-    dim = spark.createDataFrame(
-        [("search",), ("edit",)], "tool_name string"
-    )
-    rep = foreign_key(fact, "tool", dim, "tool_name")
-    # explain BEFORE the action: the post-collect AQE explain shows
-    # both the initial and final trees, double-counting scan ids
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        rep.explain("formatted")
-    plan = buf.getvalue()
-    row = rep.collect()[0]
-    assert (row["check"], row["failed"], row["total"], row["passed"]) == (
-        "foreign_key(tool)", 1, 6, False,
-    )
-    # one pass: broadcast LEFT join marks orphans, a single aggregate
-    # computes failed+total — no anti-join second scan of the fact
-    assert "BroadcastHashJoin" in plan and "LeftOuter" in plan
-    assert "SortMergeJoin" not in plan
-    scans = set(re.findall(r"Scan ExistingRDD\s*\((\d+)\)", plan))
-    assert len(scans) == 2  # fact + dim, each exactly once
 
 
 def test_duplicate_check_names_rejected(spark):

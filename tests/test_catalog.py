@@ -48,16 +48,11 @@ def test_iceberg_branch_receives_partition_spec(spark, df, monkeypatch, tmp_path
     monkeypatch.setattr(type(df), "writeTo", fake_writeTo)
     cat = Catalog(spark, str(tmp_path))
     cat.iceberg = True
-    cat.write(
-        df, "slim", mode="overwrite",
-        partition_by=("day_bucket",), bucket=(16, "conv_id"),
-    )
+    cat.write(df, "slim", mode="overwrite", partition_by=("day_bucket", "v"))
     w = captured["slim"]
     assert w.finished == "createOrReplace"
-    assert w.partitioned is not None and len(w.partitioned) == 2
     specs = [str(c._jc.toString()) for c in w.partitioned]
-    assert any("day_bucket" in s for s in specs)
-    assert any("bucket" in s and "conv_id" in s for s in specs)
+    assert specs == ["day_bucket", "v"]
 
     cat.write(df, "slim2", mode="append", partition_by=("day_bucket",))
     assert captured["slim2"].finished == "append"
@@ -67,19 +62,13 @@ def test_iceberg_branch_receives_partition_spec(spark, df, monkeypatch, tmp_path
 def test_parquet_branch_same_spec(spark, df, tmp_path):
     cat = Catalog(spark, str(tmp_path))
     assert not cat.iceberg
-    cat.write(
-        df, "slim", mode="overwrite",
-        partition_by=("day_bucket",), bucket=(16, "conv_id"),
-    )
+    cat.write(df, "slim", mode="overwrite", partition_by=("day_bucket", "v"))
     root = cat.path("slim")
-    # identity partition dirs + derived bucket dirs on disk
+    # the same identity columns, nested in spec order, on disk
     days = [d for d in os.listdir(root) if d.startswith("day_bucket=")]
     assert sorted(days) == ["day_bucket=0", "day_bucket=1", "day_bucket=2"]
-    buckets = [
-        d for d in os.listdir(os.path.join(root, days[0]))
-        if d.startswith("_bucket=")
-    ]
-    assert buckets, "bucket transform must materialize on the parquet branch"
+    vs = os.listdir(os.path.join(root, "day_bucket=0"))
+    assert sorted(vs) == sorted(f"v={i}" for i in range(0, 20, 3))
     back = cat.read("slim")
     assert back.count() == 20
-    assert back.select("_bucket").distinct().count() <= 16
+    assert sorted(r.v for r in back.collect()) == list(range(20))

@@ -980,12 +980,6 @@ IDX_HIST_TEXT = (
     "the quick brown fox jumps over one lazy dog while seven other "
     "animals watch from a distant hill"
 )
-REPLAYED_TEXT = (
-    "replayed accepted document about harbor ferries and their winter "
-    "maintenance schedule"
-)
-
-
 def _idx_hist(spark):
     return spark.createDataFrame(
         [(0, IDX_HIST_TEXT),
@@ -993,23 +987,6 @@ def _idx_hist(spark):
              "rates in northern fjords")],
         "doc_id long, text string",
     )
-
-
-def _replayed_index(spark, idx_dir):
-    """a persisted index whose append was replayed: the same accepted
-    doc landed twice, so every table holds duplicate rows."""
-    from s3_log_parser_spark.operators.dedup import (
-        append_to_dedup_index,
-        build_dedup_index,
-        write_dedup_index,
-    )
-
-    write_dedup_index(build_dedup_index(_idx_hist(spark)), idx_dir)
-    accept = spark.createDataFrame(
-        [(300, REPLAYED_TEXT)], "doc_id long, text string"
-    )
-    append_to_dedup_index(accept, idx_dir)
-    append_to_dedup_index(accept, idx_dir)
 
 
 def test_append_maintains_index(spark, tmp_path):
@@ -1056,76 +1033,6 @@ def test_append_maintains_index(spark, tmp_path):
         b2, read_dedup_index(spark, idx_dir), threshold_x1000=500
     )
     assert {r["doc_id"] for r in out.collect()} == {202}
-
-
-def test_compact_dedup_index(spark, tmp_path):
-    """compaction removes append-duplicated digests/rows; dedup results
-    are unchanged afterwards."""
-    from s3_log_parser_spark.operators.dedup import (
-        compact_dedup_index,
-        incremental_dedup,
-        read_dedup_index,
-    )
-
-    idx_dir = str(tmp_path / "index")
-    _replayed_index(spark, idx_dir)
-    before = read_dedup_index(spark, idx_dir)
-    assert before.digests.count() > before.digests.distinct().count()
-
-    compact_dedup_index(spark, idx_dir)
-    after = read_dedup_index(spark, idx_dir)
-    assert after.digests.count() == after.digests.distinct().count()
-    assert after.sigs.groupBy("id").count().filter("count > 1").count() == 0
-    # behavior unchanged: history dup + replayed-accept dup both drop
-    batch = spark.createDataFrame(
-        [(400, IDX_HIST_TEXT),
-         (401, REPLAYED_TEXT),
-         (402, "an unrelated report on tidal measurements near the "
-               "eastern breakwater during spring")],
-        "doc_id long, text string",
-    )
-    out = incremental_dedup(batch, after, threshold_x1000=500)
-    assert {r["doc_id"] for r in out.collect()} == {402}
-
-
-def test_compact_dedup_index_failed_write_keeps_index(
-    spark, tmp_path, monkeypatch
-):
-    """a table write that fails mid-compaction (here: the sigs rewrite,
-    after digests was rewritten) must leave the index readable with
-    every row it had. A plain overwrite deletes the target before its
-    write job runs, so the failure would lose the sigs table."""
-    from pyspark.sql.readwriter import DataFrameWriter
-
-    from s3_log_parser_spark.operators.dedup import (
-        compact_dedup_index,
-        read_dedup_index,
-    )
-
-    idx_dir = str(tmp_path / "index")
-    _replayed_index(spark, idx_dir)
-    before = read_dedup_index(spark, idx_dir)
-    n_sigs, n_shingles = before.sigs.count(), before.shingles.count()
-    digests = {r["_dig"] for r in before.digests.collect()}
-
-    real_parquet = DataFrameWriter.parquet
-
-    def failing_parquet(self, path, *args, **kwargs):
-        if "sigs" in path:
-            # an unknown codec fails inside the write job, after an
-            # overwrite has cleared its target
-            self.option("compression", "no-such-codec")
-        return real_parquet(self, path, *args, **kwargs)
-
-    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
-    with pytest.raises(Exception):
-        compact_dedup_index(spark, idx_dir)
-    monkeypatch.undo()
-
-    after = read_dedup_index(spark, idx_dir)
-    assert after.sigs.count() == n_sigs
-    assert after.shingles.count() == n_shingles
-    assert {r["_dig"] for r in after.digests.collect()} == digests
 
 
 def test_dup_clusters_string_ids_full_closure(spark):

@@ -129,10 +129,9 @@ def test_classify_when_plan_has_no_exchange(spark):
 
 def test_role_tool_dims_match_python_reference(spark):
     """The CASE-WHEN role/tool dim lookup equals a pure-Python
-    expectation built from ROLES, TOOL_NAMES and djb2_py, including
+    expectation built from ROLES and TOOL_NAMES, including
     NULL and unknown keys (→ NULL ids, the left-join contract), with
     no broadcast and no join in the plan."""
-    from s3_log_parser_spark.functions.hashes import djb2_py
     from s3_log_parser_spark.operators.enrich import enrich_role_tool
     from s3_log_parser_spark.schemas import ROLES, TOOL_NAMES
 
@@ -147,17 +146,8 @@ def test_role_tool_dims_match_python_reference(spark):
     role_id = {r: i + 1 for i, r in enumerate(ROLES)}
     assert role_id == {"user": 1, "assistant": 2, "tool": 3}
     tool_id = {t: i for i, t in enumerate(TOOL_NAMES)}
-    want = {
-        (
-            role,
-            tool,
-            role_id.get(role),
-            tool_id.get(tool),
-            djb2_py(tool) if tool in tool_id else None,
-        )
-        for role, tool in keys
-    }
-    cols = ["role", "tool", "role_id", "tool_id", "tool_dim_hash"]
+    want = {(r, t, role_id.get(r), tool_id.get(t)) for r, t in keys}
+    cols = ["role", "tool", "role_id", "tool_id"]
     got = {tuple(r) for r in enrich_role_tool(df).select(*cols).collect()}
     assert got == want
     plan = enrich_role_tool(df)._jdf.queryExecution().executedPlan().toString()

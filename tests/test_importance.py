@@ -4,12 +4,11 @@ deterministic top-k resample."""
 
 from pyspark.sql import functions as F
 
-from s3_log_parser_spark.operators import importance
+from s3_log_parser_spark.operators.dedup import shingle_hashes
 from s3_log_parser_spark.operators.importance import (
     bucket_weights,
     importance_resample,
     importance_scores,
-    ngram_buckets,
 )
 
 # target-like docs share the "alpha beta" bigram vocabulary; raw-only
@@ -26,6 +25,15 @@ _RAWISH = [
 _BUCKETS = 64
 
 
+def ngram_buckets(col):
+    """Catalyst reference for ``importance.bucket_frame``: distinct
+    hashed bigram buckets (array<long>, values in [0, _BUCKETS)) over
+    the djb2 oracle-parity shingle family."""
+    return F.array_distinct(
+        F.transform(shingle_hashes(col, 2), lambda h: F.pmod(h, F.lit(_BUCKETS)))
+    )
+
+
 def _docs(spark):
     return spark.createDataFrame(
         _TARGETISH + _RAWISH, "doc_id long, text string"
@@ -38,10 +46,9 @@ def _weights(spark):
     return docs, bucket_weights(docs, target, n=2, buckets=_BUCKETS)
 
 
-def test_bucket_weights_match_python_replica(spark, monkeypatch):
+def test_bucket_weights_match_python_replica(spark):
     """the weight table equals an independent python fold over the
     per-doc bucket sets Spark itself extracted."""
-    monkeypatch.setattr(importance, "BUCKETS", _BUCKETS)
     docs, w = _weights(spark)
     per_doc = {
         r["doc_id"]: set(r["b"])
@@ -76,10 +83,9 @@ def test_scores_rank_target_like_docs_higher(spark):
     assert min(scores[1], scores[2]) > max(scores[3], scores[4], scores[5])
 
 
-def test_unseen_buckets_score_neutral(spark, monkeypatch):
+def test_unseen_buckets_score_neutral(spark):
     """a doc whose vocabulary was never trained on gets exactly
     n_feats·scale — the smoothed (0+1)/(0+1) ratio per feature."""
-    monkeypatch.setattr(importance, "BUCKETS", _BUCKETS)
     docs, w = _weights(spark)
     novel = spark.createDataFrame(
         [(99, "omega kappa lambda omega kappa")], "doc_id long, text string"

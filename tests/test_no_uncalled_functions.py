@@ -1,12 +1,19 @@
 """Every top-level function, class and module constant in the package
 has a reader.
 
-A name counts as used when it appears in any ``.py`` file of the
-checkout outside ``tests/`` and outside the lines of its own
-definition: a call, an import, a re-export or a name string looked up
-at run time all count. Module constants are the names bound by a
+A name counts as read when some ``.py`` file of the checkout outside
+``tests/`` refers to it outside the lines of its own definition. The
+readers are found by an AST walk, and only these count:
+
+- a ``Name`` id or an ``Attribute`` attr (a call, a reference, an
+  attribute lookup, names inside f-strings included);
+- the name in an import (``from m import name``);
+- a string constant equal to the name or ending in ``.name`` (a name
+  looked up at run time, such as a tracer's dotted function names).
+
+Docstrings and comments do not count: a function only a docstring
+names is part of no program. Module constants are the names bound by a
 top-level assignment (dunder names such as ``__all__`` are exempt).
-The generated ``bpe_merges.py`` data module is skipped.
 
 Tests do not count as readers, for the same reason they do not count
 as callers of an option (an option is justified only when two callers
@@ -17,14 +24,11 @@ the package against lives in the test.
 
 import ast
 import os
-import re
 from collections import Counter
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "s3_log_parser_spark")
-SKIP = {"bpe_merges.py"}
 TESTS = os.path.join(ROOT, "tests")
-WORD = re.compile(r"\w+")
 
 
 def _py_files():
@@ -35,12 +39,29 @@ def _py_files():
             if not s.startswith((".", "__")) and os.path.join(d, s) != TESTS
         ]
         for f in files:
-            if f.endswith(".py") and f not in SKIP:
+            if f.endswith(".py"):
                 yield os.path.join(d, f)
 
 
-def _words(lines):
-    return Counter(w for line in lines for w in WORD.findall(line))
+def _reads(tree):
+    """(line, name) of each read in a module."""
+    # a bare string statement (a docstring) reads nothing
+    docs = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Expr)}
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name):
+            yield n.lineno, n.id
+        elif isinstance(n, ast.Attribute):
+            yield n.lineno, n.attr
+        elif isinstance(n, ast.alias):
+            yield n.lineno, n.name
+        elif (
+            isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and id(n) not in docs
+        ):
+            yield n.lineno, n.value
+            if "." in n.value:
+                yield n.lineno, n.value.rsplit(".", 1)[1]
 
 
 def _defined_names(node):
@@ -63,15 +84,19 @@ def _defined_names(node):
 
 
 def test_every_package_function_and_class_has_a_caller():
-    sources = {p: open(p, encoding="utf-8").read().splitlines() for p in _py_files()}
-    everywhere = sum((_words(src) for src in sources.values()), Counter())
+    trees = {p: ast.parse(open(p, encoding="utf-8").read()) for p in _py_files()}
+    reads = {p: list(_reads(t)) for p, t in trees.items()}
+    everywhere = Counter(name for r in reads.values() for _, name in r)
     unread = []
-    for path, lines in sources.items():
+    for path, tree in trees.items():
         if not path.startswith(PACKAGE + os.sep):
             continue
-        for node in ast.parse("\n".join(lines)).body:
+        for node in tree.body:
             for name, first in _defined_names(node):
-                own = _words(lines[first - 1 : node.end_lineno])
-                if everywhere[name] == own[name]:
+                own = sum(
+                    1 for line, n in reads[path]
+                    if n == name and first <= line <= node.end_lineno
+                )
+                if everywhere[name] == own:
                     unread.append(f"{os.path.relpath(path, ROOT)}:{name}")
     assert not unread, f"no reader anywhere in the checkout: {unread}"

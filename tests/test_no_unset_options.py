@@ -10,8 +10,7 @@ value only a test passes selects behaviour no program runs. A test
 that must reach a guard or a small-scale path monkeypatches the
 module constant instead.
 
-The rule, over every ``.py`` file of the checkout outside ``tests/``
-(the generated ``bpe_merges.py`` data module is skipped):
+The rule, over every ``.py`` file of the checkout outside ``tests/``:
 
 - the defaulted parameters are those of every function defined in the
   package, methods and nested functions included, positional or
@@ -22,13 +21,17 @@ The rule, over every ``.py`` file of the checkout outside ``tests/``
 - a parameter counts as set when some call passes it by keyword, or
   supplies enough positional arguments to reach it (the ``self`` /
   ``cls`` of a method is not counted), or passes ``*args`` /
-  ``**kwargs``, which may carry anything.
+  ``**kwargs``, which may carry anything;
+- a call that only forwards its enclosing function's own ``*args`` /
+  ``**kwargs`` sets no parameter through them: what they carry is set
+  by the calls of the forwarding function, which are matched by name
+  like any other.
 
 The defaulted fields of a package ``@dataclass`` are options too: a
 field with a default (``= value``, ``field(default=…)`` or
 ``field(default_factory=…)``) counts as set when
 some call of the class passes it by keyword, or by position in field
-order, or passes ``*args`` / ``**kwargs``.
+order, or passes ``*args`` / ``**kwargs`` it does not just forward.
 
 ``EXEMPT`` lists the parameters kept although no caller sets them,
 each with its reason; an entry that some caller does set fails the
@@ -41,7 +44,6 @@ from collections import defaultdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = os.path.join(ROOT, "s3_log_parser_spark")
-SKIP = {"bpe_merges.py"}
 TESTS = os.path.join(ROOT, "tests")
 # (package-relative module path, function, parameter) -> reason
 EXEMPT = {
@@ -68,7 +70,7 @@ def _py_files():
             if not s.startswith((".", "__")) and os.path.join(d, s) != TESTS
         ]
         for f in files:
-            if f.endswith(".py") and f not in SKIP:
+            if f.endswith(".py"):
                 yield os.path.join(d, f)
 
 
@@ -79,6 +81,32 @@ def _callee(call: ast.Call, aliases: dict) -> str | None:
     if isinstance(f, ast.Attribute):
         return f.attr
     return None
+
+
+def _calls(node, own=frozenset()):
+    """Each call under ``node`` with the ``*args`` / ``**kwargs`` of
+    the function it sits in."""
+    for child in ast.iter_child_nodes(node):
+        inner = own
+        if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            a = child.args
+            inner = frozenset(
+                f"{p}{x.arg}" for p, x in (("*", a.vararg), ("**", a.kwarg)) if x
+            )
+        elif isinstance(child, ast.Call):
+            yield child, own
+        yield from _calls(child, inner)
+
+
+def _starred(call: ast.Call):
+    """``*x`` / ``**x`` of each unpacked argument (None unless ``x`` is
+    a plain name)."""
+    for a in call.args:
+        if isinstance(a, ast.Starred):
+            yield f"*{a.value.id}" if isinstance(a.value, ast.Name) else None
+    for k in call.keywords:
+        if k.arg is None:
+            yield f"**{k.value.id}" if isinstance(k.value, ast.Name) else None
 
 
 def _defaulted(fn: ast.FunctionDef):
@@ -141,19 +169,18 @@ def _calls_and_defs():
             for a in n.names
             if a.asname
         }
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Call):
-                name = _callee(node, aliases)
-                if name is None:
-                    continue
-                star = any(isinstance(a, ast.Starred) for a in node.args) or any(
-                    k.arg is None for k in node.keywords
-                )
-                kws = {k.arg for k in node.keywords}
-                calls[name].append((len(node.args), kws, star))
-            elif not path.startswith(PACKAGE + os.sep):
+        for node, own in _calls(tree):
+            name = _callee(node, aliases)
+            if name is None:
                 continue
-            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            star = any(s not in own for s in _starred(node))
+            npos = sum(not isinstance(a, ast.Starred) for a in node.args)
+            kws = {k.arg for k in node.keywords if k.arg}
+            calls[name].append((npos, kws, star))
+        if not path.startswith(PACKAGE + os.sep):
+            continue
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 defs.append((path, node))
             elif isinstance(node, ast.ClassDef) and _is_dataclass(node):
                 classes.append((path, node))

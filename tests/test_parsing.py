@@ -2,12 +2,12 @@
 
 from pyspark.sql import functions as F
 
+from helpers import reassemble_text
 from s3_log_parser_spark.functions.parsing import (
     clamp_http_code,
     contains_pattern,
     parse_range,
     parse_text_sql,
-    reassemble_text,
 )
 
 

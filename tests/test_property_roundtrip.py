@@ -11,10 +11,8 @@ import string
 
 from hypothesis import given, settings, strategies as st
 
-from s3_log_parser_spark.functions.parsing import (
-    parse_text_sql,
-    reassemble_text,
-)
+from helpers import reassemble_text
+from s3_log_parser_spark.functions.parsing import parse_text_sql
 
 BARE = st.text(
     alphabet=[c for c in string.printable if c not in " \t\n\r\x0b\x0c"],

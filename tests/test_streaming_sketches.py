@@ -7,11 +7,17 @@ from pyspark.sql import functions as F
 
 from s3_log_parser_spark.operators.sketch import cms_sketch, hll_sketch
 from s3_log_parser_spark.streaming.sketches import (
-    cms_counters,
+    _CMS_META_COLS,
+    read_cms_table,
     read_hll_table,
     start_cms_stream,
     start_hll_stream,
 )
+
+
+def cms_counters(spark, path):
+    """The (row, bucket, n) counter grid of a persisted CMS table."""
+    return read_cms_table(spark, path).drop(*_CMS_META_COLS)
 
 
 def _keys(spark, lo, hi):

@@ -64,3 +64,36 @@ def test_spark_submit_pyfiles_runs_pipeline(tmp_path):
     assert sinks["by_role"] == 3 and sinks["by_tool"] == 20
     assert "SUBMIT-OK" in proc.stdout
     assert os.path.isdir(os.path.join(out_dir, "slim"))
+
+
+_BPE_PROBE = """
+import sys
+from s3_log_parser_spark.functions import bpe
+
+assert bpe.__file__.startswith(sys.argv[1]), bpe.__file__
+print(len(bpe.MERGES))
+print(bpe.bpe_encode_py(sys.argv[2]))
+"""
+
+
+def test_bpe_table_loads_from_the_zip(tmp_path):
+    """the merge table is a data file, not a module: a zip that leaves
+    it out fails here without a Spark session (the pipeline smoke test
+    above never imports ``functions.bpe``)."""
+    from s3_log_parser_spark.functions.bpe import bpe_encode_py
+
+    zip_path = build(str(tmp_path / "s3_log_parser_spark.zip"))
+    text = "the quick brown fox 123 jumps over eaad!"
+    env = dict(os.environ, PYTHONPATH=zip_path)
+    proc = subprocess.run(
+        [sys.executable, "-c", _BPE_PROBE, zip_path, text],
+        cwd=str(tmp_path),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    n, ids = proc.stdout.splitlines()
+    assert int(n) == 32_768
+    assert ids == str(bpe_encode_py(text))

@@ -152,14 +152,13 @@ def test_bpe_token_ids(spark):
     committed table is production-vocabulary scale."""
     from s3_log_parser_spark.functions.bpe import (
         MERGED_ID_BASE,
+        MERGES,
         bpe_encode_py,
         bpe_symbols,
         bpe_token_count_py,
         bpe_token_ids,
         symbol_id,
     )
-    from s3_log_parser_spark.functions.bpe_merges import MERGES
-
     assert len(MERGES) >= 32_768
     # id scheme: single char → codepoint; merged symbol → base + rank
     assert symbol_id("a") == ord("a")

@@ -90,7 +90,11 @@ def main():
         ).stdout.strip()
         emit(f"# oracle sweep @ {time.strftime('%Y-%m-%d %H:%M:%S')} "
              f"rev={rev} sf_dir={SF_DIR}")
-    spark = get_spark(app_name="oracle-check", cores=8, shuffle_partitions=8)
+    spark = get_spark(
+        app_name="oracle-check",
+        cores=len(os.sched_getaffinity(0)),
+        shuffle_partitions=8,
+    )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

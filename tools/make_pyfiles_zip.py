@@ -2,8 +2,9 @@
 
 Usage: python tools/make_pyfiles_zip.py [out.zip]
 
-Zips ``s3_log_parser_spark/`` (sources only — __pycache__ excluded so
-the artifact is deterministic and small) for:
+Zips ``s3_log_parser_spark/`` (its ``.py`` sources and ``.txt`` data
+files such as the BPE merge table — __pycache__ excluded so the
+artifact is deterministic and small) for:
 
     spark-submit --master ... --py-files s3_log_parser_spark.zip job.py ...
 
@@ -26,7 +27,7 @@ def build(out_path: str) -> str:
         for dirpath, dirnames, filenames in os.walk(pkg):
             dirnames[:] = [d for d in dirnames if d != "__pycache__"]
             for name in sorted(filenames):
-                if not name.endswith(".py"):
+                if not name.endswith((".py", ".txt")):
                     continue
                 full = os.path.join(dirpath, name)
                 zf.write(full, os.path.relpath(full, REPO))

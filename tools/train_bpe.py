@@ -33,7 +33,7 @@ N_MERGES = 32768
 CORPUS = "/root/testdata/sf0.001/documents.parquet"
 OUT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "s3_log_parser_spark", "functions", "bpe_merges.py",
+    "s3_log_parser_spark", "functions", "bpe_merges.txt",
 )
 
 # must match functions.text.BPE_RE (the shared pre-tokenizer)
@@ -146,21 +146,11 @@ def main() -> None:
     # realistic deployment shape and a discriminating golden.
     merges = train(synthetic_pretokens(), N_MERGES)
 
-    with open(OUT, "w") as f:
-        f.write(
-            '"""Committed BPE merge table.\n\n'
-            "Trained once by tools/train_bpe.py on a deterministic\n"
-            "synthetic Zipfian word stream (the fixture corpus has only\n"
-            "~31 distinct pre-tokens — too few pairs for a\n"
-            "production-scale table, and blending it in collapses its\n"
-            "words to single units — see train_bpe.main). Standard BPE:\n"
-            "most-frequent adjacent pair, lexicographic tie-break.\n"
-            "Do not edit by hand — retrain.\n"
-            '"""\n\nMERGES: list[tuple[str, str]] = [\n'
-        )
-        for a, b in merges:
-            f.write(f"    ({a!r}, {b!r}),\n")
-        f.write("]\n")
+    # one ``a b`` merge per line, read back by functions/bpe.py: the
+    # synthetic alphabet is ASCII letters and digits, so no symbol
+    # holds a space
+    with open(OUT, "w", encoding="ascii", newline="\n") as f:
+        f.writelines(f"{a} {b}\n" for a, b in merges)
     print(f"wrote {len(merges)} merges to {OUT}")
 
 
