@@ -873,9 +873,9 @@ def _djac(spark, sf):
 
 def _simhash_sql(bits: int = 16) -> str:
     # bit j = parity of the universal hash ((2j+1)·h + j²+7) mod P —
-    # mirrors dedup._simhash_bit (raw bit extraction would zero bits
-    # ≥ 32: DJB2 digests are 32-bit, and constant upper bands make the
-    # banded join all-pairs)
+    # mirrors dedup.simhash_df's bit family (raw bit extraction would
+    # zero bits ≥ 32: DJB2 digests are 32-bit, and constant upper
+    # bands make the banded join all-pairs)
     terms = []
     for j in range(bits):
         # bit 63 is the sign bit: the BIGINT literal must be the C-style
@@ -1060,7 +1060,7 @@ def _demb_lsh(spark, sf):
 
     return embedding_near_dups_bucketed(
         _t(spark, sf, "embeddings"),
-        threshold_x1m=250_000, n_planes=4, dim=64, probe_radius=1,
+        threshold_x1m=250_000, n_planes=4, dim=64,
     )
 
 
@@ -2098,7 +2098,7 @@ _BLOOM_M = 1 << 16
     """,
 )
 def _bloom_prefilter(spark, sf):
-    # the ingestion fast path's membership sidecar, parity mode: build
+    # the ingestion fast path's membership pre-filter: build
     # the bitmap over history digests, probe the batch, and report per
     # doc whether the filter says maybe vs whether the digest truly is
     # in history (fixture exact-dup texts give real positives)
@@ -2114,12 +2114,12 @@ def _bloom_prefilter(spark, sf):
     # materialize the (tiny) bitmap once: each of the k probe joins
     # embeds its own copy of the build subtree, so a lazy bitmap would
     # re-fold the history digests k times (in production the bitmap is
-    # the persisted sidecar parquet, not a live plan)
-    bm = bloom_build(hist, "_dig", _BLOOM_M, 5, "djb2").localCheckpoint()
+    # a written table, not a live plan)
+    bm = bloom_build(hist, "_dig", _BLOOM_M, 5).localCheckpoint()
     batch = docs.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", dig.alias("_dig")
     )
-    probed = bloom_probe(batch, bm, "_dig", _BLOOM_M, 5, "djb2")
+    probed = bloom_probe(batch, bm, "_dig", _BLOOM_M, 5)
     hits = hist.withColumnRenamed("_dig", "_hdig")
     return (
         probed.join(hits, probed["_dig"] == hits["_hdig"], "left")

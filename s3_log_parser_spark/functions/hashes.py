@@ -31,6 +31,16 @@ from ..schemas import DJB2_SEED
 _U32 = 0xFFFFFFFF
 
 
+def check_hash_mode(mode: str) -> None:
+    """``ValueError`` unless ``mode`` names a hash family: ``"djb2"``
+    (the cross-engine parity family) or ``"xxhash64"`` (the production
+    family). Called on the driver while a plan is built, so a misspelt
+    family fails before any job runs instead of falling through to the
+    other family."""
+    if mode not in ("djb2", "xxhash64"):
+        raise ValueError(f"unknown hash mode {mode!r}")
+
+
 def djb2_py(s: str | bytes | None) -> int:
     """Byte-exact pure-Python DJB2; mirrors src/s3parser.c:461-477."""
     if s is None:

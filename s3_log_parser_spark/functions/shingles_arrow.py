@@ -1,9 +1,9 @@
-"""Vectorized Arrow/numpy shingle-hash kernel (djb2 parity family).
+"""Vectorized Arrow/numpy shingle-hash and SimHash kernels.
 
-The pure-Catalyst shingle kernel (``operators.dedup.shingle_hashes``)
-is a higher-order expression chain — per character it allocates a
-one-char string (``split(col, '')``), evaluates ``ascii`` and a
-``pmod``, and per shingle it runs ``zip_with`` array allocations.
+A Catalyst shingle expression (``operators.dedup.shingle_hashes``, the
+djb2 family) is a higher-order expression chain — per character it
+allocates a one-char string (``split(col, '')``), evaluates ``ascii``
+and a ``pmod``, and per shingle it runs ``zip_with`` array allocations.
 Measured r7 at sf0.1 (5,000 docs, 270k tokens): 2.1 s for the n=3
 frame and 4.3 s for the n=8 frame per evaluation. This module computes
 the SAME values (bit-for-bit, pinned by tests) as one ``mapInArrow``
@@ -27,9 +27,10 @@ Semantics reproduced exactly:
   their tokens (empty text → the bare seed).
 - distinct with FIRST-OCCURRENCE order, matching ``array_distinct``.
 
-Every shingle consumer (dedup, importance buckets, decontamination)
-runs this kernel. ``operators.dedup.shingle_hashes`` is the Catalyst
-form it is pinned against.
+Every shingle-frame consumer (dedup, importance buckets,
+decontamination) runs this kernel. Tests pin the djb2 family against
+``shingle_hashes``, the xxhash64 family against an ``F.xxhash64``
+chain, and :func:`with_simhash` against a pure-Python SimHash.
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import DJB2_SEED
+from .hashes import check_hash_mode
 
 _WS = re.compile(r"\s+", re.ASCII)
 _M32 = 0xFFFFFFFF
@@ -293,9 +295,8 @@ _MINHASH_P = 4294967311  # smallest prime > 2^32 (dedup.MINHASH_P)
 
 
 def _simhash_rows(texts: "list[str | None]", bits: int):
-    """per-row B-bit SimHash over whitespace-token DJB2 digests —
-    integer-exact mirror of the ``operators.dedup.simhash`` expression
-    on rows with at least one token: bit j set
+    """per-row B-bit SimHash over whitespace-token DJB2 digests on
+    rows with at least one token: bit j set
     when Σ_tokens (2·(((2j+1)·h + j²+7) mod P mod 2) − 1) > 0; bit 63
     is the two's-complement sign bit (uint64 build, int64 view)."""
     import numpy as np
@@ -324,8 +325,7 @@ def with_simhash(
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """``df`` → ``(keep..., simhash long)`` via one row-local
-    mapInArrow stage (no shuffle; values identical to the ``simhash``
-    expression). Zero-token rows are dropped."""
+    mapInArrow stage (no shuffle). Zero-token rows are dropped."""
     import pyarrow as pa
 
     src = df.select(*keep, text_col)
@@ -362,12 +362,13 @@ def with_shingles(
 ) -> DataFrame:
     """``df`` → ``(keep..., sh array<long>)`` via one mapInArrow
     stage (the vectorized shingle kernel; ``mode`` selects the djb2
-    parity family or the xxhash64 production family — both bit-exact
-    vs the Catalyst chain, test-pinned). ``keep`` must name existing
+    parity family or the xxhash64 production family; any other value
+    raises on the driver). ``keep`` must name existing
     columns of ``df``; only ``keep + [text_col]`` cross the Python
     boundary."""
     import pyarrow as pa
 
+    check_hash_mode(mode)
     src = df.select(*keep, text_col)
     fields = [src.schema[k] for k in keep]
     out_schema = T.StructType(

@@ -26,39 +26,19 @@ def as_double(col: Column | str) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
-def dot(a: Column, b: Column) -> Column:
-    """fold-left dot product in index order."""
-    prods = F.zip_with(as_double(a), as_double(b), lambda x, y: x * y)
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def dot_pre(a: Column, b: Column) -> Column:
-    """``dot`` for operands ALREADY cast array<double> (``as_double``
-    applied once per row). Identical FP results — float→double widening
-    then multiply is the same either way — but inside an O(N²) pairwise
-    join the per-pair ``transform`` casts of :func:`dot` allocate two
-    fresh arrays per pair; pre-casting moves that to once per row
-    (measured 40 s → a few s on the 2k-vector brute-force near-dup)."""
+    """fold-left dot product in index order, for operands already cast
+    array<double> (``as_double`` applied once per row): inside an
+    O(N²) pairwise join a per-pair cast would allocate two fresh arrays
+    per pair; pre-casting moves that to once per row (measured 40 s →
+    a few s on the 2k-vector brute-force near-dup)."""
     prods = F.zip_with(a, b, lambda x, y: x * y)
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
 def norm_pre(a: Column) -> Column:
-    """``norm`` for an already-double array (see :func:`dot_pre`)."""
+    """euclidean norm of an already-double array (see :func:`dot_pre`)."""
     return F.sqrt(dot_pre(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_x1m(a: Column, b: Column) -> Column:
-    """cosine scaled ×1e6 and floored → integer; cross-engine stable."""
-    return F.floor(cosine(a, b) * 1_000_000).cast("long")
 
 
 @pandas_udf(T.LongType())
@@ -67,8 +47,9 @@ def _cos_x1m_pairs_udf(
 ) -> pd.Series:
     """floor(dot(a,b)/(na·nb)·1e6) for PAIR rows, numpy-vectorized
     ACROSS pairs with the summation loop over the dimension axis —
-    every FP op happens in the same index order as the fold-left HOF
-    form, so results are bit-identical to ``dot_pre``/``cosine_x1m``
+    every FP op happens in the same index order as the fold-left
+    ``dot_pre``, and the norms come from ``norm_pre``, so results are
+    bit-identical to the DuckDB oracle's ``list_reduce`` form
     (pairwise/BLAS summation would differ in the last ulp and break the
     cross-engine oracle). ~8× less per-pair overhead than the
     interpreted HOF lambda inside O(N²) joins.

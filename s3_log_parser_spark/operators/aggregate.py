@@ -370,11 +370,11 @@ def pivot_counts(
 def cube_counts(
     df: DataFrame,
     dims: list[str],
-    measure: Column | None = None,
+    measure: Column,
     measure_name: str = "sum_measure",
 ) -> DataFrame:
     """All 2^len(dims) grouping-set margins with the raw input scanned
-    ONCE: per-cell row count + an optional integer measure sum, and a
+    ONCE: per-cell row count + an integer measure sum, and a
     ``grouping_id`` (same bit convention as ``GROUPING()`` — dims[0]
     is the high bit) disambiguating margin NULLs from data NULLs.
 
@@ -391,11 +391,11 @@ def cube_counts(
     finest table is a written table (the OLAP-cube materialization)."""
     if not dims:
         raise ValueError("cube_counts needs at least one dim")
-    aggs = [F.count("*").cast("long").alias("n")]
-    if measure is not None:
-        aggs.append(F.sum(measure).cast("long").alias(measure_name))
-    finest = df.groupBy(*dims).agg(*aggs)
-    mcols = ["n"] + ([measure_name] if measure is not None else [])
+    finest = df.groupBy(*dims).agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum(measure).cast("long").alias(measure_name),
+    )
+    mcols = ["n", measure_name]
     resum = [F.sum(c).cast("long").alias(c) for c in mcols]
     d = len(dims)
     parts = []

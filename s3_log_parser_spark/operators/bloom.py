@@ -25,9 +25,9 @@ Spark ``shiftleft(1L, 63)`` wraps to the sign bit and DuckDB ``<<``
 overflow semantics differ — ``1 << 31`` is the widest shift both agree
 on as a positive value (memory: F.lit(1 << 63) overflows).
 
-Hash families mirror the dedup suite: ``mode="djb2"`` is the
-cross-engine parity family (the DuckDB oracle reproduces the bitmap
-bit-for-bit); ``mode="xxhash64"`` is the codegen production family.
+The hash family is DJB2 (double hashing over ``key`` and
+``key || '#2'``), the cross-engine parity family: the DuckDB oracle
+reproduces the bitmap bit-for-bit.
 """
 
 from __future__ import annotations
@@ -41,19 +41,13 @@ DEFAULT_M_BITS = 1 << 23
 DEFAULT_K_HASHES = 5
 
 
-def _hash_pair(key: Column, m_bits: int, mode: str) -> tuple[Column, Column]:
+def _hash_pair(key: Column, m_bits: int) -> tuple[Column, Column]:
     """(h1, h2) for double hashing, both non-negative and pre-reduced
     so ``h1 + i*h2`` can never overflow int64 under ANSI mode. h2 is
     forced odd — with any m it keeps the k probes distinct for small k
     (and cycles the full ring when m is a power of two)."""
-    if mode == "xxhash64":
-        h1 = F.pmod(F.xxhash64(key), F.lit(m_bits))
-        h2 = F.pmod(F.xxhash64(key, F.lit(2)), F.lit(m_bits))
-    elif mode == "djb2":
-        h1 = F.pmod(djb2_expr(key), F.lit(m_bits))
-        h2 = F.pmod(djb2_expr(F.concat(key, F.lit("#2"))), F.lit(m_bits))
-    else:
-        raise ValueError(f"bloom: unknown mode {mode!r}")
+    h1 = F.pmod(djb2_expr(key), F.lit(m_bits))
+    h2 = F.pmod(djb2_expr(F.concat(key, F.lit("#2"))), F.lit(m_bits))
     return h1, h2.bitwiseOR(F.lit(1))
 
 
@@ -66,14 +60,13 @@ def bloom_build(
     key_col: str,
     m_bits: int = DEFAULT_M_BITS,
     k_hashes: int = DEFAULT_K_HASHES,
-    mode: str = "xxhash64",
 ) -> DataFrame:
     """fold a key column into a bitmap DataFrame ``(word_idx, word)``.
 
     One explode (k rows per key, map-side combined by the partial
     bit_or) and one aggregate on ≤ m/32 uniform keys — the build cost
     is a single pass over the corpus regardless of m."""
-    h1, h2 = _hash_pair(F.col(key_col), m_bits, mode)
+    h1, h2 = _hash_pair(F.col(key_col), m_bits)
     pos = F.explode(
         F.array(*[_position(h1, h2, i, m_bits) for i in range(k_hashes)])
     ).alias("_pos")
@@ -98,7 +91,6 @@ def bloom_probe(
     key_col: str,
     m_bits: int = DEFAULT_M_BITS,
     k_hashes: int = DEFAULT_K_HASHES,
-    mode: str = "xxhash64",
 ) -> DataFrame:
     """add ``bloom_maybe`` (boolean): could ``key_col`` be in the filter?
 
@@ -108,10 +100,10 @@ def bloom_probe(
     absent from the bitmap is all-zeros → coalesce(word, 0).
 
     Each of the k joins embeds its own copy of ``bitmap_df``'s plan;
-    pass a MATERIALIZED bitmap (the persisted sidecar parquet, or
+    pass a MATERIALIZED bitmap (a written bitmap table, or
     ``.localCheckpoint()`` when just built) so the build isn't
     re-executed k times."""
-    h1_c, h2_c = _hash_pair(F.col(key_col), m_bits, mode)
+    h1_c, h2_c = _hash_pair(F.col(key_col), m_bits)
     out = df.withColumn("_bh1", h1_c).withColumn("_bh2", h2_c)
     checks = []
     for i in range(k_hashes):

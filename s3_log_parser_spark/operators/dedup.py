@@ -11,9 +11,12 @@ Five strategies, all deterministic and partition-invariant:
   verification. The shingle hash is a
   DJB2 fold over per-token DJB2 digests (the reference kernel, applied
   hierarchically) so the DuckDB oracle reproduces signatures
-  bit-for-bit at linear cost; ``mode="xxhash64"`` swaps in the codegen
-  hash family for production runs.
-- :func:`simhash` — B-bit SimHash over token hashes.
+  bit-for-bit at linear cost; ``mode="xxhash64"`` swaps in the
+  production family. Shingle frames come from the Arrow kernel
+  (functions/shingles_arrow.py); :func:`shingle_hashes` is the djb2
+  per-row column the Gopher repetition flags use.
+- :func:`simhash_df` / :func:`simhash_pairs` — B-bit SimHash (Arrow
+  kernel) and its banded hamming join.
 - :func:`ngram_jaccard_pairs` — exact n-gram Jaccard for pair sets
   (the verifier for MinHash, and a standalone near-dup strategy),
   scored by one inverted-index set-similarity join.
@@ -97,7 +100,7 @@ def token_hashes(col: Column | str) -> Column:
     return F.transform(tokens(col), lambda t: djb2_expr(t))
 
 
-def shingle_hashes(col: Column | str, n: int = 3, mode: str = "djb2") -> Column:
+def shingle_hashes(col: Column | str, n: int = 3) -> Column:
     """distinct hashes of the word n-gram shingle set (array<long>).
 
     A shingle's hash is a DJB2 fold over its tokens' DJB2 digests
@@ -109,31 +112,17 @@ def shingle_hashes(col: Column | str, n: int = 3, mode: str = "djb2") -> Column:
     Rows with < n tokens fold over all their tokens (empty text →
     5381, the bare seed). Deterministic and reproduced digit-for-digit
     by the DuckDB oracle (same fold, same order).
-
-    ``mode="xxhash64"``: the production hash family for real 100 TB
-    runs — identical shape, JVM codegen ``xxhash64(acc, digest)``
-    mixing instead of the (weak, parity-required) DJB2 fold.
     """
-    toks = tokens(col)
     seed = F.lit(DJB2_SEED).cast("long")
-    if mode == "xxhash64":
-        th = F.transform(toks, lambda t: F.xxhash64(t))
-        grams = _sliding_zip(
-            th, n,
-            combine=lambda acc, d: F.xxhash64(acc, d),
-            first=lambda d: F.xxhash64(seed, d),
-        )
-        whole = F.aggregate(th, seed, lambda acc, d: F.xxhash64(acc, d))
-    else:
-        th = token_hashes(col)
-        grams = _sliding_zip(
-            th, n,
-            combine=_djb2_fold,
-            first=lambda d: _djb2_fold(seed, d),
-        )
-        whole = F.aggregate(th, seed, _djb2_fold)
+    th = token_hashes(col)
+    grams = _sliding_zip(
+        th, n,
+        combine=_djb2_fold,
+        first=lambda d: _djb2_fold(seed, d),
+    )
+    whole = F.aggregate(th, seed, _djb2_fold)
     return F.array_distinct(
-        F.when(F.size(toks) >= n, grams).otherwise(F.array(whole))
+        F.when(F.size(th) >= n, grams).otherwise(F.array(whole))
     )
 
 
@@ -267,23 +256,18 @@ def minhash_candidates(
 
 
 def jaccard_x1000(
-    col_a: Column,
-    col_b: Column,
-    size_a: Column | None = None,
-    size_b: Column | None = None,
+    col_a: Column, col_b: Column, size_a: Column, size_b: Column
 ) -> Column:
     """exact Jaccard over two shingle-hash arrays, ×1000 floored.
 
-    When the per-row DISTINCT sizes are precomputed (``size_a/size_b``),
-    ``|A∪B| = |A|+|B|−|A∩B|`` replaces the second per-pair array pass —
-    integer-identical result, ~2× less per-pair work inside the O(N²)
-    block joins (shingle arrays are already distinct by construction).
+    The per-row DISTINCT sizes are precomputed (``size_a/size_b``), so
+    ``|A∪B| = |A|+|B|−|A∩B|`` replaces a second per-pair array pass —
+    ~2× less per-pair work inside the O(N²) block joins (shingle
+    arrays are already distinct by construction). An empty union
+    scores 0.
     """
     inter = F.size(F.array_intersect(col_a, col_b))
-    if size_a is not None and size_b is not None:
-        union = size_a + size_b - inter
-    else:
-        union = F.size(F.array_union(col_a, col_b))
+    union = size_a + size_b - inter
     return F.when(union == 0, F.lit(0)).otherwise(
         F.floor(inter * 1000 / union)
     ).cast("long")
@@ -486,38 +470,6 @@ def _jaccard_index_join(
     )
 
 
-def _simhash_bit(h: Column, j: int) -> Column:
-    """hash bit j of a token digest: parity of the universal hash
-    g_j(h) = ((2j+1)·h + j²+7) mod P — the same (a_j, b_j) family as
-    MinHash. Each bit must be an INDEPENDENT hash of the digest: the
-    naive ``bit_j(h)`` (raw bit extraction) silently zeroes bits ≥ 32
-    because DJB2 digests are 32-bit, making the upper bands of a 64-bit
-    signature CONSTANT — every pair collides on them and the banded
-    join degenerates to all-pairs (measured: 19,900/19,900 candidate
-    pairs on a 200-doc fixture). (2j+1)·h < 2^39, ANSI-safe."""
-    return ((F.lit(2 * j + 1) * h + F.lit(j * j + 7)) % F.lit(MINHASH_P)) % 2
-
-
-def simhash(col: Column | str, bits: int = 16) -> Column:
-    """B-bit SimHash over whitespace-token DJB2 hashes: bit j is set
-    when the sum over tokens of (2·g_j(h) − 1) is positive, with g_j
-    the universal hash-bit family (see :func:`_simhash_bit`)."""
-    hs = F.transform(tokens(col), lambda t: djb2_expr(t))
-
-    def bit_merge(j: int):  # closure, not default-arg (see merge_fn note)
-        return lambda acc, h: acc + _simhash_bit(h, j) * 2 - 1
-
-    out = F.lit(0).cast("long")
-    for j in range(bits):  # bit positions are plan-time constants
-        weight = F.aggregate(hs, F.lit(0).cast("long"), bit_merge(j))
-        # bit 63 is the sign bit in a signed long → two's complement
-        bit_val = (1 << j) if j < 63 else -(1 << 63)
-        out = out + F.when(
-            weight > 0, F.lit(bit_val).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash_df(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -525,9 +477,11 @@ def simhash_df(
     bits: int = 16,
 ) -> DataFrame:
     """Scale-path SimHash: ``(id, simhash)`` from one row-local
-    vectorized Arrow stage (functions/shingles_arrow.with_simhash — the
-    :func:`simhash` signature computed with numpy segment sums, no
-    shuffle). Zero-token rows are dropped."""
+    vectorized Arrow stage (functions/shingles_arrow.with_simhash, no
+    shuffle): bit j is set when Σ over tokens of (2·g_j(h) − 1) > 0,
+    with h a token's DJB2 digest and g_j(h) = ((2j+1)·h + j²+7) mod P
+    mod 2 an INDEPENDENT hash bit (raw bits ≥ 32 of a 32-bit digest
+    are constant). Zero-token rows are dropped."""
     from ..functions.shingles_arrow import with_simhash
 
     return with_simhash(
@@ -735,15 +689,14 @@ def embedding_near_dups_bucketed(
     threshold_x1m: int = 800_000,
     n_planes: int = 4,
     dim: int = 64,
-    probe_radius: int = 1,
 ) -> DataFrame:
     """The 100 TB path for embedding near-dup: corpus × corpus
     *self*-join restricted to hyperplane-LSH buckets.
 
     Both sides get a deterministic sign-LSH bucket
     (similarity.with_lsh_bucket); the left side additionally probes
-    every bucket within hamming ``probe_radius`` of its own (XOR-1
-    flips), then an equi-join on bucket + exact integer-cosine verify.
+    every bucket within hamming 1 of its own (XOR-1 flips), then an
+    equi-join on bucket + exact integer-cosine verify.
     Because hamming is symmetric and only the left side probes, each
     qualifying (id_a < id_b) pair is produced exactly once — no
     distinct pass needed. Neither side is broadcast and no all-pairs
@@ -770,11 +723,9 @@ def embedding_near_dups_bucketed(
         df.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")),
         "v", n_planes, dim,
     )
-    probes = [F.col("lsh_bucket")]
-    if probe_radius >= 1:
-        probes += [
-            F.col("lsh_bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)
-        ]
+    probes = [F.col("lsh_bucket")] + [
+        F.col("lsh_bucket").bitwiseXOR(F.lit(1 << j)) for j in range(n_planes)
+    ]
     a = v.withColumn("probe", F.explode(F.array(*probes))).drop("lsh_bucket")
     # fresh aliases on the right side: both sides derive from the same
     # plan, and a self-cogroup with shared attribute ids loses the

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashes import djb2_expr
+from ..functions.hashes import check_hash_mode, djb2_expr
 from ..functions.text import token_count, tokens
 
 # per-mille split weights (sum to 1000)
@@ -151,23 +151,20 @@ def _running_start(
 
 
 def sample_to_token_budget(
-    df: DataFrame,
-    budget_tokens: int,
-    by: str | None = None,
+    df: DataFrame, budget_tokens: int, by: str
 ) -> DataFrame:
-    """deterministic prefix-by-id sampling: walk documents in ``id``
-    order (per ``by`` group when given) and keep each doc whose
-    RUNNING token total before it is still under the budget — so the
-    kept set is a stable prefix, never a random draw that reshuffles
-    on re-run. The first doc of a group is always kept (a budget
+    """deterministic prefix-by-id sampling: walk each ``by`` group's
+    documents in ``id`` order and keep each doc whose RUNNING token
+    total before it is still under the group's budget — so the kept
+    set is a stable prefix, never a random draw that reshuffles on
+    re-run. The first doc of a group is always kept (a budget
     smaller than one doc still yields that doc — truncation is the
     tokenizer's job, not the sampler's). Offsets via the two-level
     :func:`_running_start` (no single-task fold); a doc's size is its
     whitespace token count."""
-    part = [by] if by else []
     base = df.withColumn("_n", token_count("text").cast("long"))
     return (
-        _running_start(base, part, "doc_id")
+        _running_start(base, [by], "doc_id")
         .filter(F.col("_start") < budget_tokens)
         .drop("_n", "_start")
     )
@@ -231,8 +228,8 @@ def shuffle_key(
     split family's mix with a squaring step that actually scrambles
     order (see ``SHUFFLE_SQ_P``). Reproducible digit-for-digit in the
     DuckDB oracle; a new seed draws a fresh permutation;
-    ``mode="xxhash64"`` is the production family (same policy as
-    splits)."""
+    ``mode="xxhash64"`` is the production family."""
+    check_hash_mode(mode)
     c = F.col(id_col) if isinstance(id_col, str) else id_col
     if mode == "xxhash64":
         return F.xxhash64(F.lit(seed), c)

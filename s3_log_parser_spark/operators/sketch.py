@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashes import djb2_expr
+from ..functions.hashes import check_hash_mode, djb2_expr
 from .sampling import SHUFFLE_SQ_P, SPLIT_MIX_A, SPLIT_MIX_B, SPLIT_MIX_P
 
 HLL_P = 9  # 512 registers; standard error 1.04/sqrt(512) ~= 4.6%
@@ -181,6 +181,7 @@ def _cms_bucket(key: Column, row: int, width: int, mode: str) -> Column:
     The parity family applies the split affine mix before the modulus —
     raw ``djb2 % width`` clusters sequential-id keys (same failure
     split_bucket fixed; see _hash31)."""
+    check_hash_mode(mode)
     if mode == "djb2":
         h = djb2_expr(F.concat(F.lit(f"{row}:"), key))
         mixed = F.pmod(

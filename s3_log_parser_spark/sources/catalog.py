@@ -42,7 +42,11 @@ class Catalog:
         partition_by: tuple[str, ...] = (),
     ) -> None:
         """Write ``df`` with the same ``partition_by`` identity columns
-        on both format branches."""
+        on both format branches. A partitioned parquet overwrite of no
+        rows leaves only ``_SUCCESS``, which no reader can infer a
+        schema from; when a FileSystem listing (not a Spark job) finds
+        no data, one schema-only file takes its place, partition
+        columns last as a partitioned read-back orders them."""
         if self.iceberg:
             self._write_iceberg(df, table, mode, partition_by)
             return
@@ -50,6 +54,22 @@ class Catalog:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
+        if partition_by and mode == "overwrite" and not self._has_data(table):
+            data = [c for c in df.columns if c not in partition_by]
+            df.limit(0).select(*data, *partition_by).write.mode(
+                "overwrite"
+            ).parquet(self.path(table))
+
+    def _has_data(self, table: str) -> bool:
+        """whether the table's directory holds a partition or a data
+        file (anything but ``_``/``.``-prefixed metadata)."""
+        from .maintenance import _fs_for
+
+        fs, path = _fs_for(self.spark, self.path(table))
+        return any(
+            not st.getPath().getName().startswith(("_", "."))
+            for st in fs.listStatus(path)
+        )
 
     def _write_iceberg(
         self, df: DataFrame, table: str, mode: str, partition_by: tuple[str, ...]

@@ -126,8 +126,9 @@ def start_cms_stream(
     draining available input and stopping.
 
     Sum-merge double-counts on replay, so each fold records
-    (batch_id, content fingerprint) in the ``_meta`` sidecar. A
-    re-delivered batch_id with MATCHING content is the crash-replay
+    (batch_id, content fingerprint, row count) as the ``_hwm``/``_fp``/
+    ``_fn`` columns of the counter table itself, committed in the same
+    staged swap as the counters. A re-delivered batch_id with MATCHING content is the crash-replay
     case: skipped as a no-op. A re-delivered batch_id with DIFFERENT
     content means the checkpoint lineage was reset over a changed
     source — there is no safe merge (folding would double-count old

@@ -1,5 +1,7 @@
 """Shared test helpers (not a test module)."""
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,3 +54,29 @@ def reassemble_text(parsed: Column) -> Column:
         p["range_header"].isNotNull(),
         F.concat(base, F.lit(' "'), p["range_header"], F.lit('"')),
     ).otherwise(base)
+
+
+def simhash_py(text: str | None, bits: int) -> int | None:
+    """Pure-Python B-bit SimHash, the reference ``dedup.simhash_df`` is
+    pinned against: whitespace tokens (Java's ASCII ``\\s``, empty
+    pieces dropped), each token's DJB2 digest ``h`` over codepoints (as
+    ``djb2_expr``), and bit j set when Σ over tokens of
+    ``2·(((2j+1)·h + j²+7) mod P mod 2) − 1`` is positive, with P the
+    MinHash prime. Bit 63 is the sign bit of the signed long. A text
+    with no token has no signature: None."""
+    p = 4294967311
+    digests = []
+    for tok in re.split(r"\s+", text or "", flags=re.ASCII):
+        if tok:
+            h = 5381
+            for ch in tok:
+                h = (h * 33 + ord(ch)) & 0xFFFFFFFF
+            digests.append(h)
+    if not digests:
+        return None
+    out = 0
+    for j in range(bits):
+        vote = sum(((2 * j + 1) * h + j * j + 7) % p % 2 * 2 - 1 for h in digests)
+        if vote > 0:
+            out |= 1 << j
+    return out - (1 << 64) if out >= 1 << 63 else out

@@ -2,6 +2,7 @@
 byte-exact pure-Python oracle (reference semantics
 src/s3parser.c:461-477)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from s3_log_parser_spark.functions.hashes import (
@@ -86,3 +87,43 @@ def test_djb2_numpy_parity():
     sl = pa.array(vals, pa.string()).slice(2, 4)
     assert list(djb2_numpy(sl)) == want[2:6]
     assert list(djb2_numpy(pa.array([], pa.string()))) == []
+
+
+@pytest.mark.parametrize(
+    "entry",
+    ["cms_sketch", "cms_lookup", "hll_sketch", "shuffle_key",
+     "with_shingles", "build_dedup_index"],
+)
+def test_unknown_hash_family_raises_before_any_job(spark, entry):
+    """A hash family other than ``djb2`` / ``xxhash64`` (here a
+    misspelt ``xxHash64``) raises ``ValueError`` on the driver, and no
+    job runs: no entry point falls through to the other family."""
+    from s3_log_parser_spark.functions.shingles_arrow import with_shingles
+    from s3_log_parser_spark.operators.dedup import build_dedup_index
+    from s3_log_parser_spark.operators.sampling import shuffle_key
+    from s3_log_parser_spark.operators.sketch import (
+        cms_lookup,
+        cms_sketch,
+        hll_sketch,
+    )
+
+    df = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    mode = "xxHash64"
+    calls = {
+        "cms_sketch": lambda: cms_sketch(df, "text", mode=mode),
+        "cms_lookup": lambda: cms_lookup(df, df, "text", mode=mode),
+        "hll_sketch": lambda: hll_sketch(df, "text", mode=mode),
+        "shuffle_key": lambda: df.select(shuffle_key("doc_id", mode=mode)),
+        "with_shingles": lambda: with_shingles(df, "text", mode=mode),
+        "build_dedup_index": lambda: build_dedup_index(df, mode=mode),
+    }
+    sc = spark.sparkContext
+    group = f"unknown-hash-mode-{entry}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match=mode):
+            calls[entry]()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

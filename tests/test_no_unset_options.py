@@ -47,14 +47,6 @@ PACKAGE = os.path.join(ROOT, "s3_log_parser_spark")
 TESTS = os.path.join(ROOT, "tests")
 # (package-relative module path, function, parameter) -> reason
 EXEMPT = {
-    ("operators/dedup.py", "shingle_hashes", "mode"): (
-        "the Catalyst reference the Arrow shingle kernel's xxhash64 "
-        "family is pinned against"
-    ),
-    ("operators/dedup.py", "simhash", "bits"): (
-        "the Catalyst reference the Arrow SimHash kernel's 64-bit form "
-        "is pinned against"
-    ),
     ("operators/sketch.py", "cms_lookup", "mode"): (
         "a probe must name the hash family of the sketch it reads, and "
         "`job.py ingest` builds xxhash64 sketches"

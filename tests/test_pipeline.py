@@ -231,6 +231,50 @@ def test_resume_on_file_uri_out_dir_skips_every_stage(
     assert os.listdir(cwd) == []
 
 
+@pytest.mark.parametrize("case", ["empty", "all_rejected"])
+def test_empty_and_all_rejected_input_leave_readable_sinks(
+    spark, transcripts, tmp_path, case
+):
+    """Over empty input, and over input whose every turn fails to
+    parse, every table reads back with no schema given: 0 rows (the
+    rejects sink holds every rejected turn) and the sink's columns. A
+    rerun with the same run id then skips every stage."""
+    from s3_log_parser_spark.schemas import SLIM_SCHEMA
+
+    if case == "empty":
+        src, n_bad = transcripts.limit(0), 0
+    else:
+        src = transcripts.limit(500).withColumn("text", F.lit("not an access log line"))
+        n_bad = 500
+    out = str(tmp_path / "out")
+
+    def files():
+        return {
+            os.path.relpath(os.path.join(d, f), out): os.path.getmtime(
+                os.path.join(d, f)
+            )
+            for d, _, names in os.walk(out)
+            for f in names
+        }
+
+    run_pipeline(spark, src, out, run_id="r1")
+    slim_cols = set(SLIM_SCHEMA.fieldNames())
+    for table, rows in (("slim", n_bad), ("by_tool", 0), ("by_role", 0),
+                        ("by_day", 0), ("rejects", n_bad)):
+        df = spark.read.parquet(os.path.join(out, table))
+        assert set(df.columns) == slim_cols, table
+        assert df.count() == rows, table
+    for sink, key in (("by_tool", "tool"), ("by_role", "role"),
+                      ("by_day", "day_bucket"), ("rejects", "parse_status")):
+        df = spark.read.parquet(os.path.join(out, f"{sink}_counts"))
+        assert df.columns == [key, "count"], sink
+        want = [("bad_format", n_bad)] if sink == "rejects" and n_bad else []
+        assert [tuple(r) for r in df.collect()] == want, sink
+    before = files()
+    run_pipeline(spark, src, out, run_id="r1")
+    assert files() == before
+
+
 def test_parser_paths_agree(spark, transcripts):
     """the production Arrow-native fused parse and the zero-Python SQL
     reference (parse_text_sql → _parse_sql_flat) produce identical slim

@@ -91,9 +91,6 @@ def test_sample_to_token_budget_prefix_property(spark, corpus):
     # a budget of 1 still keeps the first doc of each source
     tiny = sample_to_token_budget(corpus, budget_tokens=1, by="source")
     assert tiny.count() == 2  # one per source
-    # ungrouped mode: global prefix
-    g = sample_to_token_budget(corpus, budget_tokens=12)
-    assert {r["doc_id"] for r in g.collect()} == {0, 1}
 
 
 def test_pack_sequences_and_stats(spark, corpus):

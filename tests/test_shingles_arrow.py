@@ -1,9 +1,13 @@
-"""Parity pins for the vectorized Arrow shingle kernel (r7): the
-mapInArrow kernel must reproduce the pure-Catalyst
-``shingle_hashes`` arrays BIT-FOR-BIT (values and first-occurrence
-order) on the fixture corpus and on adversarial edge rows."""
+"""Parity pins for the vectorized Arrow shingle and SimHash kernels:
+the djb2 shingle kernel must reproduce the Catalyst ``shingle_hashes``
+arrays BIT-FOR-BIT (values and first-occurrence order), the xxhash64
+kernel a Catalyst ``F.xxhash64`` chain, and ``simhash_df`` the
+pure-Python SimHash, on the fixture corpus and on adversarial edge
+rows."""
 
 from pyspark.sql import functions as F
+
+from helpers import simhash_py
 
 SF = "/root/testdata/sf0.001"
 
@@ -52,27 +56,26 @@ def test_arrow_kernel_matches_catalyst_kernel(spark):
             assert cat == arr, f"n={n}: kernel mismatch"
 
 
-def test_simhash_arrow_matches_catalyst(spark):
-    """``simhash_df`` (the Arrow kernel) reproduces the Catalyst
-    ``simhash`` expression bit-for-bit on every row with at least one
-    token, and has no row for the zero-token ones."""
-    from s3_log_parser_spark.functions.text import tokens
-    from s3_log_parser_spark.operators.dedup import simhash, simhash_df
+def test_simhash_arrow_matches_python_reference(spark):
+    """``simhash_df`` (the Arrow kernel) reproduces the pure-Python
+    SimHash bit-for-bit on every row with at least one token, and has
+    no row for the zero-token ones."""
+    from s3_log_parser_spark.operators.dedup import simhash_df
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for bits in (16, 64):
-        for src in (docs, _edge(spark)):
+    for src in (docs, _edge(spark)):
+        rows = src.select("doc_id", "text").collect()
+        for bits in (16, 64):
             arrow = {
                 r["id"]: r["simhash"]
                 for r in simhash_df(src, bits=bits).collect()
             }
-            cat = {
-                r["doc_id"]: r["sh"]
-                for r in src.filter(F.size(tokens("text")) > 0)
-                .select("doc_id", simhash("text", bits).alias("sh"))
-                .collect()
+            ref = {
+                r["doc_id"]: sh
+                for r in rows
+                if (sh := simhash_py(r["text"], bits)) is not None
             }
-            assert arrow == cat, f"bits={bits}"
+            assert arrow == ref, f"bits={bits}"
 
 
 def test_shingle_frame_routes_through_arrow_by_default(spark):
@@ -85,14 +88,32 @@ def test_shingle_frame_routes_through_arrow_by_default(spark):
     assert "Exchange" not in plan
 
 
+def _xxhash64_shingles(col, n):
+    """the Catalyst xxhash64 shingle chain: token hash ``X(t)``, a
+    window folds ``X(5381, d)`` then ``X(acc, d)``, a row with fewer
+    than ``n`` tokens folds over all of them, first-occurrence
+    distinct."""
+    from s3_log_parser_spark.functions.text import tokens
+    from s3_log_parser_spark.operators.dedup import _sliding_zip
+
+    th = F.transform(tokens(col), lambda t: F.xxhash64(t))
+    seed = F.lit(5381).cast("long")
+    grams = _sliding_zip(
+        th, n,
+        combine=lambda acc, d: F.xxhash64(acc, d),
+        first=lambda d: F.xxhash64(seed, d),
+    )
+    whole = F.aggregate(th, seed, lambda acc, d: F.xxhash64(acc, d))
+    return F.array_distinct(
+        F.when(F.size(th) >= n, grams).otherwise(F.array(whole))
+    )
+
+
 def test_xxhash64_kernel_matches_catalyst(spark):
-    """the r7 xxhash64 kernel mode must be bit-exact vs the Catalyst
+    """the xxhash64 kernel mode must be bit-exact vs the Catalyst
     xxhash64 chain — including unicode tokens, >32-byte tokens (the
     XXH64 block path), short rows and NULL/empty text."""
-    from pyspark.sql import functions as F
-
     from s3_log_parser_spark.functions.shingles_arrow import with_shingles
-    from s3_log_parser_spark.operators.dedup import shingle_hashes
 
     rows = [
         (0, "aa bb cc dd ee"),
@@ -116,7 +137,7 @@ def test_xxhash64_kernel_matches_catalyst(spark):
         b = {
             r["doc_id"]: r["sh"]
             for r in df.select(
-                "doc_id", shingle_hashes("text", n, "xxhash64").alias("sh")
+                "doc_id", _xxhash64_shingles("text", n).alias("sh")
             ).collect()
         }
         assert a == b

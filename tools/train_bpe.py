@@ -26,18 +26,13 @@ from __future__ import annotations
 
 import os
 import random
-import re
 from collections import Counter
 
 N_MERGES = 32768
-CORPUS = "/root/testdata/sf0.001/documents.parquet"
 OUT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "s3_log_parser_spark", "functions", "bpe_merges.txt",
 )
-
-# must match functions.text.BPE_RE (the shared pre-tokenizer)
-BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 # English-ish letter frequencies (public knowledge) for realistic
 # pair statistics in the synthetic stream
@@ -60,22 +55,6 @@ def synthetic_pretokens(
         pretok[word] += max(1, int(2 * n_words / r))
         if r % 17 == 0:  # sprinkle digit runs
             pretok["".join(rng.choices("0123456789", k=rng.randint(1, 6)))] += r % 97 + 1
-    return pretok
-
-
-def corpus_pretokens() -> Counter:
-    import duckdb
-
-    texts = [
-        r[0]
-        for r in duckdb.sql(
-            f"SELECT text FROM read_parquet('{CORPUS}') WHERE text IS NOT NULL"
-        ).fetchall()
-    ]
-    pretok: Counter = Counter()
-    pat = re.compile(BPE_RE)
-    for t in texts:
-        pretok.update(pat.findall(t))
     return pretok
 
 
