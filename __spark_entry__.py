@@ -743,8 +743,8 @@ def _route(spark, sf):
 # distinct shingle hashes of word-3-gram shingles of documents.text:
 # a shingle's hash is a DJB2 fold over its tokens' DJB2 digests
 # (h = 5381; h = (h*33 + digest) mod 2^32) — same fold, same order as
-# operators/dedup.shingle_hashes; rows with < 3 tokens fold over all
-# their tokens
+# the djb2 family of functions/shingles_arrow.with_shingles; rows with
+# < 3 tokens fold over all their tokens
 _DJB2_FOLD = "(h, d) -> (h * 33 + d) % 4294967296"
 _SHINGLE_CTE = f"""
     WITH toks AS (
@@ -1555,9 +1555,6 @@ def _pslim(spark, sf):
     # Spark recomputes the full gen→parse→enrich→flags DAG; DuckDB reads
     # the committed golden output of the identical fixture — a genuine
     # end-to-end cross-check of the non-SQL (mapInArrow) stage
-    from s3_log_parser_spark.plans.pipeline import build_slim
-    from s3_log_parser_spark.sources.gen import gen_transcripts
-
     slim = _slim10k(spark)
     return slim.groupBy("parse_status", F.col("flags").cast("long").alias("flags")).agg(
         F.count("*").alias("count")
@@ -1575,9 +1572,6 @@ def _pslim(spark, sf):
     """,
 )
 def _psink(spark, sf):
-    from s3_log_parser_spark.plans.pipeline import build_slim
-    from s3_log_parser_spark.sources.gen import gen_transcripts
-
     slim = _slim10k(spark)
     route = (
         F.when(F.col("parse_status") != "ok", F.lit("rejects"))
@@ -1603,8 +1597,6 @@ def _gexp(spark, sf):
     # row_number cap keeps the uncapped count while bounding collected
     # members (the golden-file pin covers the JSON rendering itself)
     from s3_log_parser_spark.operators.aggregate import grouped_export
-    from s3_log_parser_spark.plans.pipeline import build_slim
-    from s3_log_parser_spark.sources.gen import gen_transcripts
 
     slim = _slim10k(spark)
     g = grouped_export(
@@ -1648,9 +1640,6 @@ def _sink_fingerprint(df):
 def _sink_roundtrip(spark, fmt: str):
     import shutil
     import tempfile
-
-    from s3_log_parser_spark.plans.pipeline import build_slim
-    from s3_log_parser_spark.sources.gen import gen_transcripts
 
     slim = _slim10k(spark)
     root = tempfile.mkdtemp(prefix=f"{fmt}_sink_")
@@ -1758,9 +1747,7 @@ def _trep(spark, sf):
     # intra-doc 3-gram repetition (templated/looping text scores high)
     from s3_log_parser_spark.functions.text import repetition_x1000
 
-    return _t(spark, sf, "documents").select(
-        "doc_id", repetition_x1000("text").alias("rep_x1000")
-    )
+    return repetition_x1000(_t(spark, sf, "documents"), ("doc_id",))
 
 
 # the fixtures deliberately carry no PII, so the PII detector gets its
@@ -2159,8 +2146,6 @@ def _skew_profile(spark, sf):
     # hot conv-0 (~10% of rows), so top1_share_x1000 exposes exactly
     # the skew the pipeline's salting/AQE handling exists for
     from s3_log_parser_spark.operators.aggregate import profile_key_skew
-    from s3_log_parser_spark.plans.pipeline import build_slim
-    from s3_log_parser_spark.sources.gen import gen_transcripts
 
     slim = _slim10k(spark)
     return profile_key_skew(slim, "conv_hash")
@@ -3744,9 +3729,7 @@ def _cube_margins(spark, sf):
         F.pmod(day, F.lit(7)).alias("weekday"),
         F.floor(F.col("value") * 1000 + F.lit(0.5)).cast("long").alias("_v"),
     )
-    cube = cube_counts(
-        b, ["event_type", "weekday"], F.col("_v"), measure_name="sum_measure"
-    )
+    cube = cube_counts(b, ["event_type", "weekday"], F.col("_v"))
     # margin NULLs → sentinels: the cross-engine compare sorts row
     # tuples, and None is unorderable; grouping_id still marks margins
     return cube.select(

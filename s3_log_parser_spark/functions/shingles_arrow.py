@@ -1,7 +1,7 @@
 """Vectorized Arrow/numpy shingle-hash and SimHash kernels.
 
-A Catalyst shingle expression (``operators.dedup.shingle_hashes``, the
-djb2 family) is a higher-order expression chain — per character it
+A Catalyst form of the djb2 shingle hash is a higher-order
+expression chain — per character it
 allocates a one-char string (``split(col, '')``), evaluates ``ascii``
 and a ``pmod``, and per shingle it runs ``zip_with`` array allocations.
 Measured r7 at sf0.1 (5,000 docs, 270k tokens): 2.1 s for the n=3
@@ -17,7 +17,7 @@ Semantics reproduced exactly:
 - tokenization: Spark ``split(trim(coalesce(text,'')), '\\s+')`` with
   empty pieces dropped. Java's ``\\s`` is ASCII-only, so the Python
   side splits with ``re.ASCII``; leading/trailing separators only ever
-  produce empty pieces, which are filtered just like the Catalyst form
+  produce empty pieces, which are filtered just like ``text.tokens``
   (``trim`` is not needed for token equality).
 - token hash: DJB2 over CODEPOINTS (``djb2_expr`` parity — equal to
   the byte fold for ASCII; the rare non-ASCII token takes a per-token
@@ -27,10 +27,11 @@ Semantics reproduced exactly:
   their tokens (empty text → the bare seed).
 - distinct with FIRST-OCCURRENCE order, matching ``array_distinct``.
 
-Every shingle-frame consumer (dedup, importance buckets,
-decontamination) runs this kernel. Tests pin the djb2 family against
-``shingle_hashes``, the xxhash64 family against an ``F.xxhash64``
-chain, and :func:`with_simhash` against a pure-Python SimHash.
+Every shingle consumer (dedup, importance buckets, decontamination,
+the repetition score) runs this kernel; it is the package's only
+shingle-hash implementation. Tests pin the djb2 family against a
+pure-Python fold, the xxhash64 family against an ``F.xxhash64`` chain,
+and :func:`with_simhash` against a pure-Python SimHash.
 """
 
 from __future__ import annotations

@@ -3,7 +3,9 @@ quality scoring, language-ID heuristic, document fingerprinting.
 
 All pure-Catalyst (higher-order array functions over the token array —
 whole-stage codegen, zero Python), except :func:`nfc_text`, the one
-necessarily-Python step (Unicode NFC; Arrow-batched). Every function
+necessarily-Python step (Unicode NFC; Arrow-batched), and
+:func:`repetition_x1000`, whose distinct 3-grams come from the Arrow
+shingle kernel (functions/shingles_arrow.py). Every function
 has a matching
 DuckDB-SQL form in ``__spark_entry__.py`` oracles; arithmetic is kept
 integer/fold-left so both engines produce identical values.
@@ -11,10 +13,11 @@ integer/fold-left so both engines produce identical values.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .hashes import djb2_expr
+from .shingles_arrow import with_shingles
 
 # small fixed stopword banks — deterministic heuristic, not linguistics
 STOPWORDS = {
@@ -116,20 +119,26 @@ def fingerprint(col: Column | str) -> Column:
     return djb2_expr(canon)
 
 
-def repetition_x1000(col: Column | str) -> Column:
-    """intra-document 3-gram repetition ∈ [0, 1000]: the fraction of
-    word 3-gram OCCURRENCES that are repeats of an earlier 3-gram in
-    the same doc (templated/looping text scores high — the standard
-    "repetitious document" quality signal). Integer-scaled and floored,
-    pure Catalyst; rows with < 3 tokens score 0."""
-    from ..operators.dedup import shingle_hashes
-
-    c = F.col(col) if isinstance(col, str) else col
-    total = F.greatest(F.size(tokens(c)) - 2, F.lit(1))
-    distinct = F.size(shingle_hashes(c, 3))
-    return F.when(F.size(tokens(c)) < 3, F.lit(0)).otherwise(
-        F.floor((total - distinct) * 1000 / total)
-    ).cast("long")
+def repetition_x1000(df: DataFrame, keep: tuple[str, ...]) -> DataFrame:
+    """``(keep..., rep_x1000)``: intra-document 3-gram repetition of
+    the ``text`` column ∈ [0, 1000], the fraction of word 3-gram
+    OCCURRENCES that are repeats of an earlier 3-gram in the same doc
+    (templated/looping text scores high — the standard "repetitious
+    document" quality signal). Integer-scaled and floored. The
+    occurrence count ``greatest(tokens - 2, 1)`` is Catalyst; the
+    distinct count is the size of the Arrow shingle kernel's djb2 set.
+    Rows with < 3 tokens have one occurrence and one distinct shingle,
+    so they score 0."""
+    total = F.greatest(F.col("_ntok") - 2, F.lit(1))
+    sh = with_shingles(
+        df.withColumn("_ntok", token_count("text")), "text", 3,
+        keep=(*keep, "_ntok"),
+    )
+    return sh.select(
+        *keep,
+        F.floor((total - F.size("sh")) * 1000 / total)
+        .cast("long").alias("rep_x1000"),
+    )
 
 
 # simple, cross-dialect (java regex == RE2) PII patterns — detection
@@ -283,9 +292,13 @@ def _dup_run_stats_sql(items: str) -> str:
 def _shingles_sql(toks: str, n: int) -> str:
     """SQL text of the word n-gram shingles (array<string>) of a
     token-array expression: one index-shifted ``slice`` per position
-    folded by ``zip_with`` (linear cost, see
-    ``operators.dedup._sliding_zip``); rows with < n tokens get their
-    whole token string as the single shingle."""
+    folded by ``zip_with``; rows with < n tokens get their whole token
+    string as the single shingle. Linear cost: a computed array
+    referenced INSIDE a per-element lambda
+    (``transform(idxs, i -> element_at(toks, i))``) is re-evaluated
+    once per element, O(len²) per row, whereas each top-level ``slice``
+    evaluates once per row and ``zip_with`` binds the elements as
+    lambda variables, O(len·n)."""
     k = f"greatest(size({toks}) - {n - 1}, 0)"
     cur = f"transform(slice({toks}, 1, {k}), t -> t)"
     for j in range(2, n + 1):

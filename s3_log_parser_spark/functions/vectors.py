@@ -136,7 +136,7 @@ def quantize_vec(col: Column | str) -> tuple[Column, Column]:
     per-element lambda via ``zip_with(v, array_repeat(scale, d), …)`` —
     referencing a computed scalar directly inside a ``transform``
     lambda re-inlines (and re-evaluates) the whole max-aggregate per
-    element (the dedup._sliding_zip trap, scalar edition).
+    element, O(d²) per vector instead of O(d).
 
     Zero vectors quantize to all-zero with scale 0.
     """

@@ -371,7 +371,6 @@ def cube_counts(
     df: DataFrame,
     dims: list[str],
     measure: Column,
-    measure_name: str = "sum_measure",
 ) -> DataFrame:
     """All 2^len(dims) grouping-set margins with the raw input scanned
     ONCE: per-cell row count + an integer measure sum, and a
@@ -393,9 +392,9 @@ def cube_counts(
         raise ValueError("cube_counts needs at least one dim")
     finest = df.groupBy(*dims).agg(
         F.count("*").cast("long").alias("n"),
-        F.sum(measure).cast("long").alias(measure_name),
+        F.sum(measure).cast("long").alias("sum_measure"),
     )
-    mcols = ["n", measure_name]
+    mcols = ["n", "sum_measure"]
     resum = [F.sum(c).cast("long").alias(c) for c in mcols]
     d = len(dims)
     parts = []

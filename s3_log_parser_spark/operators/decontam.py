@@ -35,9 +35,8 @@ def contamination_hits(
     the benchmark set — (doc_id, n_hits), only docs with ≥1 hit."""
     from ..functions.shingles_arrow import with_shingles
 
-    # vectorized Arrow shingle kernel (bit-exact vs ``shingle_hashes``;
-    # that Catalyst n=8 expression chain alone cost 4.3 s/evaluation at
-    # sf0.1)
+    # vectorized Arrow shingle kernel (a Catalyst n=8 shingle
+    # expression chain alone cost 4.3 s/evaluation at sf0.1)
     bench = (
         with_shingles(benchmark.select("text"), "text", n, mode="xxhash64")
         .select(F.explode("sh").alias("h"))

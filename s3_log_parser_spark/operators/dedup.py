@@ -5,16 +5,15 @@ Five strategies, all deterministic and partition-invariant:
 - :func:`exact_dedup` — hash-groupBy on a canonical key; the winner
   within a duplicate group is chosen by explicit ordering (never
   ``dropDuplicates``, whose winner is partition-dependent).
-- :func:`shingle_hashes` / :func:`minhash_signatures_df` /
+- :func:`shingle_frame` / :func:`minhash_signatures_df` /
   :func:`minhash_candidates` — MinHash+LSH: shingle → K min-hashes →
   bands → bucket self-join → candidate pairs → exact-Jaccard
-  verification. The shingle hash is a
-  DJB2 fold over per-token DJB2 digests (the reference kernel, applied
-  hierarchically) so the DuckDB oracle reproduces signatures
+  verification. Shingle frames come from the Arrow kernel
+  (functions/shingles_arrow.py), the package's one shingle-hash
+  implementation. Its djb2 family hashes a shingle as a DJB2 fold over
+  per-token DJB2 digests, so the DuckDB oracle reproduces signatures
   bit-for-bit at linear cost; ``mode="xxhash64"`` swaps in the
-  production family. Shingle frames come from the Arrow kernel
-  (functions/shingles_arrow.py); :func:`shingle_hashes` is the djb2
-  per-row column the Gopher repetition flags use.
+  production family.
 - :func:`simhash_df` / :func:`simhash_pairs` — B-bit SimHash (Arrow
   kernel) and its banded hamming join.
 - :func:`ngram_jaccard_pairs` — exact n-gram Jaccard for pair sets
@@ -41,10 +40,6 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashes import djb2_expr
-from ..functions.text import tokens
-from ..schemas import DJB2_SEED
-
 # modulus for the universal-hash family over DJB2 values:
 # smallest prime > 2^32 (same family the oracle SQL uses)
 MINHASH_P = 4294967311
@@ -70,62 +65,6 @@ def exact_dedup(
     )
 
 
-def _sliding_zip(arr: Column, n: int, combine, first) -> Column:
-    """fold ``combine`` across ``n`` index-shifted slices of ``arr`` —
-    the linear-cost way to build per-shingle values. CRITICAL Catalyst
-    trap (measured 40× at sf0.01): referencing a computed array INSIDE
-    a per-element lambda (``transform(idxs, i -> element_at(arr, i))``)
-    re-evaluates the whole array expression once per element → O(len²)
-    per row. Top-level children (each ``slice``) evaluate once per row,
-    and ``zip_with`` binds elements as lambda variables — O(len·n)."""
-    k = F.greatest(F.size(arr) - (n - 1), F.lit(0))
-    cur = F.transform(F.slice(arr, 1, k), first)
-    for j in range(2, n + 1):
-        cur = F.zip_with(cur, F.slice(arr, j, k), combine)
-    return cur
-
-
-_M32 = 1 << 32
-
-
-def _djb2_fold(h: Column, d: Column) -> Column:
-    """one DJB2 step over a 32-bit digest: (h*33 + d) mod 2^32.
-    h, d < 2^32 → h*33 + d < 2^38, safe in signed 64 under ANSI."""
-    return F.pmod(h * 33 + d, F.lit(_M32))
-
-
-def token_hashes(col: Column | str) -> Column:
-    """DJB2 digest of each whitespace token (array<long>) — one
-    char-level pass per token, computed once per row."""
-    return F.transform(tokens(col), lambda t: djb2_expr(t))
-
-
-def shingle_hashes(col: Column | str, n: int = 3) -> Column:
-    """distinct hashes of the word n-gram shingle set (array<long>).
-
-    A shingle's hash is a DJB2 fold over its tokens' DJB2 digests
-    (``h=5381; h = (h*33 + digest) mod 2^32``) — the character-level
-    kernel runs exactly once per token, and the per-shingle combine is
-    3 integer ops instead of a ~20-char rescan + string allocation per
-    shingle (the round-1 form also re-split the token array once per
-    shingle via the in-lambda reference trap, see ``_sliding_zip``).
-    Rows with < n tokens fold over all their tokens (empty text →
-    5381, the bare seed). Deterministic and reproduced digit-for-digit
-    by the DuckDB oracle (same fold, same order).
-    """
-    seed = F.lit(DJB2_SEED).cast("long")
-    th = token_hashes(col)
-    grams = _sliding_zip(
-        th, n,
-        combine=_djb2_fold,
-        first=lambda d: _djb2_fold(seed, d),
-    )
-    whole = F.aggregate(th, seed, _djb2_fold)
-    return F.array_distinct(
-        F.when(F.size(th) >= n, grams).otherwise(F.array(whole))
-    )
-
-
 def shingle_frame(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -142,9 +81,8 @@ def shingle_frame(
     to :func:`incremental_dedup` via :func:`build_dedup_index` instead
     of recomputing per branch.
 
-    Both hash families run the vectorized Arrow kernel (bit-exact
-    values vs :func:`shingle_hashes`, ~3-12× faster than that
-    expression chain — see functions/shingles_arrow.py)."""
+    Both hash families run the vectorized Arrow kernel
+    (functions/shingles_arrow.py)."""
     from ..functions.shingles_arrow import with_shingles
 
     return with_shingles(
@@ -235,7 +173,7 @@ def minhash_candidates(
     """LSH banding (two signature rows per band): docs sharing any
     band signature become candidate pairs (id_a < id_b). Returns
     distinct pairs. ``mode`` selects the shingle hash family (see
-    :func:`shingle_hashes`). ``shingle_df`` (an ``(id, sh)`` frame,
+    :func:`shingle_frame`). ``shingle_df`` (an ``(id, sh)`` frame,
     typically materialized once by the caller) skips re-running the
     shingle kernel — identical signatures."""
     if shingle_df is not None:
@@ -295,7 +233,7 @@ def ngram_jaccard_pairs(
     (``id_a < id_b``, ``jaccard_x1000 ≥ threshold_x1000 ≥ 1``).
 
     ``mode`` selects the shingle hash family (see
-    :func:`shingle_hashes`) and is threaded through the LSH banding of
+    :func:`shingle_frame`) and is threaded through the LSH banding of
     the ``auto_block`` path — production compositions pass
     ``"xxhash64"`` (64-bit codegen family; the 32-bit DJB2 parity
     space starts colliding on trillion-shingle corpora), the DuckDB

@@ -28,7 +28,7 @@ approximately; we document the surrogate rather than paying float
 nondeterminism across engines (see BASELINE.md exact-compare rules).
 
 Presence-based features: each document contributes its DISTINCT bucket
-set (``shingle_hashes`` is already a distinct set), matching the
+set (the shingle kernel's ``sh`` is already a distinct set), matching the
 binary-feature variant of hashed-ngram models.
 """
 
@@ -50,10 +50,8 @@ def bucket_frame(
     df: DataFrame, n: int, buckets: int, keep: tuple[str, ...] = ()
 ) -> DataFrame:
     """``(keep..., bucket)`` exploded distinct-bucket rows of the
-    ``text`` column — the vectorized Arrow djb2 shingle kernel
-    (bit-exact vs the Catalyst ``shingle_hashes`` bucket fold that
-    ``tests/test_importance.py`` pins it against; the bucket fold on the
-    small ``sh`` arrays stays Catalyst)."""
+    ``text`` column — the vectorized Arrow djb2 shingle kernel (the
+    bucket fold on the small ``sh`` arrays stays Catalyst)."""
     from ..functions.shingles_arrow import with_shingles
 
     sh = with_shingles(df, "text", n, keep=keep)

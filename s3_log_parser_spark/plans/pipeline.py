@@ -7,10 +7,11 @@ casts/encodings + UA classify → ONE shuffle (the (ip_hash, key_hash)
 window for ST1, narrowest possible rows) → role/tool dims as CASE WHEN
 lookups post-shuffle → slim table write (the checkpoint) → route stage
 over the columnar re-read (read with the known ``SLIM_SCHEMA``, so no
-inference job): one collected (status × tool × role × day) cube sets
-every sink's write layout on the driver and feeds its counts table,
-so the route stage submits only the jobs that write data — the cube,
-then per sink one counts write and one data write.
+inference job): one (status × tool × role × day) cube, cached and
+materialized by a ``count()``, feeds every sink's counts table, and
+each partitioned sink is written from a fixed salted repartition
+(``sink_layout``) that no job chooses, so the route stage submits only
+the cube and, per sink, one counts write and one data write.
 
 Scale posture: the only wide exchange before the sinks is the ST1
 window on high-cardinality hash keys (no skew by construction); the

@@ -56,22 +56,48 @@ def reassemble_text(parsed: Column) -> Column:
     ).otherwise(base)
 
 
-def simhash_py(text: str | None, bits: int) -> int | None:
-    """Pure-Python B-bit SimHash, the reference ``dedup.simhash_df`` is
-    pinned against: whitespace tokens (Java's ASCII ``\\s``, empty
-    pieces dropped), each token's DJB2 digest ``h`` over codepoints (as
-    ``djb2_expr``), and bit j set when Σ over tokens of
-    ``2·(((2j+1)·h + j²+7) mod P mod 2) − 1`` is positive, with P the
-    MinHash prime. Bit 63 is the sign bit of the signed long. A text
-    with no token has no signature: None."""
-    p = 4294967311
+def _token_digests(text: str | None) -> list[int]:
+    """Each whitespace token's DJB2 digest, in order: tokens split on
+    Java's ASCII ``\\s`` (``[ \\t\\n\\r\\f\\v]+``) with empty pieces
+    dropped, and each digest ``h = (h*33 + codepoint) mod 2^32`` from
+    5381 over the token's CODEPOINTS, as ``djb2_expr`` computes it."""
     digests = []
-    for tok in re.split(r"\s+", text or "", flags=re.ASCII):
+    for tok in re.split(r"[ \t\n\r\f\v]+", text or ""):
         if tok:
             h = 5381
             for ch in tok:
                 h = (h * 33 + ord(ch)) & 0xFFFFFFFF
             digests.append(h)
+    return digests
+
+
+def shingles_py(text: str | None, n: int) -> list[int]:
+    """Pure-Python word n-gram shingle hashes, the reference the djb2
+    family of ``shingles_arrow.with_shingles`` is pinned against: fold
+    ``h = (h*33 + d) mod 2^32`` from 5381 over the token digests ``d``
+    of each n-token window, or over all tokens when there are fewer
+    than n (NULL or empty text: ``[5381]``); distinct values in
+    first-occurrence order."""
+    d = _token_digests(text)
+    windows = [d[i : i + n] for i in range(len(d) - n + 1)] or [d]
+    out: dict[int, None] = {}
+    for w in windows:
+        h = 5381
+        for x in w:
+            h = (h * 33 + x) & 0xFFFFFFFF
+        out.setdefault(h, None)
+    return list(out)
+
+
+def simhash_py(text: str | None, bits: int) -> int | None:
+    """Pure-Python B-bit SimHash, the reference ``dedup.simhash_df`` is
+    pinned against: over the token digests ``h`` of
+    :func:`_token_digests`, bit j set when Σ over tokens of
+    ``2·(((2j+1)·h + j²+7) mod P mod 2) − 1`` is positive, with P the
+    MinHash prime. Bit 63 is the sign bit of the signed long. A text
+    with no token has no signature: None."""
+    p = 4294967311
+    digests = _token_digests(text)
     if not digests:
         return None
     out = 0

@@ -132,10 +132,11 @@ def test_minhash_xxhash_production_mode(spark, docs):
 
 
 def test_shingle_hash_is_token_digest_fold(spark):
-    """pin the hash definition: fold(5381, token DJB2 digests) — the
-    contract the DuckDB oracle reproduces."""
+    """pin the hash definition of the Arrow kernel's djb2 family:
+    fold(5381, token DJB2 digests) — the contract the DuckDB oracle
+    reproduces."""
     from s3_log_parser_spark.functions.hashes import djb2_py
-    from s3_log_parser_spark.operators.dedup import shingle_hashes
+    from s3_log_parser_spark.functions.shingles_arrow import with_shingles
 
     def fold(toks):
         h = 5381
@@ -143,12 +144,13 @@ def test_shingle_hash_is_token_digest_fold(spark):
             h = (h * 33 + djb2_py(t)) % (1 << 32)
         return h
 
-    rows = [("a b c d",), ("x y",), ("",), (None,)]
-    df = spark.createDataFrame(rows, "text string")
-    got = [r[0] for r in df.select(shingle_hashes("text", 3)).collect()]
-    assert sorted(got[0]) == sorted(
-        {fold(["a", "b", "c"]), fold(["b", "c", "d"])}
-    )
+    rows = [(0, "a b c d"), (1, "x y"), (2, ""), (3, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {
+        r["doc_id"]: r["sh"]
+        for r in with_shingles(df, "text", 3, keep=("doc_id",)).collect()
+    }
+    assert got[0] == [fold(["a", "b", "c"]), fold(["b", "c", "d"])]
     assert got[1] == [fold(["x", "y"])]
     assert got[2] == [5381] and got[3] == [5381]
 
@@ -537,7 +539,7 @@ def test_ngram_jaccard_auto_stop_shingle_guard(spark, docs, monkeypatch):
     exact = _jaccard_reference(shingle_frame(docs), 100)
     # small grouped input: exact, no warning
     with warnings.catch_warnings():
-        warnings.simplefilter("error")
+        warnings.simplefilter("error", UserWarning)
         auto_small = {
             (r.id_a, r.id_b): r.jaccard_x1000
             for r in ngram_jaccard_pairs(

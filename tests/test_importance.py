@@ -4,7 +4,7 @@ deterministic top-k resample."""
 
 from pyspark.sql import functions as F
 
-from s3_log_parser_spark.operators.dedup import shingle_hashes
+from helpers import shingles_py
 from s3_log_parser_spark.operators.importance import (
     bucket_weights,
     importance_resample,
@@ -25,13 +25,11 @@ _RAWISH = [
 _BUCKETS = 64
 
 
-def ngram_buckets(col):
-    """Catalyst reference for ``importance.bucket_frame``: distinct
-    hashed bigram buckets (array<long>, values in [0, _BUCKETS)) over
-    the djb2 oracle-parity shingle family."""
-    return F.array_distinct(
-        F.transform(shingle_hashes(col, 2), lambda h: F.pmod(h, F.lit(_BUCKETS)))
-    )
+def ngram_buckets(text):
+    """Pure-Python reference for ``importance.bucket_frame``: the set of
+    hashed bigram buckets (values in [0, _BUCKETS)) over the djb2
+    oracle-parity shingle family."""
+    return {h % _BUCKETS for h in shingles_py(text, 2)}
 
 
 def _docs(spark):
@@ -51,10 +49,8 @@ def test_bucket_weights_match_python_replica(spark):
     per-doc bucket sets Spark itself extracted."""
     docs, w = _weights(spark)
     per_doc = {
-        r["doc_id"]: set(r["b"])
-        for r in docs.select(
-            "doc_id", ngram_buckets("text").alias("b")
-        ).collect()
+        r["doc_id"]: ngram_buckets(r["text"])
+        for r in docs.select("doc_id", "text").collect()
     }
     raw_n: dict[int, int] = {}
     target_n: dict[int, int] = {}
@@ -93,11 +89,7 @@ def test_unseen_buckets_score_neutral(spark):
     row = importance_scores(novel, w, buckets=_BUCKETS).collect()
     # guard: the novel bigrams must genuinely miss the trained buckets
     trained = {r["bucket"] for r in w.collect()}
-    nb = set(
-        novel.select(
-            F.explode(ngram_buckets("text")).alias("b")
-        ).toPandas()["b"]
-    )
+    nb = ngram_buckets(novel.collect()[0]["text"])
     if nb & trained:  # 64 buckets — collision possible; only then relax
         assert row[0]["imp_x1000"] >= row[0]["n_feats"] * 250
     else:

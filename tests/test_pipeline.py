@@ -80,13 +80,14 @@ def _job_ids(spark) -> set[int]:
 
 
 def test_route_stage_submits_only_write_jobs(spark, transcripts, tmp_path):
-    """The route stage's control decisions (write layouts, counts) come
-    from one cached cube, so ``route_and_write`` submits only the
-    cube and the writes: on the fixture at ``local[8]`` under AQE that
-    is 3 cube jobs, one counts write per sink (4), the rejects write
-    (1), and per partitioned sink a salt shuffle plus its write (6) —
-    14 jobs, against 32 when each layout and counts table ran its own
-    jobs. Choosing a layout submits none."""
+    """The route stage's one control step is a cached cube that feeds
+    the counts tables, and each sink's write layout is a fixed salted
+    repartition chosen without a job, so ``route_and_write`` submits
+    only the cube and the writes: on the fixture at ``local[8]`` under
+    AQE that is 3 cube jobs, one counts write per sink (4), the rejects
+    write (1), and per partitioned sink a salt shuffle plus its write
+    (6) — 14 jobs, against 32 when each layout and counts table ran its
+    own jobs. Choosing a layout submits none."""
     from s3_log_parser_spark.operators.router import (
         default_routes,
         route_and_write,
@@ -322,28 +323,42 @@ def test_no_python_udf_outside_parse(spark, transcripts):
     assert "ArrowEvalPython" not in plan  # fully JVM in this variant
 
 
-def test_sink_layout_salts_at_any_width(spark, transcripts, tmp_path, monkeypatch):
-    """Every partitioned sink gets the salted repartition whatever the
-    session width: on a session that reports 32 cores, by_tool, by_role
-    and by_day are still written from a ``RepartitionByExpression``."""
-    from pyspark import SparkContext
+def test_sink_layout_salts_at_32_shuffle_partitions(spark, transcripts, tmp_path):
+    """At 32 shuffle partitions the salt has two buckets
+    (``32 // 16``): each partitioned sink's exchange hashes on its
+    partition column plus ``pmod(xxhash64(conv_id, turn_idx), 2)``, and
+    no partition value is written as more than 2 files."""
+    import glob
+    import re
 
     from s3_log_parser_spark.operators.router import route_and_write
 
-    layouts: list[str] = []
+    plans: dict[str, str] = {}
 
     class Recording(Catalog):
         def write(self, df, table, *args, partition_by=(), **kwargs):
             if partition_by:
-                layouts.append(df._jdf.queryExecution().logical().nodeName())
+                plan = df._jdf.queryExecution().executedPlan().toString()
+                plans[table] = re.sub(r"#\d+L?", "", plan)
             super().write(df, table, *args, partition_by=partition_by, **kwargs)
 
-    monkeypatch.setattr(
-        SparkContext, "defaultParallelism", property(lambda sc: 32)
-    )
-    slim = build_slim(transcripts.limit(2000))
-    route_and_write(slim, Recording(spark, str(tmp_path)))
-    assert layouts == ["RepartitionByExpression"] * 3
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        slim = build_slim(transcripts)
+        route_and_write(slim, Recording(spark, str(tmp_path)))
+    finally:
+        spark.conf.set(key, before)
+
+    salt = "pmod(xxhash64(conv_id, turn_idx, 42), 2)"
+    for table, col in (("by_tool", "tool"), ("by_role", "role"),
+                       ("by_day", "day_bucket")):
+        assert f"hashpartitioning({col}, {salt}, 32)" in plans[table], table
+        values = glob.glob(f"{tmp_path}/{table}/{col}=*")
+        assert values, table
+        for v in values:
+            assert 1 <= len(glob.glob(f"{v}/*.parquet")) <= 2, v
 
 
 def test_route_stage_releases_cube_cache_when_a_sink_write_fails(

@@ -1,13 +1,12 @@
 """Parity pins for the vectorized Arrow shingle and SimHash kernels:
-the djb2 shingle kernel must reproduce the Catalyst ``shingle_hashes``
-arrays BIT-FOR-BIT (values and first-occurrence order), the xxhash64
-kernel a Catalyst ``F.xxhash64`` chain, and ``simhash_df`` the
-pure-Python SimHash, on the fixture corpus and on adversarial edge
-rows."""
+the djb2 shingle kernel must reproduce the pure-Python shingle fold
+BIT-FOR-BIT (values and first-occurrence order), the xxhash64 kernel a
+Catalyst ``F.xxhash64`` chain, and ``simhash_df`` the pure-Python
+SimHash, on the fixture corpus and on adversarial edge rows."""
 
 from pyspark.sql import functions as F
 
-from helpers import simhash_py
+from helpers import shingles_py, simhash_py
 
 SF = "/root/testdata/sf0.001"
 
@@ -30,30 +29,23 @@ def _edge(spark):
     )
 
 
-def test_arrow_kernel_matches_catalyst_kernel(spark):
+def test_arrow_kernel_matches_python_reference(spark):
     from s3_log_parser_spark.functions.shingles_arrow import with_shingles
-    from s3_log_parser_spark.operators.dedup import shingle_hashes
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     for n in (2, 3, 8):
         for src in (docs, _edge(spark)):
-            cat = {
-                r["id"]: r["sh"]
-                for r in src.select(
-                    F.col("doc_id").alias("id"),
-                    shingle_hashes("text", n).alias("sh"),
-                ).collect()
+            ref = {
+                r["doc_id"]: shingles_py(r["text"], n)
+                for r in src.select("doc_id", "text").collect()
             }
             arr = {
-                r["id"]: r["sh"]
+                r["doc_id"]: r["sh"]
                 for r in with_shingles(
-                    src.select(F.col("doc_id").alias("id"), "text"),
-                    "text",
-                    n,
-                    keep=("id",),
+                    src, "text", n, keep=("doc_id",)
                 ).collect()
             }
-            assert cat == arr, f"n={n}: kernel mismatch"
+            assert ref == arr, f"n={n}: kernel mismatch"
 
 
 def test_simhash_arrow_matches_python_reference(spark):
@@ -92,17 +84,19 @@ def _xxhash64_shingles(col, n):
     """the Catalyst xxhash64 shingle chain: token hash ``X(t)``, a
     window folds ``X(5381, d)`` then ``X(acc, d)``, a row with fewer
     than ``n`` tokens folds over all of them, first-occurrence
-    distinct."""
+    distinct. The windows zip ``n`` index-shifted top-level slices: a
+    computed array referenced inside a per-element lambda would be
+    re-evaluated once per element."""
     from s3_log_parser_spark.functions.text import tokens
-    from s3_log_parser_spark.operators.dedup import _sliding_zip
 
     th = F.transform(tokens(col), lambda t: F.xxhash64(t))
     seed = F.lit(5381).cast("long")
-    grams = _sliding_zip(
-        th, n,
-        combine=lambda acc, d: F.xxhash64(acc, d),
-        first=lambda d: F.xxhash64(seed, d),
-    )
+    k = F.greatest(F.size(th) - (n - 1), F.lit(0))
+    grams = F.transform(F.slice(th, 1, k), lambda d: F.xxhash64(seed, d))
+    for j in range(2, n + 1):
+        grams = F.zip_with(
+            grams, F.slice(th, j, k), lambda acc, d: F.xxhash64(acc, d)
+        )
     whole = F.aggregate(th, seed, lambda acc, d: F.xxhash64(acc, d))
     return F.array_distinct(
         F.when(F.size(th) >= n, grams).otherwise(F.array(whole))

@@ -119,9 +119,9 @@ def test_repetition_x1000(spark):
         (3, "a b"),                      # < n tokens → 0
         (4, None),
     ]
-    df = spark.createDataFrame(rows, "id long, t string")
-    got = {r["id"]: r["r"] for r in df.select(
-        "id", repetition_x1000("t").alias("r")).collect()}
+    df = spark.createDataFrame(rows, "id long, text string")
+    got = {r["id"]: r["rep_x1000"]
+           for r in repetition_x1000(df, ("id",)).collect()}
     assert got[1] == 571  # floor(4/7*1000)
     assert got[2] == 0 and got[3] == 0 and got[4] == 0
 
